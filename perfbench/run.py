@@ -5,6 +5,11 @@ Run from the repository root:
 
     python3 perfbench/run.py --workload kg_build --seed 1 --seconds 10 --trace 0
 
+or, to write the query-mix digest file from a graft.Verify dump that
+test-oracle/check_oracle.py passed (its output saved in LOG):
+
+    python3 perfbench/run.py --gen-expected DUMP --oracle-log LOG
+
 Builds the engine and the harness from source with sbt (offline) when the
 sources changed since the last build, then runs the harness in one JVM at
 local[4]. Everything the harness prints goes to stdout; its last line is the
@@ -25,7 +30,7 @@ ROOT = os.getcwd()
 BUILD_DIR = os.path.join(HERE, ".build")
 WORK_DIR = os.path.join(HERE, ".work")
 RUN_LIMIT_S = 170  # the harness JVM is killed past this
-WORKLOADS = ["kg_build", "kg_incremental", "canon_hub", "query_mix"]
+WORKLOADS = ["kg_build", "query_mix"]
 
 # Spark 4 on JDK 17 needs these when the session is created outside
 # spark-submit; the list matches the root build's javaOptions.
@@ -136,14 +141,23 @@ def clean_stale_work():
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=int, required=True)
+    ap.add_argument("--workload", choices=WORKLOADS)
+    ap.add_argument("--seed", type=int)
+    ap.add_argument("--seconds", type=int)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--sf", help="development: run query_mix on these tables (unchecked)")
-    ap.add_argument("--only", help="development: comma-separated query subset (unchecked)")
-    ap.add_argument("--heap", default="3g", help="JVM heap of the harness")
+    ap.add_argument("--gen-expected", metavar="DUMP", help="write the query-mix digest file from this dump")
+    ap.add_argument("--oracle-log", metavar="LOG", help="check_oracle.py's output on DUMP")
     args = ap.parse_args()
+    if args.gen_expected:
+        if not args.oracle_log:
+            ap.error("--gen-expected needs --oracle-log")
+        harness = ["--gen-expected", os.path.abspath(args.gen_expected),
+                   "--oracle-log", os.path.abspath(args.oracle_log)]
+    elif args.workload is None or args.seed is None or args.seconds is None:
+        ap.error("--workload, --seed and --seconds are required")
+    else:
+        harness = ["--workload", args.workload, "--seed", str(args.seed),
+                   "--seconds", str(args.seconds), "--trace", str(args.trace)]
 
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
             and os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft"))):
@@ -151,21 +165,18 @@ def main():
 
     cp = build()
     clean_stale_work()
-    harness = ["--workload", args.workload, "--seed", str(args.seed),
-               "--seconds", str(args.seconds), "--trace", str(args.trace)]
-    if args.sf:
-        harness += ["--sf", args.sf]
-    if args.only:
-        harness += ["--only", args.only]
     tmp = os.path.join(WORK_DIR, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = (["java", f"-Xmx{args.heap}", "-XX:+ExitOnOutOfMemoryError",
+    cmd = (["java", "-Xms2g", "-Xmx3g", "-XX:+ExitOnOutOfMemoryError",
             "-Djava.io.tmpdir=" + tmp, "-Dspark.ui.enabled=false"]
            + [a for p in ADD_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", cp, "perfbench.Main"] + harness)
     p, _ = run_child(cmd, ROOT, dict(os.environ), subprocess.PIPE)
+    # the digest-file run covers the whole headline list and has no limit
     watchdog = threading.Timer(RUN_LIMIT_S, lambda: os.killpg(p.pid, signal.SIGKILL))
-    watchdog.start()
+    watchdog.daemon = True
+    if not args.gen_expected:
+        watchdog.start()
     last = ""
     for raw in p.stdout:
         line = raw.decode(errors="replace")
@@ -177,6 +188,8 @@ def main():
     watchdog.cancel()
     if rc != 0:
         fail(f"harness exited with {rc}", rc)
+    if args.gen_expected:
+        return
     try:
         result = json.loads(last)
         assert set(result) == {"correct", "attempted", "failed", "metrics"}

@@ -55,23 +55,12 @@ object Checks {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  /** Errors (empty when equal) between component labels and the union-find
-    * reference, plus the deep-path rule: every path node carries the path's
-    * minimum id.
+  /** `Pipeline.run`'s canonical_id of a canonical key: "canon_" and the
+    * first 16 hex digits of its SHA-256.
     */
-  def labelErrors(got: Map[String, String], expected: Map[String, String],
-                  path: Seq[String]): Seq[String] = {
-    val errs = Seq.newBuilder[String]
-    if (got.size != expected.size) errs += s"label count ${got.size} != ${expected.size}"
-    val wrong = expected.iterator.filter { case (k, v) => !got.get(k).contains(v) }.take(3).toSeq
-    if (wrong.nonEmpty) errs += s"labels differ from union-find, e.g. ${wrong.map(_._1).mkString(",")}"
-    if (path.nonEmpty) {
-      val pmin = path.min
-      val off = path.count(p => !got.get(p).contains(pmin))
-      if (off > 0) errs += s"$off deep-path nodes not labelled $pmin"
-    }
-    errs.result()
-  }
+  def canonicalId(key: String): String =
+    "canon_" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8)).take(8).map(b => f"${b & 0xff}%02x").mkString
 
   /** Triple precision and recall of the public per-doc functions against the
     * reference fixture, computed as the parity test does: lower-cased

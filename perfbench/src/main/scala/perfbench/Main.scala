@@ -8,18 +8,15 @@ import java.nio.file.{Files, Path, Paths}
   *
   *   java ... perfbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
   *
-  * `--trace 0` prepares the workload (repeated, median reported as part of
-  * set-up), warms up, then runs it closed-loop with one client until
+  * `--trace 0` prepares the workload three times (set-up, median
+  * reported), warms up, then runs it closed-loop with one client until
   * `--seconds` of timed runs and at least two runs have passed, checking
-  * every run's output
-  * outside the timed region. `--trace 1` makes a traced run between two
-  * untraced ones and reports the per-layer metrics. The last stdout line is one JSON
-  * object: correct, attempted, failed, metrics.
+  * every run's output outside the timed region. `--trace 1` makes a traced
+  * run between two untraced ones and reports the per-layer metrics. The
+  * last stdout line is one JSON object: correct, attempted, failed, metrics.
   *
-  * Development options: `--sf <dir>` and `--only <q,q,...>` run the query
-  * mix on other tables or a subset (their digests are not checked, so the
-  * result is marked incorrect); `--gen-expected <verifyDump> --oracle-log
-  * <checkOracleOutput>` writes the query-mix digest file (see `genExpected`).
+  * `--gen-expected <verifyDump> --oracle-log <checkOracleOutput>` instead
+  * writes the query-mix digest file (see `genExpected`).
   */
 object Main {
 
@@ -46,13 +43,9 @@ object Main {
     Seq("bench.trace_overhead_frac" -> "ratio", "bench.layer_span_frac" -> "ratio")
 
   /** Workload sizes: fixed, so only the seed varies between runs. */
-  def workload(name: String, ctx: Ctx, sf: Option[Path], only: Seq[String]): Workload = name match {
-    case "kg_build" => new KgPipeline(ctx, "kg_build", base = 100, delta = 900)
-    case "kg_incremental" => new KgPipeline(ctx, "kg_incremental", base = 1000, delta = 100)
-    case "canon_hub" => new CanonHub(ctx, edges = 5000, depth = 64)
-    case "query_mix" =>
-      new QueryMix(ctx, sf.getOrElse(QueryMix.tables(ctx.root)),
-        ctx.root.resolve("perfbench/expected/query_mix_sf0.01.txt"), only)
+  def workload(name: String, ctx: Ctx): Workload = name match {
+    case "kg_build" => new KgBuild(ctx, base = 100, delta = 400, warmUpRuns = 1)
+    case "query_mix" => new QueryMix(ctx, warmUpPasses = 2)
     case other => throw new IllegalArgumentException(s"unknown workload '$other'")
   }
 
@@ -74,12 +67,29 @@ object Main {
 
   private def seconds(t0: Long): Double = (System.nanoTime() - t0) / 1e9
 
+  /** Heap in use right after a full collection, as the collector reports
+    * it (later allocations by Spark's background threads are not counted).
+    * At least three collections, 300 ms apart, then more until it stops
+    * falling: the context cleaner frees shuffle and broadcast state on its
+    * own thread, only after the collection that finds its references dead.
+    */
   private def heapAfterGcMb(): Double = {
-    val mem = java.lang.management.ManagementFactory.getMemoryMXBean
-    // the context cleaner frees shuffle and broadcast state only after the
-    // collection that finds its references dead, so collect twice, apart
-    (1 to 3).foreach { _ => System.gc(); Thread.sleep(200) }
-    mem.getHeapMemoryUsage.getUsed / (1024.0 * 1024.0)
+    import scala.jdk.CollectionConverters._
+    import java.lang.management.{ManagementFactory, MemoryType}
+    val beans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .collect { case b: com.sun.management.GarbageCollectorMXBean => b }
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala.filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    def used(): Double = {
+      System.gc()
+      val last = beans.flatMap(b => Option(b.getLastGcInfo)).maxBy(_.getEndTime)
+      val mb = last.getMemoryUsageAfterGc.asScala.collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum /
+        (1024.0 * 1024.0)
+      Thread.sleep(300)
+      mb
+    }
+    var (prev, cur, n) = (Double.MaxValue, used(), 1)
+    while ((prev - cur > 0.1 || n < 3) && n < 10) { prev = cur; cur = used(); n += 1 }
+    cur
   }
 
   private def fmt(v: Double): String =
@@ -104,12 +114,9 @@ object Main {
         opts.get("gen-expected") match {
           case Some(dump) => genExpected(spark, root, Paths.get(dump), Paths.get(opts("oracle-log"))); 0
           case None =>
-            val sf = opts.get("sf").map(Paths.get(_).toAbsolutePath)
-            val only = opts.get("only").toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
-            val wl = workload(wlName, Ctx(spark, seed, root, work), sf, only)
-            val checked = sf.isEmpty && only.isEmpty
+            val wl = workload(wlName, Ctx(spark, seed, root, work))
             if (opts.getOrElse("trace", "0") == "1") traceRun(wl, spark, root, seed)
-            else timedRuns(wl, sessionS, opts.getOrElse("seconds", "10").toDouble, checked)
+            else timedRuns(wl, sessionS, opts.getOrElse("seconds", "10").toDouble)
             0
         }
       } catch { case e: Throwable => e.printStackTrace(); 1 }
@@ -132,7 +139,7 @@ object Main {
       if (!before(id)) rdd.unpersist(blocking = true)
     }
 
-  def timedRuns(wl: Workload, sessionS: Double, window: Double, checked: Boolean): Unit = {
+  def timedRuns(wl: Workload, sessionS: Double, window: Double): Unit = {
     val spark = SparkSession.active
     println(s"# workload ${wl.name}: ${wl.size}")
     val prep = (1 to 3).map { _ => val t = System.nanoTime(); wl.prepare(); seconds(t) }
@@ -150,6 +157,8 @@ object Main {
     // at least two runs, so the median never rests on one
     while (timed < window || i < 2) {
       wl.beforeRun(i)
+      // every run starts from a collected heap, not from what the checks left
+      System.gc()
       val out = try wl.run(i) catch { case e: Throwable =>
         errors :+= s"run $i: ${e.getClass.getSimpleName}: ${e.getMessage}"
         RunOut(Double.NaN, 0)
@@ -160,7 +169,8 @@ object Main {
         outs += out
         errors ++= wl.check(i, out).map(e => s"run $i: $e")
       } else { timed = window; i = math.max(i, 1) }
-      if (timed >= window && i >= 1) heapMb = heapAfterGcMb()
+      // after a fixed number of runs, so the heap holds the same history
+      if (i == 1) heapMb = heapAfterGcMb()
       freeNew(spark, baseline)
       i += 1
     }
@@ -174,7 +184,7 @@ object Main {
     val attempted = math.max(i, runs.map(r => math.max(r.ops.size, 1)).sum)
     val failed = math.min(attempted, errors.size)
     val parity = extra.collect { case (n, v, _) if n.startsWith("triple_") => v }
-    val correct = checked && failed == 0 && selfTest.isEmpty && parity.forall(_ == 1.0)
+    val correct = failed == 0 && selfTest.isEmpty && parity.forall(_ == 1.0)
 
     val runS = runs.map(_.seconds)
     report("run_s", "s", runS)
@@ -189,9 +199,7 @@ object Main {
     report("heap_retained_mb", "MB", Seq(heapMb))
     report("setup_s", "s", Seq(setupS))
     report("setup.prepare_s", "s", prep)
-    wl.notes.foreach(n => println(s"# note $n"))
     (errors ++ selfTest).foreach(e => println(s"# ERROR $e"))
-    if (!checked) println("# outputs not checked against the digest file (--sf/--only)")
     println(s"# self-test: ${if (selfTest.isEmpty) "every checker rejected its corrupted input" else "FAILED"}")
 
     println(json(correct, attempted, failed, Seq(
@@ -202,7 +210,9 @@ object Main {
 
   /** One untraced run, the traced run, another untraced run. Run times
     * still fall from run to run in a new JVM, so the traced run is compared
-    * with the mean of the untraced runs on either side of it.
+    * with the mean of the untraced runs on either side of it. The traced
+    * run's time covers its layer calls, not the counts and checks after
+    * them.
     */
   def traceRun(wl: Workload, spark: SparkSession, root: Path, seed: Long): Unit = {
     println(s"# workload ${wl.name}: ${wl.size} (traced)")
@@ -219,18 +229,18 @@ object Main {
     val (before, errors0) = untraced(0)
 
     val tracer = new Tracer(spark.sparkContext, s"${wl.name}-$seed")
-    val t = System.nanoTime()
-    val layers = wl.traced(tracer)
-    val tracedS = seconds(t)
+    val traced = wl.traced(tracer)
     tracer.close()
     freeNew(spark, baseline)
     val (after, errors1) = untraced(1)
     val untracedS = (before + after) / 2
-    val errors = errors0 ++ errors1
+    val tracedS = traced.seconds
+    val failedRuns = Seq(errors0, traced.errors, errors1).count(_.nonEmpty)
+    val errors = errors0 ++ traced.errors.map(e => s"traced run: $e") ++ errors1
     val spanSum = tracer.topLevel.map(_.seconds).sum
     tracer.write(root.resolve(s"perfbench/.work/traces/${wl.name}-$seed.jsonl"))
 
-    val all = layers ++ Map(
+    val all = traced.layers ++ Map(
       "bench.trace_overhead_frac" -> (tracedS / untracedS - 1),
       "bench.layer_span_frac" -> spanSum / untracedS)
     val unknown = all.keySet -- perLayer.map(_._1)
@@ -239,7 +249,7 @@ object Main {
     println(f"# untraced run_s $before%.4f and $after%.4f, traced $tracedS%.4f, layer spans $spanSum%.4f s")
     metrics.foreach { case (n, v, u) => println(f"# $n%-26s $v%.4f $u") }
     errors.foreach(e => println(s"# ERROR $e"))
-    println(json(errors.isEmpty, 2, math.min(2, errors.size), metrics))
+    println(json(errors.isEmpty, 3, failedRuns, metrics))
   }
 
   /** Writes the query-mix digest file from a `graft.Verify` dump. Only

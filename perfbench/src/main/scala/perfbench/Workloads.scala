@@ -24,11 +24,12 @@ final case class OpOut(name: String, seconds: Double, rows: Long, error: Option[
   */
 final case class Ctx(spark: SparkSession, seed: Long, root: Path, work: Path)
 
-/** One benchmark workload. The harness calls `prepare` (input generation and
-  * warehouse preparation, timed as set-up), `warmUp`, then per run
-  * `beforeRun` (untimed), `run` (timed), `check` (untimed). `selfTest` feeds
-  * the checkers corrupted copies of real outputs; `traced` runs the
-  * workload's layers one call at a time under a tracer.
+/** One benchmark workload. The harness calls `prepare` three times (set-up:
+  * input generation and warehouse preparation, median reported), `warmUp`
+  * (untimed runs), then per run `beforeRun` (untimed), `run` (timed),
+  * `check` (untimed). `selfTest` feeds the
+  * checkers corrupted copies of real outputs; `traced` runs the workload's
+  * layers one call at a time under a tracer and checks that run's output.
   */
 trait Workload {
   def name: String
@@ -42,10 +43,13 @@ trait Workload {
   /** Workload-specific end-to-end numbers reported next to run_s. */
   def extraMetrics(outs: Seq[RunOut]): Seq[(String, Double, String)] = Nil
   def selfTest(): Seq[String]
-  /** Report lines about what the checks did not cover. */
-  def notes: Seq[String] = Nil
-  def traced(t: Tracer): Map[String, Double]
+  def traced(t: Tracer): TraceOut
 }
+
+/** A traced run: its per-layer metrics, the wall time of the part that
+  * stands for one run, and its output-check errors.
+  */
+final case class TraceOut(layers: Map[String, Double], seconds: Double, errors: Seq[String])
 
 /** Directory-tree helpers for warehouses and inputs. */
 object FileTree {
@@ -73,13 +77,15 @@ object FileTree {
 /** `Pipeline.run(resume = true)` over `base + delta` seeded pages into a
   * warehouse that already holds a committed run over the first `base`
   * pages, with a seeded alias dictionary and KB so canonicalization and
-  * linking run. The warehouse is built once in set-up and restored, untimed,
+  * linking run. The warehouse is built in the warm-up and restored, untimed,
   * before each run.
   */
-final class KgPipeline(ctx: Ctx, val name: String, base: Long, delta: Long) extends Workload {
+final class KgBuild(ctx: Ctx, base: Long, delta: Long, warmUpRuns: Int) extends Workload {
   import ctx.spark.implicits._
   private val spark: SparkSession = ctx.spark
+  def name = "kg_build"
   def unit = "docs"
+  def size = s"$base committed pages + $delta new"
 
   /** Seeded alias dictionary over the corpus vocabulary: organisation short
     * forms and initial-plus-surname person variants, some chained two deep.
@@ -115,6 +121,14 @@ final class KgPipeline(ctx: Ctx, val name: String, base: Long, delta: Long) exte
     (orgRows ++ people).toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
   }
 
+  private val baseDir = ctx.work.resolve("pages_base")
+  private val deltaDir = ctx.work.resolve("pages_delta")
+  private val snapshot = ctx.work.resolve("wh_snapshot")
+  private def wh(i: Int) = ctx.work.resolve(s"wh_$i")
+  private lazy val all = readPages(baseDir, deltaDir)
+  private var bytesPerDoc = Seq.empty[Double]
+  private var lastWh: Option[Path] = None
+
   /** Writes pages [from, until) of the seeded corpus as a parquet table. */
   private def writePages(from: Long, until: Long, dir: Path): Unit = {
     val seed = ctx.seed
@@ -123,28 +137,277 @@ final class KgPipeline(ctx: Ctx, val name: String, base: Long, delta: Long) exte
 
   private def readPages(dirs: Path*): Dataset[Page] = spark.read.parquet(dirs.map(_.toString): _*).as[Page]
 
-  private def pipeline(pages: Dataset[Page], runId: String, wh: Path, resume: Boolean): Unit =
-    Pipeline.run(spark, pages, runId, wh.toString, resume = resume,
+  private def pipeline(pages: Dataset[Page], runId: String, w: Path, resume: Boolean): Unit =
+    Pipeline.run(spark, pages, runId, w.toString, resume = resume,
       aliases = Some(aliases), kb = Some(kb))
 
-  /** (triple digest, node count, edge count) of the per-doc functions over
-    * `pages`, without canonicalization or writes: the reference for the
-    * committed tables.
+  def prepare(): Unit = {
+    Seq(baseDir, deltaDir).foreach(FileTree.deleteTree)
+    writePages(0, base, baseDir)
+    writePages(base, base + delta, deltaDir)
+  }
+
+  /** Builds the committed warehouse the runs resume from, the JVM's first
+    * pipeline run, then makes `warmUpRuns` untimed runs.
     */
-  private def reference(pages: Dataset[Page]): (Digest, Long, Long) = {
-    val graphs = Pipeline.docGraphs(spark, pages).persist(StorageLevel.MEMORY_AND_DISK)
+  def warmUp(): Unit = {
+    FileTree.deleteTree(snapshot)
+    pipeline(readPages(baseDir), "base", snapshot, resume = false)
+    (1 to warmUpRuns).foreach { j =>
+      val w = ctx.work.resolve(s"wh_warm$j")
+      FileTree.copyTree(snapshot, w)
+      pipeline(all, s"warm$j", w, resume = true)
+      FileTree.deleteTree(w)
+    }
+  }
+
+  override def beforeRun(i: Int): Unit = { FileTree.deleteTree(wh(i)); FileTree.copyTree(snapshot, wh(i)) }
+
+  def run(i: Int): RunOut = {
+    val t0 = System.nanoTime()
+    pipeline(all, s"run$i", wh(i), resume = true)
+    RunOut((System.nanoTime() - t0) / 1e9, delta)
+  }
+
+  /** What the committed warehouse must hold after a run, computed from the
+    * public per-doc functions over all pages and a driver-side union-find
+    * over the alias dictionary, without `Pipeline.run`.
+    */
+  private final case class Reference(triples: Digest, nodes: Long, edges: Long,
+                                     labels: Map[String, String], links: Map[String, Long]) {
+    /** `canonical_id` of a lower-cased node content: the union-find root of
+      * its alias component, or the key itself.
+      */
+    def canonicalId(key: String): String = Checks.canonicalId(labels.getOrElse(key, key))
+  }
+
+  private lazy val ref: Reference = {
+    val graphs = Pipeline.docGraphs(spark, all).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val d = Checks.tripleDigest(graphs.flatMap(g => GraphBuild.triples(g)).toDF())
-      val (n, e) = graphs.map(g => (g.nodes.size.toLong, g.edges.size.toLong)).reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      (d, n, e)
+      val triples = Checks.tripleDigest(graphs.flatMap(g => GraphBuild.triples(g)).toDF())
+      val (n, e) = graphs.map(g => (g.nodes.size.toLong, g.edges.size.toLong))
+        .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      val pairs = aliases.select(lower($"alias"), lower($"canonical")).as[(String, String)].collect()
+        .filter { case (a, c) => a != c }
+      val mentions = all.flatMap { p =>
+        Pipeline.buildDocOut(p).mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context))
+      }.toDF("mention_id", "url", "surface", "entity_type", "context")
+      val links = EntityLink.linkScoreHistogram(EntityLink.link(mentions, kb)).as[(String, Long)].collect().toMap
+      Reference(triples, n, e, Checks.unionFindLabels(pairs), links)
     } finally graphs.unpersist()
   }
 
-  private def committedDigest(wh: Path): Digest =
-    Checks.tripleDigest(new ParquetTableIO(wh.toString).readCommitted(spark, "triples"))
+  private def lineageErrors(lineage: DataFrame): Seq[String] = {
+    val r = lineage.agg(count(lit(1)), countDistinct(col("url"))).head()
+    val (n, distinct) = (r.getLong(0), r.getLong(1))
+    Seq(Option.when(n != distinct)(s"lineage has ${n - distinct} repeated urls"),
+      Option.when(distinct != base + delta)(s"lineage covers $distinct urls, expected ${base + delta}")).flatten
+  }
+
+  /** Distinct (lower-cased content, canonical_id) pairs of the committed
+    * nodes, with their node counts.
+    */
+  private def canonPairs(tio: ParquetTableIO): Seq[(String, String, Long)] =
+    tio.readCommitted(spark, "nodes").groupBy(lower($"content"), $"canonical_id").count()
+      .as[(String, String, Long)].collect().toSeq
+
+  private def canonErrors(pairs: Seq[(String, String, Long)]): Seq[String] = {
+    val wrong = pairs.filter { case (k, id, _) => id != ref.canonicalId(k) }
+    val merged = pairs.count { case (k, _, _) => ref.labels.getOrElse(k, k) != k }
+    Seq(Option.when(wrong.nonEmpty)(
+        s"${wrong.size} node keys carry another canonical_id than the alias union-find's, e.g. '${wrong.head._1}'"),
+      Option.when(merged == 0)("no committed node key is merged by the alias dictionary")).flatten
+  }
+
+  /** Committed link_metrics, summed over runs and partitions, by score bucket. */
+  private def linkBuckets(tio: ParquetTableIO): Map[String, Long] =
+    tio.readCommitted(spark, "link_metrics").groupBy($"score_bucket").agg(sum($"n"))
+      .as[(String, Long)].collect().toMap
+
+  private def linkErrors(got: Map[String, Long]): Seq[String] =
+    Option.when(got != ref.links)(s"link_metrics $got != EntityLink.link over all mentions ${ref.links}").toSeq
+
+  /** The committed tables of warehouse `w` must hold what the reference
+    * makes of all pages: triples by digest, nodes and edges by count, each
+    * node key's canonical_id, the link-score histogram, and every url once
+    * in lineage.
+    */
+  private def committedErrors(w: Path): Seq[String] = {
+    val tio = new ParquetTableIO(w.toString)
+    val triples = Checks.tripleDigest(tio.readCommitted(spark, "triples"))
+    val pairs = canonPairs(tio)
+    val nodes = pairs.map(_._3).sum
+    val edges = tio.readCommitted(spark, "edges").count()
+    lineageErrors(tio.readCommitted(spark, "lineage")) ++ Seq(
+      Option.when(triples != ref.triples)(s"committed triples $triples != reference ${ref.triples}"),
+      Option.when(nodes != ref.nodes)(s"committed nodes $nodes != kg.nodes ${ref.nodes}"),
+      Option.when(edges != ref.edges)(s"committed edges $edges != kg.edges ${ref.edges}")).flatten ++
+      canonErrors(pairs) ++ linkErrors(linkBuckets(tio))
+  }
+
+  def check(i: Int, out: RunOut): Seq[String] = {
+    bytesPerDoc :+= (FileTree.bytes(wh(i)) - FileTree.bytes(snapshot)).toDouble / delta
+    val errs = committedErrors(wh(i))
+    lastWh.foreach(FileTree.deleteTree)
+    lastWh = Some(wh(i))
+    errs
+  }
+
+  override def extraMetrics(outs: Seq[RunOut]): Seq[(String, Double, String)] = {
+    val (p, r) = Checks.tripleParity(ctx.root.resolve("test-oracle/expected_500.jsonl"))
+    Seq(("out_bytes_per_doc", Stats.median(bytesPerDoc), "B/doc"),
+      ("triple_precision", p, "ratio"), ("triple_recall", r, "ratio"))
+  }
+
+  /** Drops one committed triple, repeats one lineage url, gives one merged
+    * node key its own key's id (an identity canonicalization) and drops one
+    * mention from the link-score histogram.
+    */
+  def selfTest(): Seq[String] = lastWh.toSeq.flatMap { w =>
+    val tio = new ParquetTableIO(w.toString)
+    val dropped = Checks.tripleDigest(Checks.dropFirstRow(spark, tio.readCommitted(spark, "triples")))
+    val lin = tio.readCommitted(spark, "lineage")
+    val pairs = canonPairs(tio)
+    val unmerged = pairs.find { case (k, _, _) => ref.labels.getOrElse(k, k) != k }
+      .map { case (k, _, n) => pairs.filterNot(_._1 == k) :+ ((k, Checks.canonicalId(k), n)) }
+    val links = linkBuckets(tio)
+    val (b, n) = links.maxBy(_._2)
+    Seq(Option.when(dropped == ref.triples)("triple check accepted a dropped triple"),
+      Option.when(lineageErrors(lin.union(lin.limit(1))).isEmpty)("lineage check accepted a repeated url"),
+      Option.when(unmerged.forall(canonErrors(_).isEmpty))("canonical check accepted an unmerged key"),
+      Option.when(linkErrors(links.updated(b, n - 1)).isEmpty)("link check accepted a dropped mention")).flatten
+  }
+
+  /** `Pipeline.run` made from its public parts, in its order, one span and
+    * job group per layer call. Two differences from `Pipeline.run`: the
+    * per-doc graphs it persists are counted in their own span, where
+    * `Pipeline.run` first computes them inside the canonicalization job, and
+    * linking runs inside the link_metrics append, its only consumer, which
+    * is therefore the `link` span. The warehouse is checked like a timed
+    * run's.
+    */
+  def traced(t: Tracer): TraceOut = {
+    val runId = "traced"
+    val w = ctx.work.resolve("wh_traced")
+    FileTree.deleteTree(w)
+    FileTree.copyTree(snapshot, w)
+    val sc = spark.sparkContext
+    val tio = new ParquetTableIO(w.toString)
+    val filesBefore = FileTree.files(w, ".parquet").size
+    val lineageFiles = FileTree.files(w.resolve("lineage"), ".parquet").size
+    val t0 = System.nanoTime()
+    val todo = t.span("io.read_committed") {
+      require(!tio.committedRuns().contains(runId))
+      require(tio.read(spark, "lineage").where($"run_id" === runId).isEmpty)
+      val done = tio.readCommitted(spark, "lineage").where($"status" === "done").select($"url").distinct()
+      all.join(done, Seq("url"), "left_anti").as[Page]
+    }
+    val graphs = t.span("kg.map") {
+      val g = Pipeline.docGraphsWithPartition(spark, todo).persist(StorageLevel.MEMORY_AND_DISK)
+      g.count()
+      g
+    }
+    val nodeRows = graphs.flatMap { case (o, _, _) =>
+      val g = o.graph
+      g.nodes.map(n => (g.customerId, g.url, n.id, n.content, n.nodeType, n.confidence, n.source,
+        n.temporalIndex, n.temporalCategory))
+    }.toDF("customer_id", "url", "node_id", "content", "node_type", "confidence", "source_file",
+      "temporal_index", "temporal_category").withColumn("run_id", lit(runId))
+    val edgeRows = graphs.flatMap { case (o, _, _) =>
+      val g = o.graph
+      g.edges.map(e => (g.customerId, g.url, e.id, e.srcId, e.dstId, e.edgeType, e.confidence,
+        e.evidence, e.reasoning, e.temporalIndex, e.temporalCategory))
+    }.toDF("customer_id", "url", "edge_id", "source_node_id", "target_node_id",
+      "relationship_type", "weight", "evidence", "reasoning", "temporal_index", "temporal_category")
+      .withColumn("run_id", lit(runId))
+    val tripleRows = graphs.flatMap { case (o, _, _) => GraphBuild.triples(o.graph) }.toDF()
+      .withColumn("run_id", lit(runId))
+    val keyed = nodeRows.withColumn("key", lower($"content"))
+
+    val rddsBeforeCanon = sc.getPersistentRDDs.keySet.toSet
+    val canon = t.span("canon") {
+      require(!aliases.isEmpty)
+      val c = Canonicalize.canonicalKeys(spark, keyed.select($"key"), aliases).localCheckpoint()
+      c.count()
+      c
+    }
+    val canonLeft = (sc.getPersistentRDDs.keySet.toSet -- rddsBeforeCanon).size
+    val canonNodes = keyed.join(broadcast(canon), Seq("key"))
+      .withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
+      .drop("key", "canonical_key")
+    val metrics = graphs.map { case (o, pid, nanos) =>
+      val g = o.graph
+      Pipeline.PartitionMetric(runId, "graph_build", pid, 1L, g.nodes.size.toLong,
+        g.edges.size.toLong, g.edges.size.toLong, nanos / 1000000L)
+    }.groupBy($"run_id", $"stage", $"partition_id")
+      .agg(sum($"docs_processed").as("docs_processed"), sum($"nodes_emitted").as("nodes_emitted"),
+        sum($"edges_emitted").as("edges_emitted"), sum($"triples_emitted").as("triples_emitted"),
+        sum($"duration_ms").as("duration_ms"))
+    val lineage = graphs.map { case (o, pid, _) => Pipeline.LineageRow(runId, pid, o.graph.url, "done") }.toDF()
+    val mentions = graphs.flatMap { case (o, pid, _) =>
+      o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
+    }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
+    val linkMetrics = EntityLink.link(mentions, kb).groupBy($"partition_id",
+      when($"link_score".isNull, lit("unlinked"))
+        .otherwise(format_string("%.1f", floor($"link_score" * 10) / 10)).as("score_bucket"))
+      .agg(count(lit(1)).as("n")).withColumn("run_id", lit(runId))
+
+    t.span("io.append.nodes")(tio.append(canonNodes, "nodes", Seq("node_type")))
+    t.span("io.append.edges")(tio.append(edgeRows, "edges"))
+    t.span("io.append.triples")(tio.append(tripleRows, "triples"))
+    t.span("io.append.metrics")(tio.append(metrics, "metrics"))
+    t.span("io.append.lineage")(tio.append(lineage, "lineage"))
+    t.span("link")(tio.append(linkMetrics, "link_metrics"))
+    t.span("io.commit")(tio.commit(runId))
+    graphs.unpersist()
+    val seconds = (System.nanoTime() - t0) / 1e9
+
+    // counts for the ratios, outside every layer span
+    val nTodo = todo.count()
+    val buckets = tio.readCommitted(spark, "link_metrics").where($"run_id" === runId)
+      .groupBy($"score_bucket" === "unlinked").agg(sum($"n")).as[(Boolean, Long)].collect().toMap
+    val nMentions = buckets.values.sum
+    val nLinked = buckets.getOrElse(false, 0L)
+    val nCandidates = EntityLink.candidates(mentions, kb).count()
+    val comps = canon.groupBy($"canonical_key").count()
+    val nComponents = comps.count()
+    val largest = comps.agg(max($"count")).head().getLong(0)
+    val edgesIn = aliases.where(lower($"alias") =!= lower($"canonical")).count()
+    val mb = 1024.0 * 1024.0
+    val map = t.stats("kg.map")
+    val cs = t.stats("canon")
+    val ls = t.stats("link")
+    val io = t.stats("io.append").add(ls)
+    val layers = Map(
+      "kg.map_task_s" -> map.taskMs / 1e3, "kg.map_max_task_s" -> map.maxTaskMs / 1e3,
+      "kg.map_gc_s" -> map.gcMs / 1e3,
+      "canon.wall_s" -> t.seconds("canon"), "canon.jobs" -> cs.jobs.toDouble,
+      "canon.stages" -> cs.stages.toDouble, "canon.task_s" -> cs.taskMs / 1e3,
+      "canon.max_task_s" -> cs.maxTaskMs / 1e3, "canon.shuffle_write_mb" -> cs.shuffleWriteBytes / mb,
+      "canon.shuffle_records" -> cs.shuffleWriteRecords.toDouble, "canon.spill_mb" -> cs.spillBytes / mb,
+      "canon.edges_in" -> edgesIn.toDouble, "canon.components" -> nComponents.toDouble,
+      "canon.largest_component" -> largest.toDouble, "canon.cached_rdds_left" -> canonLeft.toDouble,
+      "link.wall_s" -> t.seconds("link"), "link.mentions" -> nMentions.toDouble,
+      "link.candidates" -> nCandidates.toDouble, "link.linked" -> nLinked.toDouble,
+      "link.linked_ratio" -> (if (nMentions == 0) 0.0 else nLinked.toDouble / nMentions),
+      "link.cand_per_mention" -> (if (nMentions == 0) 0.0 else nCandidates.toDouble / nMentions),
+      "link.shuffle_write_mb" -> ls.shuffleWriteBytes / mb,
+      "io.append_s" -> t.seconds("io.append"), "io.commit_ms" -> t.seconds("io.commit") * 1e3,
+      "io.rows_written" -> io.outputRecords.toDouble, "io.bytes_written" -> io.outputBytes.toDouble,
+      "io.files_written" -> (FileTree.files(w, ".parquet").size - filesBefore).toDouble,
+      "io.bytes_per_row" -> (if (io.outputRecords == 0) 0.0 else io.outputBytes.toDouble / io.outputRecords),
+      "io.read_committed_s" -> t.seconds("io.read_committed"),
+      "io.files_read" -> lineageFiles.toDouble,
+      "kg.docs_todo" -> nTodo.toDouble,
+      "kg.docs_skipped" -> (all.count() - nTodo).toDouble
+    ) ++ perDocLayers(todo)
+    val errors = committedErrors(w)
+    FileTree.deleteTree(w)
+    TraceOut(layers, seconds, errors)
+  }
 
   /** Per-doc layers, timed call by call inside one mapPartitions over the
-    * pages the pipeline would process.
+    * pages the pipeline processes.
     */
   private def perDocLayers(pages: Dataset[Page]): Map[String, Double] = {
     val sums = pages.rdd.mapPartitions { it =>
@@ -179,327 +442,48 @@ final class KgPipeline(ctx: Ctx, val name: String, base: Long, delta: Long) exte
       "kg.edges" -> sums(7).toDouble,
       "kg.triples" -> sums(8).toDouble)
   }
-
-  /** `Pipeline.run` re-enacted from its public parts, one span and job group
-    * per layer call, in the order `Pipeline.run` makes them. The derived
-    * tables mirror `Pipeline.run`'s; the per-layer numbers come from here.
-    */
-  private def tracedPipeline(t: Tracer, pages: Dataset[Page], runId: String, wh: Path,
-                               resume: Boolean): Map[String, Double] = {
-    val sc = spark.sparkContext
-    val tio = new ParquetTableIO(wh.toString)
-    val filesBefore = FileTree.files(wh, ".parquet").size
-    val lineageFiles = FileTree.files(wh.resolve("lineage"), ".parquet").size
-    val todo: Dataset[Page] =
-      if (resume && tio.exists("lineage")) t.span("io.read_committed") {
-        tio.read(spark, "lineage").where($"run_id" === runId).isEmpty
-        val done = tio.readCommitted(spark, "lineage")
-          .where($"status" === "done").select($"url").distinct()
-        pages.join(done, Seq("url"), "left_anti").as[Page].localCheckpoint()
-      } else pages
-    val graphs = t.span("kg.map") {
-      val g = Pipeline.docGraphsWithPartition(spark, todo).persist(StorageLevel.MEMORY_AND_DISK)
-      g.count()
-      g
-    }
-    val nodeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.nodes.map(n => (g.customerId, g.url, n.id, n.content, n.nodeType, n.confidence, n.source,
-        n.temporalIndex, n.temporalCategory))
-    }.toDF("customer_id", "url", "node_id", "content", "node_type", "confidence", "source_file",
-      "temporal_index", "temporal_category").withColumn("run_id", lit(runId))
-    val edgeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.edges.map(e => (g.customerId, g.url, e.id, e.srcId, e.dstId, e.edgeType, e.confidence,
-        e.evidence, e.reasoning, e.temporalIndex, e.temporalCategory))
-    }.toDF("customer_id", "url", "edge_id", "source_node_id", "target_node_id",
-      "relationship_type", "weight", "evidence", "reasoning", "temporal_index", "temporal_category")
-      .withColumn("run_id", lit(runId))
-    val tripleRows = graphs.flatMap { case (o, _, _) => GraphBuild.triples(o.graph) }.toDF()
-      .withColumn("run_id", lit(runId))
-    val keyed = nodeRows.withColumn("key", lower($"content"))
-
-    val rddsBeforeCanon = sc.getPersistentRDDs.keySet.toSet
-    val canon = t.span("canon") {
-      val c = Canonicalize.canonicalKeys(spark, keyed.select($"key"), aliases).localCheckpoint()
-      c.count()
-      c
-    }
-    val canonLeft = (sc.getPersistentRDDs.keySet.toSet -- rddsBeforeCanon).size
-    val canonNodes = keyed.join(broadcast(canon), Seq("key"))
-      .withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
-      .drop("key", "canonical_key")
-
-    val mentions = graphs.flatMap { case (o, pid, _) =>
-      o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
-    }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
-    val candidates = t.span("link.candidates") { EntityLink.candidates(mentions, kb).count() }
-    val linked = t.span("link") {
-      val l = EntityLink.link(mentions, kb).localCheckpoint()
-      l.count()
-      l
-    }
-    val linkMetrics = linked.groupBy($"partition_id",
-      when($"link_score".isNull, lit("unlinked"))
-        .otherwise(format_string("%.1f", floor($"link_score" * 10) / 10)).as("score_bucket"))
-      .agg(count(lit(1)).as("n")).withColumn("run_id", lit(runId))
-    val metrics = graphs.map { case (o, pid, nanos) =>
-      val g = o.graph
-      Pipeline.PartitionMetric(runId, "graph_build", pid, 1L, g.nodes.size.toLong,
-        g.edges.size.toLong, g.edges.size.toLong, nanos / 1000000L)
-    }.groupBy($"run_id", $"stage", $"partition_id")
-      .agg(sum($"docs_processed").as("docs_processed"), sum($"nodes_emitted").as("nodes_emitted"),
-        sum($"edges_emitted").as("edges_emitted"), sum($"triples_emitted").as("triples_emitted"),
-        sum($"duration_ms").as("duration_ms"))
-    val lineage = graphs.map { case (o, pid, _) => Pipeline.LineageRow(runId, pid, o.graph.url, "done") }.toDF()
-
-    t.span("io.append.nodes")(tio.append(canonNodes, "nodes", Seq("node_type")))
-    t.span("io.append.edges")(tio.append(edgeRows, "edges"))
-    t.span("io.append.triples")(tio.append(tripleRows, "triples"))
-    t.span("io.append.metrics")(tio.append(metrics, "metrics"))
-    t.span("io.append.lineage")(tio.append(lineage, "lineage"))
-    t.span("io.append.link_metrics")(tio.append(linkMetrics, "link_metrics"))
-    t.span("io.commit")(tio.commit(runId))
-    graphs.unpersist()
-
-    // counts for the ratios, outside every layer span
-    val nTodo = todo.count()
-    val nMentions = mentions.count()
-    val nLinked = linked.where($"entity_id".isNotNull).count()
-    val comps = canon.groupBy($"canonical_key").count()
-    val nComponents = comps.count()
-    val largest = comps.agg(max($"count")).head().getLong(0)
-    val edgesIn = aliases.where(lower($"alias") =!= lower($"canonical")).count()
-    val mb = 1024.0 * 1024.0
-    val map = t.stats("kg.map")
-    val cs = t.stats("canon")
-    val ls = t.stats("link")
-    val io = t.stats("io.append")
-    Map(
-      "kg.map_task_s" -> map.taskMs / 1e3, "kg.map_max_task_s" -> map.maxTaskMs / 1e3,
-      "kg.map_gc_s" -> map.gcMs / 1e3,
-      "canon.wall_s" -> t.seconds("canon"), "canon.jobs" -> cs.jobs.toDouble,
-      "canon.stages" -> cs.stages.toDouble, "canon.task_s" -> cs.taskMs / 1e3,
-      "canon.max_task_s" -> cs.maxTaskMs / 1e3, "canon.shuffle_write_mb" -> cs.shuffleWriteBytes / mb,
-      "canon.shuffle_records" -> cs.shuffleWriteRecords.toDouble, "canon.spill_mb" -> cs.spillBytes / mb,
-      "canon.edges_in" -> edgesIn.toDouble, "canon.components" -> nComponents.toDouble,
-      "canon.largest_component" -> largest.toDouble, "canon.cached_rdds_left" -> canonLeft.toDouble,
-      "link.wall_s" -> t.seconds("link"), "link.mentions" -> nMentions.toDouble,
-      "link.candidates" -> candidates.toDouble, "link.linked" -> nLinked.toDouble,
-      "link.linked_ratio" -> (if (nMentions == 0) 0.0 else nLinked.toDouble / nMentions),
-      "link.cand_per_mention" -> (if (nMentions == 0) 0.0 else candidates.toDouble / nMentions),
-      "link.shuffle_write_mb" -> ls.shuffleWriteBytes / mb,
-      "io.append_s" -> t.seconds("io.append"), "io.commit_ms" -> t.seconds("io.commit") * 1e3,
-      "io.rows_written" -> io.outputRecords.toDouble, "io.bytes_written" -> io.outputBytes.toDouble,
-      "io.files_written" -> (FileTree.files(wh, ".parquet").size - filesBefore).toDouble,
-      "io.bytes_per_row" -> (if (io.outputRecords == 0) 0.0 else io.outputBytes.toDouble / io.outputRecords),
-      "io.read_committed_s" -> t.seconds("io.read_committed"),
-      "io.files_read" -> (if (resume) lineageFiles.toDouble else 0.0),
-      "kg.docs_todo" -> nTodo.toDouble,
-      "kg.docs_skipped" -> (pages.count() - nTodo).toDouble
-    ) ++ perDocLayers(todo)
-  }
-
-  def size = s"$base committed pages + $delta new"
-  private val baseDir = ctx.work.resolve("pages_base")
-  private val deltaDir = ctx.work.resolve("pages_delta")
-  private val snapshot = ctx.work.resolve("wh_snapshot")
-  private def wh(i: Int) = ctx.work.resolve(s"wh_$i")
-  private lazy val all = readPages(baseDir, deltaDir)
-  private lazy val ref = reference(all)
-  private var bytesPerDoc = Seq.empty[Double]
-  private var lastWh: Option[Path] = None
-
-  def prepare(): Unit = {
-    Seq(baseDir, deltaDir).foreach(FileTree.deleteTree)
-    writePages(0, base, baseDir)
-    writePages(base, base + delta, deltaDir)
-    aliases.count(); kb.count()
-  }
-
-  /** Builds the committed warehouse the runs resume from: the first
-    * pipeline run in a JVM, about a third slower than the next ones.
-    */
-  def warmUp(): Unit = {
-    FileTree.deleteTree(snapshot)
-    pipeline(readPages(baseDir), "base", snapshot, resume = false)
-  }
-
-  override def beforeRun(i: Int): Unit = { FileTree.deleteTree(wh(i)); FileTree.copyTree(snapshot, wh(i)) }
-
-  def run(i: Int): RunOut = {
-    val t0 = System.nanoTime()
-    pipeline(all, s"run$i", wh(i), resume = true)
-    RunOut((System.nanoTime() - t0) / 1e9, delta)
-  }
-
-  private def lineageErrors(lineage: DataFrame): Seq[String] = {
-    val r = lineage.agg(count(lit(1)), countDistinct(col("url"))).head()
-    val (n, distinct) = (r.getLong(0), r.getLong(1))
-    Seq(Option.when(n != distinct)(s"lineage has ${n - distinct} repeated urls"),
-      Option.when(distinct != base + delta)(s"lineage covers $distinct urls, expected ${base + delta}")).flatten
-  }
-
-  /** The committed tables must hold exactly what the per-doc functions make
-    * of all pages: triples by digest, nodes and edges by count, every url
-    * once in lineage.
-    */
-  def check(i: Int, out: RunOut): Seq[String] = {
-    val (d, nodes, edges) = ref
-    val tio = new ParquetTableIO(wh(i).toString)
-    val got = committedDigest(wh(i))
-    val nGot = tio.readCommitted(spark, "nodes").count()
-    val eGot = tio.readCommitted(spark, "edges").count()
-    bytesPerDoc :+= (FileTree.bytes(wh(i)) - FileTree.bytes(snapshot)).toDouble / delta
-    val errs = lineageErrors(tio.readCommitted(spark, "lineage")) ++ Seq(
-      Option.when(got != d)(s"committed triples $got != reference $d"),
-      Option.when(nGot != nodes)(s"committed nodes $nGot != kg.nodes $nodes"),
-      Option.when(eGot != edges)(s"committed edges $eGot != kg.edges $edges")).flatten
-    lastWh.foreach(FileTree.deleteTree)
-    lastWh = Some(wh(i))
-    errs
-  }
-
-  override def extraMetrics(outs: Seq[RunOut]): Seq[(String, Double, String)] = {
-    val (p, r) = Checks.tripleParity(ctx.root.resolve("test-oracle/expected_500.jsonl"))
-    Seq(("out_bytes_per_doc", Stats.median(bytesPerDoc), "B/doc"),
-      ("triple_precision", p, "ratio"), ("triple_recall", r, "ratio"))
-  }
-
-  /** Drops one committed triple and repeats one lineage url. */
-  def selfTest(): Seq[String] = lastWh.toSeq.flatMap { w =>
-    val tio = new ParquetTableIO(w.toString)
-    val corrupted = Checks.tripleDigest(Checks.dropFirstRow(spark, tio.readCommitted(spark, "triples")))
-    val lin = tio.readCommitted(spark, "lineage")
-    Option.when(corrupted == ref._1)("triple check accepted a dropped triple").toSeq ++
-      Option.when(lineageErrors(lin.union(lin.limit(1))).isEmpty)("lineage check accepted a repeated url")
-  }
-
-  def traced(t: Tracer): Map[String, Double] = {
-    val w = ctx.work.resolve("wh_traced")
-    FileTree.deleteTree(w)
-    FileTree.copyTree(snapshot, w)
-    tracedPipeline(t, all, "traced", w, resume = true)
-  }
 }
 
-/** Connected components over a hub-skewed edge list (the generator of
-  * `graft.tools.CanonScale`, seeded) plus one deep path.
+/** A fixed subset of `graft.Bench`'s headline queries over the sf0.01 table
+  * set in `perfbench/data`, each rebuilt from `SparkEntry.queries` and sunk
+  * with `count()`. One run is one pass over the mix, always in the same
+  * order: a query's time depends on its position, so a seeded order would
+  * make seeds differ by more than runs do. The tables are the ones the
+  * digest file was verified on, so the seed changes nothing here.
   */
-final class CanonHub(ctx: Ctx, edges: Long, depth: Long) extends Workload {
+final class QueryMix(ctx: Ctx, warmUpPasses: Int) extends Workload {
   private val spark = ctx.spark
-  import spark.implicits._
-  def name = "canon_hub"
-  def unit = "edges"
-  def size = s"$edges hub-graph edges + $depth-hop path"
-  private val edgesDir = ctx.work.resolve("edges")
-  private val seed = ctx.seed
-  private val pathIds = (0L to depth).map(j => f"p${seed}%d_$j%09d")
-  private var labels: Map[String, String] = Map.empty
-  private lazy val expected: Map[String, String] =
-    Checks.unionFindLabels(spark.read.parquet(edgesDir.toString).as[(String, String)].collect())
-
-  def prepare(): Unit = {
-    FileTree.deleteTree(edgesDir)
-    val m = math.max(edges / 10, 1L)
-    val s = seed
-    val mass = spark.range(edges).map { i =>
-      val r = new SplitRng(s, i)
-      (i % 10) match {
-        case k if k < 6 => (s"v${math.floorMod(r.nextLong(), m)}", s"v${math.floorMod(r.nextLong(), m)}")
-        case k if k < 9 => ("hub", s"v${math.floorMod(r.nextLong(), m)}") // ~30% of edges on one node
-        case _ => (s"c${i / 160}_${(i % 160) / 10}", s"c${i / 160}_${(i % 160) / 10 + 1}")
-      }
-    }
-    val path = spark.range(depth).map(j => (f"p$s%d_$j%09d", f"p$s%d_${j + 1}%09d"))
-    mass.union(path).toDF("src", "dst").repartition(8).write.parquet(edgesDir.toString)
-  }
-
-  private def components(): Map[String, String] =
-    Canonicalize.connectedComponents(spark, spark.read.parquet(edgesDir.toString))
-      .as[(String, String)].collect().toMap
-
-  def warmUp(): Unit = components()
-
-  def run(i: Int): RunOut = {
-    val t0 = System.nanoTime()
-    labels = components()
-    RunOut((System.nanoTime() - t0) / 1e9, edges + depth)
-  }
-
-  def check(i: Int, out: RunOut): Seq[String] = Checks.labelErrors(labels, expected, pathIds)
-
-  def selfTest(): Seq[String] = {
-    val (k, v) = labels.find { case (k, v) => k != v }.get
-    val changed = labels.updated(k, k)
-    val pathChanged = labels.updated(pathIds.last, pathIds.last)
-    Seq(Option.when(Checks.labelErrors(changed, expected, Nil).isEmpty)("label check accepted a changed label"),
-      Option.when(Checks.labelErrors(pathChanged, labels, pathIds).isEmpty)("path check accepted a changed label"))
-      .flatten
-  }
-
-  def traced(t: Tracer): Map[String, Double] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    labels = t.span("canon")(components())
-    val left = (sc.getPersistentRDDs.keySet.toSet -- before).size
-    val cs = t.stats("canon")
-    val sizes = labels.groupBy(_._2).values.map(_.size)
-    val mb = 1024.0 * 1024.0
-    Map("canon.wall_s" -> t.seconds("canon"), "canon.jobs" -> cs.jobs.toDouble,
-      "canon.stages" -> cs.stages.toDouble, "canon.task_s" -> cs.taskMs / 1e3,
-      "canon.max_task_s" -> cs.maxTaskMs / 1e3, "canon.shuffle_write_mb" -> cs.shuffleWriteBytes / mb,
-      "canon.shuffle_records" -> cs.shuffleWriteRecords.toDouble, "canon.spill_mb" -> cs.spillBytes / mb,
-      "canon.edges_in" -> (edges + depth).toDouble, "canon.components" -> sizes.size.toDouble,
-      "canon.largest_component" -> sizes.max.toDouble, "canon.cached_rdds_left" -> left.toDouble)
-  }
-}
-
-/** A fixed subset of `graft.Bench`'s headline queries over a fixed sf table
-  * set, each rebuilt from `SparkEntry.queries` and sunk with `count()`, in a
-  * seeded order.
-  */
-final class QueryMix(ctx: Ctx, sfDir: Path, expectedFile: Path, only: Seq[String]) extends Workload {
-  private val spark = ctx.spark
+  private val sfDir = QueryMix.tables(ctx.root)
   def name = "query_mix"
   def unit = "queries"
   def size = s"${names.size} queries over ${ctx.root.relativize(sfDir)}"
-  private lazy val names: Seq[String] = {
-    val base = if (only.nonEmpty) only else QueryMix.watched
-    new scala.util.Random(ctx.seed).shuffle(base)
-  }
-  /** Queries without a digest (see the digest file's comments) are timed
-    * and listed as unchecked in the report.
-    */
-  private lazy val expected = Checks.readExpected(expectedFile)
-  override def notes: Seq[String] =
-    names.filterNot(expected.contains).sorted.map(q => s"$q: timed, row count and digest unchecked")
-  private var hashErrors = Seq.empty[String]
+  private val names = QueryMix.watched
+  private lazy val expected = Checks.readExpected(ctx.root.resolve("perfbench/expected/query_mix_sf0.01.txt"))
+  private var digestErrors = Seq.empty[String]
   private var firstResult: Option[(String, DataFrame)] = None
 
   private def query(q: String): DataFrame = graft.SparkEntry.queries(q)(spark, sfDir.toString)
 
-  def prepare(): Unit = { expected; names }
+  /** Reads the digest file. The tables are the checkout's own. */
+  def prepare(): Unit =
+    require(names.forall(expected.contains), s"no expected digest for ${names.filterNot(expected.contains)}")
 
   /** One pass that digests every query's full result, which checks every
-    * value outside the timed passes, then one pass as timed: `count()`
-    * prunes columns, so its plans differ from the digest's and compile on
-    * their first run. Tables other than the digested ones skip the digest.
+    * value outside the timed runs, then `warmUpPasses` passes as timed:
+    * `count()` prunes columns, so its plans differ from the digest's and
+    * compile on their first run.
     */
   def warmUp(): Unit = {
-    if (sfDir == QueryMix.tables(ctx.root)) hashErrors = digestErrors()
-    names.foreach(q => query(q).count())
-  }
-
-  private def digestErrors(): Seq[String] =
-    names.flatMap { q =>
+    digestErrors = names.flatMap { q =>
       try {
         val df = query(q)
         val d = Checks.digest(df)
-        if (firstResult.isEmpty && d.rows > 1 && expected.contains(q)) firstResult = Some(q -> df)
-        expected.get(q).filter(_ != d).map(e => s"$q: digest $d != expected $e")
+        if (firstResult.isEmpty && d.rows > 1) firstResult = Some(q -> df)
+        Option.when(d != expected(q))(s"$q: digest $d != expected ${expected(q)}")
       } catch { case e: Throwable => Some(s"$q: ${e.getClass.getSimpleName}: ${e.getMessage}") }
     }
+    (1 to warmUpPasses).foreach(_ => names.foreach(q => query(q).count()))
+  }
 
   def run(i: Int): RunOut = {
     val t0 = System.nanoTime()
@@ -512,14 +496,15 @@ final class QueryMix(ctx: Ctx, sfDir: Path, expectedFile: Path, only: Seq[String
         OpOut(q, (System.nanoTime() - s) / 1e9, -1, Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
     }
-    RunOut((System.nanoTime() - t0) / 1e9, names.size, ops)
+    RunOut((System.nanoTime() - t0) / 1e9, ops.size, ops)
   }
 
+  private def rowErrors(rows: Seq[(String, Long)]): Seq[String] =
+    rows.collect { case (q, n) if n != expected(q).rows => s"$q: $n rows != ${expected(q).rows}" }
+
   def check(i: Int, out: RunOut): Seq[String] =
-    (if (i == 0) hashErrors else Nil) ++ out.ops.flatMap { o =>
-      o.error.map(e => s"${o.name}: $e").orElse(
-        expected.get(o.name).filter(_.rows != o.rows).map(e => s"${o.name}: ${o.rows} rows != ${e.rows}"))
-    }
+    (if (i == 0) digestErrors else Nil) ++ out.ops.flatMap(o => o.error.map(e => s"${o.name}: $e")) ++
+      rowErrors(out.ops.filter(_.error.isEmpty).map(o => o.name -> o.rows))
 
   override def extraMetrics(outs: Seq[RunOut]): Seq[(String, Double, String)] = {
     val ts = outs.flatMap(_.ops.map(_.seconds))
@@ -541,29 +526,30 @@ final class QueryMix(ctx: Ctx, sfDir: Path, expectedFile: Path, only: Seq[String
     Option.when(Checks.digest(altered) == expected(q))(s"$q: digest check accepted an altered row").toSeq
   }
 
-  def traced(t: Tracer): Map[String, Double] = {
+  def traced(t: Tracer): TraceOut = {
     val t0 = System.currentTimeMillis()
-    val rows = names.map(q => q -> t.span(s"mix.$q")(query(q).count())).toMap
+    val rows = names.map(q => q -> t.span(s"mix.$q")(query(q).count()))
     val t1 = System.currentTimeMillis()
     val mix = t.stats("mix.")
     val mb = 1024.0 * 1024.0
     val busy = t.listener.stageBusyMs(t0, t1)
-    Map("mix.jobs" -> mix.jobs.toDouble, "mix.stages" -> mix.stages.toDouble,
+    val layers = Map("mix.jobs" -> mix.jobs.toDouble, "mix.stages" -> mix.stages.toDouble,
       "mix.task_s" -> mix.taskMs / 1e3, "mix.shuffle_write_mb" -> mix.shuffleWriteBytes / mb,
       "mix.spill_mb" -> mix.spillBytes / mb, "mix.driver_s" -> (t1 - t0 - busy) / 1e3) ++
-      QueryMix.watched.filter(rows.contains).flatMap { q =>
+      rows.flatMap { case (q, n) =>
         val s = t.stats(s"mix.$q")
         val short = q.takeWhile(_ != '_')
         Seq(s"$short.wall_s" -> t.seconds(s"mix.$q"), s"$short.jobs" -> s.jobs.toDouble,
-          s"$short.shuffle_write_mb" -> s.shuffleWriteBytes / mb, s"$short.rows_out" -> rows(q).toDouble)
+          s"$short.shuffle_write_mb" -> s.shuffleWriteBytes / mb, s"$short.rows_out" -> n.toDouble)
       }
+    TraceOut(layers, (t1 - t0) / 1e3, rowErrors(rows))
   }
 }
 
 object QueryMix {
   def tables(root: Path): Path = root.resolve("perfbench/data/sf0.01")
 
-  /** `graft.Bench`'s headline list. */
+  /** `graft.Bench`'s headline list: the queries the digest file covers. */
   val headline: Seq[String] = Seq(
     "q01_pricing_agg", "q02_region_revenue", "q03_top_orders_per_segment",
     "q11_doc_stats", "q12_exact_dedup", "q15_minhash", "q34_neardup_lsh_verified",
@@ -593,8 +579,8 @@ object QueryMix {
   /** The timed mix, whose layer numbers are also reported query by query:
     * two slow leaves (q73 prefix-Jaccard, q94 hamming join) and two open
     * round-6 regressions (q89 bloom join, q82 cube). The whole headline list
-    * takes about 50 s a pass on four cores and a cold first pass over five
-    * queries already 25 s, too long for the benchmark's per-run budget.
+    * takes about 50 s a pass on four cores, too long for the benchmark's
+    * per-run budget.
     */
   val watched: Seq[String] = Seq("q73_prefix_jaccard", "q94_hamming_join", "q89_bloom_join",
     "q82_cube_segments")
