@@ -1,5 +1,6 @@
 package graft.canon
 
+import graft.exec.Snapshots
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,45 +29,28 @@ import org.apache.spark.sql.functions._
   */
 object Canonicalize {
 
-  /** Connected components over an undirected edge list.
+  /** Safety bound on large-star+small-star rounds: with O(log n)
+    * convergence, 50 covers any graph that fits on storage.
+    */
+  private val MaxIter = 50
+
+  /** Connected components over an undirected edge list. Throws
+    * IllegalStateException instead of returning wrong labels if the rounds
+    * do not converge within the safety bound.
     *
     * @param edges DataFrame with two string columns (src, dst)
-    * @param maxIter safety bound on large-star+small-star rounds; with
-    *   O(log n) convergence, 50 covers any graph that fits on storage.
-    *   Throws IllegalStateException instead of returning wrong labels if hit.
-    * @param salt retained for API compatibility; the star rounds' min
-    *   aggregates get their skew-immunity from map-side partial aggregation
     * @return DataFrame (id, component) — component = min id in the component
     */
-  def connectedComponents(
-      spark: SparkSession,
-      edges: DataFrame,
-      srcCol: String = "src",
-      dstCol: String = "dst",
-      maxIter: Int = 50,
-      salt: Int = 8): DataFrame = {
+  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
 
     // Orient every edge (u, v) with u > v (string order — consistent with
     // component = lexicographic min id); self-loops dropped.
     val e0 = edges
-      .select(col(srcCol).cast("string").as("a"), col(dstCol).cast("string").as("b"))
+      .select($"src".cast("string").as("a"), $"dst".cast("string").as("b"))
       .where($"a" =!= $"b")
 
-    // localCheckpoint persists its RDD in the block manager and Dataset has
-    // no handle to unpersist it; track the ids each checkpoint adds so the
-    // superseded snapshot can be freed — otherwise the loop retains
-    // O(iterations) cached edge tables (real memory at 10⁹ entities).
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
-    var (cur, curIds) = checkpointTracked(
+    var (cur, curIds) = Snapshots.checkpoint(
       e0.select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v")).distinct())
 
     /** Cheap convergence fingerprint: (edge count, XOR of per-edge xxhash64)
@@ -89,7 +73,7 @@ object Canonicalize {
     // goes exponential), but the snapshot is only computed by the
     // fingerprint job itself, so each round costs ONE job instead of
     // checkpoint + a separate fingerprint job
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       // ---- large-star: every node u links its LARGER neighbors to the min
       // of its closed neighborhood. min is a map-side-partial hash aggregate
       // (no neighbor lists); each undirected edge contributes exactly one
@@ -113,7 +97,7 @@ object Canonicalize {
         .select($"v".as("u"), $"m".as("v"))
         .union(mins2.select($"u", $"m".as("v")))
         .distinct()
-      val (next, nextIds) = checkpointTracked(ss, eager = false)
+      val (next, nextIds) = Snapshots.checkpoint(ss, eager = false)
       val fp = fingerprint(next) // ONE job: materializes the lazy snapshot en route
       // fingerprint equality is necessary-but-probabilistic (a ~2⁻⁶⁴ XOR
       // collision would otherwise silently freeze WRONG labels); confirm
@@ -122,14 +106,14 @@ object Canonicalize {
       // fingerprint-equal rounds (normally exactly once, at convergence)
       converged = fp == prevFp && next.except(cur).isEmpty
       prevFp = fp
-      free(curIds)
+      Snapshots.free(spark, curIds)
       cur = next
       curIds = nextIds
       iter += 1
     }
-    if (!converged && iter >= maxIter)
+    if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter star rounds — raise maxIter")
+        s"connectedComponents did not converge in $MaxIter star rounds")
     // converged state is a forest of stars: every non-root appears as the
     // larger endpoint pointing at its component's min id (groupBy-min is an
     // identity pass there — kept as a guard so a residual multi-edge could
@@ -166,9 +150,7 @@ object Canonicalize {
     if (edgePairs.isEmpty) return keys.select($"key", $"key".as("canonical_key"))
 
     val comps = connectedComponents(spark, edgePairs)
-    keys.join(broadcastIfSmall(comps), keys("key") === comps("id"), "left")
+    keys.join(comps, keys("key") === comps("id"), "left")
       .select($"key", coalesce($"component", $"key").as("canonical_key"))
   }
-
-  private def broadcastIfSmall(df: DataFrame): DataFrame = df // let AQE decide; hook for hints
 }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.exec.Snapshots.{checkpoint, free}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,7 @@ import org.apache.spark.sql.functions._
   * set) onto the src-keyed edge list — work per round is proportional to
   * the frontier's out-edges, the Pregel shape — then anti-joins visited.
   * Lineage is truncated per round with the ≤2-live-snapshots
-  * localCheckpoint discipline (Canonicalize's checkpointTracked pattern);
+  * localCheckpoint discipline (graft.exec.Snapshots);
   * the loop exits early when the frontier empties (one scalar count per
   * round reaches the driver, nothing else).
   */
@@ -20,21 +21,12 @@ object Bfs {
   def khop(spark: SparkSession, edges: DataFrame, seed: Column, k: Int,
            srcCol: String = "src", dstCol: String = "dst",
            directed: Boolean = false): DataFrame = {
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
-    val (e, eIds) = checkpointTracked(sym.distinct())
+    val (e, eIds) = checkpoint(sym.distinct())
 
-    var (visited, visitedIds) = checkpointTracked(
+    var (visited, visitedIds) = checkpoint(
       spark.range(1).select(seed.as("node_id"), lit(0L).as("dist")))
     var frontier = visited
     var d = 0
@@ -49,14 +41,14 @@ object Bfs {
       // (plan truncated immediately) that the frontier count itself
       // materializes; the superseded visited snapshot is freed only AFTER
       // that count, since the lazy snapshot's computation reads it
-      val (union, unionIds) = checkpointTracked(visited.unionAll(next), eager = false)
+      val (union, unionIds) = checkpoint(visited.unionAll(next), eager = false)
       frontier = union.where(col("dist") === d)
       frontierSize = frontier.count()
-      free(visitedIds)
+      free(spark, visitedIds)
       visited = union
       visitedIds = unionIds
     }
-    free(eIds) // visited snapshot stays live for the caller
+    free(spark, eIds) // visited snapshot stays live for the caller
     visited
   }
 }

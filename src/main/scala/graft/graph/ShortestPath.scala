@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.exec.Snapshots.{checkpoint, free}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,32 +18,23 @@ import org.apache.spark.sql.functions._
   * round), followed by one union + min hash aggregate. A path of j edges
   * is applied by round j, so `rounds` rounds exactly cover the <=rounds-
   * edge path space. Lineage truncated per round with the <=2-live-
-  * snapshots localCheckpoint discipline; the loop exits early when no
-  * distance improves (one scalar count per round).
+  * snapshots localCheckpoint discipline (graft.exec.Snapshots); the loop
+  * exits early when no distance improves (one scalar count per round).
   */
 object ShortestPath {
 
   def ssspBounded(spark: SparkSession, edges: DataFrame, seed: Column, rounds: Int,
                   srcCol: String = "src", dstCol: String = "dst", wCol: String = "w",
                   directed: Boolean = false): DataFrame = {
-    val sc = spark.sparkContext
-    def checkpointTracked(df: DataFrame, eager: Boolean = true): (DataFrame, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet.toSet
-      val out = df.localCheckpoint(eager)
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
-    def free(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    val (e, eIds) = checkpointTracked(sym.distinct())
+    val (e, eIds) = checkpoint(sym.distinct())
 
-    var (dist, distIds) = checkpointTracked(
+    var (dist, distIds) = checkpoint(
       spark.range(1).select(seed.as("node_id"), lit(0L).as("dist")))
-    var (delta, deltaIds) = (dist, Set.empty[Int])
+    var delta = dist
     var r = 0
     var deltaSize = 1L
     while (r < rounds && deltaSize > 0L) {
@@ -62,7 +54,7 @@ object ShortestPath {
       // checkpoint materialized by the delta count itself, and the
       // superseded snapshot is freed only AFTER that count (the lazy
       // snapshot's computation reads it)
-      val (combined, newIds) = checkpointTracked(
+      val (combined, newIds) = checkpoint(
         dist.join(improved.select(col("node_id").as("i_id")),
             dist("node_id") === col("i_id"), "left_anti")
           .select(col("node_id"), col("dist"), lit(false).as("imp"))
@@ -70,12 +62,11 @@ object ShortestPath {
         eager = false)
       delta = combined.where(col("imp")).select(col("node_id"), col("dist"))
       deltaSize = delta.count()
-      free(distIds); free(deltaIds)
+      free(spark, distIds)
       dist = combined.select(col("node_id"), col("dist"))
       distIds = newIds
-      deltaIds = Set.empty
     }
-    free(eIds); free(deltaIds)
+    free(spark, eIds) // dist snapshot stays live for the caller
     dist
   }
 }

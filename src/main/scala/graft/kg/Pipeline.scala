@@ -49,17 +49,12 @@ object Pipeline {
     * §2.9 pluggable enrichment seam (no-op default).
     */
   def buildDoc(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
-               temporalIndex: String = ""): DocGraph = {
-    val doc = DocAnalyze.analyze(p)
-    val needs = Needs.profile(doc)
-    if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
-    else GraphBuild.build(doc, needs, enricher)
-  }
+               temporalIndex: String = ""): DocGraph =
+    analyzeAndBuild(p, v1, enricher, temporalIndex)._2
 
-  /** pages → Dataset[DocGraph] with per-partition metrics + lineage capture.
-    * mapPartitions keeps the whole per-doc pipeline in one task; metric rows
-    * ride on accumulators-free side channel (emitted as data, north rule's
-    * per-partition metrics table).
+  /** pages → Dataset[DocGraph]: `buildDoc` per page inside one
+    * mapPartitions task (no metrics, lineage or mentions; `Pipeline.run`
+    * uses `docGraphsWithPartition`).
     */
   def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false,
                 temporalIndex: String = ""): Dataset[DocGraph] = {
@@ -70,14 +65,23 @@ object Pipeline {
   /** Variant keeping the NER mentions (context = leading 400 chars). */
   def buildDocOut(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
                   temporalIndex: String = ""): DocOut = {
-    val doc = DocAnalyze.analyze(p)
-    val needs = Needs.profile(doc)
-    val g = if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
-            else GraphBuild.build(doc, needs, enricher)
+    val (doc, g) = analyzeAndBuild(p, v1, enricher, temporalIndex)
     val ctx = doc.text.take(400)
     DocOut(g, doc.entities.zipWithIndex.map { case (e, i) =>
       MentionRow(doc.url, i, e.text, e.entityType, ctx)
     })
+  }
+
+  /** extract → analyze → needs → graph-build, shared by `buildDoc` and
+    * `buildDocOut`; the analysis is returned for the mentions.
+    */
+  private def analyzeAndBuild(p: Page, v1: Boolean, enricher: Enricher,
+                              temporalIndex: String): (DocAnalysis, DocGraph) = {
+    val doc = DocAnalyze.analyze(p)
+    val needs = Needs.profile(doc)
+    val g = if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
+            else GraphBuild.build(doc, needs, enricher)
+    (doc, g)
   }
 
   /** Same, plus partition id and per-doc build nanos so lineage and metrics

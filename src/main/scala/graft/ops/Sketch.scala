@@ -45,7 +45,9 @@ object Sketch {
 
   /** Per-group HLL distinct estimate of `valueCol`, with the exact distinct
     * count alongside (the exact pass is for small-scale verification — at
-    * 100 TB you'd drop it and keep only the sketch).
+    * 100 TB you'd drop it and keep only the sketch). NULL values are not
+    * counted, as in countDistinct; a group holding only NULLs is kept with
+    * n_exact = n_registers = 0 and estimate 0.
     * Output: (group, n_exact, n_registers, hll_estimate).
     */
   def hllDistinct(rows: DataFrame, groupCol: String, valueCol: String): DataFrame = {
@@ -56,12 +58,12 @@ object Sketch {
     // distinct pairs ≡ the old per-group countDistinct).
     val d = rows.select(col(groupCol).as("grp"), col(valueCol).as("v"))
       .distinct().localCheckpoint()
-    val est = estimateRegs(registersFromDistinct(d))
-    val exact = d.groupBy(col("grp")).agg(count(lit(1)).as("n_exact"))
+    val est = estimateRegs(registersFromDistinct(d.where(col("v").isNotNull)))
+    val exact = d.groupBy(col("grp")).agg(count(col("v")).as("n_exact"))
     exact.join(est, Seq("grp"), "left")
       .select(col("grp").as(groupCol), col("n_exact"),
         coalesce(col("n_registers"), lit(0L)).as("n_registers"),
-        col("hll_estimate"))
+        coalesce(col("hll_estimate"), lit(0.0)).as("hll_estimate"))
   }
 
   /** (grp, bucket, mx) register rows from DISTINCT (grp, v) pairs. */

@@ -81,7 +81,7 @@ class CanonicalizeSpec extends SparkSpec {
     assert(out.forall(_._2 == "n0000"), s"unconverged labels: ${out.filter(_._2 != "n0000").take(5).toSeq}")
   }
 
-  test("CC loop frees superseded edge checkpoints (<=2 live snapshots)") {
+  test("CC loop frees superseded edge checkpoints (<=1 live snapshot)") {
     import spark.implicits._
     // before the round-3 fix the loop left one cached RDD per round behind
     val chain = (0 until 30).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
@@ -89,9 +89,9 @@ class CanonicalizeSpec extends SparkSpec {
     val out = Canonicalize.connectedComponents(spark, chain.toDF("src", "dst"))
     assert(out.collect().map(_.getString(1)).toSet == Set("c00"))
     val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
-    // only the FINAL label snapshot may stay cached (plus nothing else: the
-    // symmetrized edge set is explicitly unpersisted)
-    assert(leaked.size <= 2, s"leaked ${leaked.size} cached RDDs: $leaked")
+    // only the FINAL edge snapshot may stay cached: every superseded round
+    // snapshot is freed
+    assert(leaked.size <= 1, s"leaked ${leaked.size} cached RDDs: $leaked")
   }
 
   test("canonicalization is idempotent: canon(canon(x)) == canon(x)") {

@@ -65,6 +65,22 @@ class SketchSpec extends SparkSpec {
     assert(again("big") == got("big")._3)
   }
 
+  test("hllDistinct: NULL is no value — left out of n_exact and the registers; all-NULL groups count 0") {
+    import spark.implicits._
+    val rows = Seq[(String, Option[String])](
+      ("mixed", Some("a")), ("mixed", None), ("mixed", Some("b")), ("mixed", None),
+      ("nulls", None), ("nulls", None)).toDF("g", "v")
+    val got = Sketch.hllDistinct(rows, "g", "v").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+    val (rMixed, eMixed) = hllReplay(Seq("a", "b"))
+    assert(got("mixed") == ((2L, rMixed, eMixed)))
+    assert(got("nulls") == ((0L, 0L, 0.0)))
+    // n_exact agrees with countDistinct, which skips NULLs
+    val exact = rows.groupBy($"g").agg(countDistinct($"v")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.view.mapValues(_._1).toMap == exact)
+  }
+
   test("tfidfTopK: smoothed idf, 6dp-rounded before ranking, token-asc tie-break") {
     import spark.implicits._
     val d = Seq((1L, "apple banana apple"), (2L, "banana cherry")).toDF("doc_id", "text")
