@@ -1,31 +1,49 @@
 package graft.canon
 
 import graft.exec.Snapshots
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** Cross-document entity canonicalization (SURVEY §2.3 J10 — the north rule's
   * connected-components generalization of the reference's content-hash node
   * identity, enhanced_hypergraph_builder_agent_v2.py:1300-1303 /
   * graph_extraction_agent.py:510-519).
   *
-  * Implementation: alternating large-star / small-star rounds (Kiveris et
-  * al., "Connected Components in MapReduce and Beyond") as a driver loop of
-  * plain DataFrame join+groupBy/min steps with `localCheckpoint()` per round
-  * to truncate lineage. Converges in O(log n) rounds regardless of graph
-  * DIAMETER — the hash-min label propagation it replaces needed O(diameter)
-  * rounds, so a 1000-hop alias chain (entity A aka B aka C …) blew past any
-  * reasonable maxIter and silently returned unconverged labels; star
-  * contraction handles chains and hubs alike. No GraphX: plain Catalyst
-  * plans keep AQE (incl. skew-join splitting) in charge of the physical
-  * layout, which matters because hub entities ("Intel" in a third of pages)
-  * make the edge list heavily skewed.
+  * Two regimes, chosen by the measured size of the oriented, distinct edge
+  * set (one bounded collect of its snapshot, "To Partition, or Not to
+  * Partition", SIGMOD'21):
   *
-  * Skew handling (SURVEY §4.1): the per-node neighborhood minimum is a hash
-  * aggregate with map-side partial min (reducer input bounded by
-  * #map-partitions rows per key, even for a hub node present in every
-  * partition), and neighbor emission is an equi-join the AQE skew rule can
-  * split. Neighbor LISTS are never collected.
+  *  - at most `DriverMaxEdges` edges: a path-compressed union-find on the
+  *    driver. An alias graph of a few hundred edges would otherwise pay
+  *    Spark's fixed per-job and per-stage cost for every star round (29 jobs
+  *    for 130 alias edges) while doing almost no work.
+  *  - more edges: alternating large-star / small-star rounds (Kiveris et
+  *    al., "Connected Components in MapReduce and Beyond") as a driver loop
+  *    of plain DataFrame join+groupBy/min steps with `localCheckpoint()` per
+  *    round to truncate lineage. Converges in O(log n) rounds regardless of
+  *    graph DIAMETER — the hash-min label propagation it replaced needed
+  *    O(diameter) rounds, so a 1000-hop alias chain (entity A aka B aka C …)
+  *    blew past any reasonable maxIter and silently returned unconverged
+  *    labels; star contraction handles chains and hubs alike. No GraphX:
+  *    plain Catalyst plans keep AQE (incl. skew-join splitting) in charge of
+  *    the physical layout, which matters because hub entities ("Intel" in a
+  *    third of pages) make the edge list heavily skewed.
+  *
+  * Both regimes return the same rows under the same schema. The component
+  * label is the minimum id in Spark's string order — binary comparison of
+  * the UTF-8 bytes (`UTF8String.binaryCompare`), the order `least`/`min`
+  * use — not `String.compareTo`'s UTF-16 order, which sorts supplementary
+  * characters (surrogate pairs) below U+E000..U+FFFF.
+  *
+  * Skew handling in the star loop (SURVEY §4.1): the per-node neighborhood
+  * minimum is a hash aggregate with map-side partial min (reducer input
+  * bounded by #map-partitions rows per key, even for a hub node present in
+  * every partition), and neighbor emission is an equi-join the AQE skew rule
+  * can split. Neighbor LISTS are never collected.
   */
 object Canonicalize {
 
@@ -34,24 +52,115 @@ object Canonicalize {
     */
   private val MaxIter = 50
 
+  /** Largest edge set labelled on the driver: a driver-memory cap, not a
+    * speed crossover. On a 4-core host (local[4], 4 shuffle partitions) the
+    * union-find beat the star loop at every measured size, 50k to 1M
+    * distinct edges: 14-23x on single paths, 3-8x on hub-heavy graphs. What
+    * grows with the bound is the collected rows' share of the driver heap,
+    * 16 MB at 100k edges of 10-character ids (164 MB at 1M). A larger edge
+    * set stays distributed and runs the star loop, after a bounded collect
+    * that took 0.06-0.44 s there.
+    */
+  private val DriverMaxEdges = 100000
+
   /** Connected components over an undirected edge list. Throws
-    * IllegalStateException instead of returning wrong labels if the rounds
-    * do not converge within the safety bound.
+    * IllegalStateException instead of returning wrong labels if the star
+    * rounds do not converge within the safety bound.
     *
     * @param edges DataFrame with two string columns (src, dst)
     * @return DataFrame (id, component) — component = min id in the component
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
-    import spark.implicits._
+    val (snap, snapIds) = orientedSnapshot(edges)
+    smallEdgeSet(snap) match {
+      case Some(rows) => driverComponents(spark, snap, snapIds, rows)
+      case None => starComponents(spark, snap, snapIds)
+    }
+  }
 
-    // Orient every edge (u, v) with u > v (string order — consistent with
-    // component = lexicographic min id); self-loops dropped.
+  /** The snapshot's rows if it holds at most `DriverMaxEdges` edges, from
+    * one bounded collect; None otherwise, so the star loop does not run
+    * with the collected rows still referenced.
+    */
+  private def smallEdgeSet(snap: DataFrame): Option[Array[Row]] = {
+    val head = snap.limit(DriverMaxEdges + 1).collect()
+    if (head.length <= DriverMaxEdges) Some(head) else None
+  }
+
+  /** Eager snapshot of the edge set oriented (u, v) with u > v in Spark's
+    * string order, self-loops (and NULL endpoints) dropped, distinct — so
+    * the upstream edge pipeline (e.g. q62's LSH-verify chain) is evaluated
+    * once — and the ids of the RDDs it persisted.
+    */
+  private[canon] def orientedSnapshot(edges: DataFrame): (DataFrame, Set[Int]) = {
     val e0 = edges
-      .select($"src".cast("string").as("a"), $"dst".cast("string").as("b"))
-      .where($"a" =!= $"b")
+      .select(col("src").cast("string").as("a"), col("dst").cast("string").as("b"))
+      .where(col("a") =!= col("b"))
+    Snapshots.checkpoint(
+      e0.select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v")).distinct())
+  }
 
-    var (cur, curIds) = Snapshots.checkpoint(
-      e0.select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v")).distinct())
+  /** (id, component) of an edge forest of stars: every non-root appears as
+    * the larger endpoint pointing at its component's min id (groupBy-min is
+    * an identity pass there — kept as a guard so a residual multi-edge could
+    * never duplicate label rows). The vertex set is read from the edges
+    * themselves: both star rounds preserve the endpoint set (large-star
+    * keeps every vertex as a larger endpoint or as the min-target of its
+    * larger neighbors; small-star keeps every left endpoint via its (u, m)
+    * row and every right endpoint as a target).
+    */
+  private def labels(cur: DataFrame): DataFrame = {
+    val vertices = cur.select(col("u").as("id")).union(cur.select(col("v").as("id"))).distinct()
+    vertices
+      .join(cur.groupBy(col("u").as("id")).agg(min(col("v")).as("component")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
+
+  /** Schema of both regimes' result. The star loop's `min` makes both
+    * columns nullable whatever the input's nullability, so the driver
+    * regime uses this fixed schema rather than one derived from its input.
+    */
+  private val LabelSchema = StructType(Seq(
+    StructField("id", StringType, nullable = true),
+    StructField("component", StringType, nullable = true)))
+
+  /** Union-find over the collected snapshot rows, returned as a local
+    * DataFrame with `LabelSchema`; frees the snapshot. Ids are numbered
+    * in Spark's string order and a union links the larger root under the
+    * smaller, so every root is its component's minimum.
+    */
+  private[canon] def driverComponents(spark: SparkSession, snap: DataFrame, snapIds: Set[Int],
+                                      rows: Array[Row]): DataFrame = {
+    val ids = rows.flatMap(r => Array(r.getString(0), r.getString(1))).distinct
+      .map(s => (UTF8String.fromString(s), s))
+      .sortWith((x, y) => x._1.binaryCompare(y._1) < 0)
+      .map(_._2)
+    val index = ids.iterator.zipWithIndex.toMap
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    for (r <- rows) {
+      val (a, b) = (find(index(r.getString(0))), find(index(r.getString(1))))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val out = spark.createDataFrame(
+      ids.indices.map(i => Row(ids(i), ids(find(i)))).asJava, LabelSchema)
+    Snapshots.free(spark, snapIds)
+    out
+  }
+
+  /** The large-star / small-star loop from the oriented snapshot; frees
+    * every superseded round snapshot (the final one backs the result).
+    */
+  private[canon] def starComponents(spark: SparkSession, snap: DataFrame,
+                                    snapIds: Set[Int]): DataFrame = {
+    import spark.implicits._
+    var (cur, curIds) = (snap, snapIds)
 
     /** Cheap convergence fingerprint: (edge count, XOR of per-edge xxhash64)
       * — one aggregate, no join; XOR is commutative and overflow-free (ANSI-
@@ -114,21 +223,10 @@ object Canonicalize {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $MaxIter star rounds")
-    // converged state is a forest of stars: every non-root appears as the
-    // larger endpoint pointing at its component's min id (groupBy-min is an
-    // identity pass there — kept as a guard so a residual multi-edge could
-    // never duplicate label rows). The vertex set is read from the FINAL
-    // materialized snapshot, not from e0: both star rounds preserve the
-    // endpoint set (large-star keeps every vertex as a larger endpoint or
-    // as the min-target of its larger neighbors; small-star keeps every
-    // left endpoint via its (u, m) row and every right endpoint as a
-    // target), so the set is identical — and the (possibly expensive)
-    // upstream edge pipeline, e.g. q62's full LSH-verify chain, is
-    // evaluated ONCE instead of re-run for the label join.
-    val vertices = cur.select($"u".as("id")).union(cur.select($"v".as("id"))).distinct()
-    vertices
-      .join(cur.groupBy($"u".as("id")).agg(min($"v").as("component")), Seq("id"), "left")
-      .select($"id", coalesce($"component", $"id").as("component"))
+    // the vertex set comes from the FINAL materialized snapshot, not from
+    // the input edges, so the upstream edge pipeline is not re-run for the
+    // label join
+    labels(cur)
   }
 
   /** Canonicalize node keys: same-content merge (exact, the reference's
@@ -147,8 +245,8 @@ object Canonicalize {
     val edgePairs = aliases
       .select(lower($"alias").as("src"), lower($"canonical").as("dst"))
       .where($"src" =!= $"dst")
-    if (edgePairs.isEmpty) return keys.select($"key", $"key".as("canonical_key"))
-
+    // an empty (or all-self-loop) dictionary needs no probe: it yields no
+    // components and every key maps to itself through the left join
     val comps = connectedComponents(spark, edgePairs)
     keys.join(comps, keys("key") === comps("id"), "left")
       .select($"key", coalesce($"component", $"key").as("canonical_key"))

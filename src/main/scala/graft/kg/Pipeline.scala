@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   * stage: per-document transforms are pure functions inside a single typed
   * map — zero shuffles until canonicalization/write, mirroring the
   * reference's embarrassingly-parallel per-document Lambda model)
-  * → explode nodes/edges → cross-document canonicalization (the only
-  * iterative wide op) → nodes/edges/triples tables + per-partition
-  * lineage/metrics.
+  * → explode nodes/edges → cross-document canonicalization (connected
+  * components over the alias graph: a driver-side union-find for small
+  * alias graphs, iterative star rounds past a size bound — see
+  * [[graft.canon.Canonicalize]]) → nodes/edges/triples tables +
+  * per-partition lineage/metrics.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization shuffles only the distinct (content-key)
@@ -184,9 +186,9 @@ object Pipeline {
     // and the join build side — materialize the distinct pass once instead
     // of re-running it per consumer
     val canon = (aliases match {
-      case Some(al) if !al.isEmpty =>
+      case Some(al) =>
         Canonicalize.canonicalKeys(spark, keyed.select($"key"), al)
-      case _ => keyed.select($"key").distinct().select($"key", $"key".as("canonical_key"))
+      case None => keyed.select($"key").distinct().select($"key", $"key".as("canonical_key"))
     }).localCheckpoint()
     // Hub-key skew (e.g. one org in a third of all docs): the canonical map
     // is keyed on DISTINCT entity keys — vocabulary-sized, orders of

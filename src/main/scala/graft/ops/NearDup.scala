@@ -391,8 +391,9 @@ object NearDup {
           col("name").substr(col("i") + 1, lit(maxLen))).as("mkey"))
     // ONE bucket-collect aggregation instead of a self-join on mkey: the
     // self-join evaluated the whole mask-explode pipeline twice (the
-    // lshCandidates lesson); sort_array on struct(id, name) orders by the
-    // unique id, so the exploded (d1 < d2) pair set is identical.
+    // lshCandidates lesson); sort_array on struct(id, name) orders by id,
+    // so every exploded pair has d1 <= d2, and the where below keeps only
+    // the documented d1 < d2 when two rows share an id.
     val cand = keyed
       .groupBy(col("mkey"))
       .agg(sort_array(collect_list(struct(col("id"), col("name")))).as("ms"))
@@ -403,6 +404,7 @@ object NearDup {
             x.getField("name").as("n1"), y.getField("name").as("n2")))))).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
         col("p.n1").as("n1"), col("p.n2").as("n2"))
+      .where(col("d1") < col("d2"))
       .distinct()
     // exact verify over materialized char arrays (lambdas get no CSE)
     cand

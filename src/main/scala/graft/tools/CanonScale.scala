@@ -7,9 +7,12 @@ import org.apache.spark.sql.SparkSession
   * with a heavy hub star (~30% of all edges on one node), random mass, and
   * 16-hop chains; (2) a deep single PATH of `depth` hops — the adversarial
   * case for label propagation (O(diameter) rounds) that the large-star/
-  * small-star rounds close in O(log depth). Reports wall time, component
-  * stats, and the live cached-RDD count (the snapshot-freeing discipline
-  * holds it at <=2 edge snapshots regardless of round count).
+  * small-star rounds close in O(log depth). The defaults (1M generated
+  * edges, ~190k of them distinct; a 200k-hop path) both exceed
+  * Canonicalize's driver bound of 100k distinct edges, so both run the star
+  * loop; smaller arguments measure the driver union-find instead. Reports
+  * wall time, component stats, and the live cached-RDD count (the star
+  * loop keeps only its final edge snapshot, the driver regime none).
   * Usage: runMain graft.tools.CanonScale [nEdges] [chainDepth]
   */
 object CanonScale {
@@ -43,7 +46,7 @@ object CanonScale {
 
     // deep-chain probe: one path of `depth` hops, worst case for O(diameter)
     // algorithms; star rounds converge in ~log2(depth)
-    val depth = args.lift(1).map(_.toLong).getOrElse(100000L)
+    val depth = args.lift(1).map(_.toLong).getOrElse(200000L)
     val chain = spark.range(depth).map(i => (f"p$i%09d", f"p${i + 1}%09d"))
       .toDF("src", "dst").localCheckpoint()
     val t1 = System.nanoTime()

@@ -1,11 +1,20 @@
 package graft.canon
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{concat, least, lit}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Connected-components canonicalization (J10): correctness vs a brute-force
-  * union-find oracle, hub-skew shapes, and idempotence (north rule).
+/** Connected-components canonicalization (J10): both regimes — the driver
+  * union-find and the star loop — against a brute-force union-find oracle,
+  * hub-skew shapes, Spark's string order, and idempotence (north rule).
   */
 class CanonicalizeSpec extends SparkSpec {
+
+  /** Spark's string order: binary comparison of the UTF-8 bytes. */
+  private val sparkOrder: Ordering[String] =
+    Ordering.fromLessThan((a, b) => UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
 
   /** Driver-side union-find oracle. */
   private def unionFind(edges: Seq[(String, String)]): Map[String, String] = {
@@ -22,19 +31,38 @@ class CanonicalizeSpec extends SparkSpec {
       if (ra != rb) parent(ra) = rb
     }
     val ids = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    // canonical = min member per component (matches hash-min propagation)
+    // canonical = min member per component, in Spark's order (least/min)
     val byRoot = ids.groupBy(find)
     byRoot.flatMap { case (_, members) =>
-      val m = members.min
+      val m = members.min(sparkOrder)
       members.map(_ -> m)
     }
   }
 
-  private def runCC(edges: Seq[(String, String)]): Map[String, String] = {
+  private def collectLabels(df: DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** The star loop over `edges`, bypassing the size-derived choice. */
+  private def runStar(edges: DataFrame): DataFrame = {
+    val (snap, ids) = Canonicalize.orientedSnapshot(edges)
+    Canonicalize.starComponents(spark, snap, ids)
+  }
+
+  /** The driver union-find over `edges`, whatever their number. */
+  private def runDriver(edges: DataFrame): DataFrame = {
+    val (snap, ids) = Canonicalize.orientedSnapshot(edges)
+    Canonicalize.driverComponents(spark, snap, ids, snap.collect())
+  }
+
+  /** Labels of both regimes, after checking they agree on the schema
+    * (column names, types and nullability).
+    */
+  private def bothPaths(edges: Seq[(String, String)]): Seq[(String, Map[String, String])] = {
     import spark.implicits._
     val df = edges.toDF("src", "dst")
-    Canonicalize.connectedComponents(spark, df)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val (star, driver) = (runStar(df), runDriver(df))
+    assert(star.schema == driver.schema)
+    Seq("star" -> collectLabels(star), "driver" -> collectLabels(driver))
   }
 
   test("CC matches union-find on a fixed graph with transitive chains") {
@@ -43,17 +71,18 @@ class CanonicalizeSpec extends SparkSpec {
       "d" -> "e",                        // pair
       "f" -> "f2", "f2" -> "f3", "f3" -> "f", // cycle
       "x" -> "y")
-    assert(runCC(edges) == unionFind(edges))
+    for ((path, got) <- bothPaths(edges)) assert(got == unionFind(edges), path)
   }
 
   test("CC handles hub skew (star with 200 spokes + chains)") {
     val star = (1 to 200).map(i => "hub" -> f"spoke$i%03d")
     val chains = (1 to 20).map(i => f"spoke$i%03d" -> f"leaf$i%03d")
     val edges = star ++ chains
-    val got = runCC(edges)
-    assert(got == unionFind(edges))
-    assert(got.values.toSet.size == 1) // all one component
-    assert(got("leaf005") == "hub")    // min label is "hub"
+    for ((path, got) <- bothPaths(edges)) {
+      assert(got == unionFind(edges), path)
+      assert(got.values.toSet.size == 1, path) // all one component
+      assert(got("leaf005") == "hub", path)    // min label is "hub"
+    }
   }
 
   test("CC matches union-find on random graphs (seeded property loop)") {
@@ -65,33 +94,84 @@ class CanonicalizeSpec extends SparkSpec {
         (f"v${rnd.nextInt(n)}%02d", f"v${rnd.nextInt(n)}%02d")
       }.filter(e => e._1 != e._2)
       if (edges.nonEmpty)
-        assert(runCC(edges) == unionFind(edges), s"trial $trial failed on $edges")
+        for ((path, got) <- bothPaths(edges))
+          assert(got == unionFind(edges), s"$path: trial $trial failed on $edges")
     }
   }
 
   test("CC converges on a 1000-hop chain (O(log n) star rounds, not O(diameter))") {
-    import spark.implicits._
     // hash-min label propagation needed one round per hop — 1000 hops blew
     // past maxIter=50 and silently returned unconverged labels; star
     // contraction closes this in ~log rounds
     val chain = (0 until 1000).map(i => (f"n$i%04d", f"n${i + 1}%04d"))
-    val out = Canonicalize.connectedComponents(spark, chain.toDF("src", "dst"))
-      .collect().map(r => r.getString(0) -> r.getString(1))
-    assert(out.length == 1001)
-    assert(out.forall(_._2 == "n0000"), s"unconverged labels: ${out.filter(_._2 != "n0000").take(5).toSeq}")
+    for ((path, out) <- bothPaths(chain)) {
+      assert(out.size == 1001, path)
+      assert(out.values.forall(_ == "n0000"),
+        s"$path: unconverged labels: ${out.filter(_._2 != "n0000").take(5).toSeq}")
+    }
   }
 
   test("CC loop frees superseded edge checkpoints (<=1 live snapshot)") {
     import spark.implicits._
     // before the round-3 fix the loop left one cached RDD per round behind
-    val chain = (0 until 30).map(i => (f"c$i%02d", f"c${i + 1}%02d"))
-    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    val out = Canonicalize.connectedComponents(spark, chain.toDF("src", "dst"))
+    val chain = (0 until 30).map(i => (f"c$i%02d", f"c${i + 1}%02d")).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = runStar(chain)
     assert(out.collect().map(_.getString(1)).toSet == Set("c00"))
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
     // only the FINAL edge snapshot may stay cached: every superseded round
     // snapshot is freed
     assert(leaked.size <= 1, s"leaked ${leaked.size} cached RDDs: $leaked")
+    // the driver regime frees its only snapshot
+    val before2 = sc.getPersistentRDDs.keySet.toSet
+    assert(Canonicalize.connectedComponents(spark, chain).collect().map(_.getString(1)).toSet == Set("c00"))
+    val leaked2 = sc.getPersistentRDDs.keySet.toSet -- before2
+    assert(leaked2.isEmpty, s"driver regime left ${leaked2.size} cached RDDs: $leaked2")
+  }
+
+  test("component = min id in Spark's binary UTF-8 order, not String.compareTo") {
+    import spark.implicits._
+    // U+FF21 encodes as EF BC A1, U+1F600 as F0 9F 98 80: "Ａ" is smaller in
+    // UTF-8 byte order, but the emoji's high surrogate (D83D) sorts it first
+    // in Java's UTF-16 order
+    val (fw, emoji) = ("\uFF21", "\uD83D\uDE00")
+    assert(emoji.compareTo(fw) < 0)
+    val repl = "\uFFFD" // EF BF BD: above "Ａ" in both orders
+    val edges = Seq(fw -> emoji, repl -> emoji)
+    assert(edges.toDF("a", "b").select(least($"a", $"b")).head().getString(0) == fw)
+    for ((path, got) <- bothPaths(edges))
+      assert(got == Map(fw -> fw, emoji -> fw, repl -> fw), path)
+  }
+
+  test("both regimes return nullable (id, component) for non-nullable input") {
+    import spark.implicits._
+    // the star loop's min makes both columns nullable whatever the input;
+    // the driver regime must match it, not inherit the input's nullability
+    val inputs = Seq(
+      Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("src", "dst"),
+      spark.range(5).select(concat(lit("r"), $"id").as("src"), concat(lit("r"), $"id" + 1).as("dst")))
+    for (df <- inputs) {
+      assert(!df.schema("src").nullable && !df.schema("dst").nullable)
+      val (star, driver) = (runStar(df), runDriver(df))
+      assert(star.schema.map(f => (f.name, f.dataType, f.nullable)) ==
+        Seq(("id", StringType, true), ("component", StringType, true)))
+      assert(driver.schema == star.schema)
+      assert(Canonicalize.connectedComponents(spark, df).schema == star.schema)
+      assert(collectLabels(driver) == collectLabels(star))
+    }
+  }
+
+  test("canonicalKeys: empty and all-self-loop alias dictionaries map every key to itself") {
+    import spark.implicits._
+    val keys = Seq("Intel", "intel corp", "alphabet").toDF("key")
+    val empty = Seq.empty[(String, String)].toDF("alias", "canonical")
+    val selfLoops = Seq(("Intel", "intel"), ("alphabet", "Alphabet")).toDF("alias", "canonical")
+    for (aliases <- Seq(empty, selfLoops)) {
+      val got = Canonicalize.canonicalKeys(spark, keys, aliases)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got == Map("intel" -> "intel", "intel corp" -> "intel corp", "alphabet" -> "alphabet"))
+    }
   }
 
   test("canonicalization is idempotent: canon(canon(x)) == canon(x)") {

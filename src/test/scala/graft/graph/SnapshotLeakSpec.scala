@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The graph loops free every superseded snapshot (graft.exec.Snapshots):
   * one call leaves only the snapshot it returns cached. A dropped `free`
-  * would leave one RDD per round.
+  * would leave one RDD per round. Connected components on a small graph
+  * frees even that one, so a query built on it can be rebuilt any number
+  * of times.
   */
 class SnapshotLeakSpec extends SparkSpec {
 
@@ -26,5 +28,14 @@ class SnapshotLeakSpec extends SparkSpec {
     assert(pr <= 1, s"pageRank left $pr cached RDDs")
     assert(bfs <= 1, s"khop left $bfs cached RDDs")
     assert(sssp <= 1, s"ssspBounded left $sssp cached RDDs")
+  }
+
+  test("q28_canon_components: 10 constructions and collects leave the cached RDD set flat") {
+    val q28 = graft.SparkEntry.queries("q28_canon_components")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    for (_ <- 1 to 10) q28(spark, "/root/testdata/sf0.001").collect()
+    val grown = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(grown.isEmpty, s"10 q28 runs left ${grown.size} cached RDDs")
   }
 }

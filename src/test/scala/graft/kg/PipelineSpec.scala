@@ -166,6 +166,22 @@ class PipelineSpec extends SparkSpec {
     assert(nodeIds == 2)
   }
 
+  test("empty and all-self-loop alias dictionaries leave every node its own canonical id") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lower
+    val pages = Corpus.pages(spark, 20, partitions = 2)
+    def canonIds(aliases: Option[org.apache.spark.sql.DataFrame], runId: String): Set[(String, String)] =
+      Pipeline.run(spark, pages, runId, "", aliases = aliases).nodes
+        .select(lower($"content"), $"canonical_id").as[(String, String)].collect().toSet
+    val own = canonIds(None, "noal")
+    // no alias dictionary: one canonical id per key, never shared
+    assert(own.map(_._1).size == own.size && own.map(_._2).size == own.size)
+    val empty = Seq.empty[(String, String)].toDF("alias", "canonical")
+    val selfLoops = own.take(3).toSeq.map { case (k, _) => (k.toUpperCase, k) }.toDF("alias", "canonical")
+    assert(canonIds(Some(empty), "emptyal") == own)
+    assert(canonIds(Some(selfLoops), "selfal") == own)
+  }
+
   test("per-partition metrics carry durations; kb stage emits link-score histogram") {
     import spark.implicits._
     val kb = Seq(

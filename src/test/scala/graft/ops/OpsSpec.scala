@@ -1186,6 +1186,18 @@ class OpsSpec extends SparkSpec {
     assert(got == Set((1L, 2L, 1L), (1L, 3L, 0L), (2L, 3L, 1L), (5L, 6L, 1L)))
   }
 
+  test("hammingJoin: duplicate ids never pair with themselves (d1 < d2 on every row)") {
+    import spark.implicits._
+    val rows = Seq(
+      (1L, "abcdef"), (1L, "abcdef"),   // same id, same name → distance 0
+      (1L, "abcdex"),                   // same id, distance 1
+      (2L, "abcdeg"))                   // distance 1 from both id-1 names
+      .toDF("c_custkey", "c_name")
+    val got = NearDup.hammingJoin(rows, "c_custkey", "c_name").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got == Set((1L, 2L, 1L)), s"got $got")
+  }
+
   test("mergeIntervals: overlap and touch merge, gaps split, counts right") {
     import spark.implicits._
     val rows = Seq(
