@@ -229,26 +229,32 @@ object Canonicalize {
     labels(cur)
   }
 
-  /** Canonicalize node keys: same-content merge (exact, the reference's
-    * md5(lower(content)) identity) extended with an alias dictionary
-    * (alias → canonical) — the edges of the equivalence graph are
-    * (key, aliasTarget) pairs; connected components assign one canonical id
-    * per cluster. Alias dict is broadcast (small dimension, J5 pattern).
+  /** Append `canonical_key` to a frame with a `key` column: same-content
+    * merge (exact, the reference's md5(lower(content)) identity) extended
+    * with an alias dictionary (alias → canonical). The edges of the
+    * equivalence graph are the lower-cased (alias, canonical) pairs, so
+    * only the alias graph is canonicalized; `df` joins its components once
+    * (left, on `key`) and a key outside every component keeps itself, as
+    * does every key under an empty or all-self-loop dictionary.
+    * Spark picks the join from the components' size: a small alias graph's
+    * components are a local relation of known size and broadcast, a larger
+    * one's are joined as AQE measures them (skew-join splitting covers hub
+    * keys on `df`'s side).
     *
-    * @param nodeKeys DataFrame with column `key` (e.g. lower(content))
-    * @param aliases  DataFrame (alias, canonical) — may be empty
-    * @return DataFrame (key, canonical_key)
+    * @param df      any DataFrame with a lower-cased string column `key`
+    * @param aliases DataFrame (alias, canonical) — may be empty
+    * @return `df`'s columns, in order, plus `canonical_key`
     */
-  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame = {
-    import spark.implicits._
-    val keys = nodeKeys.select(lower($"key").as("key")).distinct()
-    val edgePairs = aliases
-      .select(lower($"alias").as("src"), lower($"canonical").as("dst"))
-      .where($"src" =!= $"dst")
-    // an empty (or all-self-loop) dictionary needs no probe: it yields no
-    // components and every key maps to itself through the left join
-    val comps = connectedComponents(spark, edgePairs)
-    keys.join(comps, keys("key") === comps("id"), "left")
-      .select($"key", coalesce($"component", $"key").as("canonical_key"))
+  def withCanonicalKey(spark: SparkSession, df: DataFrame, aliases: DataFrame): DataFrame = {
+    val comps = connectedComponents(spark,
+      aliases.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst")))
+    df.join(comps, df("key") === comps("id"), "left")
+      .select(df.columns.toSeq.map(df(_)) :+ coalesce(comps("component"), df("key")).as("canonical_key"): _*)
   }
+
+  /** (key, canonical_key) for the distinct lower-cased keys of `nodeKeys`
+    * (column `key`); see `withCanonicalKey`.
+    */
+  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame =
+    withCanonicalKey(spark, nodeKeys.select(lower(col("key")).as("key")).distinct(), aliases)
 }

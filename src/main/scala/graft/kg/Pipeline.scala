@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   * per-partition lineage/metrics.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
-  * exchanged); canonicalization shuffles only the distinct (content-key)
-  * set — orders of magnitude smaller than the corpus; writes are partitioned
-  * by customer-id bucket so downstream per-customer queries prune.
+  * exchanged); canonicalization touches only the alias graph — orders of
+  * magnitude smaller than the corpus — and the nodes join its components;
+  * writes are partitioned by customer-id bucket so downstream per-customer
+  * queries prune.
   */
 object Pipeline {
 
@@ -180,29 +181,13 @@ object Pipeline {
 
     // ---- canonicalization (J10): merge same-key entities across documents;
     // alias dictionary optional. Canonical id = persisted sha256 id of the
-    // canonical key (graph_extraction_agent.py:510-519 pattern).
+    // canonical key (graph_extraction_agent.py:510-519 pattern); without
+    // aliases every key is its own canonical key and nothing is joined.
     val keyed = nodeRows.withColumn("key", lower($"content"))
-    // localCheckpoint: the canonical map feeds BOTH the broadcast-size count
-    // and the join build side — materialize the distinct pass once instead
-    // of re-running it per consumer
-    val canon = (aliases match {
-      case Some(al) =>
-        Canonicalize.canonicalKeys(spark, keyed.select($"key"), al)
-      case None => keyed.select($"key").distinct().select($"key", $"key".as("canonical_key"))
-    }).localCheckpoint()
-    // Hub-key skew (e.g. one org in a third of all docs): the canonical map
-    // is keyed on DISTINCT entity keys — vocabulary-sized, orders of
-    // magnitude below the corpus — so broadcast it whenever it fits; the
-    // node side then never shuffles and per-key skew is moot. Past the
-    // limit (override: spark conf graft.canon.broadcastMaxKeys) fall back
-    // to the shuffle join, where AQE's skew-join splitting (enabled in all
-    // entry points) handles the hub keys.
-    val broadcastMaxKeys =
-      spark.conf.getOption("graft.canon.broadcastMaxKeys").map(_.toLong).getOrElse(2000000L)
-    val canonSide = if (canon.count() <= broadcastMaxKeys) broadcast(canon) else canon
-    val canonNodes = keyed.join(canonSide, Seq("key"))
-      .withColumn("canonical_id",
-        concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
+    val canonNodes = (aliases match {
+      case Some(al) => Canonicalize.withCanonicalKey(spark, keyed, al)
+      case None => keyed.withColumn("canonical_key", $"key")
+    }).withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
       .drop("key", "canonical_key")
 
     // ---- per-partition metrics + lineage (north rule: docs processed,

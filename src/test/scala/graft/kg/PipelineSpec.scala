@@ -107,26 +107,42 @@ class PipelineSpec extends SparkSpec {
       n.content == "Enriched Topic" && n.confidence == 0.9)))
   }
 
-  test("nodes⋈canon join broadcasts the distinct-key map (hub-skew shape); fallback works") {
+  test("nodes join alias components by broadcast (hub-skew); no aliases, no join") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     val pages = Corpus.pages(spark, 80, partitions = 4) // ~1/3 of interview docs carry the hub org
-    // disable the optimizer's size-based auto-broadcast so the assertion
-    // proves OUR explicit hint, not a small-table accident
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val res = Pipeline.run(spark, pages, "bc", "")
-      val plan = res.nodes.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"),
-        s"canon map should broadcast (node side must not shuffle):\n$plan")
-      // force the fallback: broadcast cap 0 → shuffle join (AQE skew-split territory)
-      spark.conf.set("graft.canon.broadcastMaxKeys", "0")
-      val res2 = Pipeline.run(spark, pages, "bc2", "")
-      val plan2 = res2.nodes.queryExecution.executedPlan.toString
-      assert(!plan2.contains("BroadcastHashJoin"))
-      assert(res2.nodes.count() == res.nodes.count())
-    } finally {
-      spark.conf.unset("graft.canon.broadcastMaxKeys")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    val aliases = Seq(("Intel", "Intel Corporation"), ("Growth", "Business Growth")).toDF("alias", "canonical")
+    // default session settings: Spark's own size rule picks the join;
+    // the helper's collect descends into AQE's query stages
+    object Aqe extends AdaptiveSparkPlanHelper
+    def executed(nodes: org.apache.spark.sql.DataFrame): SparkPlan = {
+      nodes.collect()
+      nodes.queryExecution.executedPlan
     }
+    val plan = executed(Pipeline.run(spark, pages, "bc", "", aliases = Some(aliases)).nodes)
+    val joins = Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, s"expected one broadcast join:\n$plan")
+    assert(joins.head.buildSide == BuildRight, s"components must be the build side:\n$plan")
+    assert(joins.head.right.output.map(_.name) == Seq("id", "component"), s"build side:\n$plan")
+    assert(Aqe.collect(joins.head.left) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"node rows must not shuffle:\n$plan")
+    val plain = executed(Pipeline.run(spark, pages, "bc2", "").nodes)
+    assert(Aqe.collect(plain) { case j: BaseJoinExec => j }.isEmpty, s"no aliases, no join:\n$plain")
+  }
+
+  test("10 runs with an alias dictionary leave the persisted RDD set flat") {
+    import spark.implicits._
+    val pages = Corpus.pages(spark, 20, partitions = 2)
+    val aliases = Seq(("Intel", "Intel Corporation")).toDF("alias", "canonical")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    for (i <- 1 to 10) Pipeline.run(spark, pages, s"leak$i", "", aliases = Some(aliases))
+    val grown = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(grown.isEmpty, s"10 runs left ${grown.size} persisted RDDs")
   }
 
   test("metrics rows account for every processed doc") {
