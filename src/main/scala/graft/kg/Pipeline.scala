@@ -46,26 +46,17 @@ object Pipeline {
   /** Per-doc output: the graph plus the doc's mentions (for the link stage). */
   final case class DocOut(graph: DocGraph, mentions: Seq[MentionRow])
 
-  /** The fused per-document transform — SURVEY §3.2's pure function.
-    * `v1 = true` opts into the v1-builder extensions (J7 co-occurrence
-    * edges + J9 confidence smoothing, see GraphBuildV1); `enricher` is the
-    * §2.9 pluggable enrichment seam (no-op default).
+  /** pages → Dataset[DocGraph]: the fused per-document transform (SURVEY
+    * §3.2) in one mapPartitions task, without metrics, lineage or mentions
+    * (`Pipeline.run` uses `docGraphsWithPartition`). `v1 = true` adds the
+    * J7 co-occurrence edges + J9 confidence smoothing (GraphBuildV1).
     */
-  def buildDoc(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
-               temporalIndex: String = ""): DocGraph =
-    analyzeAndBuild(p, v1, enricher, temporalIndex)._2
-
-  /** pages → Dataset[DocGraph]: `buildDoc` per page inside one
-    * mapPartitions task (no metrics, lineage or mentions; `Pipeline.run`
-    * uses `docGraphsWithPartition`).
-    */
-  def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false,
-                temporalIndex: String = ""): Dataset[DocGraph] = {
+  def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false): Dataset[DocGraph] = {
     import spark.implicits._
-    pages.mapPartitions(_.map(p => buildDoc(p, v1, NoopEnricher, temporalIndex)))
+    pages.mapPartitions(_.map(p => analyzeAndBuild(p, v1, NoopEnricher, "")._2))
   }
 
-  /** Variant keeping the NER mentions (context = leading 400 chars). */
+  /** The per-doc transform keeping the NER mentions (context = leading 400 chars). */
   def buildDocOut(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
                   temporalIndex: String = ""): DocOut = {
     val (doc, g) = analyzeAndBuild(p, v1, enricher, temporalIndex)
@@ -75,7 +66,7 @@ object Pipeline {
     })
   }
 
-  /** extract → analyze → needs → graph-build, shared by `buildDoc` and
+  /** extract → analyze → needs → graph-build, shared by `docGraphs` and
     * `buildDocOut`; the analysis is returned for the mentions.
     */
   private def analyzeAndBuild(p: Page, v1: Boolean, enricher: Enricher,

@@ -328,6 +328,9 @@ object Similarity {
     * hash into wrong buckets — losing candidate RECALL with no symptom (the
     * exact-cosine verify prevents false positives but not misses); fail the
     * job instead.
+    *
+    * A repeated id row repeats its pair rows (the verification joins match
+    * each copy); take `distinct` on (d1, d2) if ids may repeat.
     */
   def cosineNearDupPairsScaled(embeddings: DataFrame, threshold: Double,
                                planes: Int = 6, tables: Int = 4,
@@ -360,8 +363,8 @@ object Similarity {
     // small codegen'd dot; the 48× row inflation is map-local — the
     // partial sum collapses it to `tables` rows per vector before the
     // exchange. Values are bit-identical: the dot fold order matches the
-    // old expression and the bit-sum over disjoint bitvals equals the old
-    // when-chain reduce.
+    // old expression and the bit-OR over disjoint bitvals equals the old
+    // when-chain reduce (a sum would carry into a wrong bucket on a repeated id).
     val planeRows: Seq[(Int, Long, Seq[Double])] =
       for { t <- 0 until tables; j <- 0 until planes }
         yield (t, 1L << j, hyperplane(dimension, t * planes + j).toSeq)
@@ -371,7 +374,7 @@ object Similarity {
     val bucketRows = checked.select(col("nid"), col("nemb"))
       .crossJoin(broadcast(planesDf))
       .groupBy(col("nid"), col("t"))
-      .agg(sum(when(dot(col("nemb"), col("plane")) > 0, col("bitval")).otherwise(lit(0L))).as("b"))
+      .agg(bit_or(when(dot(col("nemb"), col("plane")) > 0, col("bitval")).otherwise(lit(0L))).as("b"))
       .select(col("nid"), struct(col("t").as("t"), col("b").as("b")).as("bucket"))
     // same cap discipline as NearDup.lshCandidates: when the guardrail is
     // set, a cheap COUNT + semi-join prunes mega-buckets BEFORE any member

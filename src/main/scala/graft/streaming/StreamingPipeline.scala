@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.kg.{GraphBuild, Pipeline}
-import graft.model.{Page, Triple}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.kg.Pipeline
+import graft.model.Page
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -11,31 +11,28 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * The reference has no streaming — each document arrives as one Step
   * Functions execution. The Spark-native equivalent of "process whatever has
   * landed, exactly once, then stop" is `Trigger.AvailableNow` over a file
-  * source: checkpointed offsets give the same resumability contract as the
-  * lineage table on the batch path, and the SAME per-document transform
-  * (Pipeline.buildDoc) runs inside the stream — narrow, stateless, so the
-  * micro-batch plan is identical to the batch plan.
+  * source whose every micro-batch is one batch `Pipeline.run`: the stream
+  * builds the same product as a batch run, and resumes through the same
+  * lineage table and commit markers.
   *
   * `eventCountsStream` shows the stateful side: watermarked tumbling-window
   * counts (the A7/A13-style aggregates) over a streaming events table.
   */
 object StreamingPipeline {
 
-  /** Stream pages from a parquet directory → append triples to outDir.
-    * Exactly-once via checkpoint; AvailableNow drains what exists and stops.
+  /** Stream pages from a parquet directory into the warehouse at outDir, one
+    * `Pipeline.run(resume = true)` per micro-batch under a fresh run id: outDir
+    * holds what a batch run writes, a replayed micro-batch is deduplicated by
+    * the lineage anti-join, and AvailableNow drains what exists and stops.
     */
-  def triplesStream(spark: SparkSession, pagesDir: String, outDir: String,
-                    checkpointDir: String, v1: Boolean = false,
-                    enricher: graft.kg.Enricher = graft.kg.NoopEnricher): StreamingQuery = {
+  def pipelineStream(spark: SparkSession, pagesDir: String, outDir: String,
+                     checkpointDir: String): StreamingQuery = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[Page].schema
-    val pages = spark.readStream.schema(schema).parquet(pagesDir).as[Page]
-    val triples: Dataset[Triple] =
-      pages.mapPartitions(_.map(p => Pipeline.buildDoc(p, v1, enricher)))
-        .flatMap(g => GraphBuild.triples(g))
-    triples.writeStream
-      .format("parquet")
-      .option("path", outDir)
+    val runBatch: (Dataset[Page], Long) => Unit = (batch, id) =>
+      Pipeline.run(batch.sparkSession, batch, s"s${id}_${java.util.UUID.randomUUID()}", outDir, resume = true)
+    spark.readStream.schema(Encoders.product[Page].schema).parquet(pagesDir).as[Page]
+      .writeStream
+      .foreachBatch(runBatch)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()

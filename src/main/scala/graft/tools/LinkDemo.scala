@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** CLI drive for entity linking + the streaming front-end:
   * mentions are the NER output of the synthetic corpus; the KB is a small
-  * alias dictionary (broadcast side). Also runs the AvailableNow streaming
-  * pipeline over a temp pages dir and prints its triple count.
+  * alias dictionary (broadcast side). Also streams 200 pages through
+  * `StreamingPipeline.pipelineStream` and prints the committed triple count.
   * Usage: runMain graft.tools.LinkDemo [nDocs]
   */
 object LinkDemo {
@@ -51,9 +51,10 @@ object LinkDemo {
     // streaming front-end drive
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-demo").toString
     Corpus.pages(spark, 200, partitions = 4).write.parquet(s"$dir/pages")
-    val q = graft.streaming.StreamingPipeline.triplesStream(spark, s"$dir/pages", s"$dir/triples", s"$dir/ckpt")
+    val q = graft.streaming.StreamingPipeline.pipelineStream(spark, s"$dir/pages", s"$dir/kg", s"$dir/ckpt")
     q.awaitTermination(120000)
-    println(s"=== streaming triples written: ${spark.read.parquet(s"$dir/triples").count()} ===")
+    val triples = new graft.io.ParquetTableIO(s"$dir/kg").readCommitted(spark, "triples").count()
+    println(s"=== streaming triples committed: $triples ===")
     spark.stop()
   }
 }

@@ -35,12 +35,14 @@ object RunPipeline {
     // fresh runId per ATTEMPT (the commit protocol refuses reuse — resume
     // dedup rides on the lineage table, not on the run id)
     val runId = s"run_${n}_${System.currentTimeMillis()}"
-    val result = Pipeline.run(spark, pages, runId = runId, outDir = outDir, resume = resume, v1 = v1)
+    Pipeline.run(spark, pages, runId = runId, outDir = outDir, resume = resume, v1 = v1)
     val secs = (System.nanoTime() - t0) / 1e9
 
-    val nodes = spark.read.parquet(s"$outDir/nodes")
-    val edges = spark.read.parquet(s"$outDir/edges")
-    val triples = spark.read.parquet(s"$outDir/triples")
+    // committed rows only: a crashed attempt's orphan rows stay on disk
+    val tio = new graft.io.ParquetTableIO(outDir)
+    val nodes = tio.readCommitted(spark, "nodes")
+    val edges = tio.readCommitted(spark, "edges")
+    val triples = tio.readCommitted(spark, "triples")
     println(s"=== pipeline done in ${f"$secs%.1f"}s: " +
       s"${nodes.count()} nodes, ${edges.count()} edges, ${triples.count()} triples from $n pages ===")
     println("--- node_type histogram ---")
@@ -62,7 +64,7 @@ object RunPipeline {
         nodes.select("temporal_index").distinct().count())
     }
     println("--- per-partition metrics (lineage/north rule) ---")
-    spark.read.parquet(s"$outDir/metrics").orderBy("partition_id").show(8, truncate = false)
+    tio.readCommitted(spark, "metrics").orderBy("partition_id").show(8, truncate = false)
     spark.stop()
   }
 }

@@ -463,6 +463,24 @@ class OpsSpec extends SparkSpec {
     assert(unlimited.logDrops() == ((0L, 0L)) && unlimited.droppedBuckets.isEmpty)
   }
 
+  test("cosineNearDupPairsScaled: a repeated vec_id row keeps its pair") {
+    import spark.implicits._
+    // the guardrail case's honest near-dup pair, with doc 100's vector row
+    // repeated: summing the hyperplane bits of both copies would carry the
+    // vector into a wrong bucket in every table and lose the pair
+    val pair = Seq(
+      (100L, "spark writes shuffle files to local disk before the reduce stage begins now"),
+      (101L, "spark writes shuffle files to local disk before the reduce stage begins today"))
+    val emb = Similarity.hashedEmbeddings(pair.toDF("doc_id", "text"))
+    val repeated = emb.union(emb.where($"doc_id" === 100L))
+    val pairs = Similarity.cosineNearDupPairsScaled(repeated, 0.9,
+      idCol = "doc_id", embCol = "emb", dim = 64)
+      .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.toSet == Set((100L, 101L)), s"got $pairs")
+    // the verification joins match each copy: one pair row per copy
+    assert(pairs.length == 2, s"got $pairs")
+  }
+
   test("cosineNearDupPairs fails loudly on an embedding-dimension mismatch") {
     import spark.implicits._
     val bad = Seq(
