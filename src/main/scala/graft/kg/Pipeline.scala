@@ -2,11 +2,14 @@ package graft.kg
 
 import graft.analyze.DocAnalyze
 import graft.canon.Canonicalize
+import graft.io.{ParquetTableIO, TableIO}
 import graft.model._
 import graft.needs.Needs
 import graft.text.PyText
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end KG-construction pipeline (SURVEY §3.1 Spark equivalent).
   *
@@ -19,6 +22,13 @@ import org.apache.spark.sql.functions._
   * alias graphs, iterative star rounds past a size bound — see
   * [[graft.canon.Canonicalize]]) → nodes/edges/triples tables +
   * per-partition lineage/metrics.
+  *
+  * `run` holds the per-doc outputs as deserialized objects (an RDD persisted
+  * for the run's duration, not a columnar Dataset cache), so each of the
+  * frames built from them decodes nothing it does not read. The `metrics`
+  * rows are summed per partition inside the task that produced them — no
+  * shuffle — and collected before any append: a run with no doc to process
+  * writes nothing and commits nothing.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization touches only the alias graph — orders of
@@ -48,7 +58,7 @@ object Pipeline {
 
   /** pages → Dataset[DocGraph]: the fused per-document transform (SURVEY
     * §3.2) in one mapPartitions task, without metrics, lineage or mentions
-    * (`Pipeline.run` uses `docGraphsWithPartition`). `v1 = true` adds the
+    * (`Pipeline.run` runs `docGraphsWithPartition`'s body). `v1 = true` adds the
     * J7 co-occurrence edges + J9 confidence smoothing (GraphBuildV1).
     */
   def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false): Dataset[DocGraph] = {
@@ -88,18 +98,41 @@ object Pipeline {
                              enricher: Enricher = NoopEnricher,
                              temporalIndex: String = ""): Dataset[(DocOut, Int, Long)] = {
     import spark.implicits._
-    pages.mapPartitions { it =>
-      val tc = org.apache.spark.TaskContext.get()
-      val pid = if (tc == null) 0 else tc.partitionId()
-      enricher.open()
-      if (tc != null) tc.addTaskCompletionListener[Unit](_ => enricher.close())
-      it.map { p =>
-        val t0 = System.nanoTime()
-        val out = buildDocOut(p, v1, enricher, temporalIndex)
-        (out, pid, System.nanoTime() - t0)
-      }
+    pages.mapPartitions(docOuts(v1, enricher, temporalIndex))
+  }
+
+  /** The per-partition body of `docGraphsWithPartition`, also run by `run`. */
+  private def docOuts(v1: Boolean, enricher: Enricher,
+                      temporalIndex: String): Iterator[Page] => Iterator[(DocOut, Int, Long)] = { it =>
+    val tc = org.apache.spark.TaskContext.get()
+    val pid = if (tc == null) 0 else tc.partitionId()
+    enricher.open()
+    if (tc != null) tc.addTaskCompletionListener[Unit](_ => enricher.close())
+    it.map { p =>
+      val t0 = System.nanoTime()
+      val out = buildDocOut(p, v1, enricher, temporalIndex)
+      (out, pid, System.nanoTime() - t0)
     }
   }
+
+  /** One metric row per non-empty partition, summed inside its task: every
+    * doc of a partition carries the same id, so no row has to move.
+    */
+  private def partitionMetric(runId: String)(it: Iterator[(DocOut, Int, Long)]): Iterator[PartitionMetric] =
+    if (!it.hasNext) Iterator.empty
+    else Iterator.single(it.foldLeft(PartitionMetric(runId, "graph_build", 0, 0L, 0L, 0L, 0L, 0L)) {
+      case (m, (o, pid, nanos)) =>
+        val edges = o.graph.edges.size.toLong
+        m.copy(partition_id = pid, docs_processed = m.docs_processed + 1,
+          nodes_emitted = m.nodes_emitted + o.graph.nodes.size, edges_emitted = m.edges_emitted + edges,
+          triples_emitted = m.triples_emitted + edges, duration_ms = m.duration_ms + nanos / 1000000L)
+    })
+
+  /** The `metrics` table schema: counters nullable, as in the metrics files
+    * already written, where they came from a `sum`.
+    */
+  private val MetricsSchema: StructType = StructType(Encoders.product[PartitionMetric].schema.map(f =>
+    if (f.dataType == LongType) f.copy(nullable = true) else f))
 
   final case class RunResult(
       nodes: DataFrame, edges: DataFrame, triples: DataFrame,
@@ -114,16 +147,22 @@ object Pipeline {
           aliases: Option[DataFrame] = None,
           kb: Option[DataFrame] = None,
           v1: Boolean = false,
-          enricher: Enricher = NoopEnricher): RunResult = {
+          enricher: Enricher = NoopEnricher): RunResult =
+    runWith(Option.when(outDir.nonEmpty)(new ParquetTableIO(outDir)), spark, pages, runId, resume,
+      aliases, kb, v1, enricher)
+
+  /** `run` over any table store; None writes nothing. */
+  private[kg] def runWith(store: Option[TableIO], spark: SparkSession, pages: Dataset[Page],
+                          runId: String, resume: Boolean, aliases: Option[DataFrame],
+                          kb: Option[DataFrame], v1: Boolean, enricher: Enricher): RunResult = {
     import spark.implicits._
 
-    val tio: graft.io.TableIO = new graft.io.ParquetTableIO(outDir)
     // Fresh-runId-per-attempt guard: committing a reused runId would make a
     // crashed attempt's orphan rows visible alongside this attempt's rows
     // (both share run_id) — silently breaking the no-duplication guarantee.
     // Resume safety comes from the lineage anti-join below, NOT from reusing
     // the id, so reuse is always a caller bug; fail fast with the reason.
-    if (outDir.nonEmpty) {
+    store.foreach { tio =>
       require(!tio.committedRuns().contains(runId),
         s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)")
       if (tio.exists("lineage") &&
@@ -132,97 +171,101 @@ object Pipeline {
           s"runId '$runId' has uncommitted rows from a crashed attempt — use a fresh runId; " +
             "resume=true reprocesses those pages and readers keep filtering the orphans out")
     }
-    val todo: Dataset[Page] =
-      if (resume && outDir.nonEmpty && tio.exists("lineage")) {
+    val todo: Dataset[Page] = store match {
+      case Some(tio) if resume && tio.exists("lineage") =>
         // only COMMITTED runs count as done — a run that crashed between its
         // data appends and its commit marker is invisible here, so its urls
         // are reprocessed and the orphan rows stay filtered out of reads
         val done = tio.readCommitted(spark, "lineage")
           .where($"status" === "done").select($"url").distinct()
         pages.join(done, Seq("url"), "left_anti").as[Page]
-      } else pages
+      case _ => pages
+    }
 
     // v1 temporal stamps use ONE write-time string for the whole run
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
     val temporalIndex = if (v1) java.time.Instant.now().toString else ""
-    val graphs = docGraphsWithPartition(spark, todo, v1, enricher, temporalIndex)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // ---- flat node/edge/triple tables (narrow explodes)
-    val nodeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.nodes.map(n => (g.customerId, g.url, n.id, n.content, n.nodeType, n.confidence, n.source,
-        n.temporalIndex, n.temporalCategory))
-    }.toDF("customer_id", "url", "node_id", "content", "node_type", "confidence", "source_file",
-      "temporal_index", "temporal_category")
-      .withColumn("run_id", lit(runId))
-
-    val edgeRows = graphs.flatMap { case (o, _, _) =>
-      val g = o.graph
-      g.edges.map(e => (g.customerId, g.url, e.id, e.srcId, e.dstId, e.edgeType, e.confidence,
-        e.evidence, e.reasoning, e.temporalIndex, e.temporalCategory))
-    }.toDF("customer_id", "url", "edge_id", "source_node_id", "target_node_id",
-      "relationship_type", "weight", "evidence", "reasoning",
-      "temporal_index", "temporal_category")
-      .withColumn("run_id", lit(runId))
-
-    val tripleRows = graphs.flatMap { case (o, _, _) => GraphBuild.triples(o.graph) }.toDF()
-      .withColumn("run_id", lit(runId))
-
-    // ---- canonicalization (J10): merge same-key entities across documents;
-    // alias dictionary optional. Canonical id = persisted sha256 id of the
-    // canonical key (graph_extraction_agent.py:510-519 pattern); without
-    // aliases every key is its own canonical key and nothing is joined.
-    val keyed = nodeRows.withColumn("key", lower($"content"))
-    val canonNodes = (aliases match {
-      case Some(al) => Canonicalize.withCanonicalKey(spark, keyed, al)
-      case None => keyed.withColumn("canonical_key", $"key")
-    }).withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
-      .drop("key", "canonical_key")
-
-    // ---- per-partition metrics + lineage (north rule: docs processed,
-    // triples emitted, durations — and link-score distribution below)
-    val metrics = graphs.map { case (o, pid, nanos) =>
-      val g = o.graph
-      PartitionMetric(runId, "graph_build", pid, 1L, g.nodes.size.toLong,
-        g.edges.size.toLong, g.edges.size.toLong, nanos / 1000000L)
-    }.groupBy($"run_id", $"stage", $"partition_id")
-      .agg(sum($"docs_processed").as("docs_processed"),
-        sum($"nodes_emitted").as("nodes_emitted"),
-        sum($"edges_emitted").as("edges_emitted"),
-        sum($"triples_emitted").as("triples_emitted"),
-        sum($"duration_ms").as("duration_ms"))
-
-    val lineage = graphs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
-
-    // ---- optional entity-linking stage: alias-KB broadcast join + context
-    // scoring; per-partition link-score histogram (north-rule metric)
-    val linkMetrics = kb.map { kbDf =>
-      val mentionRows = graphs.flatMap { case (o, pid, _) =>
-        o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
-      }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
-      val linked = graft.link.EntityLink.link(mentionRows, kbDf)
-      linked.groupBy($"partition_id",
-        when($"link_score".isNull, lit("unlinked"))
-          .otherwise(format_string("%.1f", floor($"link_score" * 10) / 10)).as("score_bucket"))
-        .agg(count(lit(1)).as("n"))
+    // per-doc outputs cached as deserialized objects: each frame below reads
+    // back only the fields it needs, with no columnar encode/decode of the
+    // nested graphs and 400-char mention contexts
+    val outs = todo.rdd.mapPartitions(docOuts(v1, enricher, temporalIndex))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ---- flat node/edge/triple tables (narrow explodes)
+      val nodeRows = outs.flatMap { case (o, _, _) =>
+        val g = o.graph
+        g.nodes.map(n => (g.customerId, g.url, n.id, n.content, n.nodeType, n.confidence, n.source,
+          n.temporalIndex, n.temporalCategory))
+      }.toDF("customer_id", "url", "node_id", "content", "node_type", "confidence", "source_file",
+        "temporal_index", "temporal_category")
         .withColumn("run_id", lit(runId))
-    }
 
-    if (outDir.nonEmpty) {
-      // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
-      // the terminal commit marker makes the whole run visible atomically
-      tio.append(canonNodes, "nodes", Seq("node_type"))
-      tio.append(edgeRows, "edges")
-      tio.append(tripleRows, "triples")
-      tio.append(metrics, "metrics")
-      tio.append(lineage, "lineage")
-      linkMetrics.foreach(tio.append(_, "link_metrics"))
-      tio.commit(runId)
-    }
-    graphs.unpersist()
-    RunResult(canonNodes, edgeRows, tripleRows, metrics, lineage, linkMetrics)
+      val edgeRows = outs.flatMap { case (o, _, _) =>
+        val g = o.graph
+        g.edges.map(e => (g.customerId, g.url, e.id, e.srcId, e.dstId, e.edgeType, e.confidence,
+          e.evidence, e.reasoning, e.temporalIndex, e.temporalCategory))
+      }.toDF("customer_id", "url", "edge_id", "source_node_id", "target_node_id",
+        "relationship_type", "weight", "evidence", "reasoning",
+        "temporal_index", "temporal_category")
+        .withColumn("run_id", lit(runId))
+
+      val tripleRows = outs.flatMap { case (o, _, _) => GraphBuild.triples(o.graph) }.toDF()
+        .withColumn("run_id", lit(runId))
+
+      // ---- canonicalization (J10): merge same-key entities across documents;
+      // alias dictionary optional. Canonical id = persisted sha256 id of the
+      // canonical key (graph_extraction_agent.py:510-519 pattern); without
+      // aliases every key is its own canonical key and nothing is joined.
+      val keyed = nodeRows.withColumn("key", lower($"content"))
+      val canonNodes = (aliases match {
+        case Some(al) => Canonicalize.withCanonicalKey(spark, keyed, al)
+        case None => keyed.withColumn("canonical_key", $"key")
+      }).withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
+        .drop("key", "canonical_key")
+
+      // ---- per-partition metrics + lineage (north rule: docs processed,
+      // triples emitted, durations — and link-score distribution below)
+      val metrics = spark.createDataFrame(
+        outs.mapPartitions(partitionMetric(runId)).map(Row.fromTuple), MetricsSchema)
+
+      val lineage = outs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
+
+      // ---- optional entity-linking stage: alias-KB broadcast join + context
+      // scoring; per-partition link-score histogram (north-rule metric)
+      val linkMetrics = kb.map { kbDf =>
+        val mentionRows = outs.flatMap { case (o, pid, _) =>
+          o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
+        }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
+        val linked = graft.link.EntityLink.link(mentionRows, kbDf)
+        linked.groupBy($"partition_id",
+          when($"link_score".isNull, lit("unlinked"))
+            .otherwise(format_string("%.1f", floor($"link_score" * 10) / 10)).as("score_bucket"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("run_id", lit(runId))
+      }
+
+      val written = store.map { tio =>
+        // ≤ one row per partition, collected first: this job also fills the
+        // object cache, and no rows means no doc to process
+        val rows = metrics.collect()
+        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), MetricsSchema)
+        // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
+        // the terminal commit marker makes the whole run visible atomically.
+        // A run with nothing to do writes no file and commits no marker.
+        if (rows.nonEmpty) {
+          tio.append(canonNodes, "nodes", Seq("node_type"))
+          tio.append(edgeRows, "edges")
+          tio.append(tripleRows, "triples")
+          tio.append(local.coalesce(1), "metrics") // ≤ one row per partition: one file
+          tio.append(lineage, "lineage")
+          linkMetrics.foreach(tio.append(_, "link_metrics"))
+          tio.commit(runId)
+        }
+        local
+      }
+      RunResult(canonNodes, edgeRows, tripleRows, written.getOrElse(metrics), lineage, linkMetrics)
+    } finally outs.unpersist()
   }
 
   /** Persisted-id helpers (F8 — graph_extraction_agent.py:510-531). */

@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   *                                                        — small dimension (broadcast)
   *
   * Plan shape at 100 TB: the knowledge base is exploded to one (alias_key →
-  * entity) row per alias and BROADCAST; candidate generation is a broadcast
-  * hash join on the normalized surface (no shuffle of the mention side);
-  * scoring is a pure Column expression over the joined rows; best-candidate
-  * selection is a per-mention min_by hash aggregate (map-side partial, no
-  * sort) keyed on mention_id — unique, so a hub-skewed SURFACE never skews
-  * the reduction.
+  * entity) row per alias and BROADCAST; `link` scans the mentions ONCE —
+  * each mention row is tagged with a row id and LEFT broadcast-hash-joined
+  * on the normalized surface (no shuffle of the mention side), scoring is a
+  * pure Column expression over the joined rows, and one aggregate keyed on
+  * the row id (the mention columns ride along as keys) picks the best candidate with `min_by`, whose ordering is NULL
+  * for a candidate that does not qualify (or for no candidate at all). The
+  * mention side is therefore exchanged once, by a unique key that no
+  * hub-skewed surface can skew — instead of being scanned twice, once for
+  * the candidate aggregate and once more for a join back of every mention.
   */
 object EntityLink {
 
@@ -44,7 +47,13 @@ object EntityLink {
     * broadcast, equi-join on normalized surface.
     * Returns (mention columns) + entity_id, canonical_name, prior, ctx_sim, link_score.
     */
-  def candidates(mentions: DataFrame, kb: DataFrame): DataFrame = {
+  def candidates(mentions: DataFrame, kb: DataFrame): DataFrame = scored(mentions, kb, "inner")
+
+  /** The mentions broadcast-joined to the kb's alias rows (`inner`: the
+    * candidates; `left`: also each mention with none, its kb columns and
+    * link_score NULL) and scored.
+    */
+  private def scored(mentions: DataFrame, kb: DataFrame, joinType: String): DataFrame = {
     val aliasRows = kb.select(
         col("entity_id"), col("canonical_name"), col("profile"),
         coalesce(col("prior"), lit(0.5)).as("prior"),
@@ -53,33 +62,35 @@ object EntityLink {
       .dropDuplicates("alias_key", "entity_id")
     mentions
       .withColumn("surface_key", normKey(col("surface")))
-      .join(broadcast(aliasRows), col("surface_key") === col("alias_key"), "inner")
+      .join(broadcast(aliasRows), col("surface_key") === col("alias_key"), joinType)
       .withColumn("ctx_sim", contextSimilarity(col("context"), col("profile")))
       .withColumn("link_score", round(lit(0.6) * col("ctx_sim") + lit(0.4) * col("prior"), 6))
   }
 
-  /** Best candidate per mention (deterministic: argmin of the comparable key
-    * struct(-link_score, entity_id) — highest score, ties to the smallest
-    * entity_id); mentions with no candidate are kept with null entity (left
-    * join) so the unlinked-mention diagnostic falls out for free.
+  /** Best candidate per mention row (deterministic: argmin of the comparable
+    * key struct(-link_score, entity_id) — highest score, ties to the smallest
+    * entity_id, over the candidates scoring ≥ minScore); a mention with no
+    * such candidate is kept with null entity, so the unlinked-mention
+    * diagnostic falls out for free. One output row per input row, repeated
+    * rows included: the aggregate groups by a per-row id plus the mention
+    * columns, which it passes through unchanged.
     *
-    * `min_by` over a groupBy, NOT a row_number window: the hash aggregate
-    * gets map-side partial reduction and no sort — measured 3.5× faster than
-    * WindowExec on the same candidate set (LinkProbe: 0.77 s vs 2.68 s for
-    * 28k candidates at sf0.1), and the gap widens at scale where the window
-    * would sort every partition.
+    * `min_by` over a groupBy, NOT a row_number window: the aggregate reduces
+    * map-side (partial min_by) — measured 3.5× faster than WindowExec on the
+    * same candidate set (LinkProbe: 0.77 s vs 2.68 s for 28k candidates at
+    * sf0.1), and the gap widens at scale where the window would sort every
+    * partition.
     */
   def link(mentions: DataFrame, kb: DataFrame, minScore: Double = 0.0): DataFrame = {
-    val cand = candidates(mentions, kb)
-      .where(col("link_score") >= minScore)
-    val best = cand.groupBy(col("mention_id"))
+    val keys = mentions.columns.toSeq.map(col)
+    val rowId = "_link_row"
+    scored(mentions.withColumn(rowId, monotonically_increasing_id()), kb, "left")
+      .groupBy(col(rowId) +: keys: _*)
       .agg(min_by(
         struct(col("entity_id"), col("canonical_name"), col("ctx_sim"), col("link_score")),
-        struct(negate(col("link_score")), col("entity_id"))).as("b"))
-      .select(col("mention_id").as("m_id"), col("b.entity_id").as("entity_id"),
-        col("b.canonical_name").as("canonical_name"),
-        col("b.ctx_sim").as("ctx_sim"), col("b.link_score").as("link_score"))
-    mentions.join(best, mentions("mention_id") === best("m_id"), "left").drop("m_id")
+        when(col("link_score") >= minScore, struct(negate(col("link_score")), col("entity_id")))).as("b"))
+      .select(keys ++ Seq(col("b.entity_id").as("entity_id"), col("b.canonical_name").as("canonical_name"),
+        col("b.ctx_sim").as("ctx_sim"), col("b.link_score").as("link_score")): _*)
   }
 
   /** Link-score distribution per partition-sized bucket (north rule metric):

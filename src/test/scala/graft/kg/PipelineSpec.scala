@@ -17,6 +17,27 @@ object CountingEnricher extends Enricher {
       graft.model.Entity("enriched topic", "concept", 0.5, "llm", "file_analysis", "", "topic", primary = false, 0.8))
 }
 
+/** A TableIO that fails right after its `failAfter`-th append returns, or at
+  * commit, before the marker is written, when the run appends fewer tables.
+  */
+final class CrashingTableIO(inner: graft.io.TableIO, failAfter: Int) extends graft.io.TableIO {
+  var appends = 0
+  override def append(df: org.apache.spark.sql.DataFrame, table: String, partitionBy: Seq[String]): Unit = {
+    inner.append(df, table, partitionBy)
+    appends += 1
+    if (appends == failAfter) throw new CrashingTableIO.Crash(s"crashed after append $appends ($table)")
+  }
+  override def read(spark: org.apache.spark.sql.SparkSession, table: String): org.apache.spark.sql.DataFrame =
+    inner.read(spark, table)
+  override def exists(table: String): Boolean = inner.exists(table)
+  override def commit(runId: String): Unit = throw new CrashingTableIO.Crash(s"crashed before commit of $runId")
+  override def committedRuns(): Set[String] = inner.committedRuns()
+}
+
+object CrashingTableIO {
+  final class Crash(msg: String) extends RuntimeException(msg)
+}
+
 /** Pipeline-level behaviors: resume idempotence (north rule), lineage and
   * metrics consistency, canonical-id stability.
   */
@@ -138,9 +159,13 @@ class PipelineSpec extends SparkSpec {
     import spark.implicits._
     val pages = Corpus.pages(spark, 20, partitions = 2)
     val aliases = Seq(("Intel", "Intel Corporation")).toDF("alias", "canonical")
+    val kb = Seq(("KB1", "Intel Corporation", Seq("Intel"), "chips", 0.9))
+      .toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
+    val dir = java.nio.file.Files.createTempDirectory("graft-leak").toString
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet.toSet
-    for (i <- 1 to 10) Pipeline.run(spark, pages, s"leak$i", "", aliases = Some(aliases))
+    // writing runs fill the per-doc object cache, which must be gone on return
+    for (i <- 1 to 10) Pipeline.run(spark, pages, s"leak$i", dir, aliases = Some(aliases), kb = Some(kb))
     val grown = sc.getPersistentRDDs.keySet.toSet -- before
     assert(grown.isEmpty, s"10 runs left ${grown.size} persisted RDDs")
   }
@@ -228,5 +253,86 @@ class PipelineSpec extends SparkSpec {
     val growth = nodes.where($"content" === "Growth")
       .select($"canonical_id").distinct().count()
     assert(growth == 1)
+  }
+
+  test("metrics: one row per non-empty partition, the per-partition sums, the same schema as before") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    import org.apache.spark.sql.types._
+    // 6 pages over 8 slices: partitions 0 and 4 hold no page
+    val pages = spark.createDataset(
+      spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
+    val counters = Seq("docs_processed", "nodes_emitted", "edges_emitted", "triples_emitted", "duration_ms")
+    val schema = StructType(Seq(StructField("run_id", StringType), StructField("stage", StringType),
+      StructField("partition_id", IntegerType, nullable = false)) ++ counters.map(StructField(_, LongType)))
+    // what the metrics rows were before: per-doc rows summed by a shuffle
+    val old = Pipeline.docGraphsWithPartition(spark, pages)
+      .map { case (o, pid, _) => (pid, o.graph.nodes.size.toLong, o.graph.edges.size.toLong) }
+      .groupBy($"_1").agg(count(lit(1)), sum($"_2"), sum($"_3"), sum($"_3"))
+      .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
+    assert(old.map(_._1) == Seq(1, 2, 3, 5, 6, 7) && old.map(_._2).sum == 6L)
+    def sums(m: DataFrame): Seq[(Int, Long, Long, Long, Long)] =
+      m.select($"partition_id", $"docs_processed", $"nodes_emitted", $"edges_emitted", $"triples_emitted")
+        .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-metrics-schema").toString
+    val lazyMetrics = Pipeline.run(spark, pages, "m0", "").metrics
+    val written = Pipeline.run(spark, pages, "m1", dir).metrics
+    val readBack = spark.read.parquet(s"$dir/metrics")
+    for ((m, what) <- Seq(lazyMetrics -> "in memory", written -> "written", readBack -> "read back")) {
+      assert(sums(m) == old, what)
+      assert(m.where($"duration_ms" < 0 || $"run_id".isNull || $"stage" =!= "graph_build").isEmpty, what)
+    }
+    assert(lazyMetrics.schema == schema && written.schema == schema, lazyMetrics.schema.treeString)
+    assert(readBack.schema == StructType(schema.map(_.copy(nullable = true))), readBack.schema.treeString)
+  }
+
+  test("a resume with every page already done writes no file and commits nothing") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Paths.get(java.nio.file.Files.createTempDirectory("graft-noop").toString)
+    val pages = Corpus.pages(spark, 20, partitions = 2)
+    val kb = Seq(("KB1", "Intel Corporation", Seq("Intel"), "chips", 0.9))
+      .toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
+    def listing(): Seq[String] =
+      java.nio.file.Files.walk(dir).iterator().asScala.map(dir.relativize(_).toString).toSeq.sorted
+    Pipeline.run(spark, pages, "first", dir.toString, kb = Some(kb))
+    val before = listing()
+    assert(before.exists(_.startsWith("link_metrics/")) && before.contains("_commits/first"))
+    val res = Pipeline.run(spark, pages, "again", dir.toString, resume = true, kb = Some(kb))
+    assert(res.metrics.isEmpty)
+    assert(listing() == before, "a run with nothing to do changed the warehouse")
+  }
+
+  test("a crash after any append or before the commit resumes exactly-once") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft-crash-points").toString
+    val pages = Corpus.pages(spark, 30, partitions = 2)
+    val aliases = Some(Seq(("Intel", "Intel Corporation")).toDF("alias", "canonical"))
+    val kb = Some(Seq(("KB1", "Intel Corporation", Seq("Intel"), "chips manufacturing technology", 0.9))
+      .toDF("entity_id", "canonical_name", "aliases", "profile", "prior"))
+    val tables = Seq("nodes", "edges", "triples", "metrics", "lineage", "link_metrics")
+    def committed(dir: String): Map[String, Seq[String]] = tables.map { t =>
+      val df = new graft.io.ParquetTableIO(dir).readCommitted(spark, t).drop("run_id", "duration_ms")
+      t -> df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+    }.toMap
+    Pipeline.run(spark, pages, "clean", s"$root/clean", aliases = aliases, kb = kb)
+    val want = committed(s"$root/clean")
+    assert(tables.forall(want(_).nonEmpty))
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet.toSet
+    // k = 1..6: after the k-th append; k = 7: inside commit, before the marker
+    for (k <- 1 to tables.size + 1) {
+      val dir = s"$root/crash$k"
+      val crashing = new CrashingTableIO(new graft.io.ParquetTableIO(dir), failAfter = k)
+      intercept[CrashingTableIO.Crash](Pipeline.runWith(Some(crashing), spark, pages, "crashed",
+        resume = true, aliases, kb, v1 = false, NoopEnricher))
+      assert(crashing.appends == math.min(k, tables.size))
+      Pipeline.run(spark, pages, "resumed", dir, resume = true, aliases = aliases, kb = kb)
+      val got = committed(dir)
+      for (t <- tables) assert(got(t) == want(t), s"crash point $k: committed $t differs from a clean run")
+    }
+    assert(sc.getPersistentRDDs.keySet.toSet == cached, "a crashed run left its object cache persisted")
   }
 }

@@ -63,4 +63,53 @@ class EntityLinkSpec extends SparkSpec {
     val plan = EntityLink.candidates(m, kb()).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join, got:\n$plan")
   }
+
+  test("a mention whose every candidate scores below minScore comes back unlinked") {
+    val m = mentions((1L, "Intel", "chips"), (2L, "google llc", "search advertising cloud android"))
+    val out = EntityLink.link(m, kb(), minScore = 0.8).collect()
+      .map(r => r.getAs[Long]("mention_id") -> r).toMap
+    assert(out.size == 2)
+    // Intel's best candidate (E1) scores 0.63 < 0.8: kept, with every kb column NULL
+    val unlinked = out(1L)
+    assert(Seq("entity_id", "canonical_name", "ctx_sim", "link_score")
+      .forall(c => unlinked.isNullAt(unlinked.fieldIndex(c))), s"$unlinked")
+    assert(out(2L).getAs[String]("entity_id") == "E3" && out(2L).getAs[Double]("link_score") >= 0.8)
+  }
+
+  test("a repeated mention row yields one output row per input row") {
+    val m = mentions((1L, "Intel", "chips fabs"), (1L, "Intel", "chips fabs"),
+      (2L, "Unknown", "x"), (2L, "Unknown", "x"), (3L, "google llc", "search"))
+    val out = EntityLink.link(m, kb()).collect()
+      .map(r => (r.getAs[Long]("mention_id"), Option(r.getAs[String]("entity_id")))).toSeq.sorted
+    assert(out == Seq((1L, Some("E1")), (1L, Some("E1")), (2L, None), (2L, None), (3L, Some("E3"))))
+  }
+
+  test("a score tie goes to the smallest entity_id") {
+    import spark.implicits._
+    // same alias, same prior, no shared context: all three candidates score 0.2
+    val tied = Seq(
+        ("Z9", "Acme Zeta", Seq("acme"), "widgets", 0.5),
+        ("A1", "Acme Alpha", Seq("acme"), "gadgets", 0.5),
+        ("M5", "Acme Mid", Seq("acme"), "tools", 0.5))
+      .toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
+    val out = EntityLink.link(mentions((1L, "ACME", "nothing shared")), tied).collect()
+    assert(out.length == 1 && out(0).getAs[String]("entity_id") == "A1" &&
+      out(0).getAs[Double]("link_score") == 0.2, out.mkString)
+  }
+
+  test("link scans the mentions once: one broadcast join, no self-join") {
+    import org.apache.spark.sql.execution.RangeExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    object Aqe extends AdaptiveSparkPlanHelper
+    // a Range leaf marks every scan of the mention source
+    val m = spark.range(3).select(col("id").as("mention_id"), lit("u").as("url"),
+      when(col("id") === 0, lit("Intel")).otherwise(lit("nobody")).as("surface"), lit("chips").as("context"))
+    val linked = EntityLink.link(m, kb())
+    assert(linked.collect().length == 3)
+    val plan = linked.queryExecution.executedPlan
+    assert(Aqe.collect(plan) { case r: RangeExec => r }.size == 1, s"mentions scanned more than once:\n$plan")
+    val joins = Aqe.collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.size == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec], s"expected one broadcast join:\n$plan")
+  }
 }
