@@ -27,9 +27,12 @@ trait TableIO {
   def committedRuns(): Set[String]
 
   /** Read a table with uncommitted (crashed-run) rows filtered out. */
-  def readCommitted(spark: SparkSession, table: String): DataFrame = {
+  def readCommitted(spark: SparkSession, table: String): DataFrame = committed(read(spark, table))
+
+  /** The rows of a `read` that belong to committed runs. */
+  def committed(rows: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    read(spark, table).where(col("run_id").isin(committedRuns().toSeq: _*))
+    rows.where(col("run_id").isin(committedRuns().toSeq: _*))
   }
 }
 

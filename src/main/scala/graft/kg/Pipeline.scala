@@ -3,13 +3,18 @@ package graft.kg
 import graft.analyze.DocAnalyze
 import graft.canon.Canonicalize
 import graft.io.{ParquetTableIO, TableIO}
+import graft.link.EntityLink
 import graft.model._
 import graft.needs.Needs
 import graft.text.PyText
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** End-to-end KG-construction pipeline (SURVEY §3.1 Spark equivalent).
   *
@@ -28,7 +33,12 @@ import org.apache.spark.storage.StorageLevel
   * frames built from them decodes nothing it does not read. The `metrics`
   * rows are summed per partition inside the task that produced them — no
   * shuffle — and collected before any append: a run with no doc to process
-  * writes nothing and commits nothing.
+  * writes nothing and commits nothing. With a knowledge base, the same
+  * per-partition fold links each mention against the broadcast
+  * [[graft.link.EntityLink.KbIndex]] and counts the partition's link-score
+  * histogram, so `link_metrics` is collected with `metrics` and costs one
+  * small write and no shuffle. The lineage table is read once, for both the
+  * runId guard and the resume done-set.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization touches only the alias graph — orders of
@@ -115,24 +125,49 @@ object Pipeline {
     }
   }
 
-  /** One metric row per non-empty partition, summed inside its task: every
-    * doc of a partition carries the same id, so no row has to move.
+  /** What one partition's task folds from its docs: its metric row and,
+    * with a knowledge base, the link-score histogram of its mentions.
     */
-  private def partitionMetric(runId: String)(it: Iterator[(DocOut, Int, Long)]): Iterator[PartitionMetric] =
+  private final case class PartitionFold(metric: PartitionMetric, buckets: Map[String, Long])
+
+  /** One fold per non-empty partition, summed inside its task: every doc of
+    * a partition carries the same id, so no row has to move. Each mention is
+    * linked where it was made, by `EntityLink`'s per-mention scorer.
+    */
+  private def partitionFold(runId: String, index: Option[Broadcast[EntityLink.KbIndex]])
+                           (it: Iterator[(DocOut, Int, Long)]): Iterator[PartitionFold] =
     if (!it.hasNext) Iterator.empty
-    else Iterator.single(it.foldLeft(PartitionMetric(runId, "graph_build", 0, 0L, 0L, 0L, 0L, 0L)) {
-      case (m, (o, pid, nanos)) =>
-        val edges = o.graph.edges.size.toLong
-        m.copy(partition_id = pid, docs_processed = m.docs_processed + 1,
-          nodes_emitted = m.nodes_emitted + o.graph.nodes.size, edges_emitted = m.edges_emitted + edges,
-          triples_emitted = m.triples_emitted + edges, duration_ms = m.duration_ms + nanos / 1000000L)
-    })
+    else {
+      val ix = index.map(_.value)
+      val buckets = mutable.HashMap.empty[String, Long]
+      val metric = it.foldLeft(PartitionMetric(runId, "graph_build", 0, 0L, 0L, 0L, 0L, 0L)) {
+        case (m, (o, pid, nanos)) =>
+          ix.foreach(x => o.mentions.foreach { mr =>
+            val b = EntityLink.scoreBucket(x.best(mr.surface, mr.context, 0.0).map(_.linkScore))
+            buckets(b) = buckets.getOrElse(b, 0L) + 1L
+          })
+          val edges = o.graph.edges.size.toLong
+          m.copy(partition_id = pid, docs_processed = m.docs_processed + 1,
+            nodes_emitted = m.nodes_emitted + o.graph.nodes.size, edges_emitted = m.edges_emitted + edges,
+            triples_emitted = m.triples_emitted + edges, duration_ms = m.duration_ms + nanos / 1000000L)
+      }
+      Iterator.single(PartitionFold(metric, buckets.toMap))
+    }
 
   /** The `metrics` table schema: counters nullable, as in the metrics files
     * already written, where they came from a `sum`.
     */
   private val MetricsSchema: StructType = StructType(Encoders.product[PartitionMetric].schema.map(f =>
     if (f.dataType == LongType) f.copy(nullable = true) else f))
+
+  /** The `link_metrics` table schema: one count per (partition, score
+    * bucket), every column non-nullable, as in the files already written.
+    */
+  private val LinkMetricsSchema: StructType = StructType(Seq(
+    StructField("partition_id", IntegerType, nullable = false),
+    StructField("score_bucket", StringType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("run_id", StringType, nullable = false)))
 
   final case class RunResult(
       nodes: DataFrame, edges: DataFrame, triples: DataFrame,
@@ -141,6 +176,8 @@ object Pipeline {
   /** Full run. If outDir is non-empty, writes all tables (parquet, partitioned)
     * and supports resume: pages already present in `<outDir>/lineage` with
     * status=done are anti-joined away before processing (SURVEY §2.8).
+    * The returned `metrics` and `linkMetrics` are local frames of the rows
+    * collected during the run (the ones written); the other frames are lazy.
     */
   def run(spark: SparkSession, pages: Dataset[Page], runId: String,
           outDir: String = "", resume: Boolean = false,
@@ -162,22 +199,23 @@ object Pipeline {
     // (both share run_id) — silently breaking the no-duplication guarantee.
     // Resume safety comes from the lineage anti-join below, NOT from reusing
     // the id, so reuse is always a caller bug; fail fast with the reason.
-    store.foreach { tio =>
-      require(!tio.committedRuns().contains(runId),
-        s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)")
-      if (tio.exists("lineage") &&
-          !tio.read(spark, "lineage").where($"run_id" === runId).isEmpty)
+    store.foreach(tio => require(!tio.committedRuns().contains(runId),
+      s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)"))
+    // the lineage table, read once for the guard and the done-set
+    val lineageNow = store.filter(_.exists("lineage")).map(tio => tio -> tio.read(spark, "lineage"))
+    lineageNow.foreach { case (_, lin) =>
+      if (!lin.where($"run_id" === runId).isEmpty)
         throw new IllegalStateException(
           s"runId '$runId' has uncommitted rows from a crashed attempt — use a fresh runId; " +
             "resume=true reprocesses those pages and readers keep filtering the orphans out")
     }
-    val todo: Dataset[Page] = store match {
-      case Some(tio) if resume && tio.exists("lineage") =>
+    val todo: Dataset[Page] = lineageNow match {
+      case Some((tio, lin)) if resume =>
         // only COMMITTED runs count as done — a run that crashed between its
         // data appends and its commit marker is invisible here, so its urls
-        // are reprocessed and the orphan rows stay filtered out of reads
-        val done = tio.readCommitted(spark, "lineage")
-          .where($"status" === "done").select($"url").distinct()
+        // are reprocessed and the orphan rows stay filtered out of reads.
+        // An anti-join needs no distinct build side.
+        val done = tio.committed(lin).where($"status" === "done").select($"url")
         pages.join(done, Seq("url"), "left_anti").as[Page]
       case _ => pages
     }
@@ -186,6 +224,9 @@ object Pipeline {
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
     val temporalIndex = if (v1) java.time.Instant.now().toString else ""
+    // optional entity linking: the kb collected once into an alias index and
+    // broadcast to the per-partition fold
+    val index = kb.map(EntityLink.broadcastIndex)
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
@@ -224,48 +265,37 @@ object Pipeline {
       }).withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
         .drop("key", "canonical_key")
 
-      // ---- per-partition metrics + lineage (north rule: docs processed,
-      // triples emitted, durations — and link-score distribution below)
-      val metrics = spark.createDataFrame(
-        outs.mapPartitions(partitionMetric(runId)).map(Row.fromTuple), MetricsSchema)
-
       val lineage = outs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
 
-      // ---- optional entity-linking stage: alias-KB broadcast join + context
-      // scoring; per-partition link-score histogram (north-rule metric)
-      val linkMetrics = kb.map { kbDf =>
-        val mentionRows = outs.flatMap { case (o, pid, _) =>
-          o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
-        }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
-        val linked = graft.link.EntityLink.link(mentionRows, kbDf)
-        linked.groupBy($"partition_id",
-          when($"link_score".isNull, lit("unlinked"))
-            .otherwise(format_string("%.1f", floor($"link_score" * 10) / 10)).as("score_bucket"))
-          .agg(count(lit(1)).as("n"))
-          .withColumn("run_id", lit(runId))
-      }
+      // ---- per-partition metrics and link-score histogram (north rule: docs
+      // processed, triples emitted, durations, link-score distribution per
+      // partition): ≤ one fold per partition, collected first — this job also
+      // fills the object cache, and no fold means no doc to process
+      val folds = outs.mapPartitions(partitionFold(runId, index)).collect().toSeq
+      val metrics = spark.createDataFrame(folds.map(f => Row.fromTuple(f.metric)).asJava, MetricsSchema)
+      val linkMetrics = index.map(_ => spark.createDataFrame(folds.flatMap { f =>
+        f.buckets.map { case (bucket, n) => Row(f.metric.partition_id, bucket, n, runId) }
+      }.asJava, LinkMetricsSchema))
 
-      val written = store.map { tio =>
-        // ≤ one row per partition, collected first: this job also fills the
-        // object cache, and no rows means no doc to process
-        val rows = metrics.collect()
-        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), MetricsSchema)
-        // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
-        // the terminal commit marker makes the whole run visible atomically.
-        // A run with nothing to do writes no file and commits no marker.
-        if (rows.nonEmpty) {
+      // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
+      // the terminal commit marker makes the whole run visible atomically.
+      // A run with nothing to do writes no file and commits no marker.
+      store.foreach { tio =>
+        if (folds.nonEmpty) {
           tio.append(canonNodes, "nodes", Seq("node_type"))
           tio.append(edgeRows, "edges")
           tio.append(tripleRows, "triples")
-          tio.append(local.coalesce(1), "metrics") // ≤ one row per partition: one file
+          tio.append(metrics.coalesce(1), "metrics") // small local frames: one file each
           tio.append(lineage, "lineage")
-          linkMetrics.foreach(tio.append(_, "link_metrics"))
+          linkMetrics.foreach(lm => tio.append(lm.coalesce(1), "link_metrics"))
           tio.commit(runId)
         }
-        local
       }
-      RunResult(canonNodes, edgeRows, tripleRows, written.getOrElse(metrics), lineage, linkMetrics)
-    } finally outs.unpersist()
+      RunResult(canonNodes, edgeRows, tripleRows, metrics, lineage, linkMetrics)
+    } finally {
+      outs.unpersist()
+      index.foreach(_.destroy())
+    }
   }
 
   /** Persisted-id helpers (F8 — graph_extraction_agent.py:510-531). */

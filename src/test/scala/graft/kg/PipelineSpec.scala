@@ -335,4 +335,97 @@ class PipelineSpec extends SparkSpec {
     }
     assert(sc.getPersistentRDDs.keySet.toSet == cached, "a crashed run left its object cache persisted")
   }
+
+  /** A knowledge base over the corpus vocabulary: every organisation and
+    * every person name, with topic profiles.
+    */
+  private def corpusKb(): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val orgs = Corpus.orgs.zipWithIndex.map { case (o, i) =>
+      (s"KB_O$i", o, Seq(o.split(' ').head, o.toLowerCase), Corpus.topics(i % Corpus.topics.size), 0.5 + i % 5 / 10.0)
+    }
+    val people = for ((f, i) <- Corpus.firstNames.zipWithIndex; l <- Corpus.lastNames)
+      yield (s"KB_P_${f}_$l", s"$f $l", Seq(s"${f.head}. $l"), Corpus.topics(i % Corpus.topics.size), 0.4)
+    (orgs ++ people).toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
+  }
+
+  test("link_metrics: the Column linker's histogram per partition, in the old schema, as written") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types._
+    // 6 pages over 8 slices: partitions 0 and 4 hold no page
+    val pages = spark.createDataset(
+      spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
+    val kb = corpusKb()
+    val schema = StructType(Seq(StructField("partition_id", IntegerType, nullable = false),
+      StructField("score_bucket", StringType, nullable = false), StructField("n", LongType, nullable = false),
+      StructField("run_id", StringType, nullable = false)))
+    // what link_metrics was before: the mentions linked by the Column-expression
+    // linker, counted by a (partition, bucket) shuffle
+    val mentions = Pipeline.docGraphsWithPartition(spark, pages).flatMap { case (o, pid, _) =>
+      o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
+    }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
+    val want = graft.link.LinkOracle.link(mentions, kb)
+      .groupBy($"partition_id", graft.link.LinkOracle.scoreBucket($"link_score").as("score_bucket")).count()
+      .as[(Int, String, Long)].collect().sorted.toSeq
+    assert(want.map(_._1).distinct == Seq(1, 2, 3, 5, 6, 7), want)
+    assert(want.exists(_._2 == "unlinked") && want.exists(_._2 != "unlinked"), want)
+    def counts(lm: DataFrame): Seq[(Int, String, Long)] =
+      lm.select($"partition_id", $"score_bucket", $"n").as[(Int, String, Long)].collect().sorted.toSeq
+    def all(lm: DataFrame): Seq[String] = lm.collect().map(_.toString).sorted.toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft-link-metrics").toString
+    val inMemory = Pipeline.run(spark, pages, "lm0", "", kb = Some(kb)).linkMetrics.get
+    val written = Pipeline.run(spark, pages, "lm1", dir, kb = Some(kb)).linkMetrics.get
+    val readBack = spark.read.parquet(s"$dir/link_metrics")
+    for ((lm, what) <- Seq(inMemory -> "in memory", written -> "written", readBack -> "read back"))
+      assert(counts(lm) == want, what)
+    assert(inMemory.schema == schema && written.schema == schema, written.schema.treeString)
+    assert(readBack.schema == StructType(schema.map(_.copy(nullable = true))), readBack.schema.treeString)
+    // the frame RunResult hands back is the one that was written
+    assert(all(written) == all(readBack))
+  }
+
+  test("a run without a kb writes no link_metrics") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-kb").toString
+    val res = Pipeline.run(spark, Corpus.pages(spark, 20, partitions = 2), "nokb", dir)
+    assert(res.linkMetrics.isEmpty)
+    assert(new java.io.File(s"$dir/lineage").exists() && !new java.io.File(s"$dir/link_metrics").exists())
+  }
+
+  test("a kg_build-shaped run takes at most 14 Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a committed run over the first pages, then a resume over all of them
+    // read from parquet, with an alias dictionary and a KB
+    val dir = java.nio.file.Files.createTempDirectory("graft-job-count").toString
+    spark.range(0, 40, 1L, 4).map(Corpus.genPage(_)).write.parquet(s"$dir/base")
+    spark.range(40, 160, 1L, 4).map(Corpus.genPage(_)).write.parquet(s"$dir/delta")
+    val aliases = Seq(("Intel", "Intel Corporation"), ("intel_corporation", "Intel"),
+      ("T. Wolff", "Tim Wolff")).toDF("alias", "canonical")
+    val kb = corpusKb()
+    Pipeline.run(spark, spark.read.parquet(s"$dir/base").as[graft.model.Page], "base", s"$dir/wh",
+      aliases = Some(aliases), kb = Some(kb))
+    val all = spark.read.parquet(s"$dir/base", s"$dir/delta").as[graft.model.Page]
+    val sc = spark.sparkContext
+    val group = "kg-build-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = Option(j.properties).foreach { p =>
+        if (p.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+        if (p.getProperty("graft.test.drained") != null) drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one kg_build-shaped Pipeline.run")
+      try Pipeline.run(spark, all, "counted", s"$dir/wh", resume = true, aliases = Some(aliases), kb = Some(kb))
+      finally sc.clearJobGroup()
+      // listener events arrive in order: once this job's start is seen, so was every run job's
+      sc.setLocalProperty("graft.test.drained", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drained", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get >= 1 && jobs.get <= 14, s"${jobs.get} Spark jobs")
+  }
 }
