@@ -89,13 +89,9 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
   */
 object Exports {
   def exportCustomer(nodes: DataFrame, edges: DataFrame, customerId: String,
-                     outDir: String, format: String = "json",
-                     redactPii: Boolean = true): Unit = {
+                     outDir: String, format: String = "json"): Unit = {
     import org.apache.spark.sql.functions._
-    def prep(df: DataFrame) = {
-      val f = df.where(col("customer_id") === customerId)
-      if (redactPii) Redact.redactFrame(f) else f
-    }
+    def prep(df: DataFrame) = Redact.redactFrame(df.where(col("customer_id") === customerId))
     val n = prep(nodes)
     val e = prep(edges)
     val dir = s"$outDir/${Redact.sanitizeKeyComponent(customerId)}"
@@ -112,17 +108,14 @@ object Exports {
     }
   }
 
-  /** Small text summary collected to the driver (type histograms). */
+  /** Small text summary collected to the driver: `GraphQueries.customerSummary`'s
+    * type histograms, each by count descending, then type.
+    */
   def summary(nodes: DataFrame, edges: DataFrame, customerId: String): String = {
     import org.apache.spark.sql.functions._
-    val nh = nodes.where(col("customer_id") === customerId)
-      .groupBy("node_type").count().orderBy(desc("count"), asc("node_type")).collect()
-    val eh = edges.where(col("customer_id") === customerId)
-      .groupBy("relationship_type").count().orderBy(desc("count"), asc("relationship_type")).collect()
-    val sb = new StringBuilder(s"customer: $customerId\nnodes:\n")
-    nh.foreach(r => sb.append(s"  ${r.get(0)}: ${r.get(1)}\n"))
-    sb.append("edges:\n")
-    eh.foreach(r => sb.append(s"  ${r.get(0)}: ${r.get(1)}\n"))
-    sb.toString
+    def lines(h: DataFrame): String = h.orderBy(desc("count"), asc(h.columns.head)).collect()
+      .map(r => s"  ${r.get(0)}: ${r.get(1)}\n").mkString
+    val (nh, eh) = graft.kg.GraphQueries.customerSummary(nodes, edges, customerId)
+    s"customer: $customerId\nnodes:\n${lines(nh)}edges:\n${lines(eh)}"
   }
 }

@@ -11,10 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  /** Per-customer nodes (query_customer_nodes :110-141). */
-  def customerNodes(nodes: DataFrame, customerId: String, limit: Int = 100): DataFrame =
-    nodes.where(col("customer_id") === customerId).limit(limit)
-
   /** Per-customer edges with BOTH endpoints in the customer's subgraph —
     * J8 endpoint semi-join (query_customer_edges :143-186).
     */

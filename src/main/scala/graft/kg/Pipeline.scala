@@ -28,17 +28,19 @@ import scala.jdk.CollectionConverters._
   * [[graft.canon.Canonicalize]]) → nodes/edges/triples tables +
   * per-partition lineage/metrics.
   *
-  * `run` holds the per-doc outputs as deserialized objects (an RDD persisted
-  * for the run's duration, not a columnar Dataset cache), so each of the
-  * frames built from them decodes nothing it does not read. The `metrics`
-  * rows are summed per partition inside the task that produced them — no
-  * shuffle — and collected before any append: a run with no doc to process
-  * writes nothing and commits nothing. With a knowledge base, the same
-  * per-partition fold links each mention against the broadcast
-  * [[graft.link.EntityLink.KbIndex]] and counts the partition's link-score
-  * histogram, so `link_metrics` is collected with `metrics` and costs one
-  * small write and no shuffle. The lineage table is read once, for both the
-  * runId guard and the resume done-set.
+  * `run`'s only product is its warehouse: it appends every table through
+  * [[graft.io.TableIO]] and commits the run, and callers read the committed
+  * tables back with `readCommitted`. It holds the per-doc outputs as
+  * deserialized objects (an RDD persisted for the run's duration, not a
+  * columnar Dataset cache), so each table written from them decodes nothing
+  * it does not read. The `metrics` rows are summed per partition inside the
+  * task that produced them — no shuffle — and collected before any append:
+  * a run with no doc to process writes nothing and commits nothing. With a
+  * knowledge base, the same per-partition fold links each mention against
+  * the broadcast [[graft.link.EntityLink.KbIndex]] and counts the
+  * partition's link-score histogram, so `link_metrics` is collected with
+  * `metrics` and costs one small write and no shuffle. The lineage table is
+  * read once, for both the runId guard and the resume done-set.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization touches only the alias graph — orders of
@@ -105,10 +107,9 @@ object Pipeline {
     */
   def docGraphsWithPartition(spark: SparkSession, pages: Dataset[Page],
                              v1: Boolean = false,
-                             enricher: Enricher = NoopEnricher,
-                             temporalIndex: String = ""): Dataset[(DocOut, Int, Long)] = {
+                             enricher: Enricher = NoopEnricher): Dataset[(DocOut, Int, Long)] = {
     import spark.implicits._
-    pages.mapPartitions(docOuts(v1, enricher, temporalIndex))
+    pages.mapPartitions(docOuts(v1, enricher, ""))
   }
 
   /** The per-partition body of `docGraphsWithPartition`, also run by `run`. */
@@ -169,29 +170,25 @@ object Pipeline {
     StructField("n", LongType, nullable = false),
     StructField("run_id", StringType, nullable = false)))
 
-  final case class RunResult(
-      nodes: DataFrame, edges: DataFrame, triples: DataFrame,
-      metrics: DataFrame, lineage: DataFrame, linkMetrics: Option[DataFrame] = None)
-
-  /** Full run. If outDir is non-empty, writes all tables (parquet, partitioned)
-    * and supports resume: pages already present in `<outDir>/lineage` with
-    * status=done are anti-joined away before processing (SURVEY §2.8).
-    * The returned `metrics` and `linkMetrics` are local frames of the rows
-    * collected during the run (the ones written); the other frames are lazy.
+  /** Full run into the warehouse at `outDir` (required): writes every table
+    * (parquet, partitioned) and commits the run, so its output is read with
+    * `ParquetTableIO(outDir).readCommitted`. Supports resume: pages already
+    * present in `<outDir>/lineage` with status=done under a committed run are
+    * anti-joined away before processing (SURVEY §2.8).
     */
   def run(spark: SparkSession, pages: Dataset[Page], runId: String,
-          outDir: String = "", resume: Boolean = false,
+          outDir: String, resume: Boolean = false,
           aliases: Option[DataFrame] = None,
           kb: Option[DataFrame] = None,
-          v1: Boolean = false,
-          enricher: Enricher = NoopEnricher): RunResult =
-    runWith(Option.when(outDir.nonEmpty)(new ParquetTableIO(outDir)), spark, pages, runId, resume,
-      aliases, kb, v1, enricher)
+          v1: Boolean = false): Unit = {
+    require(outDir.nonEmpty, "outDir is empty — Pipeline.run writes its tables to a warehouse directory")
+    runWith(new ParquetTableIO(outDir), spark, pages, runId, resume, aliases, kb, v1)
+  }
 
-  /** `run` over any table store; None writes nothing. */
-  private[kg] def runWith(store: Option[TableIO], spark: SparkSession, pages: Dataset[Page],
+  /** `run` over any table store. */
+  private[kg] def runWith(tio: TableIO, spark: SparkSession, pages: Dataset[Page],
                           runId: String, resume: Boolean, aliases: Option[DataFrame],
-                          kb: Option[DataFrame], v1: Boolean, enricher: Enricher): RunResult = {
+                          kb: Option[DataFrame], v1: Boolean): Unit = {
     import spark.implicits._
 
     // Fresh-runId-per-attempt guard: committing a reused runId would make a
@@ -199,18 +196,18 @@ object Pipeline {
     // (both share run_id) — silently breaking the no-duplication guarantee.
     // Resume safety comes from the lineage anti-join below, NOT from reusing
     // the id, so reuse is always a caller bug; fail fast with the reason.
-    store.foreach(tio => require(!tio.committedRuns().contains(runId),
-      s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)"))
+    require(!tio.committedRuns().contains(runId),
+      s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)")
     // the lineage table, read once for the guard and the done-set
-    val lineageNow = store.filter(_.exists("lineage")).map(tio => tio -> tio.read(spark, "lineage"))
-    lineageNow.foreach { case (_, lin) =>
+    val lineageNow = Option.when(tio.exists("lineage"))(tio.read(spark, "lineage"))
+    lineageNow.foreach { lin =>
       if (!lin.where($"run_id" === runId).isEmpty)
         throw new IllegalStateException(
           s"runId '$runId' has uncommitted rows from a crashed attempt — use a fresh runId; " +
             "resume=true reprocesses those pages and readers keep filtering the orphans out")
     }
     val todo: Dataset[Page] = lineageNow match {
-      case Some((tio, lin)) if resume =>
+      case Some(lin) if resume =>
         // only COMMITTED runs count as done — a run that crashed between its
         // data appends and its commit marker is invisible here, so its urls
         // are reprocessed and the orphan rows stay filtered out of reads.
@@ -230,7 +227,7 @@ object Pipeline {
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
-    val outs = todo.rdd.mapPartitions(docOuts(v1, enricher, temporalIndex))
+    val outs = todo.rdd.mapPartitions(docOuts(v1, NoopEnricher, temporalIndex))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ---- flat node/edge/triple tables (narrow explodes)
@@ -280,18 +277,15 @@ object Pipeline {
       // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
       // the terminal commit marker makes the whole run visible atomically.
       // A run with nothing to do writes no file and commits no marker.
-      store.foreach { tio =>
-        if (folds.nonEmpty) {
-          tio.append(canonNodes, "nodes", Seq("node_type"))
-          tio.append(edgeRows, "edges")
-          tio.append(tripleRows, "triples")
-          tio.append(metrics.coalesce(1), "metrics") // small local frames: one file each
-          tio.append(lineage, "lineage")
-          linkMetrics.foreach(lm => tio.append(lm.coalesce(1), "link_metrics"))
-          tio.commit(runId)
-        }
+      if (folds.nonEmpty) {
+        tio.append(canonNodes, "nodes", Seq("node_type"))
+        tio.append(edgeRows, "edges")
+        tio.append(tripleRows, "triples")
+        tio.append(metrics.coalesce(1), "metrics") // small local frames: one file each
+        tio.append(lineage, "lineage")
+        linkMetrics.foreach(lm => tio.append(lm.coalesce(1), "link_metrics"))
+        tio.commit(runId)
       }
-      RunResult(canonNodes, edgeRows, tripleRows, metrics, lineage, linkMetrics)
     } finally {
       outs.unpersist()
       index.foreach(_.destroy())

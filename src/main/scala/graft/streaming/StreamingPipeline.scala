@@ -70,16 +70,6 @@ object StreamingPipeline {
       }
   }
 
-  /** The bounded-memory production shape of `firstSeenDedup`: state for a
-    * fingerprint expires `horizonMs` after its last sighting
-    * (ProcessingTimeTimeout), so total state is bounded by the distinct
-    * fingerprints seen within the horizon instead of growing forever — at
-    * 100 TB/day that's the difference between a retention window and an
-    * unbounded store. Tradeoff (documented contract): a duplicate arriving
-    * AFTER the horizon re-emits — acceptable for training-data dedup where
-    * the downstream exact-dedup batch pass (q12) is the backstop. Every
-    * sighting renews the lease (sliding horizon).
-    */
   /** Streaming near-dup (the q36 simhash family's streaming analog): each
     * doc explodes into its 4×16-bit simhash band keys ("b:hhhh"); the
     * stateful dedup then emits each band key only on FIRST sighting. A doc
@@ -98,16 +88,9 @@ object StreamingPipeline {
     }
   }
 
-  /** First-seen band-key stream: horizonMs > 0 bounds state with the
-    * ProcessingTimeTimeout lease (production shape); 0 keeps exact NoTimeout
-    * state (stream ≡ batch, testable).
-    */
-  def nearDupBandStream(docs: Dataset[(Long, String)],
-                        horizonMs: Long = 0L): Dataset[(String, Long)] = {
-    val keys = simhashBandKeys(docs)
-    if (horizonMs > 0L) firstSeenDedupWithHorizon(keys, horizonMs)
-    else firstSeenDedup(keys)
-  }
+  /** First-seen band-key stream over exact NoTimeout state (stream ≡ batch). */
+  def nearDupBandStream(docs: Dataset[(Long, String)]): Dataset[(String, Long)] =
+    firstSeenDedup(simhashBandKeys(docs))
 
   /** Holds the bounded recent (doc_id, simhash) partners of one band key —
     * the verification state for `verifiedNearDupStream`.
@@ -162,6 +145,16 @@ object StreamingPipeline {
       }
   }
 
+  /** The bounded-memory production shape of `firstSeenDedup`: state for a
+    * fingerprint expires `horizonMs` after its last sighting
+    * (ProcessingTimeTimeout), so total state is bounded by the distinct
+    * fingerprints seen within the horizon instead of growing forever — at
+    * 100 TB/day that's the difference between a retention window and an
+    * unbounded store. Tradeoff (documented contract): a duplicate arriving
+    * AFTER the horizon re-emits — acceptable for training-data dedup where
+    * the downstream exact-dedup batch pass (q12) is the backstop. Every
+    * sighting renews the lease (sliding horizon).
+    */
   def firstSeenDedupWithHorizon(docs: Dataset[(String, Long)],
                                 horizonMs: Long): Dataset[(String, Long)] = {
     import docs.sparkSession.implicits._

@@ -53,8 +53,7 @@ object RunPipeline {
     triples.select("customer_id", "subj", "pred", "obj", "confidence").show(10, truncate = false)
     val someCustomer = nodes.select("customer_id").limit(1).collect()(0).getString(0)
     println(s"--- customer summary: $someCustomer ---")
-    val (nh, eh) = GraphQueries.customerSummary(
-      nodes.withColumnRenamed("node_id", "node_id"), edges, someCustomer)
+    val (nh, eh) = GraphQueries.customerSummary(nodes, edges, someCustomer)
     nh.show(12, truncate = false)
     eh.show(12, truncate = false)
     if (v1) {

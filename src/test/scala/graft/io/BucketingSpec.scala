@@ -15,7 +15,10 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed write removes the shuffle from the nodes-edges join") {
     import spark.implicits._
-    val res = Pipeline.run(spark, Corpus.pages(spark, 120, partitions = 4), "brun", "")
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucket").toString
+    Pipeline.run(spark, Corpus.pages(spark, 120, partitions = 4), "brun", dir)
+    val tio = new ParquetTableIO(dir)
+    val (nodes, edges) = (tio.readCommitted(spark, "nodes"), tio.readCommitted(spark, "edges"))
 
     spark.sql("DROP TABLE IF EXISTS nodes_b")
     spark.sql("DROP TABLE IF EXISTS edges_b")
@@ -26,9 +29,9 @@ class BucketingSpec extends SparkSpec {
         .stripPrefix("file:"), t)
       if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
     }
-    res.nodes.write.bucketBy(8, "customer_id").sortBy("customer_id")
+    nodes.write.bucketBy(8, "customer_id").sortBy("customer_id")
       .mode("overwrite").saveAsTable("nodes_b")
-    res.edges.write.bucketBy(8, "customer_id").sortBy("customer_id")
+    edges.write.bucketBy(8, "customer_id").sortBy("customer_id")
       .mode("overwrite").saveAsTable("edges_b")
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -45,8 +48,8 @@ class BucketingSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
 
     // same join on unbucketed frames DOES shuffle (sanity of the assertion)
-    val n2 = res.nodes.groupBy($"customer_id").agg(count(lit(1)).as("n_nodes"))
-    val e2 = res.edges.groupBy($"customer_id").agg(count(lit(1)).as("n_edges"))
+    val n2 = nodes.groupBy($"customer_id").agg(count(lit(1)).as("n_nodes"))
+    val e2 = edges.groupBy($"customer_id").agg(count(lit(1)).as("n_edges"))
     val plain = n2.join(e2, Seq("customer_id")).queryExecution.executedPlan.toString
     assert(plain.contains("Exchange") || plain.contains("AQEShuffleRead") ||
       plain.contains("AdaptiveSparkPlan"))

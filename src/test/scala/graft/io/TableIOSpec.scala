@@ -20,16 +20,24 @@ class TableIOSpec extends SparkSpec {
   }
 
   test("exports: json + csv + text summary (S11), customer-scoped sanitized prefix (F13)") {
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-exp").toString
-    val res = Pipeline.run(spark, Corpus.pages(spark, 60, partitions = 2), "erun", "")
-    val cid = res.nodes.select("customer_id").limit(1).collect()(0).getString(0)
+    Pipeline.run(spark, Corpus.pages(spark, 60, partitions = 2), "erun", s"$dir/wh")
+    val tio = new ParquetTableIO(s"$dir/wh")
+    val (nodes, edges) = (tio.readCommitted(spark, "nodes"), tio.readCommitted(spark, "edges"))
+    val cid = nodes.select("customer_id").limit(1).collect()(0).getString(0)
     val safe = Redact.sanitizeKeyComponent(cid)
-    Exports.exportCustomer(res.nodes, res.edges, cid, s"$dir/j", "json")
-    Exports.exportCustomer(res.nodes, res.edges, cid, s"$dir/c", "csv")
+    Exports.exportCustomer(nodes, edges, cid, s"$dir/j", "json")
+    Exports.exportCustomer(nodes, edges, cid, s"$dir/c", "csv")
     assert(spark.read.json(s"$dir/j/$safe/nodes_json").count() > 0)
     assert(spark.read.option("header", "true").csv(s"$dir/c/$safe/edges_csv").columns.contains("evidence"))
-    val s = Exports.summary(res.nodes, res.edges, cid)
+    val s = Exports.summary(nodes, edges, cid)
     assert(s.contains("nodes:") && s.contains("edges:") && s.contains(cid))
+    // each histogram by count descending, ties by type; other customers left out
+    val n = Seq(("c1", "b"), ("c1", "a"), ("c1", "c"), ("c1", "b"), ("c1", "a"), ("c1", "c"), ("c1", "c"),
+      ("c2", "z")).toDF("customer_id", "node_type")
+    val e = Seq(("c1", "r"), ("c2", "r")).toDF("customer_id", "relationship_type")
+    assert(Exports.summary(n, e, "c1") == "customer: c1\nnodes:\n  c: 3\n  a: 2\n  b: 2\nedges:\n  r: 1\n")
   }
 
   test("redaction (F12) masks emails/SSNs/cards/credentials; sanitization (F13) matches reference") {

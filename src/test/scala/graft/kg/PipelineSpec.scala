@@ -43,6 +43,40 @@ object CrashingTableIO {
   */
 class PipelineSpec extends SparkSpec {
 
+  /** Runs `Pipeline.run` into a fresh warehouse and returns its reader. */
+  private def runInto(pages: org.apache.spark.sql.Dataset[graft.model.Page], runId: String,
+                      aliases: Option[org.apache.spark.sql.DataFrame] = None,
+                      kb: Option[org.apache.spark.sql.DataFrame] = None): graft.io.ParquetTableIO = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$runId").toString
+    Pipeline.run(spark, pages, runId, dir, aliases = aliases, kb = kb)
+    new graft.io.ParquetTableIO(dir)
+  }
+
+  /** The Spark jobs that `body` starts, counted by a listener on its job group. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "graft-test-counted"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = Option(j.properties).foreach { p =>
+        if (p.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
+        if (p.getProperty("graft.test.drained") != null) drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once this job's start is seen, so was every counted job's
+      sc.setLocalProperty("graft.test.drained", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drained", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   test("resume after partial run yields identical final tables, no duplicates") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
@@ -131,27 +165,48 @@ class PipelineSpec extends SparkSpec {
   test("nodes join alias components by broadcast (hub-skew); no aliases, no join") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import scala.jdk.CollectionConverters._
     val pages = Corpus.pages(spark, 80, partitions = 4) // ~1/3 of interview docs carry the hub org
     val aliases = Seq(("Intel", "Intel Corporation"), ("Growth", "Business Growth")).toDF("alias", "canonical")
     // default session settings: Spark's own size rule picks the join;
     // the helper's collect descends into AQE's query stages
     object Aqe extends AdaptiveSparkPlanHelper
-    def executed(nodes: org.apache.spark.sql.DataFrame): SparkPlan = {
-      nodes.collect()
-      nodes.queryExecution.executedPlan
+    // the executed plan of each parquet write, by output path
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = qe.logical match {
+        case w: InsertIntoHadoopFsRelationCommand => writes.add(w.outputPath.toString -> qe.executedPlan)
+        case _ =>
+      }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    val plan = executed(Pipeline.run(spark, pages, "bc", "", aliases = Some(aliases)).nodes)
+    // the executed plan of a run's `nodes` append; query listeners hear of it after the run returns
+    def nodesAppend(runId: String, aliases: Option[org.apache.spark.sql.DataFrame]): SparkPlan = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-bc").toString
+      Pipeline.run(spark, pages, runId, dir, aliases = aliases)
+      eventually(timeout(Span(60, Seconds))) {
+        val plan = writes.asScala.collectFirst { case (path, p) if path.endsWith(s"$dir/nodes") => p }
+        assert(plan.isDefined, s"no nodes append seen for $runId")
+        plan.get
+      }
+    }
+    spark.listenerManager.register(listener)
+    val (plan, plain) = try (nodesAppend("bc", Some(aliases)), nodesAppend("bc2", None))
+      finally spark.listenerManager.unregister(listener)
     val joins = Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }
     assert(joins.size == 1, s"expected one broadcast join:\n$plan")
     assert(joins.head.buildSide == BuildRight, s"components must be the build side:\n$plan")
     assert(joins.head.right.output.map(_.name) == Seq("id", "component"), s"build side:\n$plan")
     assert(Aqe.collect(joins.head.left) { case e: ShuffleExchangeExec => e }.isEmpty,
       s"node rows must not shuffle:\n$plan")
-    val plain = executed(Pipeline.run(spark, pages, "bc2", "").nodes)
     assert(Aqe.collect(plain) { case j: BaseJoinExec => j }.isEmpty, s"no aliases, no join:\n$plain")
   }
 
@@ -193,14 +248,14 @@ class PipelineSpec extends SparkSpec {
       page("10_a_b", "a", "Host One: Intel Corporation is big.\nGuest Two: yes."),
       page("11_c_d", "b", "Host One: Intel ships chips.\nGuest Two: indeed.")).toDS()
     val aliases = Seq(("Intel", "Intel Corporation")).toDF("alias", "canonical")
-    val res = Pipeline.run(spark, pages, "arun", "", aliases = Some(aliases))
-    val intelIds = res.nodes
+    val nodes = runInto(pages, "arun", Some(aliases)).readCommitted(spark, "nodes")
+    val intelIds = nodes
       .where(org.apache.spark.sql.functions.lower($"content")
         .isin("intel", "intel corporation"))
       .select("canonical_id").distinct().collect()
     assert(intelIds.length == 1, s"expected one canonical id, got ${intelIds.mkString(",")}")
     // distinct surfaces keep distinct node ids but share the canonical id
-    val nodeIds = res.nodes
+    val nodeIds = nodes
       .where(org.apache.spark.sql.functions.lower($"content")
         .isin("intel", "intel corporation"))
       .select("node_id").distinct().count()
@@ -212,7 +267,7 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.functions.lower
     val pages = Corpus.pages(spark, 20, partitions = 2)
     def canonIds(aliases: Option[org.apache.spark.sql.DataFrame], runId: String): Set[(String, String)] =
-      Pipeline.run(spark, pages, runId, "", aliases = aliases).nodes
+      runInto(pages, runId, aliases).readCommitted(spark, "nodes")
         .select(lower($"content"), $"canonical_id").as[(String, String)].collect().toSet
     val own = canonIds(None, "noal")
     // no alias dictionary: one canonical id per key, never shared
@@ -228,12 +283,11 @@ class PipelineSpec extends SparkSpec {
     val kb = Seq(
       ("KB1", "Intel Corporation", Seq("Intel"), "chips manufacturing technology", 0.9))
       .toDF("entity_id", "canonical_name", "aliases", "profile", "prior")
-    val res = Pipeline.run(spark, Corpus.pages(spark, 100, partitions = 4), "lrun", "",
-      kb = Some(kb))
-    val m = res.metrics.collect()
+    val tio = runInto(Corpus.pages(spark, 100, partitions = 4), "lrun", kb = Some(kb))
+    val m = tio.readCommitted(spark, "metrics").collect()
     assert(m.nonEmpty && m.forall(_.getAs[Long]("duration_ms") >= 0))
     assert(m.map(_.getAs[Long]("triples_emitted")).sum > 0)
-    val lm = res.linkMetrics.get.collect()
+    val lm = tio.readCommitted(spark, "link_metrics").collect()
     val buckets = lm.map(_.getAs[String]("score_bucket")).toSet
     assert(buckets.contains("unlinked"))
     assert(buckets.exists(_ != "unlinked"), s"no linked mentions in $buckets") // hub 'Intel' links
@@ -242,8 +296,7 @@ class PipelineSpec extends SparkSpec {
 
   test("canonical ids merge same-content entities across documents") {
     import spark.implicits._
-    val result = Pipeline.run(spark, Corpus.pages(spark, 150, partitions = 4), "crun", "")
-    val nodes = result.nodes
+    val nodes = runInto(Corpus.pages(spark, 150, partitions = 4), "crun").readCommitted(spark, "nodes")
     // every (lower(content)) maps to exactly one canonical_id
     val bad = nodes.groupBy(org.apache.spark.sql.functions.lower($"content"))
       .agg(org.apache.spark.sql.functions.countDistinct($"canonical_id").as("k"))
@@ -257,7 +310,6 @@ class PipelineSpec extends SparkSpec {
 
   test("metrics: one row per non-empty partition, the per-partition sums, the same schema as before") {
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{count, lit, sum}
     import org.apache.spark.sql.types._
     // 6 pages over 8 slices: partitions 0 and 4 hold no page
@@ -265,26 +317,20 @@ class PipelineSpec extends SparkSpec {
       spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
     val counters = Seq("docs_processed", "nodes_emitted", "edges_emitted", "triples_emitted", "duration_ms")
     val schema = StructType(Seq(StructField("run_id", StringType), StructField("stage", StringType),
-      StructField("partition_id", IntegerType, nullable = false)) ++ counters.map(StructField(_, LongType)))
+      StructField("partition_id", IntegerType)) ++ counters.map(StructField(_, LongType)))
     // what the metrics rows were before: per-doc rows summed by a shuffle
     val old = Pipeline.docGraphsWithPartition(spark, pages)
       .map { case (o, pid, _) => (pid, o.graph.nodes.size.toLong, o.graph.edges.size.toLong) }
       .groupBy($"_1").agg(count(lit(1)), sum($"_2"), sum($"_3"), sum($"_3"))
       .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
     assert(old.map(_._1) == Seq(1, 2, 3, 5, 6, 7) && old.map(_._2).sum == 6L)
-    def sums(m: DataFrame): Seq[(Int, Long, Long, Long, Long)] =
-      m.select($"partition_id", $"docs_processed", $"nodes_emitted", $"edges_emitted", $"triples_emitted")
-        .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-metrics-schema").toString
-    val lazyMetrics = Pipeline.run(spark, pages, "m0", "").metrics
-    val written = Pipeline.run(spark, pages, "m1", dir).metrics
-    val readBack = spark.read.parquet(s"$dir/metrics")
-    for ((m, what) <- Seq(lazyMetrics -> "in memory", written -> "written", readBack -> "read back")) {
-      assert(sums(m) == old, what)
-      assert(m.where($"duration_ms" < 0 || $"run_id".isNull || $"stage" =!= "graph_build").isEmpty, what)
-    }
-    assert(lazyMetrics.schema == schema && written.schema == schema, lazyMetrics.schema.treeString)
-    assert(readBack.schema == StructType(schema.map(_.copy(nullable = true))), readBack.schema.treeString)
+    val readBack = runInto(pages, "m1").readCommitted(spark, "metrics")
+    val sums = readBack
+      .select($"partition_id", $"docs_processed", $"nodes_emitted", $"edges_emitted", $"triples_emitted")
+      .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
+    assert(sums == old)
+    assert(readBack.where($"duration_ms" < 0 || $"run_id".isNull || $"stage" =!= "graph_build").isEmpty)
+    assert(readBack.schema == schema, readBack.schema.treeString)
   }
 
   test("a resume with every page already done writes no file and commits nothing") {
@@ -299,8 +345,7 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, pages, "first", dir.toString, kb = Some(kb))
     val before = listing()
     assert(before.exists(_.startsWith("link_metrics/")) && before.contains("_commits/first"))
-    val res = Pipeline.run(spark, pages, "again", dir.toString, resume = true, kb = Some(kb))
-    assert(res.metrics.isEmpty)
+    Pipeline.run(spark, pages, "again", dir.toString, resume = true, kb = Some(kb))
     assert(listing() == before, "a run with nothing to do changed the warehouse")
   }
 
@@ -326,8 +371,8 @@ class PipelineSpec extends SparkSpec {
     for (k <- 1 to tables.size + 1) {
       val dir = s"$root/crash$k"
       val crashing = new CrashingTableIO(new graft.io.ParquetTableIO(dir), failAfter = k)
-      intercept[CrashingTableIO.Crash](Pipeline.runWith(Some(crashing), spark, pages, "crashed",
-        resume = true, aliases, kb, v1 = false, NoopEnricher))
+      intercept[CrashingTableIO.Crash](Pipeline.runWith(crashing, spark, pages, "crashed",
+        resume = true, aliases, kb, v1 = false))
       assert(crashing.appends == math.min(k, tables.size))
       Pipeline.run(spark, pages, "resumed", dir, resume = true, aliases = aliases, kb = kb)
       val got = committed(dir)
@@ -351,15 +396,13 @@ class PipelineSpec extends SparkSpec {
 
   test("link_metrics: the Column linker's histogram per partition, in the old schema, as written") {
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.types._
     // 6 pages over 8 slices: partitions 0 and 4 hold no page
     val pages = spark.createDataset(
       spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
     val kb = corpusKb()
-    val schema = StructType(Seq(StructField("partition_id", IntegerType, nullable = false),
-      StructField("score_bucket", StringType, nullable = false), StructField("n", LongType, nullable = false),
-      StructField("run_id", StringType, nullable = false)))
+    val schema = StructType(Seq(StructField("partition_id", IntegerType), StructField("score_bucket", StringType),
+      StructField("n", LongType), StructField("run_id", StringType)))
     // what link_metrics was before: the mentions linked by the Column-expression
     // linker, counted by a (partition, bucket) shuffle
     val mentions = Pipeline.docGraphsWithPartition(spark, pages).flatMap { case (o, pid, _) =>
@@ -370,31 +413,20 @@ class PipelineSpec extends SparkSpec {
       .as[(Int, String, Long)].collect().sorted.toSeq
     assert(want.map(_._1).distinct == Seq(1, 2, 3, 5, 6, 7), want)
     assert(want.exists(_._2 == "unlinked") && want.exists(_._2 != "unlinked"), want)
-    def counts(lm: DataFrame): Seq[(Int, String, Long)] =
-      lm.select($"partition_id", $"score_bucket", $"n").as[(Int, String, Long)].collect().sorted.toSeq
-    def all(lm: DataFrame): Seq[String] = lm.collect().map(_.toString).sorted.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft-link-metrics").toString
-    val inMemory = Pipeline.run(spark, pages, "lm0", "", kb = Some(kb)).linkMetrics.get
-    val written = Pipeline.run(spark, pages, "lm1", dir, kb = Some(kb)).linkMetrics.get
-    val readBack = spark.read.parquet(s"$dir/link_metrics")
-    for ((lm, what) <- Seq(inMemory -> "in memory", written -> "written", readBack -> "read back"))
-      assert(counts(lm) == want, what)
-    assert(inMemory.schema == schema && written.schema == schema, written.schema.treeString)
-    assert(readBack.schema == StructType(schema.map(_.copy(nullable = true))), readBack.schema.treeString)
-    // the frame RunResult hands back is the one that was written
-    assert(all(written) == all(readBack))
+    val readBack = runInto(pages, "lm1", kb = Some(kb)).readCommitted(spark, "link_metrics")
+    assert(readBack.select($"partition_id", $"score_bucket", $"n").as[(Int, String, Long)]
+      .collect().sorted.toSeq == want)
+    assert(readBack.schema == schema, readBack.schema.treeString)
   }
 
   test("a run without a kb writes no link_metrics") {
     val dir = java.nio.file.Files.createTempDirectory("graft-no-kb").toString
-    val res = Pipeline.run(spark, Corpus.pages(spark, 20, partitions = 2), "nokb", dir)
-    assert(res.linkMetrics.isEmpty)
+    Pipeline.run(spark, Corpus.pages(spark, 20, partitions = 2), "nokb", dir)
     assert(new java.io.File(s"$dir/lineage").exists() && !new java.io.File(s"$dir/link_metrics").exists())
   }
 
   test("a kg_build-shaped run takes at most 14 Spark jobs") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // a committed run over the first pages, then a resume over all of them
     // read from parquet, with an alias dictionary and a KB
     val dir = java.nio.file.Files.createTempDirectory("graft-job-count").toString
@@ -406,26 +438,16 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, spark.read.parquet(s"$dir/base").as[graft.model.Page], "base", s"$dir/wh",
       aliases = Some(aliases), kb = Some(kb))
     val all = spark.read.parquet(s"$dir/base", s"$dir/delta").as[graft.model.Page]
-    val sc = spark.sparkContext
-    val group = "kg-build-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = Option(j.properties).foreach { p =>
-        if (p.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-        if (p.getProperty("graft.test.drained") != null) drained.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "one kg_build-shaped Pipeline.run")
-      try Pipeline.run(spark, all, "counted", s"$dir/wh", resume = true, aliases = Some(aliases), kb = Some(kb))
-      finally sc.clearJobGroup()
-      // listener events arrive in order: once this job's start is seen, so was every run job's
-      sc.setLocalProperty("graft.test.drained", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drained", null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get >= 1 && jobs.get <= 14, s"${jobs.get} Spark jobs")
+    val jobs = jobsOf(Pipeline.run(spark, all, "counted", s"$dir/wh", resume = true,
+      aliases = Some(aliases), kb = Some(kb)))
+    assert(jobs >= 1 && jobs <= 14, s"$jobs Spark jobs")
+  }
+
+  test("an empty outDir is refused before any Spark job, not run with nothing written") {
+    val pages = Corpus.pages(spark, 20, partitions = 2)
+    var refused: Option[IllegalArgumentException] = None
+    val jobs = jobsOf { refused = Some(intercept[IllegalArgumentException](Pipeline.run(spark, pages, "empty", ""))) }
+    assert(refused.exists(_.getMessage.contains("outDir")), refused)
+    assert(jobs == 0, s"$jobs Spark jobs before the refusal")
   }
 }
