@@ -6,7 +6,6 @@ import graft.io.{ParquetTableIO, TableIO}
 import graft.link.EntityLink
 import graft.model._
 import graft.needs.Needs
-import graft.text.PyText
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -291,11 +290,4 @@ object Pipeline {
       index.foreach(_.destroy())
     }
   }
-
-  /** Persisted-id helpers (F8 — graph_extraction_agent.py:510-531). */
-  def persistedNodeId(customerId: String, nodeType: String, content: String): String =
-    "node_" + PyText.sha256Hex(s"$customerId:$nodeType:$content").substring(0, 16)
-
-  def persistedEdgeId(customerId: String, srcId: String, dstId: String, edgeType: String): String =
-    "edge_" + PyText.sha256Hex(s"$customerId:$srcId:$dstId:$edgeType").substring(0, 16)
 }

@@ -148,18 +148,3 @@ final case class EdgeRow(
     evidence: Seq[String],
     reasoning: String,
     source_file: String)
-
-/** Node/edge type whitelists (graph_extraction_agent.py:329-338). */
-object Types {
-  val nodeTypes: Set[String] = Set(
-    "person", "organization", "concept", "skill", "need",
-    "behavioral_pattern", "personality_trait", "financial_instrument",
-    "business_concept", "topic")
-  val edgeTypes: Set[String] = Set(
-    "demonstrates", "relates_to", "influences", "requires", "enables",
-    "part_of", "similar_to", "works_with", "specializes_in", "interviews",
-    "discusses", "affiliated_with", "uses")
-  /** Coercion defaults (graph_extraction_agent.py:414-418, 471-475). */
-  def coerceNodeType(t: String): String = { val l = t.toLowerCase; if (nodeTypes(l)) l else "concept" }
-  def coerceEdgeType(t: String): String = { val l = t.toLowerCase; if (edgeTypes(l)) l else "relates_to" }
-}

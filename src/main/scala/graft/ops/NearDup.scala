@@ -512,48 +512,19 @@ object NearDup {
       droppedBuckets = lshOverflowBuckets(bands, maxBucket))
   }
 
-  /** 64-bit SimHash over whitespace tokens: per bit, majority vote of token
-    * hashes (FNV-1a 64, deterministic across JVMs/engines). Plain Scala —
-    * used via typed map/mapPartitions; engine-side only (no SQL oracle).
-    */
-  def simhash64(text: String): Long = {
-    val votes = new Array[Int](64)
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      while (i < n && graft.text.PyText.isPySpace(text.charAt(i))) i += 1
-      var h = 0xcbf29ce484222325L // FNV offset basis
-      var any = false
-      while (i < n && !graft.text.PyText.isPySpace(text.charAt(i))) {
-        h = (h ^ (text.charAt(i) & 0xffL)) * 0x100000001b3L
-        any = true
-        i += 1
-      }
-      if (any) {
-        var b = 0
-        while (b < 64) { if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1; b += 1 }
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
-  /** Portable 64-bit SimHash: per-token md5, top 64 bits, majority vote per
-    * bit — bit b of the result is set iff votes(b) > 0, so the value is
-    * reconstructable bit-for-bit by any engine with md5 (the DuckDB oracle
-    * recomputes it in SQL). `simhash64` (FNV basis) stays as the
-    * allocation-free scale variant — same algorithm, cheaper hash.
-    */
   /** Java-regex `\s` (the historical tokenizer was split("\\s+")): exactly
     * space, tab, LF, vertical tab, FF, CR — NOT the Python/Unicode space
-    * set `isPySpace` uses, so the two simhash variants keep their distinct
-    * (and oracle-replayed) tokenizations.
+    * set `isPySpace` uses: the oracle SQL replays split("\\s+"), so
+    * `simhashMd5Long` must split where it does.
     */
   @inline private def isRegexSpace(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
+  /** Portable 64-bit SimHash: per-token md5, top 64 bits, majority vote per
+    * bit — bit b of the result is set iff votes(b) > 0, so the value is
+    * reconstructable bit-for-bit by any engine with md5 (the DuckDB oracle
+    * recomputes it in SQL).
+    */
   def simhashMd5Long(text: String): Long = {
     val votes = new Array[Int](64)
     if (text != null) {

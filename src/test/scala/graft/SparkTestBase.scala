@@ -16,12 +16,6 @@ object SparkTestBase {
     .getOrCreate()
 }
 
-/** Tag for wall-clock-heavy integration tests (real-time leases, sleeps).
-  * Runs by default; exclude with `testOnly * -- -l graft.SlowTest` when
-  * iterating.
-  */
-object SlowTest extends org.scalatest.Tag("graft.SlowTest")
-
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkTestBase.spark

@@ -296,15 +296,6 @@ class OpsSpec extends SparkSpec {
       f"${NearDup.simhashMd5Long("alpha beta")}%016x")
   }
 
-  test("simhash: identical texts equal, near texts close, distant texts far") {
-    val a = NearDup.simhash64("the quick brown fox jumps over the lazy dog")
-    val b = NearDup.simhash64("the quick brown fox jumps over the lazy cat")
-    val c = NearDup.simhash64("completely unrelated content about spark engines")
-    assert(a == NearDup.simhash64("the quick brown fox jumps over the lazy dog"))
-    def ham(x: Long, y: Long) = java.lang.Long.bitCount(x ^ y)
-    assert(ham(a, b) < ham(a, c))
-  }
-
   test("brute-force cosine top-k: self excluded, ranks deterministic") {
     import spark.implicits._
     val emb = Seq(
