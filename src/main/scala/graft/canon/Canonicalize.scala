@@ -1,7 +1,8 @@
 package graft.canon
 
 import graft.exec.Snapshots
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -38,6 +39,11 @@ import scala.jdk.CollectionConverters._
   * the UTF-8 bytes (`UTF8String.binaryCompare`), the order `least`/`min`
   * use — not `String.compareTo`'s UTF-16 order, which sorts supplementary
   * characters (surrogate pairs) below U+E000..U+FFFF.
+  *
+  * An alias dictionary that fits the driver is labelled by the same
+  * union-find into a [[Canonicalize.KeyIndex]] (sorted ids plus labels),
+  * which `Pipeline.run` broadcasts and looks node keys up in: the alias
+  * graph is the small side, so nothing is joined or partitioned.
   *
   * Skew handling in the star loop (SURVEY §4.1): the per-node neighborhood
   * minimum is a hash aggregate with map-side partial min (reducer input
@@ -125,17 +131,50 @@ object Canonicalize {
     StructField("component", StringType, nullable = true)))
 
   /** Union-find over the collected snapshot rows, returned as a local
-    * DataFrame with `LabelSchema`; frees the snapshot. Ids are numbered
-    * in Spark's string order and a union links the larger root under the
-    * smaller, so every root is its component's minimum.
+    * DataFrame with `LabelSchema`; frees the snapshot.
     */
   private[canon] def driverComponents(spark: SparkSession, snap: DataFrame, snapIds: Set[Int],
                                       rows: Array[Row]): DataFrame = {
-    val ids = rows.flatMap(r => Array(r.getString(0), r.getString(1))).distinct
-      .map(s => (UTF8String.fromString(s), s))
-      .sortWith((x, y) => x._1.binaryCompare(y._1) < 0)
-      .map(_._2)
-    val index = ids.iterator.zipWithIndex.toMap
+    val ix = unionFind(rows.map(r => (r.getString(0), r.getString(1))))
+    val out = spark.createDataFrame(
+      ix.ids.indices.map(i => Row(ix.ids(i).toString, ix.ids(ix.labels(i)).toString)).asJava, LabelSchema)
+    Snapshots.free(spark, snapIds)
+    out
+  }
+
+  /** Spark's string order (`least`/`min`): binary comparison of the UTF-8 bytes. */
+  private val BinaryOrder: java.util.Comparator[UTF8String] = (a, b) => a.binaryCompare(b)
+
+  /** The position of `key` in `ids`, sorted in Spark's string order (a
+    * negative number when absent).
+    */
+  private def position(ids: Array[UTF8String], key: UTF8String): Int =
+    java.util.Arrays.binarySearch(ids, key, BinaryOrder)
+
+  /** The components of a small graph as two dense arrays: `ids`, its
+    * vertices sorted in Spark's string order, and `labels(i)`, the position
+    * in `ids` of vertex i's component minimum. A key is found by binary
+    * search — no hash map, no boxed ids.
+    */
+  final class KeyIndex private[canon] (private[canon] val ids: Array[UTF8String],
+                                       private[canon] val labels: Array[Int]) extends Serializable {
+    /** `key`'s component minimum; null for a NULL key or one outside every component. */
+    def canonicalKey(key: String): String =
+      if (key == null) null
+      else {
+        val i = position(ids, UTF8String.fromString(key))
+        if (i < 0) null else ids(labels(i)).toString
+      }
+  }
+
+  /** Components of the undirected graph `edges` by a path-compressed
+    * union-find on the driver. Ids are numbered in Spark's string order and a
+    * union links the larger root under the smaller, so every root is its
+    * component's minimum.
+    */
+  private def unionFind(edges: Array[(String, String)]): KeyIndex = {
+    val ids = edges.flatMap(e => Array(e._1, e._2)).distinct.map(UTF8String.fromString)
+    java.util.Arrays.sort(ids, BinaryOrder)
     val parent = Array.tabulate(ids.length)(identity)
     def find(i: Int): Int = {
       var r = i
@@ -144,14 +183,13 @@ object Canonicalize {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    for (r <- rows) {
-      val (a, b) = (find(index(r.getString(0))), find(index(r.getString(1))))
-      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    for ((a, b) <- edges) {
+      val ra = find(position(ids, UTF8String.fromString(a)))
+      val rb = find(position(ids, UTF8String.fromString(b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    val out = spark.createDataFrame(
-      ids.indices.map(i => Row(ids(i), ids(find(i)))).asJava, LabelSchema)
-    Snapshots.free(spark, snapIds)
-    out
+    ids.indices.foreach(find) // every vertex now points straight at its root
+    new KeyIndex(ids, parent)
   }
 
   /** The large-star / small-star loop from the oriented snapshot; frees
@@ -229,6 +267,38 @@ object Canonicalize {
     labels(cur)
   }
 
+  /** The alias dictionary as equivalence-graph edges: lower-cased
+    * (alias, canonical) pairs.
+    */
+  private def aliasEdges(aliases: DataFrame): DataFrame =
+    aliases.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst"))
+
+  /** The alias graph's [[KeyIndex]] when it fits the driver: one bounded
+    * collect of its edges, self-loops and NULL endpoints dropped (a local
+    * dictionary folds into a local relation, so this runs no Spark job).
+    * None past `DriverMaxEdges` edges, where `withCanonicalKey` joins the
+    * components instead.
+    */
+  def keyIndex(aliases: DataFrame): Option[KeyIndex] = {
+    val edges = aliasEdges(aliases).where(col("src") =!= col("dst")).limit(DriverMaxEdges + 1).collect()
+    Option.when(edges.length <= DriverMaxEdges)(unionFind(edges.map(r => (r.getString(0), r.getString(1)))))
+  }
+
+  /** `withCanonicalKey`'s `canonical_key` for a lower-cased string column
+    * `key`, by a lookup in the broadcast alias index instead of a join: the
+    * component minimum, else `key` itself (NULL stays NULL).
+    */
+  def canonicalKey(index: Broadcast[KeyIndex], key: Column): Column = {
+    val lookup = udf((k: String) => index.value.canonicalKey(k))
+    coalesce(lookup(key), key)
+  }
+
+  /** The persisted id of a canonical key: "canon_" and the first 16 hex
+    * digits of its SHA-256 (graph_extraction_agent.py:510-519 pattern).
+    */
+  def canonicalId(canonicalKey: Column): Column =
+    concat(lit("canon_"), substring(sha2(canonicalKey, 256), 1, 16))
+
   /** Append `canonical_key` to a frame with a `key` column: same-content
     * merge (exact, the reference's md5(lower(content)) identity) extended
     * with an alias dictionary (alias → canonical). The edges of the
@@ -239,15 +309,16 @@ object Canonicalize {
     * Spark picks the join from the components' size: a small alias graph's
     * components are a local relation of known size and broadcast, a larger
     * one's are joined as AQE measures them (skew-join splitting covers hub
-    * keys on `df`'s side).
+    * keys on `df`'s side). `Pipeline.run` takes this join only for a
+    * dictionary past the driver bound; below it, `canonicalKey` looks the
+    * same labels up in a broadcast `keyIndex`.
     *
     * @param df      any DataFrame with a lower-cased string column `key`
     * @param aliases DataFrame (alias, canonical) — may be empty
     * @return `df`'s columns, in order, plus `canonical_key`
     */
   def withCanonicalKey(spark: SparkSession, df: DataFrame, aliases: DataFrame): DataFrame = {
-    val comps = connectedComponents(spark,
-      aliases.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst")))
+    val comps = connectedComponents(spark, aliasEdges(aliases))
     df.join(comps, df("key") === comps("id"), "left")
       .select(df.columns.toSeq.map(df(_)) :+ coalesce(comps("component"), df("key")).as("canonical_key"): _*)
   }

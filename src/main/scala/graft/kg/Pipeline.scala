@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -22,10 +23,11 @@ import scala.jdk.CollectionConverters._
   * map — zero shuffles until canonicalization/write, mirroring the
   * reference's embarrassingly-parallel per-document Lambda model)
   * → explode nodes/edges → cross-document canonicalization (connected
-  * components over the alias graph: a driver-side union-find for small
-  * alias graphs, iterative star rounds past a size bound — see
-  * [[graft.canon.Canonicalize]]) → nodes/edges/triples tables +
-  * per-partition lineage/metrics.
+  * components over the alias graph: a driver-side union-find labels an
+  * alias dictionary that fits the driver into a sorted key index, broadcast
+  * and looked up in the node explode; iterative star rounds and a join past
+  * that bound — see [[graft.canon.Canonicalize]]) → nodes/edges/triples
+  * tables + per-partition lineage/metrics.
   *
   * `run`'s only product is its warehouse: it appends every table through
   * [[graft.io.TableIO]] and commits the run, and callers read the committed
@@ -39,13 +41,16 @@ import scala.jdk.CollectionConverters._
   * the broadcast [[graft.link.EntityLink.KbIndex]] and counts the
   * partition's link-score histogram, so `link_metrics` is collected with
   * `metrics` and costs one small write and no shuffle. The lineage table is
-  * read once, for both the runId guard and the resume done-set.
+  * read once, for both the runId guard and the resume done-set. The five or
+  * six appends run at once, each on its own thread; the commit follows once
+  * all of them succeeded, so readers never see their order.
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization touches only the alias graph — orders of
-  * magnitude smaller than the corpus — and the nodes join its components;
-  * writes are partitioned by customer-id bucket so downstream per-customer
-  * queries prune.
+  * magnitude smaller than the corpus — and the nodes look their canonical
+  * keys up in its broadcast index (a dictionary past the driver bound joins
+  * its components instead); the nodes table is partitioned by node_type,
+  * so per-type reads prune.
   */
 object Pipeline {
 
@@ -128,30 +133,34 @@ object Pipeline {
   /** What one partition's task folds from its docs: its metric row and,
     * with a knowledge base, the link-score histogram of its mentions.
     */
-  private final case class PartitionFold(metric: PartitionMetric, buckets: Map[String, Long])
+  private[kg] final case class PartitionFold(metric: PartitionMetric, buckets: Map[String, Long])
 
   /** One fold per non-empty partition, summed inside its task: every doc of
     * a partition carries the same id, so no row has to move. Each mention is
-    * linked where it was made, by `EntityLink`'s per-mention scorer.
+    * linked where it was made, by `EntityLink`'s per-mention scorer. The
+    * docs' build nanos are summed and converted to `duration_ms` once, so
+    * sub-millisecond docs still count.
     */
-  private def partitionFold(runId: String, index: Option[Broadcast[EntityLink.KbIndex]])
-                           (it: Iterator[(DocOut, Int, Long)]): Iterator[PartitionFold] =
+  private[kg] def partitionFold(runId: String, index: Option[Broadcast[EntityLink.KbIndex]])
+                               (it: Iterator[(DocOut, Int, Long)]): Iterator[PartitionFold] =
     if (!it.hasNext) Iterator.empty
     else {
       val ix = index.map(_.value)
       val buckets = mutable.HashMap.empty[String, Long]
+      var nanos = 0L
       val metric = it.foldLeft(PartitionMetric(runId, "graph_build", 0, 0L, 0L, 0L, 0L, 0L)) {
-        case (m, (o, pid, nanos)) =>
+        case (m, (o, pid, docNanos)) =>
           ix.foreach(x => o.mentions.foreach { mr =>
             val b = EntityLink.scoreBucket(x.best(mr.surface, mr.context, 0.0).map(_.linkScore))
             buckets(b) = buckets.getOrElse(b, 0L) + 1L
           })
+          nanos += docNanos
           val edges = o.graph.edges.size.toLong
           m.copy(partition_id = pid, docs_processed = m.docs_processed + 1,
             nodes_emitted = m.nodes_emitted + o.graph.nodes.size, edges_emitted = m.edges_emitted + edges,
-            triples_emitted = m.triples_emitted + edges, duration_ms = m.duration_ms + nanos / 1000000L)
+            triples_emitted = m.triples_emitted + edges)
       }
-      Iterator.single(PartitionFold(metric, buckets.toMap))
+      Iterator.single(PartitionFold(metric.copy(duration_ms = nanos / 1000000L), buckets.toMap))
     }
 
   /** The `metrics` table schema: counters nullable, as in the metrics files
@@ -168,6 +177,33 @@ object Pipeline {
     StructField("score_bucket", StringType, nullable = false),
     StructField("n", LongType, nullable = false),
     StructField("run_id", StringType, nullable = false)))
+
+  /** Runs `tasks` at once, one thread each of a pool made for this call, and
+    * returns once every task has finished and every thread of the pool has
+    * ended. The first failure, in `tasks` order, is rethrown with the later
+    * ones suppressed. The calling thread creates the pool's threads as it
+    * submits the tasks, so they inherit its Spark local properties (job
+    * group, and a stream micro-batch's own when called inside `foreachBatch`).
+    */
+  private def allAtOnce(tasks: Seq[() => Unit]): Unit = {
+    val threads = new ConcurrentLinkedQueue[Thread]
+    val pool = Executors.newFixedThreadPool(tasks.size, { (r: Runnable) =>
+      val t = new Thread(r, "kg-append")
+      t.setDaemon(true)
+      threads.add(t)
+      t
+    })
+    try {
+      val futures = tasks.map(t => pool.submit(new Callable[Unit] { def call(): Unit = t() }))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first => failures.tail.foreach(first.addSuppressed); throw first }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
+    }
+  }
 
   /** Full run into the warehouse at `outDir` (required): writes every table
     * (parquet, partitioned) and commits the run, so its output is read with
@@ -220,9 +256,15 @@ object Pipeline {
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
     val temporalIndex = if (v1) java.time.Instant.now().toString else ""
+    // alias canonicalization: a dictionary that fits the driver becomes a key
+    // index (Right) that the node explode looks keys up in, broadcast; a
+    // larger one (Left) joins its components. Collected before any broadcast
+    // exists, so a failing collect leaves none behind.
+    val aliasIndex = aliases.map(al => Canonicalize.keyIndex(al).toRight(al))
     // optional entity linking: the kb collected once into an alias index and
     // broadcast to the per-partition fold
     val index = kb.map(EntityLink.broadcastIndex)
+    val canonIndex = aliasIndex.map(_.map(spark.sparkContext.broadcast(_)))
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
@@ -252,13 +294,13 @@ object Pipeline {
 
       // ---- canonicalization (J10): merge same-key entities across documents;
       // alias dictionary optional. Canonical id = persisted sha256 id of the
-      // canonical key (graph_extraction_agent.py:510-519 pattern); without
-      // aliases every key is its own canonical key and nothing is joined.
+      // canonical key; without aliases every key is its own canonical key.
       val keyed = nodeRows.withColumn("key", lower($"content"))
-      val canonNodes = (aliases match {
-        case Some(al) => Canonicalize.withCanonicalKey(spark, keyed, al)
+      val canonNodes = (canonIndex match {
+        case Some(Right(ix)) => keyed.withColumn("canonical_key", Canonicalize.canonicalKey(ix, $"key"))
+        case Some(Left(al)) => Canonicalize.withCanonicalKey(spark, keyed, al)
         case None => keyed.withColumn("canonical_key", $"key")
-      }).withColumn("canonical_id", concat(lit("canon_"), substring(sha2($"canonical_key", 256), 1, 16)))
+      }).withColumn("canonical_id", Canonicalize.canonicalId($"canonical_key"))
         .drop("key", "canonical_key")
 
       val lineage = outs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
@@ -274,20 +316,23 @@ object Pipeline {
       }.asJava, LinkMetricsSchema))
 
       // all writes go through the TableIO seam (Iceberg-ready, SURVEY §7.0);
-      // the terminal commit marker makes the whole run visible atomically.
-      // A run with nothing to do writes no file and commits no marker.
+      // the terminal commit marker makes the whole run visible atomically, so
+      // the appends run at once and readers cannot see their order. A run
+      // with nothing to do writes no file and commits no marker.
       if (folds.nonEmpty) {
-        tio.append(canonNodes, "nodes", Seq("node_type"))
-        tio.append(edgeRows, "edges")
-        tio.append(tripleRows, "triples")
-        tio.append(metrics.coalesce(1), "metrics") // small local frames: one file each
-        tio.append(lineage, "lineage")
-        linkMetrics.foreach(lm => tio.append(lm.coalesce(1), "link_metrics"))
+        allAtOnce(Seq[() => Unit](
+          () => tio.append(canonNodes, "nodes", Seq("node_type")),
+          () => tio.append(edgeRows, "edges"),
+          () => tio.append(tripleRows, "triples"),
+          () => tio.append(metrics.coalesce(1), "metrics"), // small local frames: one file each
+          () => tio.append(lineage, "lineage")) ++
+          linkMetrics.map(lm => () => tio.append(lm.coalesce(1), "link_metrics")))
         tio.commit(runId)
       }
     } finally {
       outs.unpersist()
       index.foreach(_.destroy())
+      canonIndex.foreach(_.foreach(_.destroy()))
     }
   }
 }

@@ -193,4 +193,46 @@ class CanonicalizeSpec extends SparkSpec {
     assert(once("intel") == once("intel corp") && once("intel") == once("intel corporation"))
     assert(once("unrelated co") == "unrelated co")
   }
+
+  test("the broadcast key index gives withCanonicalKey's canonical ids") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lower
+    val (fw, emoji, repl) = ("\uFF21", "\uD83D\uDE00", "\uFFFD") // see the binary-order test above
+    val chain = (0 until 1000).map(i => (f"Hop$i%04d", f"hop${i + 1}%04d"))
+    val hub = (1 to 200).map(i => (f"spoke$i%03d", "HUB"))
+    val aliases = (chain ++ hub ++ Seq(
+      (null, "hub"), ("hub", null), (null, null), // NULL endpoints: no edge
+      ("Self", "self"), ("hub", "HUB"),           // self-loops once lower-cased
+      ("", "blank"),                              // the empty key joins a component
+      ("İstanbul", "istanbul"), ("STRASSE", "straße"), ("ΟΔΟΣ", "οδός"), ("Σ", "σ"),
+      (fw, emoji), (repl, emoji))).toDF("alias", "canonical")
+    // node contents: every alias-graph key in some case, keys outside it, NULL
+    // and empty contents, and the hub key in a third of the rows
+    val contents: Seq[String] = chain.map(_._1) ++ chain.map(_._2.toUpperCase) ++ hub.map(_._1) ++
+      Seq.fill(700)("Hub") ++ Seq(null, null, "", "", "Self", "blank", "İstanbul", "ISTANBUL", "straße",
+        "Strasse", "ΟΔΟΣ", "οδος", "Σ", fw, emoji, repl, "outside", "Outside Co")
+    val keyed = contents.toDF("content").repartition(3).withColumn("key", lower($"content"))
+    def ids(withKey: org.apache.spark.sql.DataFrame): Seq[(Option[String], Option[String])] =
+      withKey.select($"content", Canonicalize.canonicalId($"canonical_key")).as[(Option[String], Option[String])]
+        .collect().toSeq.sortBy(_.toString)
+    val joined = ids(Canonicalize.withCanonicalKey(spark, keyed, aliases))
+    val index = spark.sparkContext.broadcast(Canonicalize.keyIndex(aliases).get)
+    val looked = try ids(keyed.withColumn("canonical_key", Canonicalize.canonicalKey(index, $"key")))
+      finally index.destroy()
+    assert(looked == joined)
+    // the cases above did reach the index
+    val byContent = looked.toMap
+    assert(byContent(Some("Hop0500")) == byContent(Some("HOP1000")), "chain not merged")
+    assert(byContent(Some("spoke007")) == byContent(Some("Hub")), "hub not merged")
+    assert(byContent(Some(emoji)) == byContent(Some(repl)) && byContent(Some(fw)) == byContent(Some(emoji)))
+    assert(looked.count(_._1.isEmpty) == 2 && looked.filter(_._1.isEmpty).forall(_._2.isEmpty))
+    assert(byContent(Some("outside")) != byContent(Some("Outside Co")))
+  }
+
+  test("the key index holds at most the driver bound of alias edges") {
+    import spark.implicits._
+    def pairs(n: Long) = spark.range(n).select(concat(lit("a"), $"id").as("alias"), concat(lit("b"), $"id").as("canonical"))
+    assert(Canonicalize.keyIndex(pairs(100000)).exists(_.canonicalKey("b99999") == "a99999"))
+    assert(Canonicalize.keyIndex(pairs(100001)).isEmpty)
+  }
 }

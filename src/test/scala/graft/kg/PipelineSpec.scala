@@ -17,20 +17,42 @@ object CountingEnricher extends Enricher {
       graft.model.Entity("enriched topic", "concept", 0.5, "llm", "file_analysis", "", "topic", primary = false, 0.8))
 }
 
-/** A TableIO that fails right after its `failAfter`-th append returns, or at
-  * commit, before the marker is written, when the run appends fewer tables.
+/** A TableIO whose appends to the tables in `failOn` fail right after they
+  * return, or, with `failOn` empty, whose commit fails before the marker is
+  * written. The failing appends fail together: each waits until all of them
+  * have written, so a run that does not append them at once fails with an
+  * IllegalStateException instead. Counts what the run did, thread-safely.
   */
-final class CrashingTableIO(inner: graft.io.TableIO, failAfter: Int) extends graft.io.TableIO {
-  var appends = 0
+final class CrashingTableIO(inner: graft.io.TableIO, failOn: Set[String]) extends graft.io.TableIO {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+  /** Appends that have returned or thrown. */
+  val appends = new AtomicInteger
+  val inFlight = new AtomicInteger
+  val commitReached = new AtomicBoolean
+  private val failing = new CountDownLatch(failOn.size)
   override def append(df: org.apache.spark.sql.DataFrame, table: String, partitionBy: Seq[String]): Unit = {
-    inner.append(df, table, partitionBy)
-    appends += 1
-    if (appends == failAfter) throw new CrashingTableIO.Crash(s"crashed after append $appends ($table)")
+    inFlight.incrementAndGet()
+    try {
+      inner.append(df, table, partitionBy)
+      if (failOn(table)) {
+        failing.countDown()
+        if (!failing.await(60, TimeUnit.SECONDS))
+          throw new IllegalStateException(s"append of $table failed alone: the appends of $failOn ran one after another")
+        throw new CrashingTableIO.Crash(s"crashed after append of $table")
+      }
+    } finally {
+      appends.incrementAndGet()
+      inFlight.decrementAndGet()
+    }
   }
   override def read(spark: org.apache.spark.sql.SparkSession, table: String): org.apache.spark.sql.DataFrame =
     inner.read(spark, table)
   override def exists(table: String): Boolean = inner.exists(table)
-  override def commit(runId: String): Unit = throw new CrashingTableIO.Crash(s"crashed before commit of $runId")
+  override def commit(runId: String): Unit = {
+    commitReached.set(true)
+    throw new CrashingTableIO.Crash(s"crashed before commit of $runId")
+  }
   override def committedRuns(): Set[String] = inner.committedRuns()
 }
 
@@ -52,28 +74,44 @@ class PipelineSpec extends SparkSpec {
     new graft.io.ParquetTableIO(dir)
   }
 
-  /** The Spark jobs that `body` starts, counted by a listener on its job group. */
+  /** The Spark jobs that `body` starts, counted by a listener on its job
+    * group. Every job started between two marker jobs around `body` must
+    * carry the group, so jobs that `body` runs on other threads count too.
+    */
   private def jobsOf(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = "graft-test-counted"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ungrouped = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var started = false
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = Option(j.properties).foreach { p =>
-        if (p.getProperty("spark.jobGroup.id") == group) jobs.incrementAndGet()
-        if (p.getProperty("graft.test.drained") != null) drained.countDown()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties).getOrElse(new java.util.Properties)
+        Option(p.getProperty("graft.test.marker")) match {
+          case Some("start") => started = true
+          case Some(_) => drained.countDown()
+          case None if p.getProperty("spark.jobGroup.id") == group => jobs.incrementAndGet()
+          case None => if (started) ungrouped.incrementAndGet()
+        }
       }
+    }
+    // listener events arrive in order: the start marker's comes after every
+    // earlier job's, and once the end marker's is seen, so was every counted job's
+    def marker(name: String): Unit = {
+      sc.setLocalProperty("graft.test.marker", name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
     }
     sc.addSparkListener(listener)
     try {
+      marker("start")
       sc.setJobGroup(group, "counted")
       try body finally sc.clearJobGroup()
-      // listener events arrive in order: once this job's start is seen, so was every counted job's
-      sc.setLocalProperty("graft.test.drained", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drained", null)
+      marker("end")
       assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally sc.removeSparkListener(listener)
+    assert(ungrouped.get == 0, s"${ungrouped.get} jobs without the caller's job group")
     jobs.get
   }
 
@@ -162,21 +200,20 @@ class PipelineSpec extends SparkSpec {
       n.content == "Enriched Topic" && n.confidence == 0.9)))
   }
 
-  test("nodes join alias components by broadcast (hub-skew); no aliases, no join") {
+  test("nodes take alias canonical keys with no join or exchange") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.util.QueryExecutionListener
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.{Seconds, Span}
     import scala.jdk.CollectionConverters._
     val pages = Corpus.pages(spark, 80, partitions = 4) // ~1/3 of interview docs carry the hub org
     val aliases = Seq(("Intel", "Intel Corporation"), ("Growth", "Business Growth")).toDF("alias", "canonical")
-    // default session settings: Spark's own size rule picks the join;
     // the helper's collect descends into AQE's query stages
     object Aqe extends AdaptiveSparkPlanHelper
     // the executed plan of each parquet write, by output path
@@ -201,13 +238,13 @@ class PipelineSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     val (plan, plain) = try (nodesAppend("bc", Some(aliases)), nodesAppend("bc2", None))
       finally spark.listenerManager.unregister(listener)
-    val joins = Aqe.collect(plan) { case j: BroadcastHashJoinExec => j }
-    assert(joins.size == 1, s"expected one broadcast join:\n$plan")
-    assert(joins.head.buildSide == BuildRight, s"components must be the build side:\n$plan")
-    assert(joins.head.right.output.map(_.name) == Seq("id", "component"), s"build side:\n$plan")
-    assert(Aqe.collect(joins.head.left) { case e: ShuffleExchangeExec => e }.isEmpty,
-      s"node rows must not shuffle:\n$plan")
-    assert(Aqe.collect(plain) { case j: BaseJoinExec => j }.isEmpty, s"no aliases, no join:\n$plain")
+    // a small alias dictionary is a broadcast index the node rows look keys up in
+    assert(Aqe.collect(plan) { case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p }.nonEmpty,
+      s"no key lookup:\n$plan")
+    for ((name, p) <- Seq("aliases" -> plan, "no aliases" -> plain)) {
+      assert(Aqe.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"$name: a join in the nodes append:\n$p")
+      assert(Aqe.collect(p) { case e: Exchange => e }.isEmpty, s"$name: an exchange in the nodes append:\n$p")
+    }
   }
 
   test("10 runs with an alias dictionary leave the persisted RDD set flat") {
@@ -333,6 +370,12 @@ class PipelineSpec extends SparkSpec {
     assert(readBack.schema == schema, readBack.schema.treeString)
   }
 
+  test("duration_ms sums a partition's build nanos before it truncates them") {
+    val doc = Pipeline.DocOut(graft.model.DocGraph("u", "c", "", Nil, Nil), Nil)
+    val folds = Pipeline.partitionFold("r", None)(Iterator.fill(3)((doc, 2, 600000L))).toSeq
+    assert(folds.map(f => (f.metric.partition_id, f.metric.docs_processed, f.metric.duration_ms)) == Seq((2, 3L, 1L)))
+  }
+
   test("a resume with every page already done writes no file and commits nothing") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
@@ -352,6 +395,7 @@ class PipelineSpec extends SparkSpec {
   test("a crash after any append or before the commit resumes exactly-once") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Files.createTempDirectory("graft-crash-points").toString
     val pages = Corpus.pages(spark, 30, partitions = 2)
     val aliases = Some(Seq(("Intel", "Intel Corporation")).toDF("alias", "canonical"))
@@ -367,16 +411,25 @@ class PipelineSpec extends SparkSpec {
     assert(tables.forall(want(_).nonEmpty))
     val sc = spark.sparkContext
     val cached = sc.getPersistentRDDs.keySet.toSet
-    // k = 1..6: after the k-th append; k = 7: inside commit, before the marker
-    for (k <- 1 to tables.size + 1) {
+    // each append failing alone, two failing at once, then the commit failing
+    // after every append succeeded
+    val crashPoints = tables.map(Set(_)) :+ Set("nodes", "lineage") :+ Set.empty[String]
+    for ((failOn, k) <- crashPoints.zipWithIndex) {
       val dir = s"$root/crash$k"
-      val crashing = new CrashingTableIO(new graft.io.ParquetTableIO(dir), failAfter = k)
-      intercept[CrashingTableIO.Crash](Pipeline.runWith(crashing, spark, pages, "crashed",
+      val crashing = new CrashingTableIO(new graft.io.ParquetTableIO(dir), failOn)
+      val crash = intercept[CrashingTableIO.Crash](Pipeline.runWith(crashing, spark, pages, "crashed",
         resume = true, aliases, kb, v1 = false))
-      assert(crashing.appends == math.min(k, tables.size))
+      // every append has finished, none is left running, and the commit runs only after all succeeded
+      assert(crashing.appends.get == tables.size && crashing.inFlight.get == 0, s"crash point $failOn")
+      assert(crashing.commitReached.get == failOn.isEmpty, s"crash point $failOn")
+      assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName == "kg-append"),
+        s"crash point $failOn: an append thread outlived the run")
+      // the first failure in append order, the others suppressed
+      tables.find(failOn).foreach(first => assert(crash.getMessage.endsWith(s"append of $first"), crash))
+      assert(crash.getSuppressed.length == math.max(failOn.size - 1, 0), crash.getSuppressed.toSeq)
       Pipeline.run(spark, pages, "resumed", dir, resume = true, aliases = aliases, kb = kb)
       val got = committed(dir)
-      for (t <- tables) assert(got(t) == want(t), s"crash point $k: committed $t differs from a clean run")
+      for (t <- tables) assert(got(t) == want(t), s"crash point $failOn: committed $t differs from a clean run")
     }
     assert(sc.getPersistentRDDs.keySet.toSet == cached, "a crashed run left its object cache persisted")
   }
@@ -425,7 +478,7 @@ class PipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/lineage").exists() && !new java.io.File(s"$dir/link_metrics").exists())
   }
 
-  test("a kg_build-shaped run takes at most 14 Spark jobs") {
+  test("a kg_build-shaped run takes at most 10 Spark jobs") {
     import spark.implicits._
     // a committed run over the first pages, then a resume over all of them
     // read from parquet, with an alias dictionary and a KB
@@ -440,7 +493,7 @@ class PipelineSpec extends SparkSpec {
     val all = spark.read.parquet(s"$dir/base", s"$dir/delta").as[graft.model.Page]
     val jobs = jobsOf(Pipeline.run(spark, all, "counted", s"$dir/wh", resume = true,
       aliases = Some(aliases), kb = Some(kb)))
-    assert(jobs >= 1 && jobs <= 14, s"$jobs Spark jobs")
+    assert(jobs >= 1 && jobs <= 10, s"$jobs Spark jobs")
   }
 
   test("an empty outDir is refused before any Spark job, not run with nothing written") {
