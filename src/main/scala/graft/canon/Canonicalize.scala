@@ -14,36 +14,39 @@ import scala.jdk.CollectionConverters._
   * identity, enhanced_hypergraph_builder_agent_v2.py:1300-1303 /
   * graph_extraction_agent.py:510-519).
   *
-  * Two regimes, chosen by the measured size of the oriented, distinct edge
-  * set (one bounded collect of its snapshot, "To Partition, or Not to
-  * Partition", SIGMOD'21):
+  * An alias dictionary is canonicalized on the driver: its lower-cased
+  * (alias, canonical) pairs are collected once and labelled by a
+  * path-compressed union-find into a [[Canonicalize.KeyIndex]] (sorted ids
+  * plus labels), which `Pipeline.run` broadcasts and looks node keys up in.
+  * The alias graph is the small side, so it is neither joined nor
+  * partitioned ("To Partition, or Not to Partition", SIGMOD'21); like the
+  * knowledge base that entity linking indexes, it must fit the driver.
   *
-  *  - at most `DriverMaxEdges` edges: a path-compressed union-find on the
-  *    driver. An alias graph of a few hundred edges would otherwise pay
-  *    Spark's fixed per-job and per-stage cost for every star round (29 jobs
-  *    for 130 alias edges) while doing almost no work.
+  * `connectedComponents` serves edge sets that come from the corpus as a
+  * distributed frame (q28, q62's near-dup clusters). Two regimes, chosen by
+  * the measured size of the oriented, distinct edge set (one bounded collect
+  * of its snapshot):
+  *
+  *  - at most `DriverMaxEdges` edges: the same union-find on the driver. A
+  *    graph of a few hundred edges would otherwise pay Spark's fixed per-job
+  *    and per-stage cost for every star round while doing almost no work.
   *  - more edges: alternating large-star / small-star rounds (Kiveris et
   *    al., "Connected Components in MapReduce and Beyond") as a driver loop
   *    of plain DataFrame join+groupBy/min steps with `localCheckpoint()` per
   *    round to truncate lineage. Converges in O(log n) rounds regardless of
   *    graph DIAMETER — the hash-min label propagation it replaced needed
-  *    O(diameter) rounds, so a 1000-hop alias chain (entity A aka B aka C …)
-  *    blew past any reasonable maxIter and silently returned unconverged
-  *    labels; star contraction handles chains and hubs alike. No GraphX:
-  *    plain Catalyst plans keep AQE (incl. skew-join splitting) in charge of
-  *    the physical layout, which matters because hub entities ("Intel" in a
-  *    third of pages) make the edge list heavily skewed.
+  *    O(diameter) rounds, so a 1000-hop chain blew past any reasonable
+  *    maxIter and silently returned unconverged labels; star contraction
+  *    handles chains and hubs alike. No GraphX: plain Catalyst plans keep
+  *    AQE (incl. skew-join splitting) in charge of the physical layout,
+  *    which matters because hub entities ("Intel" in a third of pages) make
+  *    the edge list heavily skewed.
   *
   * Both regimes return the same rows under the same schema. The component
   * label is the minimum id in Spark's string order — binary comparison of
   * the UTF-8 bytes (`UTF8String.binaryCompare`), the order `least`/`min`
   * use — not `String.compareTo`'s UTF-16 order, which sorts supplementary
   * characters (surrogate pairs) below U+E000..U+FFFF.
-  *
-  * An alias dictionary that fits the driver is labelled by the same
-  * union-find into a [[Canonicalize.KeyIndex]] (sorted ids plus labels),
-  * which `Pipeline.run` broadcasts and looks node keys up in: the alias
-  * graph is the small side, so nothing is joined or partitioned.
   *
   * Skew handling in the star loop (SURVEY §4.1): the per-node neighborhood
   * minimum is a hash aggregate with map-side partial min (reducer input
@@ -58,14 +61,15 @@ object Canonicalize {
     */
   private val MaxIter = 50
 
-  /** Largest edge set labelled on the driver: a driver-memory cap, not a
-    * speed crossover. On a 4-core host (local[4], 4 shuffle partitions) the
-    * union-find beat the star loop at every measured size, 50k to 1M
-    * distinct edges: 14-23x on single paths, 3-8x on hub-heavy graphs. What
-    * grows with the bound is the collected rows' share of the driver heap,
-    * 16 MB at 100k edges of 10-character ids (164 MB at 1M). A larger edge
-    * set stays distributed and runs the star loop, after a bounded collect
-    * that took 0.06-0.44 s there.
+  /** Largest edge set `connectedComponents` labels on the driver (alias
+    * dictionaries are not bounded by it: `keyIndex` always labels them
+    * there). A driver-memory cap, not a speed crossover. On a 4-core host
+    * (local[4], 4 shuffle partitions) the union-find beat the star loop at
+    * every measured size, 50k to 1M distinct edges: 14-23x on single paths,
+    * 3-8x on hub-heavy graphs. What grows with the bound is the collected
+    * rows' share of the driver heap, 16 MB at 100k edges of 10-character
+    * ids (164 MB at 1M). A larger edge set stays distributed and runs the
+    * star loop, after a bounded collect that took 0.06-0.44 s there.
     */
   private val DriverMaxEdges = 100000
 
@@ -151,10 +155,10 @@ object Canonicalize {
   private def position(ids: Array[UTF8String], key: UTF8String): Int =
     java.util.Arrays.binarySearch(ids, key, BinaryOrder)
 
-  /** The components of a small graph as two dense arrays: `ids`, its
-    * vertices sorted in Spark's string order, and `labels(i)`, the position
-    * in `ids` of vertex i's component minimum. A key is found by binary
-    * search — no hash map, no boxed ids.
+  /** A graph's components, labelled on the driver, as two dense arrays:
+    * `ids`, its vertices sorted in Spark's string order, and `labels(i)`, the
+    * position in `ids` of vertex i's component minimum. A key is found by
+    * binary search — no hash map, no boxed ids.
     */
   final class KeyIndex private[canon] (private[canon] val ids: Array[UTF8String],
                                        private[canon] val labels: Array[Int]) extends Serializable {
@@ -267,26 +271,21 @@ object Canonicalize {
     labels(cur)
   }
 
-  /** The alias dictionary as equivalence-graph edges: lower-cased
-    * (alias, canonical) pairs.
+  /** The alias graph's [[KeyIndex]]: one collect of the lower-cased
+    * (alias, canonical) pairs, self-loops and NULL endpoints dropped (a local
+    * dictionary folds into a local relation, so this runs no Spark job),
+    * labelled by the union-find. An empty or all-self-loop dictionary gives
+    * an empty index.
     */
-  private def aliasEdges(aliases: DataFrame): DataFrame =
-    aliases.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst"))
-
-  /** The alias graph's [[KeyIndex]] when it fits the driver: one bounded
-    * collect of its edges, self-loops and NULL endpoints dropped (a local
-    * dictionary folds into a local relation, so this runs no Spark job).
-    * None past `DriverMaxEdges` edges, where `withCanonicalKey` joins the
-    * components instead.
-    */
-  def keyIndex(aliases: DataFrame): Option[KeyIndex] = {
-    val edges = aliasEdges(aliases).where(col("src") =!= col("dst")).limit(DriverMaxEdges + 1).collect()
-    Option.when(edges.length <= DriverMaxEdges)(unionFind(edges.map(r => (r.getString(0), r.getString(1)))))
+  def keyIndex(aliases: DataFrame): KeyIndex = {
+    val edges = aliases.select(lower(col("alias")).as("src"), lower(col("canonical")).as("dst"))
+      .where(col("src") =!= col("dst")).collect()
+    unionFind(edges.map(r => (r.getString(0), r.getString(1))))
   }
 
-  /** `withCanonicalKey`'s `canonical_key` for a lower-cased string column
-    * `key`, by a lookup in the broadcast alias index instead of a join: the
-    * component minimum, else `key` itself (NULL stays NULL).
+  /** The canonical key of a lower-cased string column `key`, looked up in
+    * the broadcast alias index: the component minimum, else `key` itself
+    * (NULL stays NULL).
     */
   def canonicalKey(index: Broadcast[KeyIndex], key: Column): Column = {
     val lookup = udf((k: String) => index.value.canonicalKey(k))
@@ -299,33 +298,17 @@ object Canonicalize {
   def canonicalId(canonicalKey: Column): Column =
     concat(lit("canon_"), substring(sha2(canonicalKey, 256), 1, 16))
 
-  /** Append `canonical_key` to a frame with a `key` column: same-content
-    * merge (exact, the reference's md5(lower(content)) identity) extended
-    * with an alias dictionary (alias → canonical). The edges of the
-    * equivalence graph are the lower-cased (alias, canonical) pairs, so
-    * only the alias graph is canonicalized; `df` joins its components once
-    * (left, on `key`) and a key outside every component keeps itself, as
-    * does every key under an empty or all-self-loop dictionary.
-    * Spark picks the join from the components' size: a small alias graph's
-    * components are a local relation of known size and broadcast, a larger
-    * one's are joined as AQE measures them (skew-join splitting covers hub
-    * keys on `df`'s side). `Pipeline.run` takes this join only for a
-    * dictionary past the driver bound; below it, `canonicalKey` looks the
-    * same labels up in a broadcast `keyIndex`.
-    *
-    * @param df      any DataFrame with a lower-cased string column `key`
-    * @param aliases DataFrame (alias, canonical) — may be empty
-    * @return `df`'s columns, in order, plus `canonical_key`
-    */
-  def withCanonicalKey(spark: SparkSession, df: DataFrame, aliases: DataFrame): DataFrame = {
-    val comps = connectedComponents(spark, aliasEdges(aliases))
-    df.join(comps, df("key") === comps("id"), "left")
-      .select(df.columns.toSeq.map(df(_)) :+ coalesce(comps("component"), df("key")).as("canonical_key"): _*)
-  }
-
   /** (key, canonical_key) for the distinct lower-cased keys of `nodeKeys`
-    * (column `key`); see `withCanonicalKey`.
+    * (column `key`), through a broadcast `keyIndex(aliases)`: same-content
+    * merge (exact, the reference's md5(lower(content)) identity) extended
+    * with the alias dictionary (alias → canonical). A key outside every
+    * component keeps itself, as does every key under an empty or
+    * all-self-loop dictionary. The broadcast lives as long as the returned
+    * frame's lineage, so it is left to the ContextCleaner.
     */
-  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame =
-    withCanonicalKey(spark, nodeKeys.select(lower(col("key")).as("key")).distinct(), aliases)
+  def canonicalKeys(spark: SparkSession, nodeKeys: DataFrame, aliases: DataFrame): DataFrame = {
+    val index = spark.sparkContext.broadcast(keyIndex(aliases))
+    nodeKeys.select(lower(col("key")).as("key")).distinct()
+      .select(col("key"), canonicalKey(index, col("key")).as("canonical_key"))
+  }
 }

@@ -23,10 +23,9 @@ import scala.jdk.CollectionConverters._
   * map — zero shuffles until canonicalization/write, mirroring the
   * reference's embarrassingly-parallel per-document Lambda model)
   * → explode nodes/edges → cross-document canonicalization (connected
-  * components over the alias graph: a driver-side union-find labels an
-  * alias dictionary that fits the driver into a sorted key index, broadcast
-  * and looked up in the node explode; iterative star rounds and a join past
-  * that bound — see [[graft.canon.Canonicalize]]) → nodes/edges/triples
+  * components over the alias graph: a driver-side union-find labels the
+  * alias dictionary into a sorted key index, broadcast and looked up in the
+  * node explode — see [[graft.canon.Canonicalize]]) → nodes/edges/triples
   * tables + per-partition lineage/metrics.
   *
   * `run`'s only product is its warehouse: it appends every table through
@@ -47,10 +46,10 @@ import scala.jdk.CollectionConverters._
   *
   * At 100 TB: the narrow stage scales linearly with input splits (no data
   * exchanged); canonicalization touches only the alias graph — orders of
-  * magnitude smaller than the corpus — and the nodes look their canonical
-  * keys up in its broadcast index (a dictionary past the driver bound joins
-  * its components instead); the nodes table is partitioned by node_type,
-  * so per-type reads prune.
+  * magnitude smaller than the corpus, and held on the driver as the
+  * knowledge base is — and the nodes look their canonical keys up in its
+  * broadcast index, with no join or exchange; the nodes table is
+  * partitioned by node_type, so per-type reads prune.
   */
 object Pipeline {
 
@@ -256,15 +255,14 @@ object Pipeline {
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
     val temporalIndex = if (v1) java.time.Instant.now().toString else ""
-    // alias canonicalization: a dictionary that fits the driver becomes a key
-    // index (Right) that the node explode looks keys up in, broadcast; a
-    // larger one (Left) joins its components. Collected before any broadcast
-    // exists, so a failing collect leaves none behind.
-    val aliasIndex = aliases.map(al => Canonicalize.keyIndex(al).toRight(al))
+    // alias canonicalization: the dictionary becomes a key index that the
+    // node explode looks keys up in, broadcast. Collected before any
+    // broadcast exists, so a failing collect leaves none behind.
+    val aliasIndex = aliases.map(Canonicalize.keyIndex)
     // optional entity linking: the kb collected once into an alias index and
     // broadcast to the per-partition fold
     val index = kb.map(EntityLink.broadcastIndex)
-    val canonIndex = aliasIndex.map(_.map(spark.sparkContext.broadcast(_)))
+    val canonIndex = aliasIndex.map(spark.sparkContext.broadcast(_))
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
@@ -296,11 +294,9 @@ object Pipeline {
       // alias dictionary optional. Canonical id = persisted sha256 id of the
       // canonical key; without aliases every key is its own canonical key.
       val keyed = nodeRows.withColumn("key", lower($"content"))
-      val canonNodes = (canonIndex match {
-        case Some(Right(ix)) => keyed.withColumn("canonical_key", Canonicalize.canonicalKey(ix, $"key"))
-        case Some(Left(al)) => Canonicalize.withCanonicalKey(spark, keyed, al)
-        case None => keyed.withColumn("canonical_key", $"key")
-      }).withColumn("canonical_id", Canonicalize.canonicalId($"canonical_key"))
+      val canonNodes = keyed
+        .withColumn("canonical_key", canonIndex.fold(col("key"))(Canonicalize.canonicalKey(_, col("key"))))
+        .withColumn("canonical_id", Canonicalize.canonicalId($"canonical_key"))
         .drop("key", "canonical_key")
 
       val lineage = outs.map { case (o, pid, _) => LineageRow(runId, pid, o.graph.url, "done") }.toDF()
@@ -332,7 +328,7 @@ object Pipeline {
     } finally {
       outs.unpersist()
       index.foreach(_.destroy())
-      canonIndex.foreach(_.foreach(_.destroy()))
+      canonIndex.foreach(_.destroy())
     }
   }
 }

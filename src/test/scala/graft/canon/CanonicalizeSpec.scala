@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Connected-components canonicalization (J10): both regimes — the driver
-  * union-find and the star loop — against a brute-force union-find oracle,
-  * hub-skew shapes, Spark's string order, and idempotence (north rule).
+  * union-find and the star loop — and the alias dictionary's broadcast key
+  * index against a brute-force union-find oracle, hub-skew shapes, Spark's
+  * string order, and idempotence (north rule).
   */
 class CanonicalizeSpec extends SparkSpec {
 
@@ -194,9 +195,9 @@ class CanonicalizeSpec extends SparkSpec {
     assert(once("unrelated co") == "unrelated co")
   }
 
-  test("the broadcast key index gives withCanonicalKey's canonical ids") {
+  test("the broadcast key index gives the star loop's canonical ids") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lower
+    import org.apache.spark.sql.functions.{coalesce, lower}
     val (fw, emoji, repl) = ("\uFF21", "\uD83D\uDE00", "\uFFFD") // see the binary-order test above
     val chain = (0 until 1000).map(i => (f"Hop$i%04d", f"hop${i + 1}%04d"))
     val hub = (1 to 200).map(i => (f"spoke$i%03d", "HUB"))
@@ -212,11 +213,15 @@ class CanonicalizeSpec extends SparkSpec {
       Seq.fill(700)("Hub") ++ Seq(null, null, "", "", "Self", "blank", "İstanbul", "ISTANBUL", "straße",
         "Strasse", "ΟΔΟΣ", "οδος", "Σ", fw, emoji, repl, "outside", "Outside Co")
     val keyed = contents.toDF("content").repartition(3).withColumn("key", lower($"content"))
-    def ids(withKey: org.apache.spark.sql.DataFrame): Seq[(Option[String], Option[String])] =
+    def ids(withKey: DataFrame): Seq[(Option[String], Option[String])] =
       withKey.select($"content", Canonicalize.canonicalId($"canonical_key")).as[(Option[String], Option[String])]
         .collect().toSeq.sortBy(_.toString)
-    val joined = ids(Canonicalize.withCanonicalKey(spark, keyed, aliases))
-    val index = spark.sparkContext.broadcast(Canonicalize.keyIndex(aliases).get)
+    // the reference: the star loop's components over the lower-cased pairs,
+    // left-joined on the key; a key outside every component keeps itself
+    val comps = runStar(aliases.select(lower($"alias").as("src"), lower($"canonical").as("dst")))
+    val joined = ids(keyed.join(comps, keyed("key") === comps("id"), "left")
+      .select(keyed("content"), coalesce(comps("component"), keyed("key")).as("canonical_key")))
+    val index = spark.sparkContext.broadcast(Canonicalize.keyIndex(aliases))
     val looked = try ids(keyed.withColumn("canonical_key", Canonicalize.canonicalKey(index, $"key")))
       finally index.destroy()
     assert(looked == joined)
@@ -229,10 +234,82 @@ class CanonicalizeSpec extends SparkSpec {
     assert(byContent(Some("outside")) != byContent(Some("Outside Co")))
   }
 
-  test("the key index holds at most the driver bound of alias edges") {
+  test("the key index labels 100 001 edges as the oracle does") {
     import spark.implicits._
-    def pairs(n: Long) = spark.range(n).select(concat(lit("a"), $"id").as("alias"), concat(lit("b"), $"id").as("canonical"))
-    assert(Canonicalize.keyIndex(pairs(100000)).exists(_.canonicalKey("b99999") == "a99999"))
-    assert(Canonicalize.keyIndex(pairs(100001)).isEmpty)
+    // 100 001 edges: one past the bound connectedComponents still labels on
+    // the driver; the alias dictionary has no bound
+    val n = 100001L
+    val pairs = spark.range(n).select(concat(lit("a"), $"id").as("alias"), concat(lit("B"), $"id").as("canonical"))
+    val chain = spark.range(n).select(concat(lit("c"), $"id").as("alias"), concat(lit("C"), $"id" + 1).as("canonical"))
+    for ((name, aliases) <- Seq("pairs" -> pairs, "chain" -> chain)) {
+      val edges = aliases.as[(String, String)].collect().toSeq.map { case (a, c) => (a.toLowerCase, c.toLowerCase) }
+      assert(edges.size == n)
+      val want = unionFind(edges)
+      val ix = Canonicalize.keyIndex(aliases)
+      val wrong = want.filter { case (k, c) => ix.canonicalKey(k) != c }
+      assert(wrong.isEmpty, s"$name: ${wrong.size} keys mislabelled, e.g. ${wrong.take(3)}")
+    }
+  }
+
+  test("KeyIndex.canonicalKey equals the union-find oracle on generated dictionaries (ScalaCheck)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lower
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    // words with case mappings (dotted capital I, sharp s, final sigma), keys
+    // outside the BMP (U+1F600 and U+10400, which lower-cases to U+10428) and
+    // the binary-order pair of the test above; case variants make pairs that
+    // are self-loops once lower-cased
+    val specials = Seq("İ", "i̇", "ß", "SS", "ss", "Σ", "σ", "ς", "\uFF21", "\uD83D\uDE00", "\uD801\uDC00",
+      "\uD801\uDC28", "\uFFFD", "")
+    val word: Gen[String] = Gen.frequency(8 -> Gen.choose(0, 30).map(i => s"w$i"), 3 -> Gen.oneOf(specials))
+      .flatMap(w => Gen.oneOf(w, w.toUpperCase(java.util.Locale.ROOT), w.capitalize))
+    val endpoint: Gen[String] = Gen.frequency(12 -> word, 1 -> Gen.const(null))
+    val selfLoop: Gen[(String, String)] = word.map(w => (w.toUpperCase(java.util.Locale.ROOT), w))
+    val chain: Gen[Seq[(String, String)]] = Gen.choose(1000, 1200).map(n =>
+      (0 until n).map(i => (s"Link$i", s"link${i + 1}")) :+ ("link0" -> "w0"))
+    val dictionary: Gen[Seq[(String, String)]] = Gen.frequency(
+      1 -> Gen.const(Seq.empty),
+      1 -> Gen.zip(endpoint, endpoint).map(Seq(_)),
+      8 -> (for {
+        random <- Gen.listOf(Gen.frequency(6 -> Gen.zip(endpoint, endpoint), 1 -> selfLoop))
+        repeats <- Gen.choose(0, 5)
+        hub <- Gen.oneOf(None, Some("Hub"), Some("\uD83D\uDE00"))
+        long <- Gen.frequency(3 -> Gen.const(Seq.empty), 1 -> chain)
+        seed <- Gen.long
+      } yield {
+        val base = random ++ random.take(repeats) ++ long
+        // spokes make the hub key at least 30% of the rows
+        val spokes = hub.toSeq.flatMap(h => (0 to base.size / 2).map(i => (s"spoke$i", h)))
+        new scala.util.Random(seed).shuffle(base ++ spokes)
+      }))
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val prop = Prop.forAllNoShrink(dictionary) { rows =>
+      val aliases = rows.toDF("alias", "canonical")
+      val ix = Canonicalize.keyIndex(aliases)
+      // the pairs lower-cased as Spark does (a local frame: no Spark job)
+      val lowered = aliases.select(lower($"alias"), lower($"canonical")).as[(String, String)].collect().toSeq
+      val edges = lowered.filter { case (a, c) => a != null && c != null }
+      val want = unionFind(edges)
+      Seq("empty" -> rows.isEmpty, "one row" -> (rows.size == 1),
+        "repeated edge" -> (edges.distinct.size < edges.size),
+        "NULL endpoint" -> (edges.size < rows.size),
+        "self-loop once lower-cased" -> rows.zip(lowered).exists { case ((a, c), (la, lc)) =>
+          a != null && a != c && la == lc },
+        "hub in 30% of rows" -> rows.groupBy(_._2).exists(_._2.size * 10 >= rows.size * 3 && rows.size > 10),
+        "1000-hop chain" -> rows.exists(_._1 == "Link999"),
+        "supplementary character" -> edges.exists(e => (e._1 + e._2).exists(Character.isSurrogate)))
+        .foreach { case (k, hit) => if (hit) seen(k) += 1 }
+      val keys = (lowered.flatMap(e => Seq(e._1, e._2)) ++ Seq("outside", null)).distinct
+      val wrong = keys.filter(k => Option(ix.canonicalKey(k)).getOrElse(k) != want.getOrElse(k, k))
+      Prop(wrong.isEmpty && ix.canonicalKey(null) == null) :| s"mislabelled ${wrong.take(3)} in $rows"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(200)
+      .withInitialSeed(Seed(20261020L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+    assert(res.succeeded >= 200)
+    for (k <- Seq("empty", "one row", "repeated edge", "NULL endpoint", "self-loop once lower-cased",
+      "hub in 30% of rows", "1000-hop chain", "supplementary character"))
+      assert(seen(k) > 0, s"no generated dictionary had a $k: $seen")
   }
 }

@@ -203,6 +203,7 @@ class PipelineSpec extends SparkSpec {
   test("nodes take alias canonical keys with no join or exchange") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.functions.{concat, lit}
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -235,13 +236,19 @@ class PipelineSpec extends SparkSpec {
         plan.get
       }
     }
+    // more alias edges than connectedComponents labels on the driver
+    val large = spark.range(100001)
+      .select(concat(lit("alias "), $"id").as("alias"), concat(lit("canonical "), $"id").as("canonical"))
+      .union(aliases)
     spark.listenerManager.register(listener)
-    val (plan, plain) = try (nodesAppend("bc", Some(aliases)), nodesAppend("bc2", None))
+    val (plan, plain, largePlan) =
+      try (nodesAppend("bc", Some(aliases)), nodesAppend("bc2", None), nodesAppend("bc3", Some(large)))
       finally spark.listenerManager.unregister(listener)
-    // a small alias dictionary is a broadcast index the node rows look keys up in
-    assert(Aqe.collect(plan) { case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p }.nonEmpty,
-      s"no key lookup:\n$plan")
-    for ((name, p) <- Seq("aliases" -> plan, "no aliases" -> plain)) {
+    // every alias dictionary is a broadcast index the node rows look keys up in
+    for ((name, p) <- Seq("aliases" -> plan, "100 001 aliases" -> largePlan))
+      assert(Aqe.collect(p) { case n if n.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => n }.nonEmpty,
+        s"$name: no key lookup:\n$p")
+    for ((name, p) <- Seq("aliases" -> plan, "no aliases" -> plain, "100 001 aliases" -> largePlan)) {
       assert(Aqe.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"$name: a join in the nodes append:\n$p")
       assert(Aqe.collect(p) { case e: Exchange => e }.isEmpty, s"$name: an exchange in the nodes append:\n$p")
     }
