@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table I/O seam (SURVEY §7.0): the engine targets Iceberg-style
   * catalog-managed tables, but no Iceberg runtime jar exists in this
@@ -13,7 +14,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 trait TableIO {
   def append(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Unit
-  def read(spark: SparkSession, table: String): DataFrame
+  /** Reads a table with `schema`, or, without one, with the schema its
+    * files hold between them.
+    */
+  def read(spark: SparkSession, table: String, schema: Option[StructType] = None): DataFrame
   def exists(table: String): Boolean
 
   /** Atomic run-commit protocol (resume safety): every pipeline row carries
@@ -45,15 +49,17 @@ final class ParquetTableIO(warehouse: String) extends TableIO {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path(table))
   }
 
-  // mergeSchema: table schemas have grown across versions (round 4 added
-  // temporal_index/temporal_category to nodes/edges), and resume=true into a
-  // directory written by an older binary leaves mixed-schema files — plain
-  // parquet reads sample ONE footer, so the new columns could silently
-  // vanish (or appear) depending on which file wins. Merging footers pins
-  // the union schema; older files surface the new columns as null. At
-  // catalog scale Iceberg's own schema evolution replaces this option.
-  override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path(table))
+  // without a schema, mergeSchema: table schemas have grown across versions
+  // (round 4 added temporal_index/temporal_category to nodes/edges), and
+  // resume=true into a directory written by an older binary leaves
+  // mixed-schema files — plain parquet reads sample ONE footer, so the new
+  // columns could silently vanish (or appear) depending on which file wins.
+  // Merging footers pins the union schema; older files surface the new
+  // columns as null. It costs a job over every footer, which a caller that
+  // knows the table's schema skips. At catalog scale Iceberg's own schema
+  // evolution replaces this option.
+  override def read(spark: SparkSession, table: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema(_)).parquet(path(table))
 
   override def exists(table: String): Boolean =
     new java.io.File(path(table)).exists()

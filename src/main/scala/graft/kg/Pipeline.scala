@@ -8,7 +8,10 @@ import graft.model._
 import graft.needs.Needs
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -18,34 +21,40 @@ import scala.jdk.CollectionConverters._
 
 /** End-to-end KG-construction pipeline (SURVEY §3.1 Spark equivalent).
   *
-  * pages → [extract → analyze → needs → graph-build]  (ONE fused narrow
+  * pages → one exchange: the pages left after the resume anti-join, hashed
+  * by url into n partitions (n = max(default parallelism, input
+  * partitions)) → [extract → analyze → needs → graph-build]  (ONE fused
   * stage: per-document transforms are pure functions inside a single typed
-  * map — zero shuffles until canonicalization/write, mirroring the
-  * reference's embarrassingly-parallel per-document Lambda model)
-  * → explode nodes/edges → cross-document canonicalization (connected
-  * components over the alias graph: a driver-side union-find labels the
-  * alias dictionary into a sorted key index, broadcast and looked up in the
-  * node explode — see [[graft.canon.Canonicalize]]) → nodes/edges/triples
-  * tables + per-partition lineage/metrics.
+  * map, mirroring the reference's embarrassingly-parallel per-document
+  * Lambda model) → explode nodes/edges → cross-document canonicalization
+  * (connected components over the alias graph: a driver-side union-find
+  * labels the alias dictionary into a sorted key index, broadcast and
+  * looked up in the node explode — see [[graft.canon.Canonicalize]]) →
+  * nodes/edges/triples tables + per-partition lineage/metrics.
   *
   * `run`'s only product is its warehouse: it appends every table through
   * [[graft.io.TableIO]] and commits the run, and callers read the committed
-  * tables back with `readCommitted`. It holds the per-doc outputs as
-  * deserialized objects (an RDD persisted for the run's duration, not a
-  * columnar Dataset cache), so each table written from them decodes nothing
-  * it does not read. The `metrics` rows are summed per partition inside the
-  * task that produced them — no shuffle — and collected before any append:
-  * a run with no doc to process writes nothing and commits nothing. With a
-  * knowledge base, the same per-partition fold links each mention against
-  * the broadcast [[graft.link.EntityLink.KbIndex]] and counts the
+  * tables back with `readCommitted`. The exchange sizes the per-doc fold by
+  * documents, not by how the reader packed the input files, and makes a
+  * doc's partition id — in `lineage` and `metrics` — a function of its url
+  * and n. It holds the per-doc outputs as deserialized objects (an RDD
+  * persisted for the run's duration, not a columnar Dataset cache), so each
+  * table written from them decodes nothing it does not read. The `metrics` rows are summed per partition inside the
+  * task that produced them — no further shuffle — and collected before any
+  * append: a run with no doc to process writes nothing and commits nothing.
+  * With a knowledge base, the same per-partition fold links each mention
+  * against the broadcast [[graft.link.EntityLink.KbIndex]] and counts the
   * partition's link-score histogram, so `link_metrics` is collected with
   * `metrics` and costs one small write and no shuffle. The lineage table is
-  * read once, for both the runId guard and the resume done-set. The five or
-  * six appends run at once, each on its own thread; the commit follows once
-  * all of them succeeded, so readers never see their order.
+  * read once, with its known schema, for both the runId guard and the
+  * resume done-set. The five or six appends run at once, each on its own
+  * thread and each with as many tasks as its rows need (one, below Spark's
+  * advisory partition size); the commit follows once all of them
+  * succeeded, so readers never see their order.
   *
-  * At 100 TB: the narrow stage scales linearly with input splits (no data
-  * exchanged); canonicalization touches only the alias graph — orders of
+  * At 100 TB: the per-doc stage scales with its n partitions, n at least
+  * the input's splits, after one exchange of the page bytes;
+  * canonicalization touches only the alias graph — orders of
   * magnitude smaller than the corpus, and held on the driver as the
   * knowledge base is — and the nodes look their canonical keys up in its
   * broadcast index, with no join or exchange; the nodes table is
@@ -103,10 +112,12 @@ object Pipeline {
     (doc, g)
   }
 
-  /** Same, plus partition id and per-doc build nanos so lineage and metrics
-    * (incl. durations, north rule) derive without a second input pass.
-    * The enricher's open()/close() bracket each partition (warm-container
-    * analog: one model/client init per task, not per document).
+  /** The per-doc outputs with each doc's partition id in `pages` and its
+    * build nanos. The id is the input partition's, not the one `run`
+    * records: `run` hashes its pages by url before this body, so its lineage
+    * and metrics carry the id of that partition. The enricher's
+    * open()/close() bracket each partition (warm-container analog: one
+    * model/client init per task, not per document).
     */
   def docGraphsWithPartition(spark: SparkSession, pages: Dataset[Page],
                              v1: Boolean = false,
@@ -115,7 +126,9 @@ object Pipeline {
     pages.mapPartitions(docOuts(v1, enricher, ""))
   }
 
-  /** The per-partition body of `docGraphsWithPartition`, also run by `run`. */
+  /** The per-partition body of `docGraphsWithPartition`, also run by `run`
+    * over its url-hashed partitions.
+    */
   private def docOuts(v1: Boolean, enricher: Enricher,
                       temporalIndex: String): Iterator[Page] => Iterator[(DocOut, Int, Long)] = { it =>
     val tc = org.apache.spark.TaskContext.get()
@@ -219,6 +232,18 @@ object Pipeline {
     runWith(new ParquetTableIO(outDir), spark, pages, runId, resume, aliases, kb, v1)
   }
 
+  /** The `lineage` table schema, unchanged since the table was first written. */
+  private val LineageSchema: StructType = Encoders.product[LineageRow].schema
+
+  /** The partitions `pages` is read in, found without a Spark job: reading
+    * them from a plan with an exchange would run its stages, so such a plan
+    * counts none.
+    */
+  private def inputPartitions(pages: Dataset[Page]): Int = pages.queryExecution.executedPlan match {
+    case p if p.exists { case _: AdaptiveSparkPlanExec | _: Exchange => true; case _ => false } => 0
+    case p => p.execute().getNumPartitions
+  }
+
   /** `run` over any table store. */
   private[kg] def runWith(tio: TableIO, spark: SparkSession, pages: Dataset[Page],
                           runId: String, resume: Boolean, aliases: Option[DataFrame],
@@ -232,8 +257,9 @@ object Pipeline {
     // the id, so reuse is always a caller bug; fail fast with the reason.
     require(!tio.committedRuns().contains(runId),
       s"runId '$runId' is already committed — use a fresh runId per attempt (resume=true dedups)")
-    // the lineage table, read once for the guard and the done-set
-    val lineageNow = Option.when(tio.exists("lineage"))(tio.read(spark, "lineage"))
+    // the lineage table, read once for the guard and the done-set, with its
+    // one schema: no footer-merge job
+    val lineageNow = Option.when(tio.exists("lineage"))(tio.read(spark, "lineage", Some(LineageSchema)))
     lineageNow.foreach { lin =>
       if (!lin.where($"run_id" === runId).isEmpty)
         throw new IllegalStateException(
@@ -251,6 +277,14 @@ object Pipeline {
       case _ => pages
     }
 
+    // the pages to process, hashed by url into n partitions: at least one per
+    // core and no fewer than the input had, so the fold's tasks follow
+    // documents, not how the reader packed the files, and a doc's partition
+    // is a function of its url and n. A count that AQE does not coalesce:
+    // the fold's cost is CPU per document, not bytes. `.rdd` runs the
+    // exchange's map stage, before any broadcast below exists.
+    val n = math.max(spark.sparkContext.defaultParallelism, inputPartitions(pages))
+    val byUrl = todo.repartition(n, $"url").rdd
     // v1 temporal stamps use ONE write-time string for the whole run
     // (reference stamps each object's creation time; F18 makes timestamps
     // write-time-only and parity-excluded, so run start is the stamp)
@@ -266,7 +300,7 @@ object Pipeline {
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
-    val outs = todo.rdd.mapPartitions(docOuts(v1, NoopEnricher, temporalIndex))
+    val outs = byUrl.mapPartitions(docOuts(v1, NoopEnricher, temporalIndex))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ---- flat node/edge/triple tables (narrow explodes)
@@ -316,13 +350,22 @@ object Pipeline {
       // the appends run at once and readers cannot see their order. A run
       // with nothing to do writes no file and commits no marker.
       if (folds.nonEmpty) {
+        val m = folds.map(_.metric)
+        // each table written by as many tasks as its rows need at Spark's
+        // advisory partition size, counted by the fold: a write task and a
+        // file cost more than a small table's rows. `coalesce` is narrow, so
+        // it adds no exchange and no job.
+        val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        def sized(df: DataFrame, rows: Long): DataFrame =
+          df.coalesce(math.min(n.toLong, math.max(1L,
+            math.ceil(rows.toDouble * df.schema.defaultSize / advisory).toLong)).toInt)
         allAtOnce(Seq[() => Unit](
-          () => tio.append(canonNodes, "nodes", Seq("node_type")),
-          () => tio.append(edgeRows, "edges"),
-          () => tio.append(tripleRows, "triples"),
-          () => tio.append(metrics.coalesce(1), "metrics"), // small local frames: one file each
-          () => tio.append(lineage, "lineage")) ++
-          linkMetrics.map(lm => () => tio.append(lm.coalesce(1), "link_metrics")))
+          () => tio.append(sized(canonNodes, m.map(_.nodes_emitted).sum), "nodes", Seq("node_type")),
+          () => tio.append(sized(edgeRows, m.map(_.edges_emitted).sum), "edges"),
+          () => tio.append(sized(tripleRows, m.map(_.triples_emitted).sum), "triples"),
+          () => tio.append(sized(metrics, m.size), "metrics"),
+          () => tio.append(sized(lineage, m.map(_.docs_processed).sum), "lineage")) ++
+          linkMetrics.map(lm => () => tio.append(sized(lm, folds.map(_.buckets.size).sum), "link_metrics")))
         tio.commit(runId)
       }
     } finally {

@@ -3,6 +3,7 @@ package graft.tools
 import graft.corpus.Corpus
 import graft.kg.{GraphQueries, Pipeline}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
 /** CLI entry point: run the full KG pipeline over the synthetic corpus and
   * materialize nodes/edges/triples/metrics/lineage tables.
@@ -63,7 +64,13 @@ object RunPipeline {
         nodes.select("temporal_index").distinct().count())
     }
     println("--- per-partition metrics (lineage/north rule) ---")
-    tio.readCommitted(spark, "metrics").orderBy("partition_id").show(8, truncate = false)
+    val metrics = tio.readCommitted(spark, "metrics")
+    metrics.orderBy("partition_id").show(8, truncate = false)
+    // the fold's balance: this run's docs per partition, from its metrics rows alone
+    val docs = metrics.where(col("run_id") === runId).select("docs_processed").collect().map(_.getLong(0))
+    if (docs.nonEmpty)
+      println(s"fold: ${docs.length} partitions with docs, docs_processed max/mean " +
+        f"${docs.max * docs.length.toDouble / docs.sum}%.3f")
     spark.stop()
   }
 }

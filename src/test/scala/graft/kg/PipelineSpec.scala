@@ -46,8 +46,9 @@ final class CrashingTableIO(inner: graft.io.TableIO, failOn: Set[String]) extend
       inFlight.decrementAndGet()
     }
   }
-  override def read(spark: org.apache.spark.sql.SparkSession, table: String): org.apache.spark.sql.DataFrame =
-    inner.read(spark, table)
+  override def read(spark: org.apache.spark.sql.SparkSession, table: String,
+                    schema: Option[org.apache.spark.sql.types.StructType]): org.apache.spark.sql.DataFrame =
+    inner.read(spark, table, schema)
   override def exists(table: String): Boolean = inner.exists(table)
   override def commit(runId: String): Unit = {
     commitReached.set(true)
@@ -352,27 +353,35 @@ class PipelineSpec extends SparkSpec {
     assert(growth == 1)
   }
 
+  /** Each doc's fold partition as `run` recorded it in the committed lineage. */
+  private def lineagePartitions(tio: graft.io.TableIO): Map[String, Int] = {
+    import spark.implicits._
+    tio.readCommitted(spark, "lineage").select($"url", $"partition_id").as[(String, Int)].collect().toMap
+  }
+
   test("metrics: one row per non-empty partition, the per-partition sums, the same schema as before") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{count, lit, sum}
     import org.apache.spark.sql.types._
-    // 6 pages over 8 slices: partitions 0 and 4 hold no page
+    // 6 pages over 8 slices, hashed by url into 8 fold partitions: 4 of them hold no page
     val pages = spark.createDataset(
       spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
     val counters = Seq("docs_processed", "nodes_emitted", "edges_emitted", "triples_emitted", "duration_ms")
     val schema = StructType(Seq(StructField("run_id", StringType), StructField("stage", StringType),
       StructField("partition_id", IntegerType)) ++ counters.map(StructField(_, LongType)))
-    // what the metrics rows were before: per-doc rows summed by a shuffle
-    val old = Pipeline.docGraphsWithPartition(spark, pages)
-      .map { case (o, pid, _) => (pid, o.graph.nodes.size.toLong, o.graph.edges.size.toLong) }
-      .groupBy($"_1").agg(count(lit(1)), sum($"_2"), sum($"_3"), sum($"_3"))
-      .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(old.map(_._1) == Seq(1, 2, 3, 5, 6, 7) && old.map(_._2).sum == 6L)
-    val readBack = runInto(pages, "m1").readCommitted(spark, "metrics")
+    val tio = runInto(pages, "m1")
+    // the per-doc counts, summed by the partition lineage records for each doc
+    val partOf = lineagePartitions(tio)
+    val want = Pipeline.docGraphsWithPartition(spark, pages)
+      .map { case (o, _, _) => (o.graph.url, o.graph.nodes.size.toLong, o.graph.edges.size.toLong) }
+      .collect().toSeq.groupBy(d => partOf(d._1)).toSeq
+      .map { case (pid, ds) => (pid, ds.size.toLong, ds.map(_._2).sum, ds.map(_._3).sum, ds.map(_._3).sum) }
+      .sorted
+    assert(want.map(_._1) == Seq(0, 1, 4, 6) && want.map(_._2).sum == 6L, want)
+    val readBack = tio.readCommitted(spark, "metrics")
     val sums = readBack
       .select($"partition_id", $"docs_processed", $"nodes_emitted", $"edges_emitted", $"triples_emitted")
       .as[(Int, Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(sums == old)
+    assert(sums == want)
     assert(readBack.where($"duration_ms" < 0 || $"run_id".isNull || $"stage" =!= "graph_build").isEmpty)
     assert(readBack.schema == schema, readBack.schema.treeString)
   }
@@ -457,23 +466,26 @@ class PipelineSpec extends SparkSpec {
   test("link_metrics: the Column linker's histogram per partition, in the old schema, as written") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    // 6 pages over 8 slices: partitions 0 and 4 hold no page
+    // 6 pages over 8 slices, hashed by url into 8 fold partitions: 4 of them hold no page
     val pages = spark.createDataset(
       spark.sparkContext.parallelize(Corpus.pages(spark, 6, partitions = 1).collect().toSeq, 8))
     val kb = corpusKb()
     val schema = StructType(Seq(StructField("partition_id", IntegerType), StructField("score_bucket", StringType),
       StructField("n", LongType), StructField("run_id", StringType)))
+    val tio = runInto(pages, "lm1", kb = Some(kb))
     // what link_metrics was before: the mentions linked by the Column-expression
-    // linker, counted by a (partition, bucket) shuffle
-    val mentions = Pipeline.docGraphsWithPartition(spark, pages).flatMap { case (o, pid, _) =>
-      o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context, pid))
-    }.toDF("mention_id", "url", "surface", "entity_type", "context", "partition_id")
+    // linker, counted by a (partition, bucket) shuffle, each mention in the
+    // partition lineage records for its doc
+    val partOf = lineagePartitions(tio).toSeq.toDF("url", "partition_id")
+    val mentions = Pipeline.docGraphsWithPartition(spark, pages).flatMap { case (o, _, _) =>
+      o.mentions.map(m => (s"${m.url}#${m.idx}", m.url, m.surface, m.entity_type, m.context))
+    }.toDF("mention_id", "url", "surface", "entity_type", "context").join(partOf, "url")
     val want = graft.link.LinkOracle.link(mentions, kb)
       .groupBy($"partition_id", graft.link.LinkOracle.scoreBucket($"link_score").as("score_bucket")).count()
       .as[(Int, String, Long)].collect().sorted.toSeq
-    assert(want.map(_._1).distinct == Seq(1, 2, 3, 5, 6, 7), want)
+    assert(want.map(_._1).distinct == Seq(0, 1, 4, 6), want)
     assert(want.exists(_._2 == "unlinked") && want.exists(_._2 != "unlinked"), want)
-    val readBack = runInto(pages, "lm1", kb = Some(kb)).readCommitted(spark, "link_metrics")
+    val readBack = tio.readCommitted(spark, "link_metrics")
     assert(readBack.select($"partition_id", $"score_bucket", $"n").as[(Int, String, Long)]
       .collect().sorted.toSeq == want)
     assert(readBack.schema == schema, readBack.schema.treeString)
@@ -487,6 +499,7 @@ class PipelineSpec extends SparkSpec {
 
   test("a kg_build-shaped run takes at most 10 Spark jobs") {
     import spark.implicits._
+    import scala.jdk.CollectionConverters._
     // a committed run over the first pages, then a resume over all of them
     // read from parquet, with an alias dictionary and a KB
     val dir = java.nio.file.Files.createTempDirectory("graft-job-count").toString
@@ -497,10 +510,50 @@ class PipelineSpec extends SparkSpec {
     val kb = corpusKb()
     Pipeline.run(spark, spark.read.parquet(s"$dir/base").as[graft.model.Page], "base", s"$dir/wh",
       aliases = Some(aliases), kb = Some(kb))
+    val wh = java.nio.file.Paths.get(s"$dir/wh")
+    def parquetFiles(): Set[java.nio.file.Path] = java.nio.file.Files.walk(wh).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSet
+    val before = parquetFiles()
     val all = spark.read.parquet(s"$dir/base", s"$dir/delta").as[graft.model.Page]
     val jobs = jobsOf(Pipeline.run(spark, all, "counted", s"$dir/wh", resume = true,
       aliases = Some(aliases), kb = Some(kb)))
     assert(jobs >= 1 && jobs <= 10, s"$jobs Spark jobs")
+    // the 120 new pages are hashed by url over the 4 cores, not left in the
+    // 2 input partitions that hold the new files
+    val docs = new graft.io.ParquetTableIO(s"$dir/wh").readCommitted(spark, "metrics")
+      .where($"run_id" === "counted").select($"docs_processed").as[Long].collect().toSeq
+    assert(docs.size == 4 && docs.sum == 120L, docs)
+    assert(docs.max.toDouble / (docs.sum.toDouble / docs.size) <= 1.25, docs)
+    // one new file per table directory, and per node_type directory of nodes
+    val added = (parquetFiles() -- before).toSeq.groupBy(f => wh.relativize(f.getParent).toString)
+    val tables = Set("edges", "triples", "metrics", "lineage", "link_metrics")
+    assert(added.forall(_._2.size == 1), added)
+    assert(tables.subsetOf(added.keySet) && added.keySet.exists(_.startsWith("nodes/node_type=")), added.keySet)
+  }
+
+  test("the committed product does not depend on how the input is split or ordered") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val pages = Corpus.pages(spark, 40, partitions = 1).collect().toSeq
+    val tables = Seq("nodes", "edges", "triples", "lineage", "metrics")
+    // every committed table of a fresh run under one run id, as sorted rows
+    def product(input: Seq[graft.model.Page], slices: Int, drop: String*): Map[String, Seq[String]] = {
+      val tio = runInto(spark.createDataset(spark.sparkContext.parallelize(input, slices)), "split")
+      tables.map { t =>
+        val df = tio.readCommitted(spark, t).drop("duration_ms" +: drop: _*)
+        t -> df.select(df.columns.sorted.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+      }.toMap
+    }
+    val want = product(pages, 1)
+    assert(want("metrics").size == 4, want("metrics"))
+    for ((input, slices) <- Seq((pages, 3), (pages, 4), (pages.reverse, 3), (pages.reverse, 1))) {
+      val got = product(input, slices)
+      for (t <- tables) assert(got(t) == want(t), s"$t over $slices slices")
+    }
+    // more slices than cores: the fold takes one partition per slice, so the
+    // partition ids of lineage and metrics follow the input, and nothing else
+    val (wide, narrow) = (product(pages.reverse, 8, "partition_id"), product(pages, 1, "partition_id"))
+    for (t <- tables.filter(_ != "metrics")) assert(wide(t) == narrow(t), s"$t over 8 slices")
   }
 
   test("an empty outDir is refused before any Spark job, not run with nothing written") {
