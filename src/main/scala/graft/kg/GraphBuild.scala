@@ -180,12 +180,10 @@ object GraphBuild {
         "", "technology", primary = false, 0.8))
   }
 
-  /** File-analysis entity assembly (v2:97-131), deduped. The enricher hook
-    * is the §2.9 seam (v2 appends LLM entities before dedup); the no-op
-    * default keeps the deterministic contract.
+  /** File-analysis entity assembly (v2:97-131), deduped. v2's offline LLM
+    * pass (§2.9) appends nothing before the dedup, so none is run here.
     */
-  def entitiesFromFileAnalysis(doc: DocAnalysis,
-                               enricher: Enricher = NoopEnricher): Seq[Entity] = {
+  def entitiesFromFileAnalysis(doc: DocAnalysis): Seq[Entity] = {
     val isInterview = isInterviewFormatEntity(doc.filePath, doc.text)
     val base =
       if (isInterview)
@@ -199,7 +197,7 @@ object GraphBuild {
           skillEntities(doc.insights) ++
           conceptEntities(doc.insights) ++
           orgEntities(doc.entities)
-    dedupEntities(base ++ enricher.enrichEntities(doc, base))
+    dedupEntities(base)
   }
 
   /** Needs-analysis entity assembly (v2:133-153), deduped. */
@@ -378,11 +376,10 @@ object GraphBuild {
   }
 
   /** U2 — relationship assembly (v2:637-678): interview path (path-only
-    * detection) vs standard path; the enricher hook mirrors the LLM semantic
-    * stage (appended before A12 dedup), no-op by default.
+    * detection) vs standard path. v2's offline LLM semantic stage (§2.9)
+    * appends nothing before the A12 dedup, so none is run here.
     */
-  def relationships(entities: Seq[Entity], doc: DocAnalysis, needs: NeedsProfile,
-                    enricher: Enricher = NoopEnricher): Seq[Relationship] = {
+  def relationships(entities: Seq[Entity], doc: DocAnalysis, needs: NeedsProfile): Seq[Relationship] = {
     val rels =
       if (isInterviewFormatRel(doc.filePath))
         participantRels(entities) ++
@@ -396,7 +393,7 @@ object GraphBuild {
           personNeedRels(entities, needs.dominant) ++
           needBehaviorRels(entities) ++
           skillConceptRels(entities)
-    dedupRelationships(rels ++ enricher.enrichRelationships(doc, entities, rels))
+    dedupRelationships(rels)
   }
 
   // ------------------------------------------------------------------- graph
@@ -430,16 +427,15 @@ object GraphBuild {
   /** The per-document transform (v2 build_enhanced_hypergraph:1111-1180),
     * = SURVEY §3.2's unit-testable pure function.
     */
-  def build(doc: DocAnalysis, needs: NeedsProfile,
-            enricher: Enricher = NoopEnricher): DocGraph = {
-    val fileEntities = entitiesFromFileAnalysis(doc, enricher)
+  def build(doc: DocAnalysis, needs: NeedsProfile): DocGraph = {
+    val fileEntities = entitiesFromFileAnalysis(doc)
     val needsEntities = entitiesFromNeeds(needs)
     var all = fileEntities ++ needsEntities
     // fallback: ensure >=3 entities by injecting customer (v2:1135-1148)
     if (all.size < 3 && doc.customerName.nonEmpty)
       all = all :+ Entity(doc.customerName, "person", 0.9, "Primary customer",
         "metadata", "customer", "", primary = true, 1.0)
-    val rels = relationships(all, doc, needs, enricher)
+    val rels = relationships(all, doc, needs)
     val nodes = buildNodes(all, doc.filePath)
     val edges = buildEdges(rels, nodes)
     DocGraph(doc.url, doc.customerId, doc.routedPath, nodes, edges)

@@ -39,9 +39,10 @@ import scala.jdk.CollectionConverters._
   * doc's partition id — in `lineage` and `metrics` — a function of its url
   * and n. It holds the per-doc outputs as deserialized objects (an RDD
   * persisted for the run's duration, not a columnar Dataset cache), so each
-  * table written from them decodes nothing it does not read. The `metrics` rows are summed per partition inside the
-  * task that produced them — no further shuffle — and collected before any
-  * append: a run with no doc to process writes nothing and commits nothing.
+  * table written from them decodes nothing it does not read. The `metrics`
+  * rows are summed per partition inside the task that produced them — no
+  * further shuffle — and collected before any append: a run with no doc to
+  * process writes nothing and commits nothing.
   * With a knowledge base, the same per-partition fold links each mention
   * against the broadcast [[graft.link.EntityLink.KbIndex]] and counts the
   * partition's link-score histogram, so `link_metrics` is collected with
@@ -87,13 +88,12 @@ object Pipeline {
     */
   def docGraphs(spark: SparkSession, pages: Dataset[Page], v1: Boolean = false): Dataset[DocGraph] = {
     import spark.implicits._
-    pages.mapPartitions(_.map(p => analyzeAndBuild(p, v1, NoopEnricher, "")._2))
+    pages.mapPartitions(_.map(p => analyzeAndBuild(p, v1, "")._2))
   }
 
   /** The per-doc transform keeping the NER mentions (context = leading 400 chars). */
-  def buildDocOut(p: Page, v1: Boolean = false, enricher: Enricher = NoopEnricher,
-                  temporalIndex: String = ""): DocOut = {
-    val (doc, g) = analyzeAndBuild(p, v1, enricher, temporalIndex)
+  def buildDocOut(p: Page, v1: Boolean = false, temporalIndex: String = ""): DocOut = {
+    val (doc, g) = analyzeAndBuild(p, v1, temporalIndex)
     val ctx = doc.text.take(400)
     DocOut(g, doc.entities.zipWithIndex.map { case (e, i) =>
       MentionRow(doc.url, i, e.text, e.entityType, ctx)
@@ -103,41 +103,33 @@ object Pipeline {
   /** extract → analyze → needs → graph-build, shared by `docGraphs` and
     * `buildDocOut`; the analysis is returned for the mentions.
     */
-  private def analyzeAndBuild(p: Page, v1: Boolean, enricher: Enricher,
-                              temporalIndex: String): (DocAnalysis, DocGraph) = {
+  private def analyzeAndBuild(p: Page, v1: Boolean, temporalIndex: String): (DocAnalysis, DocGraph) = {
     val doc = DocAnalyze.analyze(p)
     val needs = Needs.profile(doc)
     val g = if (v1) GraphBuildV1.buildV1(doc, needs, temporalIndex)
-            else GraphBuild.build(doc, needs, enricher)
+            else GraphBuild.build(doc, needs)
     (doc, g)
   }
 
   /** The per-doc outputs with each doc's partition id in `pages` and its
     * build nanos. The id is the input partition's, not the one `run`
     * records: `run` hashes its pages by url before this body, so its lineage
-    * and metrics carry the id of that partition. The enricher's
-    * open()/close() bracket each partition (warm-container analog: one
-    * model/client init per task, not per document).
+    * and metrics carry the id of that partition.
     */
-  def docGraphsWithPartition(spark: SparkSession, pages: Dataset[Page],
-                             v1: Boolean = false,
-                             enricher: Enricher = NoopEnricher): Dataset[(DocOut, Int, Long)] = {
+  def docGraphsWithPartition(spark: SparkSession, pages: Dataset[Page]): Dataset[(DocOut, Int, Long)] = {
     import spark.implicits._
-    pages.mapPartitions(docOuts(v1, enricher, ""))
+    pages.mapPartitions(docOuts(v1 = false, ""))
   }
 
   /** The per-partition body of `docGraphsWithPartition`, also run by `run`
     * over its url-hashed partitions.
     */
-  private def docOuts(v1: Boolean, enricher: Enricher,
-                      temporalIndex: String): Iterator[Page] => Iterator[(DocOut, Int, Long)] = { it =>
+  private def docOuts(v1: Boolean, temporalIndex: String): Iterator[Page] => Iterator[(DocOut, Int, Long)] = { it =>
     val tc = org.apache.spark.TaskContext.get()
     val pid = if (tc == null) 0 else tc.partitionId()
-    enricher.open()
-    if (tc != null) tc.addTaskCompletionListener[Unit](_ => enricher.close())
     it.map { p =>
       val t0 = System.nanoTime()
-      val out = buildDocOut(p, v1, enricher, temporalIndex)
+      val out = buildDocOut(p, v1, temporalIndex)
       (out, pid, System.nanoTime() - t0)
     }
   }
@@ -300,7 +292,7 @@ object Pipeline {
     // per-doc outputs cached as deserialized objects: each frame below reads
     // back only the fields it needs, with no columnar encode/decode of the
     // nested graphs and 400-char mention contexts
-    val outs = byUrl.mapPartitions(docOuts(v1, NoopEnricher, temporalIndex))
+    val outs = byUrl.mapPartitions(docOuts(v1, temporalIndex))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ---- flat node/edge/triple tables (narrow explodes)

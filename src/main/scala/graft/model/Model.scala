@@ -12,7 +12,6 @@ package graft.model
   *  - Entity / Relationship: enhanced_hypergraph_builder_agent_v2.py
   *    CleanEntity (:45-55) / CleanRelationship (:57-65)
   *  - KgNode / KgEdge: EnhancedHyperNode (:67-77) / EnhancedHyperEdge (:79-89)
-  *  - NodeRow / EdgeRow: graph_extraction_agent.py ExtractedNode/Edge (:287-312)
   */
 final case class Page(
     url: String,
@@ -127,24 +126,3 @@ final case class Triple(
     obj: String,
     confidence: Double,
     evidence: Seq[String])
-
-/** Persistence shape (graph_extraction_agent.py:287-312): sha256-keyed ids. */
-final case class NodeRow(
-    id: String,
-    customer_id: String,
-    label: String,
-    node_type: String,
-    confidence: Double,
-    source_file: String,
-    canonical_id: String)
-
-final case class EdgeRow(
-    id: String,
-    customer_id: String,
-    source_node_id: String,
-    target_node_id: String,
-    relationship_type: String,
-    weight: Double,
-    evidence: Seq[String],
-    reasoning: String,
-    source_file: String)

@@ -3,20 +3,6 @@ package graft.kg
 import graft.SparkSpec
 import graft.corpus.Corpus
 
-/** Test enricher (top-level so closure deserialization resolves back to this
-  * JVM singleton and the open() counter is observable in local mode).
-  */
-object CountingEnricher extends Enricher {
-  val opened = new java.util.concurrent.atomic.AtomicInteger
-  override def open(): Unit = { opened.incrementAndGet(); () }
-  override def enrichEntities(doc: graft.model.DocAnalysis,
-                              base: Seq[graft.model.Entity]): Seq[graft.model.Entity] =
-    Seq(
-      graft.model.Entity("Enriched Topic", "concept", 0.9, "llm", "file_analysis", "", "topic", primary = false, 0.8),
-      // duplicate (lower(text), type) of the injected one — dedup keeps max-confidence
-      graft.model.Entity("enriched topic", "concept", 0.5, "llm", "file_analysis", "", "topic", primary = false, 0.8))
-}
-
 /** A TableIO whose appends to the tables in `failOn` fail right after they
   * return, or, with `failOn` empty, whose commit fails before the marker is
   * written. The failing appends fail together: each waits until all of them
@@ -176,29 +162,34 @@ class PipelineSpec extends SparkSpec {
     assert(tio.read(spark, "triples").count() > got.size)
   }
 
-  test("enrichment seam (§2.9): no-op default is identity; a plugged enricher adds entities pre-dedup") {
+  test("docGraphs and docGraphsWithPartition build the same graphs") {
     import spark.implicits._
     val pages = Corpus.pages(spark, 40, partitions = 2)
-    def triplesOf(g: org.apache.spark.sql.Dataset[graft.model.DocGraph]) =
-      g.flatMap(GraphBuild.triples(_)).collect()
-        .map(t => (t.url, t.subj, t.pred, t.obj, t.confidence)).sorted.toSeq
+    val base = Pipeline.docGraphs(spark, pages).collect().sortBy(_.url).toSeq
+    assert(base.size == 40 && base.exists(_.edges.nonEmpty))
+    assert(Pipeline.docGraphsWithPartition(spark, pages).map(_._1.graph).collect().sortBy(_.url).toSeq == base)
+  }
 
-    // 1. explicit NoopEnricher ≡ the enricher-less path, byte-for-byte
-    val base = triplesOf(Pipeline.docGraphs(spark, pages))
-    val noop = triplesOf(
-      Pipeline.docGraphsWithPartition(spark, pages, v1 = false, enricher = NoopEnricher)
-        .map(_._1.graph))
-    assert(noop == base)
-
-    // 2. a real enricher: per-partition open() counted, entities added BEFORE
-    // dedup (an enriched duplicate of an existing entity must NOT double)
-    CountingEnricher.opened.set(0)
-    val enriched = Pipeline.docGraphsWithPartition(spark, pages, v1 = false, enricher = CountingEnricher)
-      .map(_._1.graph).collect()
-    assert(CountingEnricher.opened.get() >= 1)
-    assert(enriched.forall(_.nodes.count(_.content.equalsIgnoreCase("enriched topic")) == 1))
-    assert(enriched.forall(_.nodes.exists(n =>
-      n.content == "Enriched Topic" && n.confidence == 0.9)))
+  test("run(v1 = true) stamps every node and edge with one run time and commits the v1 triples") {
+    import spark.implicits._
+    val pages = Corpus.pages(spark, 20, partitions = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-v1").toString
+    Pipeline.run(spark, pages, "v1run", dir, v1 = true)
+    val tio = new graft.io.ParquetTableIO(dir)
+    // one (temporal_index, temporal_category) across both tables' rows
+    val stamps = Seq("nodes", "edges").map { t =>
+      val df = tio.readCommitted(spark, t)
+      assert(!df.isEmpty, t)
+      df.select($"temporal_index", $"temporal_category").distinct().as[(String, String)].collect().toSet
+    }.reduce(_ ++ _)
+    assert(stamps.size == 1 && stamps.head._1.nonEmpty && stamps.head._2 == "present", stamps)
+    java.time.Instant.parse(stamps.head._1)
+    val got = tio.readCommitted(spark, "triples")
+      .select($"url", $"subj", $"pred", $"obj", $"confidence")
+      .as[(String, String, String, String, Double)].collect().sorted.toSeq
+    val want = Pipeline.docGraphs(spark, pages, v1 = true).flatMap(GraphBuild.triples(_)).collect()
+      .map(t => (t.url, t.subj, t.pred, t.obj, t.confidence)).sorted.toSeq
+    assert(got.nonEmpty && got == want)
   }
 
   test("nodes take alias canonical keys with no join or exchange") {
