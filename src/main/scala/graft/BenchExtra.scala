@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.exec.MainSession
 
 /** Supplementary benchmark main for optimization work (guide §1) — Bench.scala
   * itself is frozen for measurement, so per-query isolation lives here.
   *
-  * Methodology mirrors Bench exactly where it matters: identical session
-  * config (master local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE +
-  * skew join on, UTC), one warmup construction+count per query, then min of N
-  * repeats where EVERY repeat reconstructs the query from SparkEntry.queries —
-  * so localCheckpoints inside operator construction are re-run per repeat,
-  * matching what the driver's Bench measures.
+  * Methodology mirrors Bench exactly where it matters: Bench's session
+  * config (`MainSession`: local[$SPARK_GRAFT_CPUS], shuffle.partitions =
+  * cpus, AQE + skew join on, UTC), one warmup construction+count per
+  * query, then min of N repeats where EVERY repeat reconstructs the query
+  * from SparkEntry.queries — so localCheckpoints inside operator
+  * construction are re-run per repeat, matching what the driver's Bench
+  * measures.
   *
   * Modes:
   *   runMain graft.BenchExtra [sfDir] [repeats] [q...]    — count-timed (Bench parity)
@@ -28,20 +29,11 @@ object BenchExtra {
     val repeats = args.lift(1).map(_.toInt).getOrElse(3)
     val names: Seq[String] =
       if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val noop = sys.env.get("SPARK_GRAFT_NOOP").contains("1")
     val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-extra-$cpus")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(cpus, s"graft-bench-extra-$cpus")
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()

@@ -656,9 +656,9 @@ object SparkEntry {
     "q16_neardup_pairs" -> ((s, dir) => NearDup.jaccardPairs(t(s, dir, "documents"), 0.8)),
 
     "q17_lsh_candidates" -> ((s, dir) =>
-      // fused wide-minhash path — same (d1, d2) set as the composed
-      // lshCandidates(lshBands(minhashSignatures(...))) with one shuffle
-      // to signatures instead of two groupBys (r06 optimization)
+      // wide-minhash path: band signatures projected from the one-shuffle
+      // signature row, not regrouped from q15's (doc_id, seed) rows — one
+      // shuffle to signatures instead of two groupBys (r06 optimization)
       NearDup.lshCandidatePairs(t(s, dir, "documents"), k = 8, rowsPerBand = 4)),
 
     // ---------------- KG materialize/query over relational FKs
@@ -948,11 +948,8 @@ object SparkEntry {
       entityLinkingOverDocs(s, t(s, dir, "documents")))
   )
 
-  /** The q38 construction over ANY (doc_id, text) frame — shared with
-    * DataScaleProbe so the broadcast-dimension linking shape gets driven at
-    * 10× data, not just at the sf0.01 oracle size.
-    */
-  def entityLinkingOverDocs(s: SparkSession, docs: DataFrame): DataFrame = {
+  /** The q38 construction over a (doc_id, text) frame. */
+  private def entityLinkingOverDocs(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     val mentions = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>

@@ -2,14 +2,13 @@ package graft.kg
 
 import graft.analyze.DocAnalyze
 import graft.canon.Canonicalize
+import graft.exec.Plans
 import graft.io.{ParquetTableIO, TableIO}
 import graft.link.EntityLink
 import graft.model._
 import graft.needs.Needs
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -227,15 +226,6 @@ object Pipeline {
   /** The `lineage` table schema, unchanged since the table was first written. */
   private val LineageSchema: StructType = Encoders.product[LineageRow].schema
 
-  /** The partitions `pages` is read in, found without a Spark job: reading
-    * them from a plan with an exchange would run its stages, so such a plan
-    * counts none.
-    */
-  private def inputPartitions(pages: Dataset[Page]): Int = pages.queryExecution.executedPlan match {
-    case p if p.exists { case _: AdaptiveSparkPlanExec | _: Exchange => true; case _ => false } => 0
-    case p => p.execute().getNumPartitions
-  }
-
   /** `run` over any table store. */
   private[kg] def runWith(tio: TableIO, spark: SparkSession, pages: Dataset[Page],
                           runId: String, resume: Boolean, aliases: Option[DataFrame],
@@ -275,7 +265,7 @@ object Pipeline {
     // is a function of its url and n. A count that AQE does not coalesce:
     // the fold's cost is CPU per document, not bytes. `.rdd` runs the
     // exchange's map stage, before any broadcast below exists.
-    val n = math.max(spark.sparkContext.defaultParallelism, inputPartitions(pages))
+    val n = math.max(spark.sparkContext.defaultParallelism, Plans.inputPartitions(pages))
     val byUrl = todo.repartition(n, $"url").rdd
     // v1 temporal stamps use ONE write-time string for the whole run
     // (reference stamps each object's creation time; F18 makes timestamps

@@ -94,12 +94,12 @@ object NearDup {
       .groupBy(col("doc_id"), col("seed"))
       .agg(min(md5(concat(col("shingle"), lit(":"), col("seed").cast("string")))).as("minhash"))
 
-  /** LSH band signatures straight off the wide minhash row — a NARROW
-    * projection + 2-rows-per-doc explode (no second shuffle; the former
-    * lshBands re-grouped the unpivoted signature rows by (doc_id, band) and
-    * re-collected/sorted what the wide row already holds in seed order).
-    * band_sig is byte-identical to lshBands': md5 of the comma-joined
-    * minhashes in seed order. Output: (doc_id, n, band, band_sig).
+  /** LSH band signatures straight off the wide minhash row: a NARROW
+    * projection + one-row-per-band explode, no second shuffle (grouping
+    * unpivoted (doc_id, seed, minhash) rows by (doc_id, band) would
+    * re-collect and re-sort what the wide row already holds in seed order).
+    * band_sig = md5 of the band's `rowsPerBand` consecutive minhashes,
+    * comma-joined in seed order. Output: (doc_id, n, band, band_sig).
     */
   private def bandsFromWide(wide: DataFrame, k: Int, rowsPerBand: Int): DataFrame = {
     val nBands = (k + rowsPerBand - 1) / rowsPerBand
@@ -112,65 +112,10 @@ object NearDup {
         col("bk.band").as("band"), col("bk.band_sig").as("band_sig"))
   }
 
-  /** LSH bands: group `rowsPerBand` consecutive seeds into one band signature
-    * = md5 of the comma-joined minhashes in seed order.
-    */
-  def lshBands(signatures: DataFrame, rowsPerBand: Int = 4): DataFrame = {
-    signatures
-      .withColumn("band", (col("seed") / rowsPerBand).cast("long"))
-      .groupBy(col("doc_id"), col("band"))
-      .agg(md5(concat_ws(",",
-        transform(array_sort(collect_list(struct(col("seed"), col("minhash")))),
-          x => x.getField("minhash")))).as("band_sig"))
-  }
-
-  /** Candidate pairs sharing at least one LSH band signature (d1 < d2).
-    *
-    * Implemented as ONE aggregation (bucket members collected per
-    * (band, band_sig), pairs exploded from the sorted member list) rather
-    * than a self-join: a self-join evaluates the whole upstream
-    * minhash/banding pipeline twice (measured ~2× wall), while this shape
-    * computes it once and shuffles each band row exactly once. Bucket
-    * member lists are duplicate-group-sized — tiny unless the corpus
-    * genuinely contains that many near-identical docs (in which case the
-    * pair count itself is quadratic, for any algorithm).
-    */
-  def lshCandidates(bands: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame = {
-    // maxBucket guardrail for 100 TB runs: a bucket of N near-identical docs
-    // yields N²/2 pairs whatever the algorithm — exact dedup (q12) should
-    // remove identical content FIRST; capping bounds the damage if a
-    // mega-cluster slips through. When the cap is set, filter on a cheap
-    // COUNT aggregation (map-side partial) and semi-join BEFORE collecting
-    // members, so mega-bucket lists are never materialized at all —
-    // measured ~8× on a 50k-doc corpus whose duplicate mass is genuinely
-    // quadratic. Default unlimited (oracle-exact) keeps the one-shuffle
-    // collect shape.
-    val pruned =
-      if (maxBucket == Int.MaxValue) bands
-      else {
-        val keep = bands.groupBy(col("band"), col("band_sig"))
-          .agg(count(lit(1)).as("bn"))
-          .where(col("bn") > 1 && col("bn") <= maxBucket)
-          .select(col("band"), col("band_sig"))
-        bands.join(keep, Seq("band", "band_sig"), "left_semi")
-      }
-    val buckets = pruned
-      .groupBy(col("band"), col("band_sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-    buckets
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(slice(col("ids"), i + lit(2), size(col("ids"))),
-          y => struct(x.as("d1"), y.as("d2")))))).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
-      .distinct()
-  }
-
-  /** Fused docs→LSH-candidate-pairs path: identical (d1, d2) set to
-    * `lshCandidates(lshBands(minhashSignatures(docs, k), rowsPerBand))`
-    * via the wide minhash aggregation — one shuffle to signatures and a
-    * narrow band projection instead of the two groupBys the composed form
-    * pays (that form remains for callers holding signature/band tables).
+  /** Docs→LSH-candidate-pairs: pairs sharing at least one band signature
+    * (d1 < d2, distinct), via the wide minhash aggregation — one shuffle to
+    * signatures and a narrow band projection, then `candidatesWithSizes`'
+    * one bucket aggregation.
     */
   def lshCandidatePairs(docs: DataFrame, k: Int = 8, rowsPerBand: Int = 4,
                         maxBucket: Int = Int.MaxValue,
@@ -181,7 +126,7 @@ object NearDup {
       .select("d1", "d2")
 
   /** Exact shingle-set Jaccard over all pairs sharing ≥1 shingle (suitable
-    * below ~10⁶ docs; at scale restrict to `lshCandidates` first).
+    * below ~10⁶ docs; at scale restrict to `lshCandidatePairs` first).
     */
   def jaccardPairs(docs: DataFrame, threshold: Double,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -230,11 +175,12 @@ object NearDup {
     * rarest-first order is the skew guard: ubiquitous grams land in a
     * prefix only for docs consisting almost entirely of ubiquitous grams.
     *
-    * Scale boundary (measured, DataScaleProbe): on corpora with a DEGENERATE
-    * vocabulary (every gram corpus-common — template spam, tiny synthetic
-    * vocabularies) the candidate set of any exact prefix-filter algorithm is
-    * quadratic by corpus construction, and an exact join cannot cap buckets
-    * without ceasing to be exact — the 50k→500k probe measured 89× wall at
+    * Scale boundary (measured; BENCH/BASELINE.md, "Data-size scaling"): on
+    * corpora with a DEGENERATE vocabulary (every gram corpus-common —
+    * template spam, tiny synthetic vocabularies) the candidate set of any
+    * exact prefix-filter algorithm is quadratic by corpus construction, and
+    * an exact join cannot cap buckets without ceasing to be exact — the
+    * 50k→500k probe measured 89× wall at
     * 10× input on exactly such a corpus, vs 1.7× for the mask-blocked
     * hamming family. Use this operator when the threshold is a hard
     * contract over a Zipfian corpus (rare tokens exist, prefixes prune);
@@ -263,7 +209,7 @@ object NearDup {
     val req = floor((col("n") * num + (den - 1)) / den).cast("long")
     // materialized once: the prefix×prefix self-join below reads BOTH sides
     // from this table — without the snapshot the whole df-join + per-doc
-    // collect/sort chain is evaluated twice (the lshCandidates lesson; the
+    // collect/sort chain is evaluated twice (candidatesWithSizes' lesson; the
     // self-join itself is kept because the positional filter needs p from
     // both sides and prefix buckets of ubiquitous grams must stay under
     // AQE's skew-join splitting, not in collected lists)
@@ -317,12 +263,27 @@ object NearDup {
   }
 
   /** Candidate pairs from (doc_id, n, band, band_sig) rows with both docs'
-    * shingle-set sizes carried — the same ONE-aggregation bucket-collect
-    * shape as `lshCandidates` (identical (d1, d2) pair set: sort_array on
-    * struct(doc_id, n) orders by the unique doc_id exactly like the
-    * id-only list). Output: (d1, d2, n1, n2), d1 < d2, distinct.
+    * shingle-set sizes carried. Output: (d1, d2, n1, n2), d1 < d2, distinct.
+    *
+    * ONE aggregation (bucket members collected per (band, band_sig), sorted
+    * by the unique doc_id, pairs exploded from the list) rather than a
+    * self-join: a self-join evaluates the whole upstream minhash/banding
+    * pipeline twice (measured ~2× wall), while this shape computes it once
+    * and shuffles each band row exactly once. Bucket member lists are
+    * duplicate-group-sized — tiny unless the corpus genuinely contains that
+    * many near-identical docs (then the pair count itself is quadratic, for
+    * any algorithm).
     */
   private def candidatesWithSizes(bands: DataFrame, maxBucket: Int): DataFrame = {
+    // maxBucket guardrail: a bucket of N near-identical docs yields N²/2
+    // pairs whatever the algorithm — exact dedup (q12) should remove
+    // identical content FIRST; capping bounds the damage if a mega-cluster
+    // slips through. When the cap is set, filter on a cheap COUNT
+    // aggregation (map-side partial) and semi-join BEFORE collecting
+    // members, so mega-bucket lists are never materialized at all —
+    // measured ~8× on a 50k-doc corpus whose duplicate mass is genuinely
+    // quadratic. Default unlimited (oracle-exact) keeps the one-shuffle
+    // collect shape.
     val pruned =
       if (maxBucket == Int.MaxValue) bands
       else {
@@ -391,9 +352,9 @@ object NearDup {
           col("name").substr(col("i") + 1, lit(maxLen))).as("mkey"))
     // ONE bucket-collect aggregation instead of a self-join on mkey: the
     // self-join evaluated the whole mask-explode pipeline twice (the
-    // lshCandidates lesson); sort_array on struct(id, name) orders by id,
-    // so every exploded pair has d1 <= d2, and the where below keeps only
-    // the documented d1 < d2 when two rows share an id.
+    // candidatesWithSizes lesson); sort_array on struct(id, name) orders by
+    // id, so every exploded pair has d1 <= d2, and the where below keeps
+    // only the documented d1 < d2 when two rows share an id.
     val cand = keyed
       .groupBy(col("mkey"))
       .agg(sort_array(collect_list(struct(col("id"), col("name")))).as("ms"))
@@ -455,7 +416,7 @@ object NearDup {
 
   /** Buckets the `maxBucket` guardrail would prune: one cheap COUNT
     * aggregation per (band, band_sig) — map-side partial, member lists never
-    * collected. Exactly the buckets `lshCandidates(_, maxBucket)` drops.
+    * collected. Exactly the buckets `candidatesWithSizes(_, maxBucket)` drops.
     * Output: (band, band_sig, bucket_size) with bucket_size > maxBucket.
     */
   def lshOverflowBuckets(bands: DataFrame, maxBucket: Int): DataFrame =
@@ -570,7 +531,7 @@ object NearDup {
   /** SimHash-banded near-dup (the third dedup family, complementing exact
     * dedup and MinHash LSH): 4×16-bit bands of the md5 simhash → candidate
     * pairs sharing a band (the same single-bucket-aggregation shape as
-    * `lshCandidates`, no self-join) → `hamming(simhash) <= maxHamming`
+    * `lshCandidatePairs`, no self-join) → `hamming(simhash) <= maxHamming`
     * verification. By pigeonhole every pair at distance <= 3 shares one of
     * the 4 bands, so recall is exact below 4 and decays above; pairs at
     * larger distance survive only when their differing bits cluster.
@@ -601,7 +562,7 @@ object NearDup {
     val buckets = bands
       .groupBy(col("band"), col("band_val"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("sim")))).as("ms"))
-      // same quadratic-bucket guardrail as lshCandidates: exact-dedup first
+      // same quadratic-bucket guardrail as lshCandidatePairs: exact-dedup first
       // at scale; identical texts share all 4 bands
       .where(size(col("ms")) > 1 && size(col("ms")) <= maxBucket)
     buckets

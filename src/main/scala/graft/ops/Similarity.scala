@@ -289,13 +289,14 @@ object Similarity {
   /** Embedding-cosine near-dup pairs — the 5th dedup family (exact hash,
     * MinHash LSH, SimHash bands, n-gram Jaccard, and now embedding cosine):
     * sign-hyperplane LSH candidate generation over ALL vectors (the same
-    * single-bucket-aggregation + pair-explode shape as NearDup.lshCandidates
-    * — ids only, embeddings joined back afterwards, so bucket lists never
-    * carry arrays), then exact cosine verification >= `threshold` (rounded
-    * 6dp, engine-portable). Candidate recall follows the multi-table LSH
-    * bound; the DuckDB oracle replays the bucket pruning so the contract is
-    * exact. `maxBucket` is the same quadratic-bucket guardrail as the text
-    * families. Output (d1, d2, cos_sim), d1 < d2.
+    * single-bucket-aggregation + pair-explode shape as
+    * NearDup.lshCandidatePairs — ids only, embeddings joined back
+    * afterwards, so bucket lists never carry arrays), then exact cosine
+    * verification >= `threshold` (rounded 6dp, engine-portable). Candidate
+    * recall follows the multi-table LSH bound; the DuckDB oracle replays the
+    * bucket pruning so the contract is exact. `maxBucket` is the same
+    * quadratic-bucket guardrail as the text families. Output (d1, d2,
+    * cos_sim), d1 < d2.
     */
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double,
                          planes: Int = 6, tables: Int = 4,
@@ -377,7 +378,7 @@ object Similarity {
       .groupBy(col("nid"), col("t"))
       .agg(bit_or(when(dot(col("nemb"), col("plane")) > 0, col("bitval")).otherwise(lit(0L))).as("b"))
       .select(col("nid"), struct(col("t").as("t"), col("b").as("b")).as("bucket"))
-    // same cap discipline as NearDup.lshCandidates: when the guardrail is
+    // same cap discipline as NearDup.lshCandidatePairs: when the guardrail is
     // set, a cheap COUNT + semi-join prunes mega-buckets BEFORE any member
     // list is collected — and the SAME checkpointed bucket table feeds the
     // drop accounting, so pairs and droppedBuckets always agree

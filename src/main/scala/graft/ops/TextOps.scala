@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.exec.Plans
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,12 @@ object TextOps {
     * operators whose downstream per-row work dwarfs one exchange of the
     * input (a blanket version on every table read was measured and
     * rejected: light queries paid more in exchange + task scheduling than
-    * they gained).
+    * they gained). The split count is read off the physical plan without a
+    * job; an input behind an exchange counts none and is fanned out.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 >= want) df else df.repartition(want)
+    if (Plans.inputPartitions(df) * 2 >= want) df else df.repartition(want)
   }
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")

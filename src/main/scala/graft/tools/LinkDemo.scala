@@ -1,8 +1,8 @@
 package graft.tools
 
 import graft.corpus.Corpus
+import graft.exec.MainSession
 import graft.link.EntityLink
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** CLI drive for entity linking + the streaming front-end:
@@ -14,11 +14,7 @@ import org.apache.spark.sql.functions._
 object LinkDemo {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 500L
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-link-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(8, "graft-link-demo")
     import spark.implicits._
 
     // mentions from the corpus NER stage

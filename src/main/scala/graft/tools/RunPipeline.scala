@@ -1,8 +1,8 @@
 package graft.tools
 
 import graft.corpus.Corpus
+import graft.exec.MainSession
 import graft.kg.{GraphQueries, Pipeline}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** CLI entry point: run the full KG pipeline over the synthetic corpus and
@@ -10,29 +10,21 @@ import org.apache.spark.sql.functions.col
   *
   * Usage: runMain graft.tools.RunPipeline <nDocs> <outDir> [cores] [resume] [v1]
   * (`v1` opts into the v1-builder mode: co-occurrence edges, temporal
-  * stamps, confidence smoothing. spark-submit --class
-  * graft.tools.RunPipeline on a cluster.)
+  * stamps, confidence smoothing.) Runs on local[cores] unless submitted:
+  * `spark-submit --master <url> --class graft.tools.RunPipeline <jar> …`
+  * runs on that master; the summary line names the master it ran on.
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
     val outDir = args(1)
-    val cores = if (args.length > 2) args(2) else "4"
+    val cores = if (args.length > 2) args(2).toInt else 4
     val resume = args.contains("resume")
     val v1 = args.contains("v1")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
-      .appName("graft-kg-pipeline")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(cores, "graft-kg-pipeline")
 
     val t0 = System.nanoTime()
-    val pages = Corpus.pages(spark, n, partitions = cores.toInt * 4)
+    val pages = Corpus.pages(spark, n, partitions = cores * 4)
     // fresh runId per ATTEMPT (the commit protocol refuses reuse — resume
     // dedup rides on the lineage table, not on the run id)
     val runId = s"run_${n}_${System.currentTimeMillis()}"
@@ -44,7 +36,7 @@ object RunPipeline {
     val nodes = tio.readCommitted(spark, "nodes")
     val edges = tio.readCommitted(spark, "edges")
     val triples = tio.readCommitted(spark, "triples")
-    println(s"=== pipeline done in ${f"$secs%.1f"}s: " +
+    println(s"=== pipeline done in ${f"$secs%.1f"}s on ${spark.sparkContext.master}: " +
       s"${nodes.count()} nodes, ${edges.count()} edges, ${triples.count()} triples from $n pages ===")
     println("--- node_type histogram ---")
     nodes.groupBy("node_type").count().orderBy("node_type").show(20, truncate = false)

@@ -131,6 +131,34 @@ class CanonicalizeSpec extends SparkSpec {
     assert(leaked2.isEmpty, s"driver regime left ${leaked2.size} cached RDDs: $leaked2")
   }
 
+  test("connectedComponents runs the star loop past 100 000 edges: hub, 20 000-hop path, random mass") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // the shape at which the driver union-find hands over: a hub on a third
+    // of the edges, one path of 20 000 hops that ends on the hub (its label
+    // travels the whole path), and random edges among the hub's spokes
+    val rnd = new scala.util.Random(20261020L)
+    val hub = (0 until 50000).map(i => ("hub", s"v$i"))
+    val path = (0 until 20000).map(i => (f"p$i%05d", f"p${i + 1}%05d")) :+ ("p20000" -> "hub")
+    val mass = (0 until 80000).map(_ => (s"v${rnd.nextInt(200000)}", s"v${rnd.nextInt(200000)}"))
+    val edges = hub ++ path ++ mass
+    assert(hub.size >= 0.3 * edges.size)
+    val distinct = edges.collect { case (a, b) if a != b => if (sparkOrder.lt(a, b)) (b, a) else (a, b) }.distinct.size
+    assert(distinct == 150001)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val cc = Canonicalize.connectedComponents(spark, edges.toDF("src", "dst"))
+    // the driver regime returns its labels as a local relation
+    assert(cc.queryExecution.logical.collectFirst { case r: LocalRelation => r }.isEmpty,
+      "labelled on the driver, not by the star loop")
+    val got = collectLabels(cc)
+    assert(got == unionFind(edges))
+    assert(got("p00000") == "hub")
+    // only the loop's final edge snapshot, which backs the labels, stays cached
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size <= 1, s"${left.size} cached RDDs left: $left")
+  }
+
   test("component = min id in Spark's binary UTF-8 order, not String.compareTo") {
     import spark.implicits._
     // U+FF21 encodes as EF BC A1, U+1F600 as F0 9F 98 80: "Ａ" is smaller in

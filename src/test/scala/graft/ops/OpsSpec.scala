@@ -217,7 +217,7 @@ class OpsSpec extends SparkSpec {
     val jac = NearDup.jaccardPairs(d, 0.8).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(jac.length == 1 && jac(0)._1 == 1L && jac(0)._2 == 2L)
     assert(math.abs(jac(0)._3 - 37.0 / 39.0) < 1e-4) // 38∩? shingles: 37 common of 38+38
-    val cands = NearDup.lshCandidates(NearDup.lshBands(NearDup.minhashSignatures(d, 8), 4))
+    val cands = NearDup.lshCandidatePairs(d, k = 8, rowsPerBand = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // near-dup pair should be a candidate via at least one band (high prob at jac 0.95)
     assert(cands.contains((1L, 2L)))
