@@ -199,7 +199,7 @@ object SparkEntry {
     "q64_khop" -> ((s, dir) =>
       graft.graph.Bfs.khop(s, queries("q19_kg_edges")(s, dir),
         concat(lit("node_"), substring(sha2(lit("tpch:region:ASIA"), 256), 1, 16)),
-        k = 4, srcCol = "src_id", dstCol = "dst_id")),
+        k = 4)),
 
     // Bounded WEIGHTED single-source shortest path (4 Bellman-Ford rounds,
     // delta relaxation) — q64's k-hop with integer edge weights derived
@@ -304,7 +304,7 @@ object SparkEntry {
     // (sums ride DECIMAL so regrouping cannot move a double).
     "q81_salted_agg" -> ((s, dir) =>
       graft.ops.Skew.saltedStats(t(s, dir, "events"), "event_type", "value",
-        col("event_id"), salts = 16)
+        col("event_id"))
         .withColumnRenamed("key", "event_type")),
 
     // PII scrub: the corpus carries no PII, so the query deterministically
@@ -659,7 +659,7 @@ object SparkEntry {
       // wide-minhash path: band signatures projected from the one-shuffle
       // signature row, not regrouped from q15's (doc_id, seed) rows — one
       // shuffle to signatures instead of two groupBys (r06 optimization)
-      NearDup.lshCandidatePairs(t(s, dir, "documents"), k = 8, rowsPerBand = 4)),
+      NearDup.lshCandidatePairs(t(s, dir, "documents"))),
 
     // ---------------- KG materialize/query over relational FKs
     "q18_kg_nodes" -> ((s, dir) => {
@@ -785,7 +785,7 @@ object SparkEntry {
         .withColumn("rnk", col("rank").cast("long")).drop("rank")),
 
     "q35_ann_ivf_topk" -> ((s, dir) =>
-      Similarity.ivfTopK(t(s, dir, "embeddings"), queryIds = 0L until 8L, k = 5)
+      Similarity.ivfTopK(t(s, dir, "embeddings"), queryIds = 0L until 8L)
         .withColumn("rnk", col("rank").cast("long")).drop("rank")),
 
     "q26_simhash" -> ((s, dir) => NearDup.simhashDF(t(s, dir, "documents"))),
@@ -827,8 +827,7 @@ object SparkEntry {
     "q44_embedding_neardup" -> ((s, dir) =>
       Similarity.cosineNearDupPairsScaled(
         Similarity.hashedEmbeddings(t(s, dir, "documents")), 0.95,
-        planes = 12, tables = 4,
-        idCol = "doc_id", embCol = "emb", dim = 64, maxBucket = 512).pairs),
+        planes = 12, maxBucket = 512).pairs),
 
     // ...and the embedding family's no-silent-caps accounting (the q43
     // analog): exactly the (table, bucket) groups a binding cap prunes,
@@ -838,8 +837,7 @@ object SparkEntry {
     "q49_embedding_dropped" -> ((s, dir) =>
       Similarity.cosineNearDupPairsScaled(
         Similarity.hashedEmbeddings(t(s, dir, "documents")), 0.95,
-        planes = 12, tables = 4,
-        idCol = "doc_id", embCol = "emb", dim = 64, maxBucket = 16).droppedBuckets),
+        planes = 12, maxBucket = 16).droppedBuckets),
 
     // End-to-end dedup RESOLUTION (what a 100 TB pipeline actually runs):
     // q34's verified pairs → alternating-star connected components → one

@@ -144,8 +144,7 @@ object DocAnalyze {
     * customer-folder equality first, then content_type, default generic.
     * Folder rules generalize to a routing table keyed on customerId.
     */
-  def route(customerId: String, contentType: String,
-            folderRules: Map[String, String] = defaultFolderRules): String =
+  def route(customerId: String, contentType: String): String =
     folderRules.getOrElse(customerId, contentType match {
       case "interview_transcript" => "interview"
       case "financial_advice" => "financial"
@@ -153,7 +152,7 @@ object DocAnalyze {
     })
 
   /** The reference's two hard-wired customer routes (workflow json:50-59). */
-  val defaultFolderRules: Map[String, String] =
+  private val folderRules: Map[String, String] =
     Map("01_jon_fortt" -> "interview", "00_tim_wolff" -> "financial")
 
   /** customer id = first path segment after the host that looks like a

@@ -56,15 +56,15 @@ object Corpus {
   def nameAt(rng: SplitRng): String = s"${pick(rng, firstNames)} ${pick(rng, lastNames)}"
   private def pick[T](rng: SplitRng, v: Vector[T]): T = v(rng.nextInt(v.length))
 
-  /** Deterministic per-index generator. idx → Page. */
-  def genPage(idx: Long, seed: Long = 42L, customers: Int = 64): Page = {
+  /** Deterministic per-index generator over 64 customers. idx → Page. */
+  def genPage(idx: Long, seed: Long = 42L): Page = {
     val rng = new SplitRng(seed, idx)
     val archetype = (idx % 10) match {
       case 0 | 1 | 2 => "financial" // 30%
       case 3 | 4 | 5 | 6 => "interview" // 40%
       case _ => "generic" // 30%
     }
-    val cidNum = rng.nextInt(customers)
+    val cidNum = rng.nextInt(64)
     val cname = {
       val r2 = new SplitRng(seed * 31 + 7, cidNum.toLong) // stable name per customer
       nameAt(r2)
@@ -159,10 +159,9 @@ object Corpus {
       } else extra + "\n" + body
     } else extra + "\n" + body
 
-  def pages(spark: SparkSession, n: Long, seed: Long = 42L, partitions: Int = 0): Dataset[Page] = {
+  def pages(spark: SparkSession, n: Long, partitions: Int): Dataset[Page] = {
     import spark.implicits._
-    val base = if (partitions > 0) spark.range(0L, n, 1L, partitions) else spark.range(n)
-    base.map(i => genPage(i, seed))
+    spark.range(0L, n, 1L, partitions).map(i => genPage(i))
   }
 
   private def titleToken(t: String): String =

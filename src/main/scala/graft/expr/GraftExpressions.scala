@@ -126,8 +126,6 @@ object GraftExpressions {
 
   import org.apache.spark.sql.GraftBridge
 
-  def front_matter_strip(c: Column): Column =
-    GraftBridge.column(FrontMatterStrip(GraftBridge.expression(c)))
   def extract_text(c: Column): Column =
     GraftBridge.column(ExtractText(GraftBridge.expression(c)))
   def dot_product(a: Column, b: Column): Column =

@@ -4,9 +4,9 @@ import graft.exec.Snapshots.{checkpoint, free}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** k-hop neighborhood expansion (breadth-first) over an edge list — the
-  * "everything within k hops of X" KG query. dist(node) = min #hops from
-  * the seed, capped at k.
+/** k-hop neighborhood expansion (breadth-first) over a (src_id, dst_id)
+  * edge list — the "everything within k hops of X" KG query. dist(node) =
+  * min #hops from the seed, capped at k.
   *
   * 100 TB shape: each round joins the CURRENT FRONTIER (not the visited
   * set) onto the src-keyed edge list — work per round is proportional to
@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
 object Bfs {
 
   def khop(spark: SparkSession, edges: DataFrame, seed: Column, k: Int,
-           srcCol: String = "src", dstCol: String = "dst",
            directed: Boolean = false): DataFrame = {
-    val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val base = edges.select(col("src_id").as("src"), col("dst_id").as("dst"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
     val (e, eIds) = checkpoint(sym.distinct())

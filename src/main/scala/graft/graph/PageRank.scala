@@ -4,11 +4,12 @@ import graft.exec.Snapshots.{checkpoint, free}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Damped PageRank over a directed edge list — the centrality upgrade of
-  * the degree-based q20/q21 (a hub pointed at by important nodes outranks
-  * one pointed at by leaves). Fixed power-iteration count so the result is
-  * deterministic and SQL-oracle-replayable (no convergence-threshold branch
-  * that could flip between engines).
+/** Damped PageRank over a directed (src_id, dst_id) edge list — the
+  * centrality upgrade of the degree-based q20/q21 (a hub pointed at by
+  * important nodes outranks one pointed at by leaves). 10 power iterations
+  * at damping d = 0.85: a fixed count, so the result is deterministic and
+  * SQL-oracle-replayable (no convergence-threshold branch that could flip
+  * between engines).
   *
   * Semantics (the standard Brin/Page formulation with uniform teleport and
   * uniform dangling redistribution):
@@ -26,11 +27,10 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  def pageRank(spark: SparkSession, edges: DataFrame,
-               iters: Int = 10, d: Double = 0.85,
-               srcCol: String = "src_id", dstCol: String = "dst_id"): DataFrame = {
+  def pageRank(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val d = 0.85
     val (e, eIds) = checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+      edges.select(col("src_id").as("src"), col("dst_id").as("dst")))
     val (nodes, nodeIds) = checkpoint(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
     val n = nodes.count() // one scalar, computed once (not per iteration)
@@ -47,7 +47,7 @@ object PageRank {
       nodes.join(outdeg, nodes("id") === outdeg("src"), "left")
         .select(col("id"), col("odeg"), lit(1.0 / n).as("r")))
     free(spark, nodeIds) // init consumed it; e + ranks carry everything the loop needs
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 10) {
       // dangling mass: rank sitting on nodes with no out-edges; kept as a
       // 1-row frame and broadcast back — no driver collect in the loop
       val dang = ranks.where(col("odeg").isNull)

@@ -5,10 +5,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bounded weighted single-source shortest path: `rounds` rounds of
-  * Bellman-Ford relaxation over an integer-weighted edge list —
-  * dist(v) = min total weight over paths from the seed using <= `rounds`
-  * edges. The weighted sibling of Bfs.khop (which is this with w ≡ 1).
-  * Integer weights keep the arithmetic exact across engines (no
+  * Bellman-Ford relaxation over an integer-weighted (src, dst, w) edge
+  * list — dist(v) = min total weight over paths from the seed using
+  * <= `rounds` edges. The weighted sibling of Bfs.khop (which is this with
+  * w ≡ 1). Integer weights keep the arithmetic exact across engines (no
   * float-sum path dependence), which is also the right call at scale —
   * milli-unit longs don't accumulate error over long paths.
   *
@@ -24,10 +24,8 @@ import org.apache.spark.sql.functions._
 object ShortestPath {
 
   def ssspBounded(spark: SparkSession, edges: DataFrame, seed: Column, rounds: Int,
-                  srcCol: String = "src", dstCol: String = "dst", wCol: String = "w",
                   directed: Boolean = false): DataFrame = {
-    val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("long").as("w"))
+    val base = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
     val sym = if (directed) base
       else base.unionAll(base.select(col("dst").as("src"), col("src").as("dst"), col("w")))
     val (e, eIds) = checkpoint(sym.distinct())

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** Distinct undirected co-mention edges from (doc, surface) mention rows:
+  /** Distinct undirected co-mention edges from (doc_id, surface) mention rows:
     * two entities mentioned in the same document get an edge; canonical
     * (a < b) orientation, corpus-level distinct.
     *
@@ -20,11 +20,10 @@ object Triangles {
     * on doc_id: the aggregate+explode shape shuffles each mention row
     * once instead of twice.
     */
-  def comentionEdges(mentions: DataFrame,
-                     idCol: String = "doc_id", surCol: String = "surface"): DataFrame =
+  def comentionEdges(mentions: DataFrame): DataFrame =
     mentions
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col(surCol))).as("ms"))
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_set(col("surface"))).as("ms"))
       .select(explode(flatten(transform(col("ms"), (x, i) =>
         transform(slice(col("ms"), i + lit(2), size(col("ms"))),
           y => struct(x.as("a"), y.as("b")))))).as("p"))

@@ -11,15 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  /** Per-customer edges with BOTH endpoints in the customer's subgraph —
-    * J8 endpoint semi-join (query_customer_edges :143-186).
+  /** Per-customer edges with BOTH endpoints in the customer's subgraph,
+    * at most 100 — J8 endpoint semi-join (query_customer_edges :143-186).
     */
-  def customerEdges(nodes: DataFrame, edges: DataFrame, customerId: String, limit: Int = 100): DataFrame = {
+  def customerEdges(nodes: DataFrame, edges: DataFrame, customerId: String): DataFrame = {
     val ids = nodes.where(col("customer_id") === customerId).select(col("node_id")).distinct()
     edges.where(col("customer_id") === customerId)
       .join(ids.withColumnRenamed("node_id", "source_node_id"), Seq("source_node_id"), "left_semi")
       .join(ids.withColumnRenamed("node_id", "target_node_id"), Seq("target_node_id"), "left_semi")
-      .limit(limit)
+      .limit(100)
   }
 
   /** Per-customer summary: type histograms (query_customer_summary :188-221, A1). */
@@ -57,7 +57,7 @@ object GraphQueries {
       .groupBy("node_id").count().withColumnRenamed("count", "degree")
 
   /** W2 — top-k most-connected nodes with content (v2:1339-1343). */
-  def centralEntities(nodes: DataFrame, edges: DataFrame, k: Int = 3): DataFrame =
+  def centralEntities(nodes: DataFrame, edges: DataFrame, k: Int): DataFrame =
     nodeDegrees(edges)
       .join(nodes.select(col("node_id"), col("content")).dropDuplicates("node_id"), Seq("node_id"))
       .orderBy(desc("degree"), asc("node_id")).limit(k)

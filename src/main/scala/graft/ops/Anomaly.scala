@@ -23,18 +23,17 @@ import org.apache.spark.sql.functions._
 object Anomaly {
 
   /** Per-(group, hour) event counts with a z-score against the trailing
-    * `lookback` buckets (current bucket EXCLUDED from the baseline).
+    * 6 buckets (current bucket EXCLUDED from the baseline).
     * z is null when the window has < 2 points or zero variance;
-    * is_anomaly = |z| > flagAt (false when z is null).
+    * is_anomaly = |z| > 2 (false when z is null).
     * Output: (hour, <groupCol>, n, n_window, z, is_anomaly).
     */
-  def countZscores(events: DataFrame, groupCol: String, tsCol: String,
-                   lookback: Int = 6, flagAt: Double = 2.0): DataFrame = {
+  def countZscores(events: DataFrame, groupCol: String, tsCol: String): DataFrame = {
     val counts = events
       .groupBy(date_trunc("hour", col(tsCol)).as("hour"), col(groupCol).as("grp"))
       .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col("grp")).orderBy(col("hour").asc)
-      .rowsBetween(-lookback, -1)
+      .rowsBetween(-6, -1)
     counts
       .withColumn("m", count(col("n")).over(w).cast("long"))
       .withColumn("s", sum(col("n")).over(w))
@@ -45,7 +44,7 @@ object Anomaly {
           (col("m") - 1)))
       .withColumn("z", when(col("variance") > 0,
         round((col("n") - col("mean")) / sqrt(col("variance")), 6)))
-      .withColumn("is_anomaly", coalesce(abs(col("z")) > flagAt, lit(false)))
+      .withColumn("is_anomaly", coalesce(abs(col("z")) > 2.0, lit(false)))
       .select(col("hour"), col("grp").as(groupCol), col("n"),
         col("m").as("n_window"), col("z"), col("is_anomaly"))
   }

@@ -14,14 +14,14 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** 2-D Morton (Z-order) interleave of the low `bits` bits of two
+  /** 2-D Morton (Z-order) interleave of the low 16 bits of two
     * non-negative bucket ids: bit j of `a` lands at position 2j, bit j of
     * `b` at 2j+1. Callers bucket raw values first (e.g. pmod on an id,
     * an hour number) — the key only needs to be ORDER-compatible with
     * locality, not reversible.
     */
-  def mortonKey(a: Column, b: Column, bits: Int = 16): Column =
-    (0 until bits).map { j =>
+  def mortonKey(a: Column, b: Column): Column =
+    (0 until 16).map { j =>
       shiftleft(shiftright(a, j).bitwiseAND(lit(1L)), 2 * j) +
         shiftleft(shiftright(b, j).bitwiseAND(lit(1L)), 2 * j + 1)
     }.reduce(_ + _)

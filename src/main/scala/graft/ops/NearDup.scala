@@ -16,6 +16,13 @@ import org.apache.spark.sql.functions._
   */
 object NearDup {
 
+  /** MinHash signatures per doc on the LSH paths, and minhashes per band. */
+  private val K = 8
+  private val RowsPerBand = 4
+
+  /** Longest name `hammingJoin` blocks on. */
+  private val MaxNameLen = 64
+
   /** Shingle array from an ALREADY-MATERIALIZED token-array column.
     *
     * Callers must bind `toks` to a concrete column (extra .select), not pass
@@ -30,13 +37,6 @@ object NearDup {
         i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** Word 3-gram shingles (distinct) from a text column; docs with <3 tokens
-    * yield an empty array. Convenience form — hot paths should materialize
-    * tokens first and use `shingleArr` (see its scaladoc).
-    */
-  def shingles(text: Column, n: Int = 3): Column =
-    array_distinct(shingleArr(TextOps.tokens(text), n))
-
   /** Distinct (doc_id, shingle) rows, tokens materialized before shingling.
     *
     * Set semantics via `array_distinct` INSIDE the shingle array, not a
@@ -48,8 +48,8 @@ object NearDup {
     * Jaccard sizes/intersections, band join) needs set semantics, so this
     * is the one shared discipline.
     */
-  private def shingleRows(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    TextOps.fanOut(docs.select(col(idCol).as("doc_id"), col(textCol).as("text0")))
+  private def shingleRows(docs: DataFrame): DataFrame =
+    TextOps.fanOut(docs.select(col("doc_id"), col("text").as("text0")))
       .select(col("doc_id"), TextOps.tokens(col("text0")).as("toks"))
       .select(col("doc_id"), explode(array_distinct(shingleArr(col("toks")))).as("shingle"))
 
@@ -62,21 +62,20 @@ object NearDup {
     * then the WIDE one-shuffle aggregation (`minhashWide`) unpivoted back to
     * (doc_id, seed, minhash) rows by a narrow posexplode.
     */
-  def minhashSignatures(docs: DataFrame, k: Int = 8,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    minhashFromShingleRows(shingleRows(docs, idCol, textCol), k)
+  def minhashSignatures(docs: DataFrame, k: Int = K): DataFrame =
+    minhashFromShingleRows(shingleRows(docs), k)
 
-  /** WIDE per-doc minhash: ONE hash aggregate computing all k signature
+  /** WIDE per-doc minhash: ONE hash aggregate computing all K signature
     * columns (plus the distinct-shingle count) in a single shuffle —
     * replaces the former explode(×k seeds) → groupBy(doc_id, seed) shape,
     * which shuffled k× the rows and hashed k× the aggregation keys for the
-    * same k md5 digests per shingle. The count column doubles as the exact
+    * same K md5 digests per shingle. The count column doubles as the exact
     * shingle-set size, so Jaccard verification needs no separate size
-    * aggregation + joins. Output: (doc_id, n, m0..m{k-1}).
+    * aggregation + joins. Output: (doc_id, n, m0..m{K-1}).
     */
-  private def minhashWide(rows: DataFrame, k: Int): DataFrame = {
+  private def minhashWide(rows: DataFrame): DataFrame = {
     val aggs = count(lit(1)).as("n") +:
-      (0 until k).map(s => min(md5(concat(col("shingle"), lit(s":$s")))).as(s"m$s"))
+      (0 until K).map(s => min(md5(concat(col("shingle"), lit(s":$s")))).as(s"m$s"))
     rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
@@ -98,13 +97,12 @@ object NearDup {
     * projection + one-row-per-band explode, no second shuffle (grouping
     * unpivoted (doc_id, seed, minhash) rows by (doc_id, band) would
     * re-collect and re-sort what the wide row already holds in seed order).
-    * band_sig = md5 of the band's `rowsPerBand` consecutive minhashes,
+    * band_sig = md5 of the band's `RowsPerBand` consecutive minhashes,
     * comma-joined in seed order. Output: (doc_id, n, band, band_sig).
     */
-  private def bandsFromWide(wide: DataFrame, k: Int, rowsPerBand: Int): DataFrame = {
-    val nBands = (k + rowsPerBand - 1) / rowsPerBand
-    val bandStructs = (0 until nBands).map { b =>
-      val ms = (b * rowsPerBand until math.min(k, (b + 1) * rowsPerBand)).map(s => col(s"m$s"))
+  private def bandsFromWide(wide: DataFrame): DataFrame = {
+    val bandStructs = (0 until K / RowsPerBand).map { b =>
+      val ms = (b * RowsPerBand until (b + 1) * RowsPerBand).map(s => col(s"m$s"))
       struct(lit(b.toLong).as("band"), md5(concat_ws(",", ms: _*)).as("band_sig"))
     }
     wide.select(col("doc_id"), col("n"), explode(array(bandStructs: _*)).as("bk"))
@@ -113,24 +111,19 @@ object NearDup {
   }
 
   /** Docs→LSH-candidate-pairs: pairs sharing at least one band signature
-    * (d1 < d2, distinct), via the wide minhash aggregation — one shuffle to
-    * signatures and a narrow band projection, then `candidatesWithSizes`'
-    * one bucket aggregation.
+    * (K = 8 minhashes in bands of RowsPerBand = 4; d1 < d2, distinct), via
+    * the wide minhash aggregation — one shuffle to signatures and a narrow
+    * band projection, then `candidatesWithSizes`' one bucket aggregation.
     */
-  def lshCandidatePairs(docs: DataFrame, k: Int = 8, rowsPerBand: Int = 4,
-                        maxBucket: Int = Int.MaxValue,
-                        idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    candidatesWithSizes(
-      bandsFromWide(minhashWide(shingleRows(docs, idCol, textCol), k), k, rowsPerBand),
-      maxBucket)
+  def lshCandidatePairs(docs: DataFrame): DataFrame =
+    candidatesWithSizes(bandsFromWide(minhashWide(shingleRows(docs))), Int.MaxValue)
       .select("d1", "d2")
 
   /** Exact shingle-set Jaccard over all pairs sharing ≥1 shingle (suitable
     * below ~10⁶ docs; at scale restrict to `lshCandidatePairs` first).
     */
-  def jaccardPairs(docs: DataFrame, threshold: Double,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ds = shingleRows(docs, idCol, textCol)
+  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
+    val ds = shingleRows(docs)
     val sizes = ds.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = ds.as("x").join(ds.as("y"),
         col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
@@ -188,12 +181,11 @@ object NearDup {
     * families, whose `maxBucket` accounting exists for precisely this case.
     * Output: (d1, d2, inter, n1, n2, jaccard), d1 < d2.
     */
-  def prefixJaccardPairs(docs: DataFrame, num: Int, den: Int,
-                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def prefixJaccardPairs(docs: DataFrame, num: Int, den: Int): DataFrame = {
     require(num > 0 && den >= num, s"threshold num/den must be in (0,1]: $num/$den")
     // distinct token-bigram rows, one scan (fanned out — see
     // TextOps.fanOut) shared by df/prefix/verify
-    val grams = TextOps.fanOut(docs.select(col(idCol).as("doc_id"), col(textCol).as("text0")))
+    val grams = TextOps.fanOut(docs.select(col("doc_id"), col("text").as("text0")))
       .select(col("doc_id"), TextOps.tokens(col("text0")).as("toks"))
       .select(col("doc_id"), explode(array_distinct(shingleArr(col("toks"), 2))).as("gram"))
       .localCheckpoint()
@@ -247,18 +239,16 @@ object NearDup {
     * O(|candidates|). This is the 100 TB shape; `jaccardPairs` stays as the
     * exhaustive small-scale oracle.
     */
-  def lshVerifiedPairs(docs: DataFrame, threshold: Double, k: Int = 8, rowsPerBand: Int = 4,
-                       maxBucket: Int = Int.MaxValue,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def lshVerifiedPairs(docs: DataFrame, threshold: Double): DataFrame = {
     // ONE tokenize/shingle scan over the corpus, materialized once: the
     // deduped set feeds the wide minhash aggregation (min is duplicate-
     // insensitive so the distinct set is equivalent) and both verification
     // joins; the wide row's count column carries the shingle-set sizes all
     // the way through the candidate pairs, so verification needs no size
     // aggregation or joins at all.
-    val ds = shingleRows(docs, idCol, textCol)
+    val ds = shingleRows(docs)
       .localCheckpoint()
-    val cands = candidatesWithSizes(bandsFromWide(minhashWide(ds, k), rowsPerBand = rowsPerBand, k = k), maxBucket)
+    val cands = candidatesWithSizes(bandsFromWide(minhashWide(ds)), Int.MaxValue)
     verifyJaccardSized(ds, cands, threshold)
   }
 
@@ -282,8 +272,8 @@ object NearDup {
     // aggregation (map-side partial) and semi-join BEFORE collecting
     // members, so mega-bucket lists are never materialized at all —
     // measured ~8× on a 50k-doc corpus whose duplicate mass is genuinely
-    // quadratic. Default unlimited (oracle-exact) keeps the one-shuffle
-    // collect shape.
+    // quadratic. The uncapped paths (`lshCandidatePairs`, `lshVerifiedPairs`)
+    // pass Int.MaxValue and keep the one-shuffle, oracle-exact collect shape.
     val pruned =
       if (maxBucket == Int.MaxValue) bands
       else {
@@ -329,8 +319,8 @@ object NearDup {
     * |s| masked variants has ZERO recall loss, and candidates are verified
     * by an exact character-compare.
     *
-    * 100 TB shape: the mask explode is narrow (|s| rows per name, bounded
-    * by `maxLen`); the join key carries the length so only comparable
+    * 100 TB shape: the mask explode is narrow (|s| rows per name, names
+    * longer than `MaxNameLen` = 64 chars are dropped); the join key carries the length so only comparable
     * strings meet; block sizes are structurally small for keys with any
     * entropy (members must agree on every unmasked character — run exact
     * dedup first if the corpus has mass duplicates, same discipline as the
@@ -338,18 +328,17 @@ object NearDup {
     * pre-materialized char arrays (no-CSE discipline).
     * Output: (d1, d2, hamming) with d1 < d2 and hamming <= 1.
     */
-  def hammingJoin(rows: DataFrame, idCol: String, nameCol: String,
-                  maxLen: Int = 64): DataFrame = {
+  def hammingJoin(rows: DataFrame, idCol: String, nameCol: String): DataFrame = {
     val base = TextOps.fanOut(
         rows.select(col(idCol).cast("long").as("id"), col(nameCol).as("name")))
-      .where(length(col("name")) <= maxLen)
+      .where(length(col("name")) <= MaxNameLen)
     val keyed = base
       .select(col("id"), col("name"),
         explode(sequence(lit(1), length(col("name")))).as("i"))
       .select(col("id"), col("name"),
         concat_ws("|", length(col("name")).cast("string"), col("i").cast("string"),
           col("name").substr(lit(1), col("i") - 1),
-          col("name").substr(col("i") + 1, lit(maxLen))).as("mkey"))
+          col("name").substr(col("i") + 1, lit(MaxNameLen))).as("mkey"))
     // ONE bucket-collect aggregation instead of a self-join on mkey: the
     // self-join evaluated the whole mask-explode pipeline twice (the
     // candidatesWithSizes lesson); sort_array on struct(id, name) orders by
@@ -391,16 +380,14 @@ object NearDup {
     * operator is self-contained over two DataFrames.
     * Output: (new_id, old_id, jaccard), one row per flagged cross pair.
     */
-  def incrementalNearDup(newDocs: DataFrame, corpus: DataFrame, threshold: Double,
-                         k: Int = 8, rowsPerBand: Int = 4,
-                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val dsNew = shingleRows(newDocs, idCol, textCol).localCheckpoint()
-    val dsOld = shingleRows(corpus, idCol, textCol).localCheckpoint()
+  def incrementalNearDup(newDocs: DataFrame, corpus: DataFrame, threshold: Double): DataFrame = {
+    val dsNew = shingleRows(newDocs).localCheckpoint()
+    val dsOld = shingleRows(corpus).localCheckpoint()
     // per-side wide minhash (one shuffle each) with the shingle-set size
     // carried through the band join, so verification needs no size joins
-    val cand = bandsFromWide(minhashWide(dsNew, k), k, rowsPerBand)
+    val cand = bandsFromWide(minhashWide(dsNew))
       .select(col("doc_id").as("new_id"), col("n").as("n1"), col("band"), col("band_sig"))
-      .join(bandsFromWide(minhashWide(dsOld, k), k, rowsPerBand)
+      .join(bandsFromWide(minhashWide(dsOld))
         .select(col("doc_id").as("old_id"), col("n").as("n2"), col("band"), col("band_sig")),
         Seq("band", "band_sig"))
       .select("new_id", "old_id", "n1", "n2").distinct()
@@ -458,15 +445,14 @@ object NearDup {
     * read it), so construction launches the shingle/minhash jobs eagerly —
     * the right trade for an entrypoint whose outputs are always actioned.
     */
-  def lshVerifiedPairsScaled(docs: DataFrame, threshold: Double, k: Int = 8, rowsPerBand: Int = 4,
-                             maxBucket: Int = 1024,
-                             idCol: String = "doc_id", textCol: String = "text"): ScaledNearDup = {
-    val ds = shingleRows(docs, idCol, textCol)
+  def lshVerifiedPairsScaled(docs: DataFrame, threshold: Double,
+                             maxBucket: Int = 1024): ScaledNearDup = {
+    val ds = shingleRows(docs)
       .localCheckpoint()
     // band rows are read three times (count-filter, bucket collection, drop
-    // accounting) — materialize them once; docs×(k/rowsPerBand) small rows
+    // accounting) — materialize them once; docs×(K/RowsPerBand) small rows
     // (n rides along so verification needs no size joins)
-    val bands = bandsFromWide(minhashWide(ds, k), k, rowsPerBand)
+    val bands = bandsFromWide(minhashWide(ds))
       .localCheckpoint()
     ScaledNearDup(
       pairs = verifyJaccardSized(ds, candidatesWithSizes(bands, maxBucket), threshold),
@@ -515,14 +501,14 @@ object NearDup {
   /** Same value as 16-char lowercase hex (the q26 surface form). */
   def simhashMd5Hex(text: String): String = f"${simhashMd5Long(text)}%016x"
 
-  /** DataFrame helper: (idCol, simhash hex) via typed map. */
-  def simhashDF(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  /** DataFrame helper: (doc_id, simhash hex) via typed map. */
+  def simhashDF(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol))
+    docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) => (id, simhashMd5Hex(text)) }
-      .toDF(idCol, "simhash")
+      .toDF("doc_id", "simhash")
   }
 
   /** Hamming distance between two simhash values. */
@@ -540,15 +526,13 @@ object NearDup {
     * cheaper than MinHash when token-level (not phrase-level) similarity is
     * the target. Output: (d1, d2, hamming), d1 < d2.
     */
-  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 4,
-                          maxBucket: Int = Int.MaxValue,
-                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def simhashNearDupPairs(docs: DataFrame, maxHamming: Int = 4): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // no fanOut here: the per-token md5 map is cheap enough after the
     // md5Top64/manual-tokenizer rewrite that an extra exchange measured as
     // a net loss (0.50 s → 0.74 s at sf0.1)
-    val sims = docs.select(col(idCol).cast("long"), col(textCol))
+    val sims = docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) => (id, simhashMd5Long(text)) }
       .toDF("doc_id", "sim")
@@ -562,9 +546,9 @@ object NearDup {
     val buckets = bands
       .groupBy(col("band"), col("band_val"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("sim")))).as("ms"))
-      // same quadratic-bucket guardrail as lshCandidatePairs: exact-dedup first
-      // at scale; identical texts share all 4 bands
-      .where(size(col("ms")) > 1 && size(col("ms")) <= maxBucket)
+      // no bucket cap: identical texts share all 4 bands, so exact dedup
+      // comes first at scale
+      .where(size(col("ms")) > 1)
     buckets
       .select(explode(flatten(transform(col("ms"), (x, i) =>
         transform(slice(col("ms"), i + lit(2), size(col("ms"))),
@@ -594,15 +578,13 @@ object NearDup {
     * a (−len, doc_id) struct replaces a window sort (see
     * [[graft.kg.GraphQueries]] min_by discipline).
     */
-  def resolveClusters(spark: SparkSession, docs: DataFrame, pairs: DataFrame,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      d1Col: String = "d1", d2Col: String = "d2"): DataFrame = {
-    val edges = pairs.select(col(d1Col).cast("string").as("src"),
-      col(d2Col).cast("string").as("dst"))
+  def resolveClusters(spark: SparkSession, docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val edges = pairs.select(col("d1").cast("string").as("src"),
+      col("d2").cast("string").as("dst"))
     val cc = graft.canon.Canonicalize.connectedComponents(spark, edges)
       .select(col("id").cast("long").as("doc_id"), col("component").as("comp"))
-    val lens = docs.select(col(idCol).cast("long").as("doc_id"),
-      octet_length(col(textCol)).cast("long").as("len"))
+    val lens = docs.select(col("doc_id").cast("long").as("doc_id"),
+      octet_length(col("text")).cast("long").as("len"))
     val members = cc.join(lens, "doc_id")
     val agg = members.groupBy("comp").agg(
       min(col("doc_id")).as("cluster_id"),

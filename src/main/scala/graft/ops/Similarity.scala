@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Hash tables of the sign-hyperplane LSH families. */
+  private val Tables = 4
+
+  /** Dimension of `hashedEmbeddings`' vectors. */
+  private val EmbDim = 64
+
   /** Cast float embedding to double for portable arithmetic. */
   def asDouble(emb: Column): Column = transform(emb, x => x.cast("double"))
 
@@ -38,13 +44,12 @@ object Similarity {
     * one dot product. Same IEEE result: identical folds over identical
     * arrays, just evaluated earlier.
     */
-  def bruteForceTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5,
-                     idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val base = embeddings.select(col(idCol).as("nid"), asDouble(col(embCol)).as("nemb"))
+  def bruteForceTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5): DataFrame = {
+    val base = embeddings.select(col("vec_id").as("nid"), asDouble(col("embedding")).as("nemb"))
       .select(col("nid"), col("nemb"), norm(col("nemb")).as("nnorm"))
     val queries = embeddings
-      .where(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("qid"), asDouble(col(embCol)).as("qemb"))
+      .where(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qemb"))
       .select(col("qid"), col("qemb"), norm(col("qemb")).as("qnorm"))
     val scored = base.crossJoin(broadcast(queries))
       .where(col("nid") =!= col("qid"))
@@ -91,13 +96,6 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** Approximate top-k with standard multi-table LSH: `tables` independent
-    * hash tables of `planes` hyperplanes each; candidate set = union of the
-    * query's buckets across tables (explode → equi-join on (table, bucket) →
-    * distinct), then exact cosine rank within candidates. More tables →
-    * higher recall at linear candidate cost; at 10⁹ vectors each table join
-    * touches only |bucket| ≈ N/2^planes rows per query.
-    */
   /** Deterministic spherical k-means for the IVF coarse quantizer.
     *
     * Every step is engine-portable so the DuckDB oracle replays training
@@ -109,7 +107,7 @@ object Similarity {
     * once — floating-point addition isn't associative, so an unordered
     * SUM() would differ across engines/partitionings; the ordered fold is
     * deterministic everywhere. Clusters that lose all members keep their
-    * previous centroid. Fixed `iters` rounds (no convergence check — also
+    * previous centroid. Two fixed rounds (no convergence check — also
     * for replayability).
     *
     * Scale shape: the corpus side is one narrow pass per iteration
@@ -125,14 +123,13 @@ object Similarity {
     * values per group. 0 (default) trains on everything — the
     * oracle-replayed configuration.
     */
-  def trainIvfCentroids(embeddings: DataFrame, centroids: Int = 16, iters: Int = 2,
-                        idCol: String = "vec_id", embCol: String = "embedding",
+  def trainIvfCentroids(embeddings: DataFrame, centroids: Int,
                         maxTrainVectors: Long = 0L): DataFrame =
     trainIvfFromMat(
       embeddings
-        .select(col(idCol).as("nid"), asDouble(col(embCol)).as("nemb"))
+        .select(col("vec_id").as("nid"), asDouble(col("embedding")).as("nemb"))
         .select(col("nid"), col("nemb"), norm(col("nemb")).as("nnorm")),
-      centroids, iters, maxTrainVectors)
+      centroids, iters = 2, maxTrainVectors)
 
   /** Training core over a prepared (nid, nemb, nnorm) frame — lets ivfTopK
     * hand the trainer its own materialized scan instead of each side
@@ -185,7 +182,7 @@ object Similarity {
     cents.select(col("cid"), col("cemb"), norm(col("cemb")).as("cnorm"))
   }
 
-  /** IVF-Flat approximate top-k: a coarse quantizer partitions vectors into
+  /** IVF-Flat approximate top-5: a coarse quantizer partitions vectors into
     * inverted lists by nearest-centroid assignment; a query probes only its
     * `nprobe` closest centroids' lists and re-ranks those candidates
     * exactly. At 10⁹ vectors each query touches ≈ nprobe/centroids of the
@@ -205,9 +202,8 @@ object Similarity {
     * are deterministic and engine-portable (the DuckDB oracle reconstructs
     * training, assignment, probe, and re-rank).
     */
-  def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5,
+  def ivfTopK(embeddings: DataFrame, queryIds: Seq[Long],
               centroids: Int = 16, nprobe: Int = 4, trainIters: Int = 2,
-              idCol: String = "vec_id", embCol: String = "embedding",
               maxTrainVectors: Long = 0L): DataFrame = {
     // ONE materialized cast/norm scan shared by training, assignment, and
     // the probe side (previously the trainer checkpointed its own identical
@@ -215,7 +211,7 @@ object Similarity {
     // Deliberately NOT fanned out: the training loop runs many tiny stages
     // over this snapshot, and a 32-partition layout made each schedule 32
     // near-empty tasks — measured 2.2 s vs 1.2 s for q35 at sf0.1.
-    val mat = embeddings.select(col(idCol).as("nid"), col(embCol).as("e0"))
+    val mat = embeddings.select(col("vec_id").as("nid"), col("embedding").as("e0"))
       .select(col("nid"), asDouble(col("e0")).as("nemb"))
       .select(col("nid"), col("nemb"), norm(col("nemb")).as("nnorm"))
       .localCheckpoint()
@@ -255,55 +251,35 @@ object Similarity {
         round(dot(col("qemb"), col("nemb")) / (col("qnorm") * col("nnorm")), 6).as("cos_sim"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
   }
 
   /** Deterministic feature-hashed bag-of-words embedding: component j =
     * count of tokens whose md5-derived bucket (first 2 hex chars, i.e. 8
-    * uniform bits, mod `dim` — exact for dim dividing 256) equals j.
+    * uniform bits, mod `EmbDim` = 64, which divides 256) equals j.
     * Engine-portable (md5 + hex arithmetic, no JVM hashing), so the DuckDB
     * oracle reconstructs identical vectors. Scale shape: token explode →
     * (doc, bucket) count aggregate (map-side partial) → one map_from_entries
     * assembly per doc; docs with zero tokens are absent (no zero vector to
     * divide by). Identical documents get identical vectors — which makes
-    * cosine over these embeddings a DEDUP signal, see cosineNearDupPairs.
+    * cosine over these embeddings a DEDUP signal, see cosineNearDupPairsScaled.
+    * Output: (doc_id, emb).
     */
-  def hashedEmbeddings(docs: DataFrame, dim: Int = 64,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(256 % dim == 0, s"dim $dim must divide 256 for an unbiased 2-hex-char bucket")
-    // ONE hash aggregate: dim conditional-count columns per doc (map-side
-    // partial, buffer = dim longs) instead of the former two-shuffle
+  def hashedEmbeddings(docs: DataFrame): DataFrame = {
+    // ONE hash aggregate: EmbDim conditional-count columns per doc (map-side
+    // partial, buffer = EmbDim longs) instead of the former two-shuffle
     // groupBy(doc, bucket) → groupBy(doc) collect/map_from_entries shape.
     // count(when(bucket = j)) ≡ the per-bucket count with absent buckets 0,
     // so vectors are bit-identical.
-    val bucketed = TextOps.fanOut(docs.select(col(idCol).as("doc_id"), col(textCol).as("text0")))
+    val bucketed = TextOps.fanOut(docs.select(col("doc_id"), col("text").as("text0")))
       .select(col("doc_id"), explode(TextOps.tokens(col("text0"))).as("tok"))
       .select(col("doc_id"),
-        (conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("long") % dim).as("bucket"))
-    val cnts = (0 until dim).map(j => count(when(col("bucket") === j, lit(1))).as(s"c$j"))
+        (conv(substring(md5(col("tok")), 1, 2), 16, 10).cast("long") % EmbDim).as("bucket"))
+    val cnts = (0 until EmbDim).map(j => count(when(col("bucket") === j, lit(1))).as(s"c$j"))
     bucketed.groupBy(col("doc_id")).agg(cnts.head, cnts.tail: _*)
       .select(col("doc_id"),
-        array((0 until dim).map(j => col(s"c$j").cast("double")): _*).as("emb"))
+        array((0 until EmbDim).map(j => col(s"c$j").cast("double")): _*).as("emb"))
   }
-
-  /** Embedding-cosine near-dup pairs — the 5th dedup family (exact hash,
-    * MinHash LSH, SimHash bands, n-gram Jaccard, and now embedding cosine):
-    * sign-hyperplane LSH candidate generation over ALL vectors (the same
-    * single-bucket-aggregation + pair-explode shape as
-    * NearDup.lshCandidatePairs — ids only, embeddings joined back
-    * afterwards, so bucket lists never carry arrays), then exact cosine
-    * verification >= `threshold` (rounded 6dp, engine-portable). Candidate
-    * recall follows the multi-table LSH bound; the DuckDB oracle replays the
-    * bucket pruning so the contract is exact. `maxBucket` is the same
-    * quadratic-bucket guardrail as the text families. Output (d1, d2,
-    * cos_sim), d1 < d2.
-    */
-  def cosineNearDupPairs(embeddings: DataFrame, threshold: Double,
-                         planes: Int = 6, tables: Int = 4,
-                         idCol: String = "vec_id", embCol: String = "embedding",
-                         dim: Int = -1, maxBucket: Int = Int.MaxValue): DataFrame =
-    cosineNearDupPairsScaled(embeddings, threshold, planes, tables, idCol, embCol,
-      dim, maxBucket).pairs
 
   /** Over-cap (table, bucket) groups the guardrail prunes — one cheap COUNT
     * aggregation (map-side partial, member lists never collected), the
@@ -315,19 +291,31 @@ object Similarity {
       .agg(count(lit(1)).as("bucket_size"))
       .where(col("bucket_size") > maxBucket)
 
-  /** The ACCOUNTED form of `cosineNearDupPairs` (the no-silent-caps contract
-    * the text families already honor): `.pairs` is identical to
-    * `cosineNearDupPairs` at the same cap, and `.droppedBuckets` lists every
-    * pruned (t, bucket, bucket_size) so over-cap clusters are visible —
-    * `.logDrops()` WARN-logs the summary. As with the text entrypoint, a
-    * bucket of N near-identical vectors yields N²/2 pairs under ANY
-    * algorithm; the right fix for overflow is exact dedup first, and this
-    * entry makes that failure loud. Both frames share one checkpointed
-    * embedding scan and (when capped) one checkpointed bucket table.
+  /** Embedding-cosine near-dup pairs over `hashedEmbeddings`' (doc_id, emb)
+    * rows — the 5th dedup family (exact hash, MinHash LSH, SimHash bands,
+    * n-gram Jaccard, and embedding cosine): sign-hyperplane LSH candidate
+    * generation over ALL vectors (`Tables` = 4 tables of `planes`
+    * hyperplanes; the same single-bucket-aggregation + pair-explode shape
+    * as NearDup.lshCandidatePairs — ids only, embeddings joined back
+    * afterwards, so bucket lists never carry arrays), then exact cosine
+    * verification >= `threshold` (rounded 6dp, engine-portable). Candidate
+    * recall follows the multi-table LSH bound; the DuckDB oracle replays the
+    * bucket pruning so the contract is exact. `.pairs` is (d1, d2,
+    * cos_sim), d1 < d2.
+    *
+    * `maxBucket` is the same quadratic-bucket guardrail as the text
+    * families, with the no-silent-caps contract: `.droppedBuckets` lists
+    * every pruned (t, bucket, bucket_size) so over-cap clusters are
+    * visible — `.logDrops()` WARN-logs the summary. As with the text
+    * entrypoint, a bucket of N near-identical vectors yields N²/2 pairs
+    * under ANY algorithm; the right fix for overflow is exact dedup first,
+    * and this entry makes that failure loud. Both frames share one
+    * checkpointed embedding scan and (when capped) one checkpointed bucket
+    * table.
     *
     * Dim contract enforced IN the plan (same raise_error as lshTopK): a
-    * vector whose length disagrees with the hyperplane length would silently
-    * hash into wrong buckets — losing candidate RECALL with no symptom (the
+    * vector whose length is not `EmbDim` = 64 would silently hash into
+    * wrong buckets — losing candidate RECALL with no symptom (the
     * exact-cosine verify prevents false positives but not misses); fail the
     * job instead.
     *
@@ -335,26 +323,15 @@ object Similarity {
     * each copy); take `distinct` on (d1, d2) if ids may repeat.
     */
   def cosineNearDupPairsScaled(embeddings: DataFrame, threshold: Double,
-                               planes: Int = 6, tables: Int = 4,
-                               idCol: String = "vec_id", embCol: String = "embedding",
-                               dim: Int = -1, maxBucket: Int = Int.MaxValue): NearDup.ScaledNearDup = {
+                               planes: Int = 6, maxBucket: Int = Int.MaxValue): NearDup.ScaledNearDup = {
     val mat = embeddings
-      .select(col(idCol).as("nid"), asDouble(col(embCol)).as("nemb"))
+      .select(col("doc_id").as("nid"), asDouble(col("emb")).as("nemb"))
       .select(col("nid"), col("nemb"), norm(col("nemb")).as("nnorm"))
       .localCheckpoint() // bucket scan + two verification joins
-    val dimension =
-      if (dim > 0) dim
-      else mat.select(size(col("nemb"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
-    if (dimension <= 0)
-      return NearDup.ScaledNearDup(
-        pairs = mat.limit(0).select(col("nid").as("d1"), col("nid").as("d2"), lit(0.0).as("cos_sim")),
-        droppedBuckets = mat.limit(0).select(lit(0L).as("t"), lit(0L).as("bucket"),
-          lit(0L).as("bucket_size")),
-        label = "cosineNearDupPairsScaled")
     val checked = mat.withColumn("nemb",
-      when(size(col("nemb")) === dimension, col("nemb"))
+      when(size(col("nemb")) === EmbDim, col("nemb"))
         .otherwise(raise_error(concat(
-          lit(s"cosineNearDupPairs: embedding dim != $dimension, got "),
+          lit(s"cosineNearDupPairs: embedding dim != $EmbDim, got "),
           size(col("nemb")).cast("string")))))
     // Buckets via a BROADCAST plane table + map-side partial aggregation,
     // not the single tables×planes literal mega-expression: one projection
@@ -363,13 +340,13 @@ object Similarity {
     // it ran ~20× slower than under an aggregation (measured 1.3 s vs
     // 0.07 s on q44's bucket pass at sf0.1). Here each row computes ONE
     // small codegen'd dot; the 48× row inflation is map-local — the
-    // partial sum collapses it to `tables` rows per vector before the
+    // partial sum collapses it to `Tables` rows per vector before the
     // exchange. Values are bit-identical: the dot fold order matches the
     // old expression and the bit-OR over disjoint bitvals equals the old
     // when-chain reduce (a sum would carry into a wrong bucket on a repeated id).
     val planeRows: Seq[(Int, Long, Seq[Double])] =
-      for { t <- 0 until tables; j <- 0 until planes }
-        yield (t, 1L << j, hyperplane(dimension, t * planes + j).toSeq)
+      for { t <- 0 until Tables; j <- 0 until planes }
+        yield (t, 1L << j, hyperplane(EmbDim, t * planes + j).toSeq)
     val sess = embeddings.sparkSession
     import sess.implicits._
     val planesDf = planeRows.toDF("t", "bitval", "plane")
@@ -414,24 +391,29 @@ object Similarity {
     NearDup.ScaledNearDup(pairs, dropped, label = "cosineNearDupPairsScaled")
   }
 
-  /** @param dim embedding dimensionality (hyperplanes are literal arrays of
+  /** Approximate top-k with standard multi-table LSH: `Tables` = 4
+    * independent hash tables of 6 hyperplanes each; candidate set = union
+    * of the query's buckets across tables (explode → equi-join on (table,
+    * bucket) → distinct), then exact cosine rank within candidates. More
+    * tables → higher recall at linear candidate cost; at 10⁹ vectors each
+    * table join touches only |bucket| ≈ N/2^6 rows per query.
+    *
+    * @param dim embedding dimensionality (hyperplanes are literal arrays of
     *   this length). Pass it explicitly to keep plan construction lazy; the
     *   default (-1) peeks one row — and returns an empty result frame when
     *   the input has no rows at all.
     */
   def lshTopK(embeddings: DataFrame, queryIds: Seq[Long], k: Int = 5,
-              planes: Int = 6, tables: Int = 4,
-              idCol: String = "vec_id", embCol: String = "embedding",
               dim: Int = -1): DataFrame = {
     // materialize the double-cast embedding + norm once per vector; all
     // tables×planes bucket folds then read the bound array instead of
     // re-running the cast transform per plane (no CSE inside array lambdas)
     val mat = embeddings
-      .select(col(idCol).as("nid"), asDouble(col(embCol)).as("nemb"))
+      .select(col("vec_id").as("nid"), asDouble(col("embedding")).as("nemb"))
       .select(col("nid"), col("nemb"), norm(col("nemb")).as("nnorm"))
     val dimension =
       if (dim > 0) dim
-      else embeddings.select(size(col(embCol))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
+      else embeddings.select(size(col("embedding"))).head(1).headOption.map(_.getInt(0)).getOrElse(0)
     if (dimension <= 0)
       return mat.limit(0).select(col("nid").as("qid"), col("nid"),
         lit(0.0).as("cos_sim"), lit(1).as("rank"))
@@ -443,8 +425,8 @@ object Similarity {
         .otherwise(raise_error(concat(
           lit(s"lshTopK: embedding dim != $dimension, got "),
           size(col("nemb")).cast("string")))))
-    val bucketCols = (0 until tables).map(t =>
-      struct(lit(t).as("t"), lshBucket(col("nemb"), dimension, planes, t).as("b")).as(s"bk$t"))
+    val bucketCols = (0 until Tables).map(t =>
+      struct(lit(t).as("t"), lshBucket(col("nemb"), dimension, 6, t).as("b")).as(s"bk$t"))
     val withBuckets = checked.select(
       (Seq(col("nid"), col("nemb"), col("nnorm")) :+
         explode(array(bucketCols: _*)).as("bucket")): _*)

@@ -29,6 +29,10 @@ object Sketch {
 
   val hllM: Int = 256
 
+  /** Count-Min sketch shape: `CmsDepth` rows of `CmsWidth` counters. */
+  private val CmsWidth = 64
+  private val CmsDepth = 4
+
   /** ρ over the 12 hex chars after the bucket: 4·(leading '0' chars) +
     * nibble leading zeros + 1, all string/CASE ops (exact in any engine).
     */
@@ -103,7 +107,8 @@ object Sketch {
     * global sketch — the driver oracle computes THAT directly, making the
     * hash equality of the two paths the mergeability proof itself.
     * Output (one row): (n_shards, n_exact, n_registers, hll_estimate);
-    * n_exact is the small-scale verification column.
+    * n_exact is the small-scale verification column. NULL values are not
+    * counted, as in hllDistinct.
     */
   def hllMergedDistinct(rows: DataFrame, shardCol: String, valueCol: String): DataFrame = {
     // same one-scan discipline as hllDistinct: distinct (shard, value)
@@ -111,7 +116,7 @@ object Sketch {
     // distinct (countDistinct over values of the distinct pairs)
     val d = rows.select(col(shardCol).as("grp"), col(valueCol).as("v"))
       .distinct().localCheckpoint()
-    val shardRegs = registersFromDistinct(d)
+    val shardRegs = registersFromDistinct(d.where(col("v").isNotNull))
     val merged = shardRegs.groupBy(col("bucket")).agg(max(col("mx")).as("mx"))
       .select(lit("all").as("grp"), col("bucket"), col("mx"))
     val est = estimateRegs(merged).select(col("n_registers"), col("hll_estimate"))
@@ -139,7 +144,7 @@ object Sketch {
     * (item, exact, cms_estimate).
     */
   def cmsHeavyHitters(rows: DataFrame, valueCol: String,
-                      width: Int = 64, depth: Int = 4, topK: Int = 20): DataFrame = {
+                      width: Int = CmsWidth, depth: Int = CmsDepth, topK: Int = 20): DataFrame = {
     def bucket(v: Column, r: Column): Column =
       conv(substring(md5(concat(v, lit(":"), r.cast("string"))), 1, 2), 16, 10)
         .cast("int") % width
@@ -172,11 +177,13 @@ object Sketch {
     * counters are identical to a single-pass global build — which is what
     * the driver oracle computes directly, making the hash equality the
     * merge proof. Probe estimates then ride the merged table exactly as
-    * in [[cmsHeavyHitters]].
+    * in [[cmsHeavyHitters]], over its default `CmsDepth` × `CmsWidth`
+    * counters.
     * Output: (item, exact, cms_estimate, n_shards) for the topK items.
     */
   def cmsMergedHeavyHitters(rows: DataFrame, shardCol: String, valueCol: String,
-                            width: Int = 64, depth: Int = 4, topK: Int = 20): DataFrame = {
+                            topK: Int = 20): DataFrame = {
+    val (width, depth) = (CmsWidth, CmsDepth)
     def bucket(v: Column, r: Column): Column =
       conv(substring(md5(concat(v, lit(":"), r.cast("string"))), 1, 2), 16, 10)
         .cast("int") % width
@@ -268,9 +275,9 @@ object Sketch {
     * aggregate over rank hits.
     * Output: (group, n, p50, p90, p99).
     */
-  def exactQuantiles(rows: DataFrame, valueCol: String, groupCol: String,
-                     qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
+  def exactQuantiles(rows: DataFrame, valueCol: String, groupCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val qs = Seq(0.5, 0.9, 0.99)
     val ranked = rows.select(col(groupCol).as("grp"), col(valueCol).cast("double").as("v"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("grp")).orderBy(col("v").asc)).cast("long"))
@@ -327,10 +334,12 @@ object Sketch {
     * positives. The result is EXACTLY the plain semi-join's (the driver
     * oracle runs that), but at scale the shuffle moves only
     * matches + fpRate·non-matches instead of the whole probe table.
+    * Each key sets 3 of the `m` bits.
     */
   def bloomSemiJoin(probe: DataFrame, probeCol: String,
                     build: DataFrame, buildCol: String,
-                    m: Int = 512, k: Int = 3): DataFrame = {
+                    m: Int = 512): DataFrame = {
+    val k = 3
     def pos(v: Column, i: Int): Column =
       conv(substring(md5(concat(v.cast("string"), lit(":"), lit(i))), 1, 3), 16, 10)
         .cast("int") % m

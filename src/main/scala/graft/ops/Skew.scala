@@ -25,16 +25,17 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   /** Per-key (n, sum, min, max) of `valueCol` via two-stage salted
-    * aggregation. `saltExpr` must spread rows of one key across buckets —
-    * any per-row expression works (a row id mod salts, a hash); it only
-    * affects the plan, never the result. Sum is computed in DECIMAL(18,6)
-    * (exact, order/grouping-independent) and returned as double.
+    * aggregation over 16 salts. `saltExpr` must spread rows of one key
+    * across buckets — any per-row expression works (a row id, a hash); it
+    * only affects the plan, never the result. Sum is computed in
+    * DECIMAL(18,6) (exact, order/grouping-independent) and returned as
+    * double.
     * Output: (key, n, sum_value, min_value, max_value).
     */
   def saltedStats(rows: DataFrame, keyCol: String, valueCol: String,
-                  saltExpr: Column, salts: Int = 16): DataFrame = {
+                  saltExpr: Column): DataFrame = {
     val partial = rows
-      .select(col(keyCol).as("key"), pmod(saltExpr, lit(salts)).as("salt"),
+      .select(col(keyCol).as("key"), pmod(saltExpr, lit(16)).as("salt"),
         col(valueCol).cast("decimal(18,6)").as("v"))
       .groupBy(col("key"), col("salt"))
       .agg(count(lit(1)).as("pn"), sum(col("v")).as("ps"),

@@ -11,6 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** Winnowing gram length (chars) and window (hashes). */
+  private val WinK = 5
+  private val WinW = 4
+
+  /** Salt of the per-doc md5 draws of the sampling operators. */
+  private val SampleSeed = "graft"
+
   /** Non-empty whitespace tokens. */
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => t =!= lit(""))
@@ -63,11 +70,11 @@ object TextOps {
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** Winnowing document fingerprints (Schleimer et al., the MOSS scheme):
-    * hash every k-char gram, slide a window of `w` hashes, select each
-    * window's MINIMUM (rightmost position on ties) — any substring of
-    * length >= w+k-1 shared by two documents then contributes at least one
-    * shared fingerprint, which whole-document md5 (`fingerprint`) cannot
-    * offer. This is the portable variant: gram hash = first 6 md5 hex chars
+    * hash every `WinK` = 5-char gram, slide a window of `WinW` = 4 hashes,
+    * select each window's MINIMUM (rightmost position on ties) — any
+    * substring of length >= WinW+WinK-1 shared by two documents then
+    * contributes at least one shared fingerprint, which whole-document md5
+    * (`fingerprint`) cannot offer. This is the portable variant: gram hash = first 6 md5 hex chars
     * (engine-replayable in SQL); `winnowRolling` below is the same
     * selection over a true O(1)-per-position Karp-Rabin rolling hash — the
     * scale path when md5-per-gram is too hot. Output: (doc_id, pos, fp)
@@ -75,17 +82,17 @@ object TextOps {
     * Pure Column expressions (gram hashing + window selection run inside
     * one narrow projection; the only shuffle is the final distinct).
     */
-  def winnowingFingerprints(docs: DataFrame, k: Int = 5, w: Int = 4,
-                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def winnowingFingerprints(docs: DataFrame): DataFrame = {
+    val (k, w) = (WinK, WinW)
     // CASE guards: Spark's sequence(1, 0) counts DOWN, so an unguarded
     // too-short text would fabricate grams/windows at invalid positions
     val hashesExpr =
-      s"case when length($textCol) >= $k then " +
-        s"transform(sequence(1, length($textCol) - ${k - 1}), " +
-        s"i -> cast(conv(substring(md5(substring($textCol, i, $k)), 1, 6), 16, 10) as bigint)) " +
+      s"case when length(text) >= $k then " +
+        s"transform(sequence(1, length(text) - ${k - 1}), " +
+        s"i -> cast(conv(substring(md5(substring(text, i, $k)), 1, 6), 16, 10) as bigint)) " +
         s"else cast(array() as array<bigint>) end"
     docs
-      .selectExpr(s"$idCol as doc_id", s"$hashesExpr as hs") // materialize BEFORE the
+      .selectExpr("doc_id", s"$hashesExpr as hs") // materialize BEFORE the
       // window lambda below — HOF lambdas get no common-subexpression
       // elimination, so an inlined gram-hash array would re-hash per window
       .selectExpr("doc_id",
@@ -105,7 +112,8 @@ object TextOps {
     * position, same rightmost-min window selection. Returns distinct
     * (pos, fp) pairs, pos 1-based.
     */
-  def winnowRolling(text: String, k: Int = 5, w: Int = 4): Seq[(Int, Long)] = {
+  def winnowRolling(text: String): Seq[(Int, Long)] = {
+    val (k, w) = (WinK, WinW)
     if (text == null || text.length < k) return Nil
     val M = (1L << 61) - 1
     val B = 257L
@@ -152,14 +160,13 @@ object TextOps {
     * the flatMap); the Column variant stays wired for q47 because its md5
     * grams are engine-replayable by the SQL oracle.
     */
-  def winnowingFingerprintsRolling(docs: DataFrame, k: Int = 5, w: Int = 4,
-                                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def winnowingFingerprintsRolling(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+    docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, text) =>
-        winnowRolling(text, k, w).map { case (pos, fp) => (id, pos, fp) }
+        winnowRolling(text).map { case (pos, fp) => (id, pos, fp) }
       })
       .toDF("doc_id", "pos", "fp")
   }
@@ -281,10 +288,9 @@ object TextOps {
     * Zero-token docs produce zero windows (documented; the oracle filters
     * identically).
     */
-  def tokenWindows(docs: DataFrame, window: Int = 64, stride: Int = 48,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def tokenWindows(docs: DataFrame, window: Int = 64, stride: Int = 48): DataFrame = {
     require(window > 0 && stride > 0, "window and stride must be positive")
-    docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))
       .where(col("n") > 0)
       .select(col("doc_id"), col("toks"),
@@ -298,8 +304,8 @@ object TextOps {
         md5(concat_ws(" ", col("chunk"))).as("chunk_hash"))
   }
 
-  def repetitionStats(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         length(concat_ws("", col("toks"))).cast("long").as("tok_chars"),
@@ -325,13 +331,13 @@ object TextOps {
     * md5(text) group (hash-groupBy; partial agg map-side, single shuffle
     * on the 32-byte hash — minimal exchange at 100 TB).
     */
-  def exactDedup(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val h = docs.select(col(idCol), md5(col(textCol)).as("text_hash"))
+  def exactDedup(docs: DataFrame): DataFrame = {
+    val h = docs.select(col("doc_id"), md5(col("text")).as("text_hash"))
     val groups = h.groupBy("text_hash")
-      .agg(min(col(idCol)).as("canonical_doc_id"), count(lit(1)).as("group_size"))
+      .agg(min(col("doc_id")).as("canonical_doc_id"), count(lit(1)).as("group_size"))
     h.join(groups, Seq("text_hash"))
-      .select(col(idCol), col("canonical_doc_id"),
-        (col(idCol) =!= col("canonical_doc_id")).as("is_duplicate"),
+      .select(col("doc_id"), col("canonical_doc_id"),
+        (col("doc_id") =!= col("canonical_doc_id")).as("is_duplicate"),
         col("group_size"))
   }
 
@@ -350,11 +356,10 @@ object TextOps {
     * 32-char chunk hash (uniform keys, map-side partial min), one join
     * back on the same hash, one per-doc aggregation.
     */
-  def spanDedup(docs: DataFrame, span: Int = 10,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id"))
+  def spanDedup(docs: DataFrame, span: Int = 10): DataFrame = {
+    val ids = docs.select(col("doc_id"))
     val chunks = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       // guard: sequence(1, 0) counts DOWN — empty docs must not fabricate chunks
       .selectExpr("doc_id",
         s"""case when size(toks) >= 1 then
@@ -385,8 +390,8 @@ object TextOps {
   /** Gopher document-level quality filters (Rae et al. 2021 §A1.1, the
     * doc-level companion of `repetitionStats`): token-count bounds, mean
     * word length bounds, minimum fraction of tokens containing an
-    * alphabetic character, and the "contains at least `minStopwords`
-    * DISTINCT stopwords" rule. Pure Column expressions (codegen, zero
+    * alphabetic character, and the "contains at least 2 DISTINCT
+    * stopwords" rule. Pure Column expressions (codegen, zero
     * shuffle); the stopword list is a parameter because Gopher's eight
     * English words are corpus-specific by design.
     */
@@ -394,11 +399,10 @@ object TextOps {
                            stopwords: Seq[String],
                            minTokens: Long = 50, maxTokens: Long = 100000,
                            minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
-                           minAlphaFrac: Double = 0.8, minStopwords: Int = 2,
-                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                           minAlphaFrac: Double = 0.8): DataFrame = {
     val swArr = array(stopwords.map(lit): _*)
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
         length(concat_ws("", col("toks"))).cast("long").as("tok_chars"),
@@ -418,17 +422,17 @@ object TextOps {
         (col("mean_word_len") >= minMeanWordLen && col("mean_word_len") <= maxMeanWordLen)
           .as("mwl_ok"),
         (col("alpha_frac") >= minAlphaFrac).as("alpha_ok"),
-        (col("n_stopwords") >= minStopwords).as("stop_ok"))
+        (col("n_stopwords") >= 2).as("stop_ok"))
       .withColumn("keep",
         col("tokens_ok") && col("mwl_ok") && col("alpha_ok") && col("stop_ok"))
   }
 
   /** Per-group boilerplate span detection (the CCNet/RefinedWeb "strip
     * content repeated across a site" rule, re-expressed over token
-    * `k`-gram spans because this corpus has no line structure): a span is
-    * boilerplate within its group (e.g. `source` = the site/domain) when it
-    * occurs in at least `minDocs` documents AND at least `minFrac` of the
-    * group's documents. Output per document: distinct spans, boilerplate
+    * bigram spans because this corpus has no line structure): a span is
+    * boilerplate within its `source` (the site/domain) when it occurs in
+    * at least 2 documents AND at least `minFrac` of the source's
+    * documents. Output per document: distinct spans, boilerplate
     * spans, boilerplate fraction.
     *
     * 100 TB shape: per-doc-distinct spans via `array_distinct` INSIDE the
@@ -436,19 +440,17 @@ object TextOps {
     * groupBy on (group, span) with uniform keys, the per-group doc-count
     * dimension broadcast (#groups ≪ corpus), one per-doc aggregation.
     */
-  def boilerplateSpans(docs: DataFrame, groupCol: String = "source", k: Int = 2,
-                       minDocs: Long = 2, minFrac: Double = 0.2,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id"))
+  def boilerplateSpans(docs: DataFrame, minFrac: Double = 0.2): DataFrame = {
+    val ids = docs.select(col("doc_id"))
     val spans = docs
-      .select(col(idCol).as("doc_id"), col(groupCol).as("grp"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), col("source").as("grp"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("grp"),
-        explode(array_distinct(NearDup.shingleArr(col("toks"), k))).as("s"))
-    val groupSizes = docs.groupBy(col(groupCol).as("grp"))
+        explode(array_distinct(NearDup.shingleArr(col("toks"), 2))).as("s"))
+    val groupSizes = docs.groupBy(col("source").as("grp"))
       .agg(count(lit(1)).as("n_docs"))
     val freq = spans.groupBy(col("grp"), col("s")).agg(count(lit(1)).as("c"))
     val boiler = freq.join(broadcast(groupSizes), Seq("grp"))
-      .where(col("c") >= minDocs &&
+      .where(col("c") >= 2L &&
         col("c").cast("double") / col("n_docs") >= minFrac)
       .select(col("grp"), col("s"), lit(true).as("is_boiler"))
     val agg = spans.join(boiler, Seq("grp", "s"), "left")
@@ -463,7 +465,7 @@ object TextOps {
         .as("boiler_frac"))
   }
 
-  /** Per-document top-k terms by TF-IDF (scikit-style smoothed idf:
+  /** Per-document top-3 terms by TF-IDF (scikit-style smoothed idf:
     * ln((N+1)/(df+1)) + 1, so a term in every document still scores > 0).
     * Ties broken by token ascending — fully deterministic, and the score is
     * rounded to 6dp BEFORE ranking so both engines rank identical values.
@@ -471,13 +473,12 @@ object TextOps {
     * 100 TB shape: one (doc, token) count aggregation (uniform keys), one
     * token-keyed document-frequency aggregation reusing it, the 1-row
     * corpus size broadcast, and one doc-partitioned window for the top-k
-    * (doc keys are uniform; k is a constant so the window is a bounded
-    * per-partition heap under rank pushdown).
+    * (doc keys are uniform; the bound is a constant so the window is a
+    * bounded per-partition heap under rank pushdown).
     */
-  def tfidfTopK(docs: DataFrame, k: Int = 3,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def tfidfTopK(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tf = docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+    val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     val df_ = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -487,14 +488,15 @@ object TextOps {
           .as("tfidf"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("tok").asc)
     scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= k)
+      .where(col("rnk") <= 3)
   }
 
   /** BM25 top-k retrieval (Robertson/Spärck Jones probabilistic ranking,
     * the Lucene/Elasticsearch default): for each query in `queries`
     * (query_id, qtext), the k highest-scoring documents under
     * score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b + b·dl/avgdl)),
-    * idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)). Ties broken by doc_id asc.
+    * idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)), with the Lucene defaults
+    * k1 = 1.2 and b = 0.75. Ties broken by doc_id asc.
     *
     * Determinism across engines: each per-term contribution is computed in
     * one fixed left-associated double expression, rounded to 6 dp and cast
@@ -509,11 +511,10 @@ object TextOps {
     * shuffles are the tf/dl hash aggregations; corpus stats are a 1-row
     * broadcast. Top-k per query is a window over ≤ |matching docs| rows.
     */
-  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 3,
-               k1: Double = 1.2, b: Double = 0.75,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+    val (k1, b) = (1.2, 0.75)
+    val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val tf = toks.groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
     // doc length off the (doc, term) table, not a second corpus explode:
     // dl = Σ tf per doc exactly (one tokenize pass instead of two)
@@ -548,10 +549,9 @@ object TextOps {
     * broadcast, one join back on token, one per-doc aggregation. Docs with
     * no tokens keep a row (null score).
     */
-  def unigramLogProb(docs: DataFrame,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id"))
-    val toks = docs.select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("tok"))
+  def unigramLogProb(docs: DataFrame): DataFrame = {
+    val ids = docs.select(col("doc_id"))
+    val toks = docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = vocab.agg(sum(col("c")).as("t"))
     val scored = toks.join(vocab, Seq("tok")).crossJoin(broadcast(total))
@@ -577,14 +577,13 @@ object TextOps {
     * Docs with < n tokens keep a row (explode_outer) with n_grams = 0.
     */
   def contaminationCheck(train: DataFrame, eval: DataFrame, n: Int = 8,
-                         threshold: Double = 0.2,
-                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                         threshold: Double = 0.2): DataFrame = {
     // tokens materialized in their OWN projection before the shingle
     // lambda: shingleArr's transform references the array 8× per position
     // and HOF lambdas get no CSE — inlining tokens() here re-tokenized
     // every doc hundreds of times (measured 17.8 s → ~1 s on q57 at sf0.1)
     def grams(df: DataFrame) =
-      df.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      df.select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"),
           array_distinct(NearDup.shingleArr(col("toks"), n)).as("grams"))
     val evalPairs = grams(eval)
@@ -606,9 +605,10 @@ object TextOps {
 
   /** Deterministic stratified corpus sampling (training-mixture
     * construction): keep a document iff u < rate(stratum), where
-    * u = first-32-bits-of-md5(seed:doc_id) / 2^32 — a pure, engine-portable
-    * per-doc uniform draw (no RNG state, identical on re-run and on any
-    * engine). Unlisted strata fall back to `defaultRate`.
+    * u = first-32-bits-of-md5(seed:doc_id) / 2^32, seed = `SampleSeed` — a
+    * pure, engine-portable per-doc uniform draw (no RNG state, identical on
+    * re-run and on any engine). The stratum is `source`; unlisted strata
+    * fall back to `defaultRate`.
     *
     * 100 TB shape: a pure narrow filter — zero shuffles, zero joins; the
     * rate table is a folded CASE expression (a handful of strata), and the
@@ -616,14 +616,13 @@ object TextOps {
     * pruning keeps only (id, stratum) + carried columns.
     */
   def stratifiedSample(docs: DataFrame, rates: Map[String, Double],
-                       defaultRate: Double = 0.0, seed: String = "graft",
-                       stratumCol: String = "source", idCol: String = "doc_id"): DataFrame = {
-    val u = (conv(substring(md5(concat(lit(seed), lit(":"), col(idCol).cast("string"))), 1, 8),
+                       defaultRate: Double = 0.0): DataFrame = {
+    val u = (conv(substring(md5(concat(lit(SampleSeed), lit(":"), col("doc_id").cast("string"))), 1, 8),
       16, 10).cast("double") / lit(4294967296.0)).as("u")
     val rate = rates.toSeq.sortBy(_._1).foldLeft(lit(defaultRate)) {
-      case (acc, (k, v)) => when(col(stratumCol) === lit(k), lit(v)).otherwise(acc)
+      case (acc, (k, v)) => when(col("source") === lit(k), lit(v)).otherwise(acc)
     }
-    docs.select(col(idCol).as("doc_id"), col(stratumCol).as("stratum"),
+    docs.select(col("doc_id"), col("source").as("stratum"),
         rate.as("rate"), u)
       .where(col("u") < col("rate"))
       .select(col("doc_id"), col("stratum"), col("rate"), round(col("u"), 6).as("u6"))
@@ -642,12 +641,11 @@ object TextOps {
     * filtering by a draw threshold (stratifiedSample) before ranking
     * bounds the sort input — compose the two for mega-strata.
     */
-  def stratumTopK(docs: DataFrame, k: Int, seed: String = "graft",
-                  stratumCol: String = "source", idCol: String = "doc_id"): DataFrame = {
+  def stratumTopK(docs: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val draw = md5(concat(lit(seed), lit(":k:"), col(idCol).cast("string")))
+    val draw = md5(concat(lit(SampleSeed), lit(":k:"), col("doc_id").cast("string")))
     val w = Window.partitionBy(col("stratum")).orderBy(col("draw").asc, col("doc_id").asc)
-    docs.select(col(idCol).as("doc_id"), col(stratumCol).as("stratum"), draw.as("draw"))
+    docs.select(col("doc_id"), col("source").as("stratum"), draw.as("draw"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .where(col("rnk") <= k)
   }
@@ -667,14 +665,12 @@ object TextOps {
     * only heavy op is the per-stratum rank window (same shape as
     * stratumTopK — pre-thin with stratifiedSample for mega-strata).
     */
-  def weightedStratumSample(docs: DataFrame, k: Int, weightCol: String,
-                            seed: String = "graft",
-                            stratumCol: String = "source", idCol: String = "doc_id"): DataFrame = {
+  def weightedStratumSample(docs: DataFrame, k: Int, weightCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val u = conv(substring(md5(concat(lit(seed), lit(":ws:"), col(idCol).cast("string"))), 1, 8),
+    val u = conv(substring(md5(concat(lit(SampleSeed), lit(":ws:"), col("doc_id").cast("string"))), 1, 8),
       16, 10).cast("double") / lit(4294967296.0)
     val w = Window.partitionBy(col("stratum")).orderBy(col("skey").desc, col("doc_id").asc)
-    docs.select(col(idCol).as("doc_id"), col(stratumCol).as("stratum"),
+    docs.select(col("doc_id"), col("source").as("stratum"),
         col(weightCol).cast("long").as("weight"),
         round(log(u) / col(weightCol), 6).as("skey"))
       .withColumn("rnk", row_number().over(w).cast("long"))
@@ -693,11 +689,10 @@ object TextOps {
     * independent algorithms must agree row-for-row.
     * Output: (phrase_id, doc_id, n_occurrences), rows only where > 0.
     */
-  def phraseSearch(docs: DataFrame, phrases: Seq[(String, String)],
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def phraseSearch(docs: DataFrame, phrases: Seq[(String, String)]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+    val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
       .localCheckpoint() // one tokenize, shared by every phrase-length pass
     val byLen = phrases.groupBy(_._2.trim.split("\\s+").length).toSeq.sortBy(_._1)
     byLen.map { case (n, ps) =>
@@ -710,7 +705,7 @@ object TextOps {
     }.reduce(_ unionAll _)
   }
 
-  /** Shannon entropy of the token distribution per group — the corpus-
+  /** Shannon entropy of the token distribution per `source` — the corpus-
     * diversity signal data-mixing pipelines track per source (a source
     * whose token entropy collapses is template spam; one whose entropy is
     * anomalously high is often binary junk). H = −Σ p·log2 p over the
@@ -724,11 +719,10 @@ object TextOps {
     *
     * 100 TB shape: one (group, token) count aggregation (vocabulary-
     * bounded), one group-total aggregation joined back, one decimal sum.
-    * Output: (group, n_tokens, n_distinct, entropy_bits).
+    * Output: (source, n_tokens, n_distinct, entropy_bits).
     */
-  def tokenEntropy(docs: DataFrame,
-                   groupCol: String = "source", textCol: String = "text"): DataFrame = {
-    val tf = docs.select(col(groupCol).as("grp"), explode(tokens(col(textCol))).as("tok"))
+  def tokenEntropy(docs: DataFrame): DataFrame = {
+    val tf = docs.select(col("source").as("grp"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("grp"), col("tok")).agg(count(lit(1)).as("c"))
     val totals = tf.groupBy(col("grp"))
       .agg(sum(col("c")).as("t"), count(lit(1)).as("n_distinct"))
@@ -740,7 +734,7 @@ object TextOps {
       .select(col("grp"), col("t"), col("n_distinct"), term.as("h"))
       .groupBy(col("grp"), col("t"), col("n_distinct"))
       .agg(sum(col("h")).cast("double").as("entropy_bits"))
-      .select(col("grp").as(groupCol), col("t").as("n_tokens"),
+      .select(col("grp").as("source"), col("t").as("n_tokens"),
         col("n_distinct"), col("entropy_bits"))
   }
 
@@ -757,12 +751,11 @@ object TextOps {
     * Output: (doc_id, n_grams, n_novel, novelty) — novelty = n_novel /
     * n_grams rounded 6dp; gramless docs keep a row with nulls.
     */
-  def noveltyRate(docs: DataFrame, n: Int = 3,
-                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val ids = docs.select(col(idCol).as("doc_id"))
+  def noveltyRate(docs: DataFrame): DataFrame = {
+    val ids = docs.select(col("doc_id"))
     val grams = docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
-      .select(col("doc_id"), explode(array_distinct(NearDup.shingleArr(col("toks"), n))).as("g"))
+      .select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"), explode(array_distinct(NearDup.shingleArr(col("toks"), 3))).as("g"))
     val firstSeen = grams.groupBy(col("g")).agg(min(col("doc_id")).as("first_doc"))
     val scored = grams.join(firstSeen, Seq("g"))
       .groupBy(col("doc_id"))
@@ -787,9 +780,8 @@ object TextOps {
   val ipv4Re = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
   val phoneRe = "\\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\\b"
 
-  def piiScrub(docs: DataFrame,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def piiScrub(docs: DataFrame): DataFrame = {
+    val t = col("text")
     val nEmail = size(regexp_extract_all(t, lit(emailRe), lit(0)))
     val nIp = size(regexp_extract_all(t, lit(ipv4Re), lit(0)))
     val nPhone = size(regexp_extract_all(t, lit(phoneRe), lit(0)))
@@ -798,7 +790,7 @@ object TextOps {
         regexp_replace(t, emailRe, "<EMAIL>"),
         ipv4Re, "<IP>"),
       phoneRe, "<PHONE>")
-    docs.select(col(idCol).as("doc_id"),
+    docs.select(col("doc_id"),
       nEmail.cast("long").as("n_emails"),
       nIp.cast("long").as("n_ips"),
       nPhone.cast("long").as("n_phones"),
@@ -822,9 +814,8 @@ object TextOps {
     * the oracle replays (double division/multiplication order) so the
     * rounded PMI is bit-identical.
     */
-  def pmiCollocations(docs: DataFrame, minCount: Long = 5,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+  def pmiCollocations(docs: DataFrame, minCount: Long = 5): DataFrame = {
+    val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
     val uni = toks.select(explode(col("toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
     val pairs = toks.select(explode(

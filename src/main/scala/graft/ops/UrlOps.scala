@@ -117,6 +117,30 @@ object UrlOps {
     */
   val linkRe = "[Hh][Tt][Tt][Pp][Ss]?://[^\\s]+"
 
+  /** Robots-style disallow filtering — the crawl-politeness gate: a URL is
+    * blocked when its canonical path starts with ANY disallowed prefix
+    * registered for its domain. `rules` is a (domain, prefix) table — the
+    * parsed robots.txt corpus, inherently tiny relative to the crawl, so
+    * it broadcasts; a URL with several matching rules still yields ONE
+    * output row (max-of-hits aggregation keyed by `doc_id`).
+    *
+    * 100 TB shape: parse/canonicalize is a narrow codegen'd projection;
+    * the rules join is broadcast (row multiplication bounded by
+    * rules-per-domain); the only shuffle is the per-URL hit aggregation.
+    * Output: (doc_id, url, domain, path, blocked).
+    */
+  def robotsFilter(urls: DataFrame, rules: DataFrame): DataFrame = {
+    val p = urls.select(col("doc_id"), col("url"),
+      registeredDomain(host(col("url"))).as("domain"),
+      canonPath(col("url")).as("path"))
+    p.join(broadcast(rules.select(col("domain"), col("prefix"))), Seq("domain"), "left")
+      .withColumn("_hit",
+        when(col("prefix").isNotNull && col("path").startsWith(col("prefix")), 1L)
+          .otherwise(0L))
+      .groupBy(col("doc_id"), col("url"), col("domain"), col("path"))
+      .agg((max(col("_hit")) === 1L).as("blocked"))
+  }
+
   /** Domain-level link graph from in-text URLs — the host-graph stage of a
     * crawl pipeline (outlink extraction → canonical host → registered
     * domain → aggregated edge list, the input PageRank/centrality runs on).
@@ -129,36 +153,10 @@ object UrlOps {
     * whose key space is the squared domain vocabulary, ≪ corpus. Output:
     * (src_domain, dst_domain, n_links, n_docs).
     */
-  /** Robots-style disallow filtering — the crawl-politeness gate: a URL is
-    * blocked when its canonical path starts with ANY disallowed prefix
-    * registered for its domain. `rules` is a (domain, prefix) table — the
-    * parsed robots.txt corpus, inherently tiny relative to the crawl, so
-    * it broadcasts; a URL with several matching rules still yields ONE
-    * output row (max-of-hits aggregation keyed by `idCol`).
-    *
-    * 100 TB shape: parse/canonicalize is a narrow codegen'd projection;
-    * the rules join is broadcast (row multiplication bounded by
-    * rules-per-domain); the only shuffle is the per-URL hit aggregation.
-    * Output: (idCol, urlCol, domain, path, blocked).
-    */
-  def robotsFilter(urls: DataFrame, rules: DataFrame,
-                   idCol: String = "doc_id", urlCol: String = "url"): DataFrame = {
-    val p = urls.select(col(idCol), col(urlCol),
-      registeredDomain(host(col(urlCol))).as("domain"),
-      canonPath(col(urlCol)).as("path"))
-    p.join(broadcast(rules.select(col("domain"), col("prefix"))), Seq("domain"), "left")
-      .withColumn("_hit",
-        when(col("prefix").isNotNull && col("path").startsWith(col("prefix")), 1L)
-          .otherwise(0L))
-      .groupBy(col(idCol), col(urlCol), col("domain"), col("path"))
-      .agg((max(col("_hit")) === 1L).as("blocked"))
-  }
-
-  def domainLinkGraph(docs: DataFrame, docDomain: Column,
-                      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def domainLinkGraph(docs: DataFrame, docDomain: Column): DataFrame =
     docs
-      .select(col(idCol).as("doc_id"), docDomain.as("src_domain"),
-        explode(regexp_extract_all(col(textCol), lit(linkRe), lit(0))).as("url"))
+      .select(col("doc_id"), docDomain.as("src_domain"),
+        explode(regexp_extract_all(col("text"), lit(linkRe), lit(0))).as("url"))
       .select(col("doc_id"), col("src_domain"),
         registeredDomain(host(col("url"))).as("dst_domain"))
       .groupBy(col("src_domain"), col("dst_domain"))

@@ -7,7 +7,7 @@ class BfsSpec extends SparkSpec {
 
   private def chain(n: Int) = {
     import spark.implicits._
-    (1 until n).map(i => (s"n$i", s"n${i + 1}")).toDF("src", "dst")
+    (1 until n).map(i => (s"n$i", s"n${i + 1}")).toDF("src_id", "dst_id")
   }
 
   test("khop undirected: chain distances capped at k") {
@@ -26,7 +26,7 @@ class BfsSpec extends SparkSpec {
     import spark.implicits._
     // triangle a-b-c: both b and c at dist 1, nothing at dist 2; k=10 must
     // terminate after the empty round, not loop
-    val tri = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("src", "dst")
+    val tri = Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("src_id", "dst_id")
     val out = Bfs.khop(spark, tri, lit("a"), k = 10).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out == Map("a" -> 0L, "b" -> 1L, "c" -> 1L))

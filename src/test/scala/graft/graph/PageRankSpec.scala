@@ -41,7 +41,7 @@ class PageRankSpec extends SparkSpec {
     import spark.implicits._
     // a <-> b: symmetric, no dangling mass -> both exactly (1-d)/2 + d/2 = 1/2
     val edges = Seq(("a", "b"), ("b", "a")).toDF("from", "to")
-    val got = PageRank.pageRank(spark, edges, srcCol = "from", dstCol = "to").collect()
+    val got = PageRank.pageRank(spark, edges.toDF("src_id", "dst_id")).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got == Map("a" -> 0.5, "b" -> 0.5))
   }

@@ -157,7 +157,7 @@ class OpsSpec extends SparkSpec {
       5L -> "the a b c d e")   // 6 tokens > max 5 -> tokens_ok false
     val out = TextOps.gopherQualityFilters(d, stopwords = Seq("the", "a"),
       minTokens = 2, maxTokens = 5, minMeanWordLen = 2.0, maxMeanWordLen = 4.0,
-      minAlphaFrac = 0.75, minStopwords = 2).collect()
+      minAlphaFrac = 0.75).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4),
         r.getBoolean(5), r.getBoolean(6), r.getBoolean(7), r.getBoolean(8), r.getBoolean(9))))
       .toMap
@@ -179,7 +179,7 @@ class OpsSpec extends SparkSpec {
       (5L, "srcB", "k")          // no bigrams -> zeroed row
     ).toDF("doc_id", "source", "text")
     // srcA has 4 docs; 'x y' occurs in 3 of them (0.75 >= 0.5, >= 2 docs) -> boiler
-    val out = TextOps.boilerplateSpans(d, k = 2, minDocs = 2, minFrac = 0.5).collect()
+    val out = TextOps.boilerplateSpans(d, minFrac = 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).sortBy(_._1)
     assert(out.toSeq == Seq(
       (1L, 2L, 1L, 0.5), (2L, 2L, 1L, 0.5), (3L, 1L, 0L, 0.0),
@@ -217,7 +217,7 @@ class OpsSpec extends SparkSpec {
     val jac = NearDup.jaccardPairs(d, 0.8).collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(jac.length == 1 && jac(0)._1 == 1L && jac(0)._2 == 2L)
     assert(math.abs(jac(0)._3 - 37.0 / 39.0) < 1e-4) // 38∩? shingles: 37 common of 38+38
-    val cands = NearDup.lshCandidatePairs(d, k = 8, rowsPerBand = 4)
+    val cands = NearDup.lshCandidatePairs(d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // near-dup pair should be a candidate via at least one band (high prob at jac 0.95)
     assert(cands.contains((1L, 2L)))
@@ -341,11 +341,11 @@ class OpsSpec extends SparkSpec {
     }
     val emb = rows.toDF("vec_id", "embedding")
     val bf = Similarity.bruteForceTopK(emb, Seq(0L), k = 5).collect().map(_.getLong(1)).toSet
-    val ivf = Similarity.ivfTopK(emb, Seq(0L), k = 5, centroids = 8, nprobe = 2)
+    val ivf = Similarity.ivfTopK(emb, Seq(0L), centroids = 8, nprobe = 2)
       .collect().map(_.getLong(1)).toSet
     assert(ivf.nonEmpty && ivf.forall(_ % 2 == 0), s"cross-cluster neighbor in $ivf")
     // probing EVERY inverted list makes IVF exhaustive → identical to brute force
-    val full = Similarity.ivfTopK(emb, Seq(0L), k = 5, centroids = 8, nprobe = 8)
+    val full = Similarity.ivfTopK(emb, Seq(0L), centroids = 8, nprobe = 8)
       .collect().map(_.getLong(1)).toSet
     assert(full == bf, s"nprobe=centroids must equal brute force: $full vs $bf")
   }
@@ -367,7 +367,7 @@ class OpsSpec extends SparkSpec {
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     def recall(trainIters: Int): Double = {
       val got = Similarity
-        .ivfTopK(vecs, queries, 5, centroids = 8, nprobe = 1, trainIters = trainIters)
+        .ivfTopK(vecs, queries, centroids = 8, nprobe = 1, trainIters = trainIters)
         .collect().groupBy(_.getLong(0))
         .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
       queries.map(q => (got.getOrElse(q, Set.empty[Long]) & truth(q)).size / 5.0).sum / queries.size
@@ -387,7 +387,7 @@ class OpsSpec extends SparkSpec {
       (i.toLong, (0 until 12).map(j => ((((i * 37 + j * 11) % 19) - 9) * 0.07f)))
     }.toDF("vec_id", "embedding")
     def train(parts: Int): Seq[(Long, Seq[Double])] =
-      Similarity.trainIvfCentroids(vecs.repartition(parts), centroids = 8, iters = 2)
+      Similarity.trainIvfCentroids(vecs.repartition(parts), centroids = 8)
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
     val one = train(1)
     val seven = train(7)
@@ -412,7 +412,7 @@ class OpsSpec extends SparkSpec {
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     assert(vecs(1L) == vecs(2L) && vecs.values.forall(_.length == 64))
     assert(vecs(1L).sum == 13.0) // one count per token
-    val pairs = Similarity.cosineNearDupPairs(emb, 0.9, idCol = "doc_id", embCol = "emb", dim = 64)
+    val pairs = Similarity.cosineNearDupPairsScaled(emb, 0.9).pairs
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(pairs((1L, 2L)) == 1.0)
     assert(pairs.contains((1L, 3L)) && pairs((1L, 3L)) >= 0.9 && pairs((1L, 3L)) < 1.0)
@@ -429,8 +429,7 @@ class OpsSpec extends SparkSpec {
       (101L, "spark writes shuffle files to local disk before the reduce stage begins today"))
     val loner = Seq((200L, "entirely unrelated text about knowledge graphs and entity canonicalization rules"))
     val emb = Similarity.hashedEmbeddings((mega ++ pair ++ loner).toDF("doc_id", "text"))
-    val scaled = Similarity.cosineNearDupPairsScaled(emb, 0.9,
-      idCol = "doc_id", embCol = "emb", dim = 64, maxBucket = 8)
+    val scaled = Similarity.cosineNearDupPairsScaled(emb, 0.9, maxBucket = 8)
     val pairs = scaled.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the mega-cluster's 66 pairs are pruned; the honest near-dup pair survives
     assert(pairs == Set((100L, 101L)), s"got $pairs")
@@ -441,15 +440,9 @@ class OpsSpec extends SparkSpec {
     assert(droppedSizes.nonEmpty && droppedSizes.forall(_ >= 12L), s"dropped sizes ${droppedSizes.toSeq}")
     val (nb, mx) = scaled.logDrops()
     assert(nb == droppedSizes.length.toLong && mx == droppedSizes.max)
-    // .pairs at the same cap ≡ the plain capped entrypoint
-    val plain = Similarity.cosineNearDupPairs(emb, 0.9,
-      idCol = "doc_id", embCol = "emb", dim = 64, maxBucket = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(plain == pairs)
     // uncapped form on the same corpus DOES emit the quadratic mass, with
     // empty accounting
-    val unlimited = Similarity.cosineNearDupPairsScaled(emb, 0.9,
-      idCol = "doc_id", embCol = "emb", dim = 64)
+    val unlimited = Similarity.cosineNearDupPairsScaled(emb, 0.9)
     assert(unlimited.pairs.count() == 66L + 1L)
     assert(unlimited.logDrops() == ((0L, 0L)) && unlimited.droppedBuckets.isEmpty)
   }
@@ -464,8 +457,7 @@ class OpsSpec extends SparkSpec {
       (101L, "spark writes shuffle files to local disk before the reduce stage begins today"))
     val emb = Similarity.hashedEmbeddings(pair.toDF("doc_id", "text"))
     val repeated = emb.union(emb.where($"doc_id" === 100L))
-    val pairs = Similarity.cosineNearDupPairsScaled(repeated, 0.9,
-      idCol = "doc_id", embCol = "emb", dim = 64)
+    val pairs = Similarity.cosineNearDupPairsScaled(repeated, 0.9)
       .pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(pairs.toSet == Set((100L, 101L)), s"got $pairs")
     // the verification joins match each copy: one pair row per copy
@@ -479,7 +471,7 @@ class OpsSpec extends SparkSpec {
       (2L, Array.fill(63)(1.0))) // wrong length → would silently mis-bucket
       .toDF("doc_id", "emb")
     val ex = intercept[Exception] {
-      Similarity.cosineNearDupPairs(bad, 0.9, idCol = "doc_id", embCol = "emb", dim = 64).count()
+      Similarity.cosineNearDupPairsScaled(bad, 0.9).pairs.count()
     }
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
@@ -508,7 +500,7 @@ class OpsSpec extends SparkSpec {
         a <- vecs.keys; b <- vecs.keys if a < b
         c = cos(vecs(a), vecs(b)) if c >= 0.9
       } yield ((a, b), c)).toMap
-      val got = Similarity.cosineNearDupPairs(emb, 0.9, idCol = "doc_id", embCol = "emb", dim = 64)
+      val got = Similarity.cosineNearDupPairsScaled(emb, 0.9).pairs
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       // exactness on the candidate set: every emitted pair is a true pair
       // with the exact rounded cosine (LSH may MISS pairs, never invent)
@@ -553,11 +545,11 @@ class OpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     // maxTrainVectors=100 on 400 vectors → mod 4: the trainer must behave
     // exactly as if invoked unsampled on the pmod(xxhash64)=0 survivors
-    val sampled = Similarity.trainIvfCentroids(vecs, centroids = 8, iters = 2,
+    val sampled = Similarity.trainIvfCentroids(vecs, centroids = 8,
       maxTrainVectors = 100L).collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
     val subset = vecs.where(pmod(xxhash64(col("vec_id")), lit(4L)) === 0L)
-    val replay = Similarity.trainIvfCentroids(subset, centroids = 8, iters = 2)
+    val replay = Similarity.trainIvfCentroids(subset, centroids = 8)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
     assert(sampled.map(_._1) == replay.map(_._1))
     sampled.zip(replay).foreach { case ((cid, ca), (_, cb)) =>
@@ -583,7 +575,7 @@ class OpsSpec extends SparkSpec {
     val queries = Seq(30L, 55L, 85L, 110L, 135L, 165L, 190L)
     val truth = Similarity.bruteForceTopK(vecs, queries, 5).collect()
       .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val got = Similarity.ivfTopK(vecs, queries, 5, centroids = 8, nprobe = 2,
+    val got = Similarity.ivfTopK(vecs, queries, centroids = 8, nprobe = 2,
       trainIters = 2, maxTrainVectors = 200L)
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
@@ -1207,6 +1199,53 @@ class OpsSpec extends SparkSpec {
     assert(got == Set((1L, 2L, 1L)), s"got $got")
   }
 
+  test("hammingJoin equals the brute-force contract on generated frames (ScalaCheck, 200 cases)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // a 3-letter alphabet makes distance 0/1 partners common; names of
+    // 63-64 chars sit at the length cap, 65-66 chars lie beyond it
+    val short = Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'b', 'c'))).map(_.mkString)
+    val long = Gen.zip(Gen.choose(63, 66), Gen.oneOf("a", "b")).map { case (n, end) => "a" * (n - 1) + end }
+    val name: Gen[String] = Gen.frequency(10 -> short, 2 -> long, 1 -> Gen.const(null))
+    val row = Gen.zip(Gen.choose(0L, 6L), name)
+    val frame = Gen.frequency(1 -> Gen.const(Seq.empty[(Long, String)]), 1 -> row.map(Seq(_)),
+      8 -> Gen.choose(2, 14).flatMap(Gen.listOfN(_, row)))
+    // the documented contract over the distinct (id, name) rows: d1 < d2,
+    // equal lengths of at most 64 chars, at most one differing character;
+    // one output row per distinct (d1, d2, name1, name2)
+    def brute(rows: Seq[(Long, String)]): Seq[(Long, Long, Long)] = {
+      val kept = rows.filter(r => r._2 != null && r._2.length <= 64).distinct
+      (for {
+        (d1, n1) <- kept; (d2, n2) <- kept
+        if d1 < d2 && n1.length == n2.length
+        h = n1.zip(n2).count(p => p._1 != p._2).toLong if h <= 1
+      } yield (d1, d2, n1, n2, h)).distinct.map(p => (p._1, p._2, p._5)).sorted
+    }
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val prop = Prop.forAllNoShrink(frame, Gen.oneOf(1, 4)) { (rows, parts) =>
+      val df = spark.createDataset(spark.sparkContext.parallelize(rows, parts))
+        .toDF("c_custkey", "c_name")
+      val got = NearDup.hammingJoin(df, "c_custkey", "c_name").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      val want = brute(rows)
+      Seq("empty" -> rows.isEmpty, "one row" -> (rows.size == 1),
+        "duplicate id" -> (rows.map(_._1).distinct.size < rows.size),
+        "NULL name" -> rows.exists(_._2 == null),
+        "name over 64" -> rows.exists(r => r._2 != null && r._2.length > 64),
+        "pair at distance 1" -> want.exists(_._3 == 1L), s"$parts partitions" -> true)
+        .foreach { case (k, hit) => if (hit) seen(k) += 1 }
+      Prop(got == want) :| s"got $got, want $want for $rows in $parts partitions"
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(200)
+      .withInitialSeed(Seed(20261021L)).withWorkers(1), prop)
+    assert(res.passed, res.status.toString)
+    assert(res.succeeded >= 200)
+    for (k <- Seq("empty", "one row", "duplicate id", "NULL name", "name over 64",
+      "pair at distance 1", "1 partitions", "4 partitions"))
+      assert(seen(k) > 0, s"no generated frame had a case '$k': $seen")
+  }
+
   test("mergeIntervals: overlap and touch merge, gaps split, counts right") {
     import spark.implicits._
     val rows = Seq(
@@ -1329,7 +1368,7 @@ class OpsSpec extends SparkSpec {
       .map(h => ("e", h * 3600L))
       .toDF("event_type", "_s")
       .select(col("event_type"), timestamp_seconds(col("_s")).as("ts"))
-    val out = Anomaly.countZscores(rows, "event_type", "ts", lookback = 6, flagAt = 2.0)
+    val out = Anomaly.countZscores(rows, "event_type", "ts")
       .collect().map(r => (r.getTimestamp(0).getTime / 3600000, r.getLong(2), r.getLong(3),
         Option(r.get(4)).map(_.asInstanceOf[Double]), r.getBoolean(5))).sortBy(_._1).toSeq
     // hour 0: empty window → z null, not anomalous
@@ -1350,7 +1389,7 @@ class OpsSpec extends SparkSpec {
     val rows = perHour.zipWithIndex.flatMap { case (n, h) => Seq.fill(n.toInt)(("e", h * 3600L)) }
       .toDF("event_type", "_s")
       .select(col("event_type"), timestamp_seconds(col("_s")).as("ts"))
-    val out = Anomaly.countZscores(rows, "event_type", "ts", lookback = 6, flagAt = 2.0)
+    val out = Anomaly.countZscores(rows, "event_type", "ts")
       .collect().map(r => (r.getTimestamp(0).getTime / 3600000,
         Option(r.get(4)).map(_.asInstanceOf[Double]), r.getBoolean(5))).sortBy(_._1)
     val base = perHour.take(6).map(_.toDouble)
@@ -1396,7 +1435,7 @@ class OpsSpec extends SparkSpec {
     val build = (1L to 400L by 40).map(i => Tuple1(i)).toDF("k") // 10 keys
     // m=16 bits, 10 keys * 3 positions -> most bits set -> many bloom FPs;
     // the exact-clear stage must remove every one of them
-    val got = Sketch.bloomSemiJoin(probe, "k", build, "k", m = 16, k = 3)
+    val got = Sketch.bloomSemiJoin(probe, "k", build, "k", m = 16)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (1L to 400L by 40).toSeq)
   }
@@ -1406,7 +1445,7 @@ class OpsSpec extends SparkSpec {
     val rows = (1L to 500L).map(i =>
       (i, if (i % 10 == 0) "cold" else "hot", i * 0.31 - 17.0)) // 'hot' carries 90% of rows
       .toDF("event_id", "event_type", "value")
-    val salted = Skew.saltedStats(rows, "event_type", "value", col("event_id"), salts = 16)
+    val salted = Skew.saltedStats(rows, "event_type", "value", col("event_id"))
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     val plain = rows.select(col("event_type"), col("value").cast("decimal(18,6)").as("v"))
       .groupBy("event_type")

@@ -193,4 +193,20 @@ class SketchSpec extends SparkSpec {
     // sketch accuracy sanity at m=256: within 15% of truth here
     assert(math.abs(merged.getDouble(3) - 500.0) / 500.0 < 0.15)
   }
+
+  test("hllMergedDistinct: NULL values in two shards add no register") {
+    import spark.implicits._
+    val values = (1 to 300).map(i => ("s0", Option(s"v$i"))) ++
+      (200 to 300).map(i => ("s1", Option(s"v$i")))
+    val nulls = Seq(("s0", None), ("s1", None), ("s1", None))
+    val rows = (values ++ nulls).toDF("shard", "v")
+    val merged = Sketch.hllMergedDistinct(rows, "shard", "v").collect()(0)
+    val clean = Sketch.hllMergedDistinct(values.toDF("shard", "v"), "shard", "v").collect()(0)
+    val direct = Sketch.hllDistinct(rows.withColumn("g", lit("all")), "g", "v").collect()(0)
+    assert(merged.getLong(1) == 300L)                                // n_exact skips NULL
+    assert(merged.getLong(2) == clean.getLong(2))                    // n_registers
+    assert(merged.getLong(2) == direct.getLong(2))
+    assert(merged.getDouble(3) == clean.getDouble(3))
+    assert(merged.getDouble(3) == direct.getDouble(3))
+  }
 }
